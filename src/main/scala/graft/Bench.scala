@@ -58,7 +58,9 @@ object Bench {
     // tools/check_bench.py compares calib_sec against the recorded
     // calib floor and flags the SESSION, not the code. Additions-only:
     // the JSON line gains calib_sec/calib_runs keys, nothing else
-    // changes.
+    // changes. A probe that throws is left out of calib_runs, and
+    // calib_sec is omitted when neither probe ran (check_bench.py then
+    // reads the run as uncalibrated).
     def calibProbe(): Double = {
       val t0 = System.nanoTime()
       force(spark.range(0L, 4000000L, 1L, 32)
@@ -74,7 +76,7 @@ object Bench {
           org.apache.spark.sql.functions.sum("n")))
       (System.nanoTime() - t0) / 1e9
     }
-    val calibPre = calibProbe()
+    val calibPre = scala.util.Try(calibProbe()).toOption
     // SPARK_GRAFT_ONLY=q_a,q_b restricts the run (local iteration aid)
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").map(_.trim).toSet)
@@ -113,9 +115,12 @@ object Bench {
         name -> (System.nanoTime() - t0) / 1e9
       }.toMap
     }
-    val calibPost = calibProbe()
+    val calibPost = scala.util.Try(calibProbe()).toOption
     def ms(v: Double): Double = math.rint(v * 1000) / 1000
-    val calibSec = ms(math.min(calibPre, calibPost))
+    val calibRuns = Seq(calibPre, calibPost).flatten.map(ms)
+    val calibJson =
+      (if (calibRuns.isEmpty) "" else s""""calib_sec":${calibRuns.min},""") +
+        s""""calib_runs":[${calibRuns.mkString(",")}],"""
     val best = names.map(n => n -> ms(perPass.map(_(n)).min))
     val total = ms(best.map(_._2).sum)
     val passTotals = perPass.map(p => ms(p.values.sum))
@@ -135,7 +140,7 @@ object Bench {
     val errsJson = errs
       .map { case (k, v) => "\"" + k + "\":\"" + v + "\"" }
       .mkString("{", ",", "}")
-    println(s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${best.size},"passes":$passes,"pass_totals":[${passTotals.mkString(",")}],"agg":"min","order":"seeded-shuffle-per-pass","pins":"scoped-per-query","warmup_sec":${ms(warmupSec)},"calib_sec":$calibSec,"calib_runs":[${ms(calibPre)},${ms(calibPost)}],"errs":$errsJson,"queries":$qs,"omitted":${omitted.size},"omitted_sec":${ms(omitted.map(_._2).sum)},"sf":"$sfDir"}""")
+    println(s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${best.size},"passes":$passes,"pass_totals":[${passTotals.mkString(",")}],"agg":"min","order":"seeded-shuffle-per-pass","pins":"scoped-per-query","warmup_sec":${ms(warmupSec)},$calibJson"errs":$errsJson,"queries":$qs,"omitted":${omitted.size},"omitted_sec":${ms(omitted.map(_._2).sum)},"sf":"$sfDir"}""")
     // SPARK_GRAFT_BENCH_OUT=<file>: also dump the COMPLETE per-query
     // map (untruncated — the stdout line keeps only the heaviest
     // queries under a byte budget) for offline scale-curve analysis.
@@ -143,7 +148,7 @@ object Bench {
       val full = best.map { case (k, v) => "\"" + k + "\":" + v }
         .mkString("{", ",", "}")
       val w = new java.io.PrintWriter(out)
-      try w.println(s"""{"total":$total,"passes":$passes,"pass_totals":[${passTotals.mkString(",")}],"warmup_sec":${ms(warmupSec)},"calib_sec":$calibSec,"calib_runs":[${ms(calibPre)},${ms(calibPost)}],"errs":$errsJson,"queries":$full,"sf":"$sfDir"}""")
+      try w.println(s"""{"total":$total,"passes":$passes,"pass_totals":[${passTotals.mkString(",")}],"warmup_sec":${ms(warmupSec)},$calibJson"errs":$errsJson,"queries":$full,"sf":"$sfDir"}""")
       finally w.close()
     }
     spark.stop()

@@ -546,7 +546,7 @@ final class Planner(val cube: BoundCube) {
           ordered(a, cells,
             Seq(if (dir == SortDir.BAsc) key.asc else key.desc))
         case _ =>
-          hierOrderSet(a, cells, e, dir == SortDir.Desc, slicer)
+          tupleHierOrderSet(a, cells, e, dir == SortDir.Desc, slicer)
       }
 
     case TopCount(s, n, e, bottom) if e.isEmpty =>
@@ -812,10 +812,6 @@ final class Planner(val cube: BoundCube) {
     a.copy(members = kept, hasOrd = true)
   }
 
-  /** Compact an explicit __ord to 1..n after row removal so downstream
-    * positional ops (Head/Subset) keep working on gap-free positions; a
-    * frame without __ord passes through.
-    */
   /** Cardinality hint for an axis frame's ordering ops: a frame is
     * dimension-bounded (single-window cheap path) unless one of its
     * dims carries the reference's high_cardinality hint.
@@ -823,6 +819,10 @@ final class Planner(val cube: BoundCube) {
   private def hintOf(dims: Seq[AxisDim]): Ords.SizeHint =
     if (dims.exists(_.d.highCardinality)) Ords.Large else Ords.Small
 
+  /** Compact an explicit __ord to 1..n after row removal so downstream
+    * positional ops (Head/Subset) keep working on gap-free positions; a
+    * frame without __ord passes through.
+    */
   private def renumber(members: DataFrame, hasOrd: Boolean,
       hint: Ords.SizeHint = Ords.Small): DataFrame =
     if (!hasOrd) members
@@ -846,138 +846,19 @@ final class Planner(val cube: BoundCube) {
   private def tieBreak(a: AxisFrame): Seq[Column] =
     groupCols(a.dims).map(col(_).asc)
 
-  private def ancestorOrds(a: AxisFrame): Seq[String] =
-    a.dims.flatMap(ad => ad.d.levelsTo(ad.depth).dropRight(1).map(_.ordinal))
-
   /** NON-breaking Order (MDX's default ASC/DESC) over an ordinary set:
-    * Mondrian's `Sorter.sortMembers(brk=false)` — a parent precedes its
-    * descendants, and sibling subtrees order by the SIBLING ANCESTORS'
-    * OWN CELL VALUES of the sort expression
-    * (FunUtil.compareHierarchicallyButSiblingsByValue), NOT by member
-    * ordinals (r16 — the pre-r16 ordinal composite diverged from the
-    * reference whenever a level's value order disagreed with its
-    * declared order; the calc-bearing axis path got the value-based
-    * semantics in r15, this unifies the ordinary path with it).
-    *
-    * Execution: ancestor cells for every strict member-path prefix come
-    * from ONE pass over the fact (the mixedCells grouping-sets shape
-    * when several prefix depths exist), windowed into per-level sibling
-    * ranks partitioned by the parent prefix — a distributed window
-    * everywhere except the root group, which is level-0-cardinality-
-    * sized. The deepest level's ranks reuse the already-computed set
-    * cells (no second scan at the finest grain — the one that matters
-    * for a high-cardinality leaf). The member frame left-joins the rank
-    * frames (broadcast unless the dimension is high_cardinality) and
-    * sorts lexicographically on the rank chain: null ranks — a member
-    * shallower than the column's level — sort first, which is exactly
-    * parent-before-child. No collect, no driver loop; the fact is
-    * touched once beyond the set's own cells.
-    *
-    * A MULTI-hierarchy (tuple) set routes to [[tupleHierOrderSet]]
-    * (r17) — Mondrian's HierarchicalTupleComparator, one rank pass
-    * per tuple position. (Through r16 tuples kept a composite
-    * per-dim-ordinal sort; that divergence is closed.)
-    *
-    * Scale note: the deepest level's rank window partitions by the
-    * parent prefix, so a high-cardinality LEAF degenerates to one
-    * per-parent sort task per parent — the same cost class as the
-    * in-memory sibling sort Mondrian performs for the identical
-    * query, and strictly better than a breaking sort's global order
-    * when parents are plentiful. (A windowless value-lexicographic
-    * variant was considered and rejected: a padded-null level of a
-    * SHALLOW member must sort before its subtree while a genuinely
-    * EMPTY cell must sort after its siblings, and a single value
-    * column cannot carry both null meanings.)
-    */
-  private def hierOrderSet(a: AxisFrame, cells: DataFrame, e: String,
-      desc: Boolean, slicer: Seq[SlicerItem]): AxisFrame = {
-    require(!e.contains("__CURRENT_ORDINAL__"),
-      "CurrentOrdinal in a non-breaking Order key is not supported — " +
-        "the hierarchical sort evaluates ancestors outside the live " +
-        "positional order; use BASC/BDESC")
-    // empty cell = -infinity (FunUtil.compareValues): ASC empties
-    // FIRST, DESC empties last — r18, was empties-last both ways
-    def rankSort(v: Column) = if (desc) v.desc_nulls_last else v.asc_nulls_first
-    if (a.dims.length != 1)
-      return tupleHierOrderSet(a, cells, e, desc, slicer)
-    val ad = a.dims.head
-    val d = ad.d
-    val dMax = ad.depth
-    if (dMax == 0) {
-      // single-level set: no hierarchy to preserve — value sort
-      return ordered(a, cells,
-        Seq(rankSort(sexpr(resolveCurrent(e, a.dims)))))
-    }
-    val lvls = levelCols(d, dMax)
-    val mixed = a.mixedDepths.nonEmpty
-    // strict prefixes of every member path at depths 0..dMax-1 — the
-    // ancestors Mondrian evaluates whether or not they are set members
-    val types = d.df.schema.map(sf => sf.name -> sf.dataType).toMap
-    val prefixDepths = 0 until dMax
-    val pfFrame: AxisFrame =
-      if (dMax == 1) {
-        val src = if (mixed) a.members.filter(col(DepthCol) >= 0)
-                  else a.members
-        AxisFrame(src.select(col(lvls.head)).distinct(),
-          Seq(AxisDim(d, 0)))
-      } else {
-        val pfLvls = lvls.take(dMax)
-        val union = prefixDepths.map { k =>
-          val src = if (mixed) a.members.filter(col(DepthCol) >= k)
-                    else a.members
-          val proj = src.select(lvls.take(k + 1).map(col): _*).distinct()
-          pfLvls.drop(k + 1).foldLeft(proj)((df2, c) =>
-            df2.withColumn(c, lit(null).cast(types(c))))
-            .withColumn(DepthCol, lit(k))
-        }.reduce(_ unionByName _)
-        AxisFrame(union, Seq(AxisDim(d, dMax - 1)),
-          mixedDepths = prefixDepths, mixedDim = Some(d.name))
-      }
-    val pfCells = cellsFor(pfFrame, slicer)
-    // per-level sibling ranks: level k partitions by the parent prefix
-    // and orders by the ancestor's cell value of the sort expression
-    // (resolved at ITS depth — CurrentMember macros see the ancestor)
-    val rankFrames: Seq[DataFrame] = (0 to dMax).map { k =>
-      val src =
-        if (k < dMax) {
-          val f = if (dMax == 1) pfCells
-                  else pfCells.filter(col(DepthCol) === k)
-          f
-        } else if (mixed) cells.filter(col(DepthCol) === dMax)
-        else cells
-      val key = sexpr(resolveCurrent(e, Seq(AxisDim(d, k))))
-      val w = Window.partitionBy(lvls.take(k).map(col): _*)
-        .orderBy(rankSort(key), col(lvls(k)).asc)
-      src.select(lvls.take(k + 1).map(c => col(c).as(s"__rk${k}_$c")) :+
-        row_number().over(w).cast("long").as(s"__hr$k"): _*)
-    }
-    val joined = rankFrames.zipWithIndex.foldLeft(a.members) {
-      case (acc, (rf0, k)) =>
-        val rf = if (hintOf(a.dims) == Ords.Small) broadcast(rf0) else rf0
-        val cond = lvls.take(k + 1)
-          .map(c => acc(c) <=> rf(s"__rk${k}_$c")).reduce(_ && _)
-        // a mixed frame's shallow member null-pads deeper levels; the
-        // depth guard keeps a genuine-null level value from matching it
-        val guard = if (mixed) acc(DepthCol) >= k else lit(true)
-        acc.join(rf, cond && guard, "left")
-          .drop(lvls.take(k + 1).map(c => s"__rk${k}_$c"): _*)
-    }
-    val sortCols = col("__hr0").asc +:
-      (1 to dMax).map(k => col(s"__hr$k").asc) // asc = nulls first:
-    // a depth-j member's null rank beyond j precedes its descendants
-    ordered(a, joined, sortCols)
-  }
-
-  /** NON-breaking Order over a MULTI-hierarchy (tuple) set: Mondrian's
-    * HierarchicalTupleComparator (FunUtil.sortTuples brk=false, via
-    * mondrian-olap's query.rb order with :asc/:desc) — tuple positions
-    * compare LEFT TO RIGHT; the first position whose members differ
-    * decides, compared hierarchically with sibling ancestors ranked by
-    * the sort expression's CELL VALUE evaluated with the EARLIER tuple
-    * coordinates fixed to the (equal) members already compared and the
-    * LATER coordinates at their hierarchy defaults (the comparator only
-    * calls Evaluator.setContext for positions it has found equal; later
-    * hierarchies keep the evaluator's entry context).
+    * Mondrian's HierarchicalTupleComparator (FunUtil.sortTuples
+    * brk=false, via mondrian-olap's query.rb order with :asc/:desc). A
+    * single hierarchy is the one-position case, Sorter.sortMembers
+    * brk=false. Tuple positions compare LEFT TO RIGHT; the first
+    * position whose members differ decides, compared hierarchically: a
+    * parent precedes its descendants, and sibling subtrees order by the
+    * sibling ancestors' OWN CELL VALUES of the sort expression
+    * (compareHierarchicallyButSiblingsByValue), not by member ordinals.
+    * Those cells are evaluated with the EARLIER tuple coordinates fixed
+    * to the (equal) members already compared and the LATER coordinates
+    * at their hierarchy defaults (the comparator only calls
+    * Evaluator.setContext for positions it has found equal).
     *
     * Execution: one rank pass per tuple position. Position i's pass
     * computes ancestor cells at grain (dims 0..i-1 at FULL path ×
@@ -987,42 +868,55 @@ final class Planner(val cube: BoundCube) {
     * the comparator's default-context semantics. Per-level sibling
     * ranks window over (earlier dims' full paths + dim_i's parent
     * prefix); the LAST position's deepest level reuses the set's own
-    * tuple-grain cells, so the finest grain is never re-scanned. The
-    * member frame left-joins the rank frames (each broadcast unless a
-    * hierarchy IN ITS OWN GRAIN — positions 0..i — is
-    * high_cardinality; a later high-card position never forces an
-    * early tiny frame onto a shuffle) and sorts position-major on the
-    * rank chains. Lexicographic rank order IS the comparator's order:
-    * equal members share every rank (same partitions, same rows), and
-    * differing members first diverge at their shallowest differing
-    * level, whose sibling rank realizes
-    * compareHierarchicallyButSiblingsByValue. Ties break by the level
-    * key ascending in both directions — the engine's deterministic
-    * convention, shared with the single-hierarchy path. An EMPTY cell
-    * compares as -infinity (FunUtil.compareValues): ASC empties first,
-    * DESC empties last (r18 — asc_nulls_last before, a silent ASC-path
-    * divergence).
+    * cells, so the finest grain is never re-scanned. The member frame
+    * left-joins the rank frames (each broadcast unless a hierarchy IN
+    * ITS OWN GRAIN — positions 0..i — is high_cardinality; a later
+    * high-card position never forces an early tiny frame onto a
+    * shuffle) and sorts position-major on the rank chains.
+    * Lexicographic rank order IS the comparator's order: equal members
+    * share every rank (same partitions, same rows), and differing
+    * members first diverge at their shallowest differing level, whose
+    * sibling rank realizes the comparator. Ties break by the level key
+    * ascending in both directions. An EMPTY cell compares as -infinity
+    * (FunUtil.compareValues): ASC empties first, DESC empties last.
     *
-    * Mixed-depth hierarchies are supported at ANY tuple position
-    * (r17): at its own position the single grouping-sets pass covers
-    * every prefix depth and the rank joins carry a depth guard; at a
-    * LATER position, the later dim's prefix cells come one pass per
-    * prefix depth k — mixed on the EARLIER dim with the later dim
-    * fixed at k ([[mixedCells]] supports exactly one mixed hierarchy
-    * per pass), the earlier dim's depth marker riding the partition
-    * and join keys so padded-null levels never cross-match genuine
-    * nulls. Pass count stays plan-shaped: depths(dim_i)+1 scans for
-    * that position, each grain-sized and segment-cached. Two loud
-    * refusals: a sort key reading CurrentMember of a position AFTER
-    * the one being compared (Mondrian evaluates it at the hierarchy
-    * default — no real query does this), and CurrentMember of a
-    * mixed-depth earlier position (the name column differs per member
-    * depth).
+    * Mixed-depth hierarchies are supported at ANY tuple position (the
+    * pass-cell branches below say how). A null rank — a member
+    * shallower than the rank's level — sorts first, which is exactly
+    * parent-before-child. Pass count stays plan-shaped: at most
+    * depths(dim_i)+1 scans per position, each grain-sized and
+    * segment-cached.
+    *
+    * Three loud refusals: CurrentOrdinal (ancestors are evaluated
+    * outside the live positional order), a sort key reading
+    * CurrentMember of a hierarchy off the axis or AFTER the position
+    * being compared (Mondrian evaluates it at the hierarchy default),
+    * and CurrentMember of a mixed-depth earlier position (the name
+    * column differs per member depth).
+    *
+    * Scale note: the deepest level's rank window partitions by the
+    * parent prefix, so a high-cardinality LEAF degenerates to one
+    * per-parent sort task per parent — the same cost class as the
+    * in-memory sibling sort Mondrian performs for the identical query,
+    * and strictly better than a breaking sort's global order when
+    * parents are plentiful. A windowless value-lexicographic variant
+    * does not work: a padded-null level of a SHALLOW member must sort
+    * before its subtree while a genuinely EMPTY cell must sort after
+    * its siblings, and a single value column cannot carry both null
+    * meanings.
     */
   private def tupleHierOrderSet(a: AxisFrame, cells: DataFrame, e: String,
       desc: Boolean, slicer: Seq[SlicerItem]): AxisFrame = {
+    require(!e.contains("__CURRENT_ORDINAL__"),
+      "CurrentOrdinal in a non-breaking Order key is not supported — " +
+        "the hierarchical sort evaluates ancestors outside the live " +
+        "positional order; use BASC/BDESC")
     // empty cell = -infinity (FunUtil.compareValues): ASC empties FIRST
     def rankSort(v: Column) = if (desc) v.desc_nulls_last else v.asc_nulls_first
+    // a single-level set has no hierarchy to preserve: plain value sort
+    if (a.dims.length == 1 && a.dims.head.depth == 0)
+      return ordered(a, cells,
+        Seq(rankSort(sexpr(resolveCurrent(e, a.dims)))))
     var joined = a.members
     val sortCols = Seq.newBuilder[Column]
     for (i <- a.dims.indices) {
@@ -1100,9 +994,10 @@ final class Planner(val cube: BoundCube) {
           if (selfMixed) cells.filter(col(DepthCol) === dMax) else cells)
         val resolved = resolveCurrent(e, prevDims :+ AxisDim(d, k))
         require(!resolved.contains("__CURRENT_NAME_"),
-          "non-breaking Order key reads CurrentMember of a tuple " +
-            "position AFTER the one being compared — Mondrian would " +
-            "evaluate it at the hierarchy default; use BASC/BDESC")
+          "non-breaking Order key reads CurrentMember of a hierarchy " +
+            "off the axis or AFTER the tuple position being compared — " +
+            "Mondrian would evaluate it at the hierarchy default; use " +
+            "BASC/BDESC")
         // an earlier mixed dim keys rank partitions and joins by its
         // depth marker too (padded vs genuine nulls)
         val depthKey = if (prevMixed.isDefined) Seq(DepthCol) else Nil
@@ -1113,11 +1008,7 @@ final class Planner(val cube: BoundCube) {
         val rf0 = src.select(
           keyCols.map(c => col(c).as(s"__rk${i}_${k}_$c")) :+
             row_number().over(w).cast("long").as(s"__hr${i}_$k"): _*)
-        // hint from the dims actually in THIS frame's grain (positions
-        // 0..i): an early-position frame of a tuple whose LATER
-        // position is high_cardinality is still tiny — broadcast it
-        // (ADVICE r17; hintOf(a.dims) shuffled every frame of a mixed
-        // small×high-card tuple)
+        // hint from the dims in THIS frame's grain (positions 0..i)
         val rf = if (hintOf(a.dims.take(i + 1)) == Ords.Small)
           broadcast(rf0) else rf0
         val cond = keyCols

@@ -250,7 +250,7 @@ object DedupOps {
     // build added a job to EVERY verify consumer and measurably
     // regressed q_dedup_minhash/clusters/stream_clusters at sf0.1
     // (1.45→2.27 / 1.97→2.89 / 4.73→5.50 min-of-4); the corpus-side
-    // exchange it saves is only ~3.7 MB here. See OPTIMIZATION_r20.md.
+    // exchange it saves is only ~3.7 MB here.
     cand
       .select(struct(col("doc_a"), col("doc_b")).as("pk"))
       .select(col("pk"),

@@ -529,7 +529,7 @@ object StreamingCube {
     // measured 2.98 → 10.36 s min-of-4: AvailableNow's prompt
     // termination rides the no-data batch, and without it the drain
     // idles on the termination-check interval. The trailing batch is
-    // load-bearing machinery, not waste. See OPTIMIZATION_r20.md.
+    // load-bearing machinery, not waste.
     val clicks = eventStream(s, sfDir)
       .filter(col("event_type") === "click")
       .select(col("event_id"), col("user_id"), col("ts"))

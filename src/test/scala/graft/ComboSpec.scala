@@ -242,7 +242,7 @@ class ComboSpec extends SparkSpec {
     // r16: the ordinary (calc-free) OrderSet path is value-based too —
     // force both routings deterministically so neither depends on what
     // the seeded shuffle happens to sample: case -3/-2 are PURE-STORED
-    // (mixed-depth, both directions — the hierOrderSet path), case -1
+    // (mixed-depth, both directions — the tupleHierOrderSet path), case -1
     // is maximal calc-bearing (the applyEntryOps path)
     val stored = pool.filterNot(p => calcNames(p._2))
     val forced: Seq[(Seq[(String, String, Seq[String])], Boolean)] = Seq(

@@ -1103,7 +1103,7 @@ class MdxSpec extends SparkSpec {
     assert(order("BASC").head === "none", "BASC: empty cell first")
     assert(order("DESC").last === "none", "DESC: empty cell last")
     assert(order("BDESC").last === "none", "BDESC: empty cell last")
-    // ordinary stored path (hierOrderSet): expected order computed
+    // ordinary stored path (tupleHierOrderSet): expected order computed
     // from the engine's own cells with the -inf rule — pins equality
     // with the reference comparator whatever the scale factor's data
     val regions = Seq("AFRICA", "AMERICA", "ASIA", "EUROPE", "MIDDLE EAST")
@@ -2127,7 +2127,7 @@ class MdxSpec extends SparkSpec {
   }
 
   test("value-based non-breaking Order over a THREE-level stored set " +
-      "(the mixed-prefix grouping-sets branch of hierOrderSet): " +
+      "(the mixed-prefix grouping-sets branch of tupleHierOrderSet): " +
       "ancestors precede descendants through every depth, sibling " +
       "quarters rank by their own cells") {
     def caption(r: org.apache.spark.sql.Row): String = {

@@ -99,14 +99,20 @@ class OlapEngineSpec extends SparkSpec {
   test("CurrentOrdinal in a non-breaking Order key refuses — the " +
       "hierarchical sort evaluates ancestors outside the live " +
       "positional order (ADVICE r15)") {
-    val ex = intercept[IllegalArgumentException] {
-      Query.from(cube)
-        .columns("revenue")
-        .rows(LevelMembers("customer", "nation"))
-        .order("__CURRENT_ORDINAL__ + revenue", SortDir.Asc)
-        .execute().collect()
+    // a single hierarchy and a tuple set hit the same refusal
+    val msgs = Seq(LevelMembers("customer", "nation"),
+        CrossJoin(LevelMembers("customer", "nation"),
+          LevelMembers("returnflag", "returnflag"))).map { rows =>
+      intercept[IllegalArgumentException] {
+        Query.from(cube)
+          .columns("revenue")
+          .rows(rows)
+          .order("__CURRENT_ORDINAL__ + revenue", SortDir.Asc)
+          .execute().collect()
+      }.getMessage
     }
-    assert(ex.getMessage.contains("non-breaking Order key"))
+    assert(msgs.head.contains("non-breaking Order key"))
+    assert(msgs.distinct.size === 1)
     // the breaking directions still accept it (position-relative keys
     // are well-defined against the live frame there)
     val ok = Query.from(cube)
