@@ -140,7 +140,12 @@ object Bench {
     val errsJson = errs
       .map { case (k, v) => "\"" + k + "\":\"" + v + "\"" }
       .mkString("{", ",", "}")
-    println(s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${best.size},"passes":$passes,"pass_totals":[${passTotals.mkString(",")}],"agg":"min","order":"seeded-shuffle-per-pass","pins":"scoped-per-query","warmup_sec":${ms(warmupSec)},$calibJson"errs":$errsJson,"queries":$qs,"omitted":${omitted.size},"omitted_sec":${ms(omitted.map(_._2).sum)},"sf":"$sfDir"}""")
+    // statements served from a stored cell set (a persisted render)
+    // instead of rendered: a query run three times (warm-up + two
+    // passes) times a cache read in its min-of-2, and this count says
+    // how often that happened. Additions-only, like calib_sec.
+    val cellSetHits = graft.olap.SegmentCache.global.cellSetHits
+    println(s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${best.size},"passes":$passes,"pass_totals":[${passTotals.mkString(",")}],"agg":"min","order":"seeded-shuffle-per-pass","pins":"scoped-per-query","warmup_sec":${ms(warmupSec)},$calibJson"cellset_hits":$cellSetHits,"errs":$errsJson,"queries":$qs,"omitted":${omitted.size},"omitted_sec":${ms(omitted.map(_._2).sum)},"sf":"$sfDir"}""")
     // SPARK_GRAFT_BENCH_OUT=<file>: also dump the COMPLETE per-query
     // map (untruncated — the stdout line keeps only the heaviest
     // queries under a byte budget) for offline scale-curve analysis.
@@ -148,7 +153,7 @@ object Bench {
       val full = best.map { case (k, v) => "\"" + k + "\":" + v }
         .mkString("{", ",", "}")
       val w = new java.io.PrintWriter(out)
-      try w.println(s"""{"total":$total,"passes":$passes,"pass_totals":[${passTotals.mkString(",")}],"warmup_sec":${ms(warmupSec)},$calibJson"errs":$errsJson,"queries":$full,"sf":"$sfDir"}""")
+      try w.println(s"""{"total":$total,"passes":$passes,"pass_totals":[${passTotals.mkString(",")}],"warmup_sec":${ms(warmupSec)},$calibJson"cellset_hits":$cellSetHits,"errs":$errsJson,"queries":$full,"sf":"$sfDir"}""")
       finally w.close()
     }
     spark.stop()

@@ -1,8 +1,12 @@
 package graft.olap
 
+import java.util.concurrent.atomic.LongAdder
+
 import scala.collection.concurrent.TrieMap
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.trees.TreePattern
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 
 /** Aggregate-table routing + segment cache — the two genuinely custom
@@ -328,18 +332,20 @@ final class SegmentCache {
       slicer: Seq[SlicerItem], measures: Seq[String])
 
   private val segments = TrieMap.empty[SegKey, DataFrame]
-  @volatile private var hitCount = 0L
-  @volatile private var missCount = 0L
+  // LongAdders, not volatile vars: serving threads bump these
+  // concurrently outside any lock, and `+=` on a volatile loses updates
+  private val hitCount = new LongAdder
+  private val missCount = new LongAdder
 
-  def hits: Long = hitCount
-  def misses: Long = missCount
+  def hits: Long = hitCount.sum
+  def misses: Long = missCount.sum
   def size: Int = segments.size
 
   def getOrCompute(key: SegKey)(compute: => DataFrame): DataFrame =
     segments.get(key) match {
-      case Some(df) => hitCount += 1; touch(key); leasePin(key); df
+      case Some(df) => hit(key, df)
       case None =>
-        missCount += 1
+        missCount.increment()
         val df = compute.persist()
         val out = segments.putIfAbsent(key, df) match {
           case Some(winner) =>
@@ -349,7 +355,8 @@ final class SegmentCache {
             df.unpersist(blocking = false); winner
           case None => df
         }
-        touch(key); leasePin(key); refreshBudget(out); enforceBudget()
+        touch(key); leasePin(key); record(key, out)
+        refreshBudget(out); enforceBudget()
         out
     }
 
@@ -368,9 +375,9 @@ final class SegmentCache {
     */
   def getOrComputeCut(key: SegKey)(compute: => DataFrame): DataFrame =
     segments.get(key) match {
-      case Some(df) => hitCount += 1; touch(key); leasePin(key); df
+      case Some(df) => hit(key, df)
       case None =>
-        missCount += 1
+        missCount.increment()
         val df = Pins.rawCut(compute)
         val out = segments.putIfAbsent(key, df) match {
           case Some(winner) =>
@@ -382,9 +389,15 @@ final class SegmentCache {
           case None => df
         }
         ckptKeys.add(key)
-        touch(key); leasePin(key); refreshBudget(out); enforceBudget()
+        touch(key); leasePin(key); record(key, out)
+        refreshBudget(out); enforceBudget()
         out
     }
+
+  private def hit(key: SegKey, df: DataFrame): DataFrame = {
+    hitCount.increment(); touch(key); leasePin(key); record(key, df)
+    df
+  }
 
   // ---- read leases (r19) -----------------------------------------
   // Budget eviction (r18) made releasing a segment ROUTINE where it
@@ -404,9 +417,9 @@ final class SegmentCache {
   // (mondrian/rolap/agg/SegmentCacheManager, SURVEY §4#5).
 
   private val pinCounts = TrieMap.empty[SegKey, Int]
-  @volatile private var pinnedSkipCount = 0L
+  private val pinnedSkipCount = new LongAdder
   /** Budget-eviction candidates skipped because a lease pinned them. */
-  def pinnedSkips: Long = pinnedSkipCount
+  def pinnedSkips: Long = pinnedSkipCount.sum
   /** Keys whose stored frame is an eager checkpoint (lineage-free). */
   private val ckptKeys =
     java.util.concurrent.ConcurrentHashMap.newKeySet[SegKey]()
@@ -476,8 +489,8 @@ final class SegmentCache {
   @volatile private var budgetBytes: Long = Long.MaxValue
   private val tick = new java.util.concurrent.atomic.AtomicLong
   private val lastUse = TrieMap.empty[SegKey, Long]
-  @volatile private var evictedCount = 0L
-  def evictions: Long = evictedCount
+  private val evictedCount = new LongAdder
+  def evictions: Long = evictedCount.sum
   def byteBudget: Long = budgetBytes
 
   /** Set the resident-byte budget (<= 0 = unlimited) and enforce it
@@ -562,17 +575,20 @@ final class SegmentCache {
       }.sum
     }
 
-  /** Total materialized bytes across all resident segments (one
-    * storage snapshot for the whole sum).
+  /** Total materialized bytes across all resident segments and stored
+    * cell sets (one storage snapshot for the whole sum).
     */
   def residentBytes: Long = {
     val infos = storageSnapshot()
     segments.map { case (k, df) =>
-      bytesOf(df, ckptKeys.contains(k), infos) }.sum
+      bytesOf(df, ckptKeys.contains(k), infos) }.sum +
+      storedCellSets.map { case (_, cs) => bytesOf(cs.frame.get, false, infos) }.sum
   }
 
-  /** Evict least-recently-hit segments until resident bytes fit the
-    * budget. The most recently used segment is never evicted (the one
+  /** Evict until resident bytes fit the budget: stored cell sets
+    * first, least-recently-served first (each is a derived copy of
+    * cells its segments still hold), then least-recently-hit segments.
+    * The most recently used segment is never evicted (the one
     * just inserted or hit — evicting it would thrash: its consumer is
     * about to read it), and a LEASE-PINNED segment is skipped — a
     * concurrent query's in-flight job may still be reading its blocks,
@@ -586,27 +602,227 @@ final class SegmentCache {
     if (budgetBytes == Long.MaxValue) return
     synchronized {
       val infos = storageSnapshot()
+      val cells = storedCellSets.map { case (k, cs) =>
+        (k, cs, bytesOf(cs.frame.get, false, infos)) }
       val entries = segments.toSeq.map { case (k, df) =>
         (k, bytesOf(df, ckptKeys.contains(k), infos)) }
-      var total = entries.map(_._2).sum
+      var total = cells.map(_._3).sum + entries.map(_._2).sum
       if (total <= budgetBytes) return
+      for ((k, cs, bytes) <- cells.sortBy(_._2.used)
+           if total > budgetBytes && bytes > 0) {
+        dropCellSet(k, cs)
+        total -= bytes
+      }
       val byLru = entries.sortBy { case (k, _) => lastUse.getOrElse(k, 0L) }
       val newest = byLru.lastOption.map(_._1)
       for ((k, bytes) <- byLru
            if total > budgetBytes && !newest.contains(k) && bytes > 0) {
-        if (pinCount(k) > 0) pinnedSkipCount += 1
+        if (pinCount(k) > 0) pinnedSkipCount.increment()
         else {
           evict(k)
-          evictedCount += 1
+          evictedCount.increment()
           total -= bytes
         }
       }
     }
   }
 
-  /** Flush every segment of a cube (reference flush_schema_cache). */
-  def flushCube(cubeId: Long): Unit =
+  // ---- cell sets --------------------------------------------------
+  // Mondrian answers a statement whose cells are all in its segment
+  // cache in-process, with no SQL (SURVEY §4 #5). The analog here is
+  // the statement's persisted render, keyed by (cube, QueryIR). A
+  // build records, thread-locally, every segment frame the cache
+  // hands it (slicer resolution and nested planners included); the
+  // render stays valid exactly while each of those frames is still the
+  // resident one for its key, by reference. So every path that drops
+  // or replaces a segment — flushCube, flushRegion, mergeOrEvict,
+  // budget eviction, clear — invalidates it with no hook of its own;
+  // dropCellSetsOn only releases the storage early.
+  //
+  // Lifecycle: the first sight returns the lazy render untouched and
+  // records its frames; a second sight with the same frames returns
+  // its render `persist()`ed, so the caller's own action (under the
+  // caller's lease or timeout) materializes it; later sights return
+  // that frame — one job over a few cached blocks instead of the
+  // render's jobs, Catalyst passes and codegen.
+
+  /** One statement's record: the segment frames its last build read
+    * and, once stored, its render — served only once `persisted`.
+    * `refused` remembers a failed [[answerable]] check for these
+    * frames. Reference equality (a plain class) makes the TrieMap
+    * replace/remove calls CAS on the exact record.
+    */
+  private final class CellSet(val deps: Map[SegKey, DataFrame],
+      val frame: Option[DataFrame], val refused: Boolean) {
+    @volatile var used: Long = tick.incrementAndGet()
+    @volatile var persisted = false
+  }
+
+  import SegmentCache.CellSetKey
+  private val cellSets = TrieMap.empty[CellSetKey, CellSet]
+  private val cellSetHitCount = new LongAdder
+  private val cellSetStoreCount = new LongAdder
+  /** Statements served from a stored cell set. */
+  def cellSetHits: Long = cellSetHitCount.sum
+  /** Renders persisted as cell sets. */
+  def cellSetStores: Long = cellSetStoreCount.sum
+
+  private final class Recording {
+    val deps = scala.collection.mutable.HashMap.empty[SegKey, DataFrame]
+    // one key handed two different frames: a merge ran mid-build
+    var torn = false
+    def add(k: SegKey, df: DataFrame): Unit =
+      deps.put(k, df).foreach(prev => if (prev ne df) torn = true)
+    def frames: Map[SegKey, DataFrame] = if (torn) Map.empty else deps.toMap
+  }
+  private val recording = new ThreadLocal[Recording]
+
+  private def record(k: SegKey, df: DataFrame): Unit = {
+    val r = recording.get()
+    if (r != null) r.add(k, df)
+  }
+
+  /** Serve `ir` on `cube` through the cell-set layer; `render` plans it.
+    * A build nested in another (a computed slicer's sub-query) only
+    * records into the outer one.
+    */
+  def cellSet(cube: BoundCube, ir: QueryIR)(render: => DataFrame): DataFrame =
+    if (recording.get() != null || mentionsCurrentDate(ir)) render
+    else {
+      val key = CellSetKey(cube.cubeId, ir)
+      serve(key).getOrElse {
+        val prior = cellSets.get(key)
+        val rec = new Recording
+        recording.set(rec)
+        val df = try render finally recording.remove()
+        val deps = rec.frames
+        // a render that reads no segment is not answered from the cache
+        if (deps.nonEmpty) prior match {
+          case Some(p) if sameFrames(p.deps, deps) =>
+            if (p.frame.isEmpty && !p.refused) store(key, p, df, cube.fact)
+          case _ => install(key, prior, new CellSet(deps, None, false))
+        }
+        df
+      }
+    }
+
+  private def serve(key: CellSetKey): Option[DataFrame] =
+    cellSets.get(key).filter(_.persisted).flatMap { cs =>
+      // a materialized cell set over the budget goes before it is read
+      cs.frame.foreach(refreshBudget)
+      enforceBudget()
+      // pin before the residency check: a dependency evicted after it
+      // would free blocks the persisted render's lineage still names
+      cs.deps.keys.foreach(leasePin)
+      if (!cellSets.get(key).exists(_ eq cs) || !resident(cs.deps)) None
+      else {
+        cs.used = tick.incrementAndGet()
+        cellSetHitCount.increment()
+        // still a segment hit per dependency: the cells come from them
+        cs.deps.keys.foreach { k => hitCount.increment(); touch(k) }
+        cs.frame
+      }
+    }
+
+  /** Second sight: persist the render when it is answerable from the
+    * cache, else remember the refusal for these frames. Only the build
+    * that wins the record persists: a losing duplicate's `unpersist`
+    * would uncache the winner's identical plan.
+    */
+  private def store(key: CellSetKey, prior: CellSet, df: DataFrame,
+      fact: DataFrame): Unit =
+    if (!answerable(df, fact, prior.deps))
+      install(key, Some(prior), new CellSet(prior.deps, None, true))
+    else {
+      val next = new CellSet(prior.deps, Some(df), false)
+      if (install(key, Some(prior), next)) {
+        df.persist()
+        // a drop that ran before this persist released nothing
+        if (!cellSets.get(key).exists(_ eq next)) df.unpersist(blocking = false)
+        else { next.persisted = true; cellSetStoreCount.increment() }
+      }
+    }
+
+  /** Replace `prior` (or an absent record) with `next`; false when a
+    * concurrent build won, or when a dependency was dropped meanwhile —
+    * its eviction may have scanned the records before `next` landed.
+    */
+  private def install(key: CellSetKey, prior: Option[CellSet],
+      next: CellSet): Boolean = {
+    val won = prior match {
+      case Some(p) => cellSets.replace(key, p, next) && { release(p); true }
+      case None    => cellSets.putIfAbsent(key, next).isEmpty
+    }
+    if (won && !resident(next.deps)) { dropCellSet(key, next); false }
+    else won
+  }
+
+  private def resident(deps: Map[SegKey, DataFrame]): Boolean =
+    deps.forall { case (k, df) => segments.get(k).exists(_ eq df) }
+
+  private def sameFrames(a: Map[SegKey, DataFrame],
+      b: Map[SegKey, DataFrame]): Boolean =
+    a.size == b.size && a.forall { case (k, df) => b.get(k).exists(_ eq df) }
+
+  /** Refusals. A stored render must be a function of its segments and
+    * the static dimension frames alone, so refuse a plan that is
+    * nondeterministic or reads the clock (`Vba.now`/`dateFn`/`timeFn`,
+    * Spark's current_* family); one with a leaf — after cache
+    * substitution — that reads the cube's fact outside a segment (a
+    * delta or flush would not invalidate it); and one with a
+    * checkpoint leaf the cache does not own (a per-query pin, freed
+    * when the query's scope closes, which the persisted render's
+    * lineage would still name).
+    */
+  private def answerable(df: DataFrame, fact: DataFrame,
+      deps: Map[SegKey, DataFrame]): Boolean = {
+    val plan = df.queryExecution.analyzed
+    // substitute through an alias, so `df`'s own plan is not frozen
+    // before its persist
+    def leaves(d: DataFrame) =
+      d.alias("__cellset").queryExecution.withCachedData.collectLeaves()
+    lazy val factLeaves =
+      fact.queryExecution.analyzed.collectLeaves() ++ leaves(fact)
+    val ownCuts = deps.values.flatMap(_.queryExecution.analyzed
+      .collectLeaves().collect { case l: LogicalRDD => l.rdd.id }).toSet
+    plan.deterministic && !plan.containsPattern(TreePattern.CURRENT_LIKE) &&
+      leaves(df).forall {
+        case l: LogicalRDD => ownCuts(l.rdd.id)
+        case l => !factLeaves.exists(l.sameResult)
+      }
+  }
+
+  /** CurrentDateMember resolves "now" at plan time: never store it.
+    * Collections before products: a List is also a Product, and
+    * walking it as one recurses once per element.
+    */
+  private def mentionsCurrentDate(x: Any): Boolean = x match {
+    case _: CurrentDateMember => true
+    case i: Iterable[_]       => i.exists(mentionsCurrentDate)
+    case p: Product           => p.productIterator.exists(mentionsCurrentDate)
+    case _                    => false
+  }
+
+  private def storedCellSets: Seq[(CellSetKey, CellSet)] =
+    cellSets.toSeq.filter(_._2.persisted)
+
+  private def dropCellSetsOn(k: SegKey): Unit =
+    cellSets.foreach { case (ck, cs) =>
+      if (cs.deps.contains(k)) dropCellSet(ck, cs) }
+
+  private def dropCellSet(k: CellSetKey, cs: CellSet): Unit =
+    if (cellSets.remove(k, cs)) release(cs)
+
+  private def release(cs: CellSet): Unit =
+    cs.frame.foreach(_.unpersist(blocking = false))
+
+  /** Flush every segment and cell set of a cube (reference
+    * flush_schema_cache).
+    */
+  def flushCube(cubeId: Long): Unit = {
     segments.keys.filter(_.cubeId == cubeId).foreach(evict)
+    cellSets.foreach { case (k, cs) => if (k.cubeId == cubeId) dropCellSet(k, cs) }
+  }
 
   /** Incremental maintenance on an insert-delta: merge each cached
     * segment in place when its measures are decomposable, evict the
@@ -633,13 +849,14 @@ final class SegmentCache {
           segments.put(k, merged)
           ckptKeys.add(k)
           evictFrame(old)
-          mergedCount += 1
+          dropCellSetsOn(k)
+          mergedCount.increment()
         }
       }
     }
 
-  @volatile private var mergedCount = 0L
-  def merges: Long = mergedCount
+  private val mergedCount = new LongAdder
+  def merges: Long = mergedCount.sum
 
   /** old ⟗ delta on the grain keys; each measure column combined with
     * its partial-merge fn, null-safe on either side (a grain tuple may
@@ -695,12 +912,16 @@ final class SegmentCache {
     a.take(n).map(String.valueOf) == b.take(n).map(String.valueOf)
   }
 
-  def clear(): Unit = segments.keys.foreach(evict)
+  def clear(): Unit = {
+    segments.keys.foreach(evict)
+    cellSets.foreach { case (k, cs) => dropCellSet(k, cs) }
+  }
 
   private def evict(k: SegKey): Unit = {
     lastUse.remove(k)
     ckptKeys.remove(k)
     segments.remove(k).foreach(evictFrame)
+    dropCellSetsOn(k)
   }
 
   /** A segment is either `.persist()`ed (getOrCompute) or a merged
@@ -714,6 +935,8 @@ final class SegmentCache {
 }
 
 object SegmentCache {
+  private final case class CellSetKey(cubeId: Long, ir: QueryIR)
+
   /** Process-wide cache (the reference's schema-pool-scoped cache
     * manager); keys carry the bound-cube identity so different cubes /
     * scale factors never collide.

@@ -1918,7 +1918,15 @@ final class Planner(val cube: BoundCube) {
       slicer: Seq[SlicerItem]): Seq[SlicerItem] =
     new DimCalcLowering(Nil, Map.empty).expandSlicer(slicer)
 
-  def execute(q0pre: QueryIR): DataFrame = {
+  /** Plan a statement. The one choke point for MDX and builder queries:
+    * a statement whose segments are all still resident is served from
+    * its persisted render (the cell-set layer, [[SegmentCache.cellSet]]).
+    */
+  def execute(q: QueryIR): DataFrame =
+    if (!SegmentCache.enabled) render(q)
+    else SegmentCache.global.cellSet(cube, q)(render(q))
+
+  private def render(q0pre: QueryIR): DataFrame = {
     // dim-hosted Aggregate calc members in WHERE expand to their
     // compound set slicers (and unsupported slicer shapes refuse)
     // BEFORE resolution — a calc path reaching the ordinary set

@@ -323,6 +323,140 @@ class CacheSpec extends SparkSpec {
     }
   }
 
+  test("segment-cache counters lose no update under concurrent hits") {
+    val c = new SegmentCache
+    val k = c.SegKey(95L, Seq("shared"), Nil, Seq("m"))
+    c.getOrCompute(k)(spark.range(10).toDF("m"))
+    val before = c.hits
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
+    try {
+      (1 to 8).map(_ => pool.submit(new Runnable {
+        def run(): Unit =
+          (1 to 50).foreach(_ => c.getOrCompute(k)(fail("must hit")))
+      })).foreach(_.get())
+    } finally pool.shutdown()
+    assert(c.hits - before === 400)
+    c.clear()
+  }
+
+  /** Runs `statement` three times on a cube the cache has never seen
+    * (a copy gets a fresh cubeId): the third run must be a cell-set hit
+    * that still counts one segment hit per dependency.
+    */
+  private def servedOnThirdRun[T](statement: BoundCube => T): Unit = {
+    val c = SegmentCache.global
+    val fresh = cube.copy()
+    val size0 = c.size
+    val first = statement(fresh)
+    val deps = c.size - size0
+    assert(deps > 0, "the statement must read segments")
+    val second = statement(fresh)
+    val (hits0, misses0, served0) = (c.hits, c.misses, c.cellSetHits)
+    val third = statement(fresh)
+    assert(second === first && third === first)
+    assert(c.cellSetHits === served0 + 1, "third run must be a cell-set hit")
+    assert(c.misses === misses0, "a cell-set hit adds no miss")
+    assert(c.hits === hits0 + deps, "one segment hit per dependency")
+    c.flushCube(fresh.cubeId)
+  }
+
+  test("cell sets: a repeated builder statement is served from its " +
+      "persisted render") {
+    servedOnThirdRun { cb =>
+      val r = Query.from(cb).columns("revenue", "sum_qty")
+        .rows(LevelMembers("customer", "region"))
+        .where(MemberSlice("time", Seq(1996))).executeResult()
+      (r.rowAxis, r.values())
+    }
+  }
+
+  test("cell sets: a repeated MDX statement is served from its " +
+      "persisted render") {
+    servedOnThirdRun { cb =>
+      Mdx.execute(
+        """SELECT {[Measures].[revenue]} ON COLUMNS,
+          |  TOPCOUNT([part].[brand].Members, 3, [Measures].[revenue]) ON ROWS
+          |FROM [Sales] WHERE ([returnflag].[R])""".stripMargin, cb)
+        .collect().toSeq
+    }
+  }
+
+  test("cell sets: flushRegion, flushCube and a 1-byte budget make the " +
+      "next run re-render") {
+    val c = SegmentCache.global
+    val fresh = cube.copy()
+    def run() = Query.from(fresh).columns("revenue")
+      .rows(LevelMembers("customer", "nation")).execute().collect().toSeq
+    val expected = run()
+    def stored(): Unit = {
+      run(); run()
+      val served = c.cellSetHits
+      assert(run() === expected)
+      assert(c.cellSetHits === served + 1, "third run must be served")
+    }
+    def reRenders(what: String)(invalidate: => Unit): Unit = {
+      stored()
+      invalidate
+      val (served, misses) = (c.cellSetHits, c.misses)
+      assert(run() === expected)
+      assert(c.cellSetHits === served, s"$what: the next run must re-render")
+      assert(c.misses > misses, s"$what: the re-render must miss")
+    }
+    reRenders("flushRegion")(
+      c.flushRegion(fresh.cubeId, "customer", Seq("EUROPE")))
+    reRenders("flushCube")(c.flushCube(fresh.cubeId))
+    stored()
+    val budgetBefore = c.byteBudget
+    c.setByteBudget(1L)
+    try {
+      val served = c.cellSetHits
+      (1 to 3).foreach(_ => assert(run() === expected))
+      assert(c.cellSetHits === served,
+        "a 1-byte budget evicts every materialized cell set first")
+    } finally c.setByteBudget(
+      if (budgetBefore == Long.MaxValue) 0L else budgetBefore)
+    c.flushCube(fresh.cubeId)
+  }
+
+  test("cell sets: a Now() calc member, a CurrentDateMember axis and a " +
+      "fact read outside a segment are never stored; drill-through is " +
+      "untouched") {
+    val c = SegmentCache.global
+    val fresh = cube.copy()
+    def neverStored[T](what: String)(run: => T): Unit = {
+      val (stores, served) = (c.cellSetStores, c.cellSetHits)
+      (1 to 3).foreach(_ => run)
+      assert(c.cellSetStores === stores, s"$what must not be stored")
+      assert(c.cellSetHits === served, s"$what must not be served")
+    }
+    neverStored("Now()")(Mdx.execute(
+      """WITH MEMBER [Measures].[stamp] AS 'Now()'
+        |SELECT {[Measures].[revenue], [Measures].[stamp]} ON COLUMNS,
+        |  [returnflag].[returnflag].Members ON ROWS
+        |FROM [Sales]""".stripMargin, fresh).collect())
+    spark.conf.set("spark.graft.now", "1996-07-15")
+    try neverStored("CurrentDateMember")(Query.from(fresh)
+      .columns("count_order")
+      .rows(CurrentDateMember("time", "month", "BEFORE"))
+      .execute().collect())
+    finally spark.conf.unset("spark.graft.now")
+    // NonEmptyCrossJoin finds its occurring tuples in the fact itself
+    neverStored("NonEmptyCrossJoin")(Query.from(fresh).columns("revenue")
+      .rows(NonEmptyCrossJoin(LevelMembers("returnflag", "returnflag"),
+        LevelMembers("linestatus", "linestatus")))
+      .execute().collect())
+    val drill =
+      """DRILLTHROUGH SELECT {[Measures].[revenue]} ON COLUMNS
+        |FROM [Sales]
+        |WHERE ([customer].[EUROPE].[NATION_13])
+        |RETURN [l_orderkey], [l_quantity]""".stripMargin
+    def drilled() = Mdx.execute(drill, fresh).collect().map(_.toString).sorted.toSeq
+    val rows = drilled()
+    assert(rows.nonEmpty)
+    neverStored("DRILLTHROUGH")(assert(drilled() === rows))
+    c.flushCube(fresh.cubeId)
+  }
+
   test("agg router answers a coarser query from a registered rollup") {
     val base = Cubes.sales(spark, Sf)
     val at = new Planner(base).buildAggTable("nation_month",

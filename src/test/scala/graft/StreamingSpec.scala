@@ -84,6 +84,37 @@ class StreamingSpec extends SparkSpec {
     assert(after(other) === before(other))
   }
 
+  test("cell sets: after applyDeltaBatch the next Events answer " +
+      "includes the delta") {
+    val cube = Cubes.events(spark, Sf).copy()
+    val cache = graft.olap.SegmentCache.global
+    val planner = new graft.olap.Planner(cube)
+    def run() = graft.olap.Mdx.execute(
+      """SELECT {[Measures].[n_events], [Measures].[sum_value]} ON COLUMNS,
+        |  [event_type].[event_type].Members ON ROWS
+        |FROM [Events]""".stripMargin, cube).collect()
+      .map(r => r.getAs[String]("event_type") -> r.getAs[Long]("n_events")).toMap
+    val before = run(); run()
+    val served = cache.cellSetHits
+    assert(run() === before)
+    assert(cache.cellSetHits === served + 1, "third run must be served")
+    val delta = Tables.load(spark, Sf, "events")
+      .filter(col("event_type") === "click")
+      .withColumn("l_datekey", to_date(col("ts")))
+    val deltaN = delta.count()
+    assert(deltaN > 0)
+    StreamingCube.applyDeltaBatch(delta, cube, cache, planner)
+    val after = run()
+    assert(cache.cellSetHits === served + 1,
+      "a merged segment invalidates the stored render")
+    assert(after("click") === before("click") + deltaN)
+    assert(after - "click" === before - "click")
+    run()
+    assert(run() === after, "the re-stored render serves the merged cells")
+    assert(cache.cellSetHits === served + 2)
+    cache.flushCube(cube.cubeId)
+  }
+
   test("stateful sessionization carries state across micro-batches") {
     import spark.implicits._
     val events = Tables.load(spark, Sf, "events")
