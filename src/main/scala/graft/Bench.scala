@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import graft.Harness.force
 
 /** Benchmark main: runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR and prints one JSON line of per-query seconds.
@@ -19,31 +19,14 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val passes = sys.env.getOrElse("SPARK_GRAFT_BENCH_PASSES", "2").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     // q1_agg: JVM/codegen warmup + cube construction (dimension
     // persist); q_star_region additionally materializes the in-memory
     // star fact (Cubes.inMemoryFact); q_aggroute builds + persists its
     // registered rollup (pool-cached cube) so the timed passes measure
     // routed-probe cost, not the one-time build.
-    // force(df) executes the query's OWN physical plan and counts
-    // its InternalRows. A bare df.count() re-optimizes `count over
-    // plan`, and Catalyst ELIMINATES a left join whose build side is
-    // unique on the join keys when only the row count is needed — the
-    // OLAP axis shape (member frame LEFT JOIN aggregated cells on the
-    // grain keys) compiles to `count over LocalTableScan` and the
-    // whole aggregation never runs (r14 finding: the fused dim-calc
-    // count-plan had 0 scans and 0 joins). toRdd runs the compiled
-    // plan as-is, measuring the real work without a driver collect.
-    def force(df: org.apache.spark.sql.DataFrame): Long =
-      df.queryExecution.toRdd.count()
     val buildT0 = System.nanoTime()
     for (w <- Seq("q1_agg", "q_star_region", "q_aggroute"))
       try force(SparkEntry.queries(w)(spark, sfDir))
@@ -96,18 +79,7 @@ object Bench {
       val order = new scala.util.Random(0x9e3779b9L + pass).shuffle(names)
       order.map { name =>
         val t0 = System.nanoTime()
-        // Pins.scoped: every load-bearing persist the query creates is
-        // released when its action returns, so query N+1 starts with
-        // query N's storage freed — the r6 official bench ran
-        // q_pipeline_curate with ~30 stale frames resident and paid 5×
-        // (18.5s vs 3.7s clean) for the eviction/recompute thrash.
-        // withLease: pins this query's segments (plan through force)
-        // against a concurrent enforceBudget — see SegmentCache
-        try graft.olap.Pins.scoped {
-          graft.olap.SegmentCache.global.withLease {
-            force(SparkEntry.queries(name)(spark, sfDir))
-          }
-        }
+        try Harness.scoped { force(SparkEntry.queries(name)(spark, sfDir)) }
         catch {
           case t: Throwable =>
             errs.getOrElseUpdate(name, t.getClass.getSimpleName)

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Materialize a scaled-up copy of the sf0.1 corpus for the real-10×
@@ -42,11 +42,7 @@ object MakeScaledSf {
         "suffix geometry are derived for <= 10 replicas)")
     val outDir = args.lift(1).getOrElse(s"/tmp/graft_sf1")
     val srcDir = "/root/testdata/sf0.1"
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session(32)
 
     def reps: DataFrame =
       spark.range(mult).select(col("id").cast("int").as("rep"))

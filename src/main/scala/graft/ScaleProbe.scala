@@ -1,207 +1,30 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import graft.Harness.force
 
-/** Ad-hoc scale-curve probe (SCALING.md evidence): replicate the sf0.1
-  * corpus Nx with shifted ids and time the dedup paths. Replicated docs
-  * are textually distinct (suffix token) so pair counts don't explode.
+/** Scale probes at sf0.1, local[32]: each branch times its steps AND
+  * asserts its result (labels equal the one-shot batch CC, a bounded
+  * budget, no concurrent failure). SCALING.md records the curves.
+  * Usage: `runMain graft.ScaleProbe <branch> [args]`.
   */
 object ScaleProbe {
+  private val Branches = Seq("components", "compact", "streamclusters",
+    "soak", "seglru", "servesoak", "snapdup")
+
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val branch = args.headOption.getOrElse("")
+    require(Branches.contains(branch),
+      s"usage: ScaleProbe <${Branches.mkString("|")}> [args]")
+    val spark = Harness.session(32)
     def time(name: String)(f: => Any): Unit = {
       val t0 = System.nanoTime(); val r = f
       println(f"$name%-26s ${(System.nanoTime() - t0) / 1e9}%6.2f s  ($r)")
     }
-    // force(df) executes the query's OWN compiled plan (a bare count()
-    // re-optimizes, and Catalyst can eliminate joins under it — the
-    // r14 bench-integrity finding); EVERY timed reading goes through
-    // it so the class of bug cannot recur silently in a probe branch
-    def force(df: org.apache.spark.sql.DataFrame): Long =
-      df.queryExecution.toRdd.count()
     val docs = spark.read.parquet("/root/testdata/sf0.1/documents.parquet")
       .select("doc_id", "text", "source", "n_chars")
     val emb = spark.read.parquet("/root/testdata/sf0.1/embeddings.parquet")
-    val n = docs.count()
-    if (args.headOption.contains("clean")) {
-      // stage-by-stage profile of the clean pipeline (CC upgrade cost)
-      import graft.ops.{CleanPipeline, DedupOps, TextOps}
-      import graft.olap.Pins
-      for (_ <- 1 to 2) {
-        time("profile (quality feats)")(Pins.scoped {
-          force(TextOps.profile(docs)) })
-        time("exact dedup agg+join")(Pins.scoped {
-          val k1 = TextOps.qualityFilter(docs, 30, 0.04)
-          val keep = DedupOps.exactDedup(k1).select("doc_id")
-          force(k1.join(keep, "doc_id")) })
-        time("exact dedup min_by")(Pins.scoped {
-          val k1 = TextOps.qualityFilter(docs, 30, 0.04)
-          force(k1.groupBy(expr("md5(text)").as("fp"))
-            .agg(expr("min_by(struct(doc_id, text, source, n_chars), doc_id)")
-              .as("r"))
-            .select(col("r.doc_id"), col("r.text"), col("r.source"),
-              col("r.n_chars"))) })
-        time("shingled materialize")(Pins.scoped {
-          val sh = Pins.pin(DedupOps.shingled(docs).persist())
-          force(sh) })
-        time("jaccardPairs")(Pins.scoped {
-          force(DedupOps.jaccardPairs(docs, 0.5)) })
-        time("componentsStar on pairs")(Pins.scoped {
-          val pairs = Pins.pin(DedupOps.jaccardPairs(docs, 0.5)
-            .select("doc_a", "doc_b").persist())
-          val nodes = pairs.select(col("doc_a").as("doc_id"))
-            .union(pairs.select(col("doc_b").as("doc_id"))).distinct()
-          force(DedupOps.componentsStar(pairs, nodes)) })
-        time("clean (full)")(Pins.scoped {
-          force(CleanPipeline.clean(docs)) })
-        time("curate (full)")(Pins.scoped {
-          force(CleanPipeline.curate(docs)) })
-      }
-      // the persisted fate artifact vs re-running the stages, at 1x
-      // and 8x (replicas textually distinct, same convention as the
-      // cluster curve)
-      for (mult <- Seq(1, 8)) {
-        val big = docs.crossJoin(
-            spark.range(mult).select(col("id").as("rep")))
-          .select((col("doc_id") + col("rep") * lit(n)).as("doc_id"),
-            concat(col("text"), lit(" rep"), col("rep")).as("text"),
-            col("source"), col("n_chars"))
-          .repartition(32).persist()
-        println(s"-- clean index mult=$mult docs=${big.count()}")
-        val p = s"/tmp/graft_scale_cleanidx_$mult"
-        time(s"fate index write x$mult")(Pins.scoped {
-          CleanPipeline.writeCleanIndex(big, p)
-          force(CleanPipeline.readCleanFates(spark, p)) })
-        time(s"fate read+stats x$mult")(Pins.scoped {
-          force(CleanPipeline.cleanStatsOver(CleanPipeline.cleanFrom(
-            big, CleanPipeline.readCleanFates(spark, p)))) })
-        time(s"fate read+curate x$mult")(Pins.scoped {
-          force(CleanPipeline.curateOver(CleanPipeline.cleanFrom(
-            big, CleanPipeline.readCleanFates(spark, p)))) })
-        time(s"stats re-running stages x$mult")(Pins.scoped {
-          force(CleanPipeline.cleanStats(big)) })
-        big.unpersist()
-      }
-      spark.stop(); return
-    }
-    if (args.headOption.contains("dimcalccj")) {
-      // fused dim-calc crossjoin at scale: a computed (LevelMembers)
-      // other factor at sf0.1 vs the true-10x corpus — the plan is one
-      // fact pass whatever the entry count, so wall should track the
-      // fact scan, not N. Second arg = sf dir (default sf0.1).
-      import graft.olap.Mdx
-      val dir = args.lift(1).getOrElse("/root/testdata/sf0.1")
-      val cube = graft.Cubes.sales(spark, dir)
-      val q =
-        """WITH MEMBER [customer].[EU13 and AS2] AS
-          |  'Aggregate({[customer].[EUROPE].[NATION_13],
-          |              [customer].[ASIA].[NATION_2]})'
-          |SELECT {[Measures].[revenue], [Measures].[sum_qty]} ON COLUMNS,
-          |  CROSSJOIN({[customer].[AMERICA], [customer].[EU13 and AS2],
-          |             [customer].[AFRICA], [customer].[EUROPE]},
-          |            [time].[month].Members) ON ROWS
-          |FROM [Sales]""".stripMargin
-      // two calc-bearing factors (r14): the chained explodes stay one
-      // fact pass
-      val q2 =
-        """WITH MEMBER [customer].[EU13 and AS2] AS
-          |  'Aggregate({[customer].[EUROPE].[NATION_13],
-          |              [customer].[ASIA].[NATION_2]})'
-          |MEMBER [time].[Y9596] AS
-          |  'Aggregate({[time].[1995], [time].[1996]})'
-          |SELECT {[Measures].[revenue], [Measures].[sum_qty]} ON COLUMNS,
-          |  CROSSJOIN({[customer].[AMERICA], [customer].[EU13 and AS2],
-          |             [customer].[AFRICA], [customer].[EUROPE]},
-          |            {[time].[Y9596], [time].[1995], [time].[1996]})
-          |    ON ROWS
-          |FROM [Sales]""".stripMargin
-      // Filter over a crossjoined calc factor (r14): the pre-crossjoin
-      // condition pass adds a SECOND entry-grain scan
-      val q3 =
-        """WITH MEMBER [customer].[EU13 and AS2] AS
-          |  'Aggregate({[customer].[EUROPE].[NATION_13],
-          |              [customer].[ASIA].[NATION_2]})'
-          |SELECT {[Measures].[revenue], [Measures].[sum_qty]} ON COLUMNS,
-          |  CROSSJOIN(
-          |    FILTER({[customer].[AMERICA], [customer].[EU13 and AS2],
-          |            [customer].[AFRICA], [customer].[EUROPE]},
-          |           [Measures].[revenue] > 0),
-          |    [time].[month].Members) ON ROWS
-          |FROM [Sales]""".stripMargin
-      // the shared force(df) runs the query's own physical plan (a bare
-      // count() re-optimizes and Catalyst eliminates the axis left
-      // join whose build side is key-unique — the aggregation never
-      // executes and the probe times nothing; r14 finding)
-      for (pass <- 1 to 2)
-        time(s"dimcalc cj x months p$pass")(force(Mdx.execute(q, cube)))
-      for (pass <- 1 to 2)
-        time(s"dimcalc 2-factor cj p$pass")(force(Mdx.execute(q2, cube)))
-      for (pass <- 1 to 2)
-        time(s"dimcalc filtered cj p$pass")(force(Mdx.execute(q3, cube)))
-      // r15: NECJ nested under an outer CrossJoin — support evaluated
-      // at the NECJ's own grain adds ONE distinct-support pass whose
-      // output is axis-sized (entries x months), semi-joined in
-      val q4 =
-        """WITH MEMBER [customer].[EU13 and AS2] AS
-          |  'Aggregate({[customer].[EUROPE].[NATION_13],
-          |              [customer].[ASIA].[NATION_2]})'
-          |SELECT {[Measures].[revenue], [Measures].[sum_qty]} ON COLUMNS,
-          |  CROSSJOIN(
-          |    NONEMPTYCROSSJOIN({[customer].[AMERICA],
-          |                       [customer].[EU13 and AS2]},
-          |                      [time].[month].Members),
-          |    [returnflag].[returnflag].Members) ON ROWS
-          |FROM [Sales]""".stripMargin
-      for (pass <- 1 to 2)
-        time(s"dimcalc nested NECJ p$pass")(force(Mdx.execute(q4, cube)))
-      // r15: non-breaking hierarchical Order — in-plan rank windows
-      // over the N entry rows, still one fact scan
-      val q5 =
-        """WITH MEMBER [customer].[N13 solo] AS
-          |  'Aggregate({[customer].[EUROPE].[NATION_13]})'
-          |SELECT {[Measures].[revenue], [Measures].[sum_qty]} ON COLUMNS,
-          |  ORDER({[customer].[EUROPE].[NATION_18], [customer].[EUROPE],
-          |         [customer].[N13 solo], [customer].[AMERICA]},
-          |        [Measures].[revenue], ASC) ON ROWS
-          |FROM [Sales]""".stripMargin
-      for (pass <- 1 to 2)
-        time(s"dimcalc hier order p$pass")(force(Mdx.execute(q5, cube)))
-      // r16: ordinary-path (pure-stored) hierarchical Order — the
-      // ancestor-cell pass at the coarser grain + per-level rank
-      // windows; the gs segment serves repeat consumers from its
-      // checkpoint (pass 2 pins the warm cost)
-      val q6 =
-        """SELECT {[Measures].[revenue]} ON COLUMNS,
-          |  ORDER({[customer].[AFRICA], [customer].[AMERICA],
-          |         [customer].[EUROPE],
-          |         [customer].[EUROPE].[NATION_13],
-          |         [customer].[EUROPE].[NATION_18]},
-          |        [Measures].[revenue], DESC) ON ROWS
-          |FROM [Sales]""".stripMargin
-      for (pass <- 1 to 2)
-        time(s"stored hier order p$pass")(force(Mdx.execute(q6, cube)))
-      // r16: MDX context override — the overriding entry aggregates
-      // ONE subcube (scan-pushed predicate) and replicates across the
-      // overridden factor's members; stored rows ride the star shape
-      val q7 =
-        """WITH MEMBER [time].[EU all] AS
-          |  'Aggregate({[customer].[EUROPE]})'
-          |SELECT {[Measures].[revenue]} ON COLUMNS,
-          |  CROSSJOIN({[time].[1995], [time].[EU all]},
-          |            {[customer].[AMERICA], [customer].[ASIA]})
-          |    ON ROWS
-          |FROM [Sales]""".stripMargin
-      for (pass <- 1 to 2)
-        time(s"context override p$pass")(force(Mdx.execute(q7, cube)))
-      spark.stop()
-      return
-    }
-    if (args.headOption.contains("components")) {
+    if (branch == "components") {
       // componentsAuto crossover probe: the driver union-find path is
       // capped at 2M deduped edges; above it the distributed star
       // rounds take over. Exercise BOTH paths at and past the boundary
@@ -244,9 +67,8 @@ object ScaleProbe {
           diff })
         Pins.freeCut(edges); Pins.freeCut(nodes)
       }
-      spark.stop(); return
     }
-    if (args.headOption.contains("compact")) {
+    if (branch == "compact") {
       // persisted-index small-files curve: many tiny appends (the
       // production streaming cadence), then compaction — the claim is
       // that read/append/snapshot cost and the listing surface go
@@ -329,9 +151,8 @@ object ScaleProbe {
       time("ivfpq query (compacted)")(Pins.scoped {
         force(SimilarityOps.queryIvfPqIndex(spark, pq,
           emb.filter(col("vec_id") < 50), k = 10, nprobe = 4)) })
-      spark.stop(); return
     }
-    if (args.headOption.contains("streamclusters")) {
+    if (branch == "streamclusters") {
       // streaming cluster-index ingest batch-size sweep at a FIXED
       // corpus: per-batch work must scale with the batch, so total
       // drain time across nBatches ∈ {2, 8} stays roughly flat (the
@@ -381,9 +202,8 @@ object ScaleProbe {
             }
             got.size })
       }
-      spark.stop(); return
     }
-    if (args.headOption.contains("soak")) {
+    if (branch == "soak") {
       // LONG-CADENCE streaming soak (VERDICT r11 watch-list): 200+
       // micro-batches through clusterIndexIngest at production
       // trickle size, compaction wired into the lifecycle vs off.
@@ -471,68 +291,8 @@ object ScaleProbe {
             spark, s"$root/index")) })
         println(s"   final dirs: ${tableDirs(root)}")
       }
-      spark.stop(); return
     }
-    if (args.headOption.contains("segchurn")) {
-      // r17: lifecycle soak for the r16 EAGER-CHECKPOINT grouping-sets
-      // segments (Aggregates.getOrComputeCut). The checkpoint trades
-      // executor blocks for the per-consumer recompute fix; this curve
-      // proves the trade stays bounded under churn: N DISTINCT
-      // mixed-set queries (distinct slicers → distinct SegKeys) grow
-      // storage linearly in LIVE segments only, and a region flush /
-      // cube flush releases the checkpointed blocks (persistent-RDD
-      // count and block bytes return to baseline).
-      import graft.olap.{Mdx, SegmentCache}
-      val cube = graft.Cubes.sales(spark, "/root/testdata/sf0.1")
-      val sc = spark.sparkContext
-      def storage: (Int, Long) = {
-        val infos = sc.getRDDStorageInfo
-        (infos.length, infos.map(i => i.memSize + i.diskSize).sum)
-      }
-      def mixedQ(where: String): Long = graft.olap.Pins.scoped {
-        force(Mdx.execute(
-          s"""SELECT {[Measures].[revenue]} ON COLUMNS,
-             |  ORDER({[customer].[EUROPE],
-             |         [customer].[EUROPE].[NATION_13],
-             |         [customer].[ASIA],
-             |         [customer].[ASIA].[NATION_2]},
-             |        [Measures].[revenue], DESC) ON ROWS
-             |FROM [Sales] WHERE ($where)""".stripMargin, cube))
-      }
-      val c = SegmentCache.global
-      c.clear()
-      val (rdd0, bytes0) = storage
-      println(f"baseline: rdds=$rdd0%d bytes=$bytes0%d segs=${c.size}%d")
-      val slicers =
-        (1995 to 2001).map(y => s"[time].[$y]") ++
-        (1995 to 2001).flatMap(y =>
-          (1 to 4).map(q => s"[time].[$y].[$y-Q$q]"))
-      slicers.zipWithIndex.foreach { case (w, i) =>
-        mixedQ(w)
-        if ((i + 1) % 7 == 0) {
-          val (r, b) = storage
-          println(f"after ${i + 1}%3d distinct queries: segs=${c.size}%3d " +
-            f"rdds=${r - rdd0}%3d bytes=${b - bytes0}%d")
-        }
-      }
-      val (rFull, bFull) = storage
-      println(f"peak: segs=${c.size} rdds=${rFull - rdd0} " +
-        f"bytes=${bFull - bytes0}")
-      // region flush releases every segment that can contain EUROPE
-      // cells (all of them — the queries have no customer slicer)
-      c.flushRegion(cube.cubeId, "customer", Seq("EUROPE"))
-      val (rFlush, bFlush) = storage
-      println(f"after flushRegion(EUROPE): segs=${c.size} " +
-        f"rdds=${rFlush - rdd0} bytes=${bFlush - bytes0}")
-      // the queries repeat fine after the flush (cold recompute)
-      mixedQ("[time].[1995]")
-      c.flushCube(cube.cubeId)
-      val (rEnd, bEnd) = storage
-      println(f"after flushCube: segs=${c.size} rdds=${rEnd - rdd0} " +
-        f"bytes=${bEnd - bytes0}")
-    }
-
-    if (args.headOption.contains("seglru")) {
+    if (branch == "seglru") {
       // r18: byte-budget LRU soak — 200 DISTINCT mixed-set queries
       // (distinct slicers → distinct SegKeys) under a resident-byte
       // budget. Without the cap the r17 segchurn curve grows linearly
@@ -552,17 +312,15 @@ object ScaleProbe {
       // also proves the plateau CONVERGES with pins active (leases
       // release between queries; pinnedSkips counts mid-query
       // deferrals)
-      def mixedQ(where: String): Long = graft.olap.Pins.scoped {
-        SegmentCache.global.withLease {
-          force(Mdx.execute(
-            s"""SELECT {[Measures].[revenue]} ON COLUMNS,
-               |  ORDER({[customer].[EUROPE],
-               |         [customer].[EUROPE].[NATION_13],
-               |         [customer].[ASIA],
-               |         [customer].[ASIA].[NATION_2]},
-               |        [Measures].[revenue], DESC) ON ROWS
-               |FROM [Sales] WHERE ($where)""".stripMargin, cube))
-        }
+      def mixedQ(where: String): Long = Harness.scoped {
+        force(Mdx.execute(
+          s"""SELECT {[Measures].[revenue]} ON COLUMNS,
+             |  ORDER({[customer].[EUROPE],
+             |         [customer].[EUROPE].[NATION_13],
+             |         [customer].[ASIA],
+             |         [customer].[ASIA].[NATION_2]},
+             |        [Measures].[revenue], DESC) ON ROWS
+             |FROM [Sales] WHERE ($where)""".stripMargin, cube))
       }
       val c = SegmentCache.global
       c.clear()
@@ -603,7 +361,7 @@ object ScaleProbe {
       println("seglru: OK")
     }
 
-    if (args.headOption.contains("servesoak")) {
+    if (branch == "servesoak") {
       // r19: multi-thread serving soak — 8 threads hammer ONE
       // BoundCube through a pool of mixed query shapes (persisted
       // groupBy segments, CHECKPOINTED mixed-depth cut segments,
@@ -613,7 +371,7 @@ object ScaleProbe {
       // x 2 shapes — this is the load test: every result must equal
       // its serial run, no stage may fail, and the pinned-skip path
       // must actually fire.
-      import graft.olap.{Mdx, Pins, Query, SegmentCache,
+      import graft.olap.{Mdx, Query, SegmentCache,
         LevelMembers, Members, MemberSlice}
       val cube = graft.Cubes.sales(spark, "/root/testdata/sf0.1")
       val c = SegmentCache.global
@@ -663,7 +421,7 @@ object ScaleProbe {
       // serial ground truth, unlimited budget
       c.clear(); c.setByteBudget(0L)
       val serial = shapes.map { case (n, f) =>
-        n -> Pins.scoped { c.withLease { f() } } }.toMap
+        n -> Harness.scoped { f() } }.toMap
       c.clear()
       // 1-byte budget = maximum churn: EVERY miss tries to evict every
       // materialized unpinned segment, so threads constantly evict
@@ -682,7 +440,7 @@ object ScaleProbe {
           while (i < iters) {
             val (name, f) = shapes((tid + i) % shapes.length)
             try {
-              val got = Pins.scoped { c.withLease { f() } }
+              val got = Harness.scoped { f() }
               if (got != serial(name))
                 errs.add(s"t$tid i$i $name: result diverged " +
                   s"(${got.length} vs ${serial(name).length} rows)")
@@ -706,35 +464,7 @@ object ScaleProbe {
       println("servesoak: OK")
     }
 
-    if (args.headOption.contains("tupleplan")) {
-      // r17: physical-plan audit of the tuple non-breaking Order
-      // (tupleHierOrderSet) — rank frames must broadcast-join, no
-      // sort-merge joins, and the per-position cell passes must stay
-      // grouping-sets scans (Expand), at both probe SFs
-      import graft.olap.Mdx
-      for (sf <- Seq("/root/testdata/sf0.1", "/tmp/graft_sf1")
-           if new java.io.File(sf).isDirectory) {
-        val cube = graft.Cubes.sales(spark, sf)
-        val df = Mdx.execute(
-          """SELECT {[Measures].[revenue]} ON COLUMNS,
-            |  HEAD(ORDER(CROSSJOIN({[customer].[EUROPE].[NATION_13],
-            |                        [customer].[EUROPE].[NATION_18],
-            |                        [customer].[ASIA].[NATION_2]},
-            |                       {[time].[1995], [time].[1996]}),
-            |             [Measures].[revenue], DESC), 3) ON ROWS
-            |FROM [Sales]""".stripMargin, cube)
-        time(s"tuple order $sf")(force(df))
-        val plan = df.queryExecution.executedPlan.toString
-        def cnt(p: String) = p.r.findAllIn(plan).size
-        println(s"  plan[$sf]: bhj=${cnt("BroadcastHashJoin")} " +
-          s"smj=${cnt("SortMergeJoin")} " +
-          s"exch=${cnt("Exchange hashpartitioning")} " +
-          s"expand=${cnt("Expand")} window=${cnt("Window")} " +
-          s"scans=${cnt("Scan parquet")} nlj=${cnt("NestedLoop")}")
-      }
-    }
-
-    if (args.headOption.contains("snapdup")) {
+    if (branch == "snapdup") {
       // snapshotClusterLabels on a HIGH-dup-mass corpus (VERDICT r10
       // #4): the per-snapshot fold reads the full last-gen label frame
       // and re-runs components over (label-edges ∪ new edges), so its
@@ -800,146 +530,6 @@ object ScaleProbe {
           s"labels diverge at cadence $snapEvery: ${got.size} vs ${expect.size}")
       }
       corpus.unpersist()
-      spark.stop(); return
-    }
-    if (args.headOption.contains("clusters")) {
-      // persisted cluster index scale curve: build cost vs INCREMENTAL
-      // append cost (the artifact's reason to exist — append must track
-      // the new docs, not the corpus), plus the policy-read path
-      import graft.ops.DedupOps
-      import graft.olap.Pins
-      for (mult <- Seq(1, 8)) {
-        val big = docs.crossJoin(
-            spark.range(mult).select(col("id").as("rep")))
-          .select((col("doc_id") + col("rep") * lit(n)).as("doc_id"),
-            concat(col("text"), lit(" rep"), col("rep")).as("text"),
-            col("source"), col("n_chars"))
-          .repartition(32).persist()
-        val gen2 = big
-          .select((col("doc_id") + lit(100000000L)).as("doc_id"),
-            concat(col("text"), lit(" gen2")).as("text"),
-            col("source"), col("n_chars"))
-        println(s"-- mult=$mult docs=${big.count()}")
-        val p = s"/tmp/graft_scale_clusters_$mult"
-        // append through the handle the build RETURNED — a hand-built
-        // one would throw on any future default-param change (the
-        // append guard requires an exact marker match)
-        var idx: DedupOps.ClusterIndex = null
-        time(s"index write x$mult")(Pins.scoped {
-          idx = DedupOps.writeClusterIndex(big, p)
-          force(DedupOps.readClusterLabels(spark, p)) })
-        time(s"index append x$mult")(Pins.scoped {
-          DedupOps.appendToClusterIndex(idx, gen2, 1L)
-          force(DedupOps.readClusterLabels(spark, p)) })
-        time(s"policy read x$mult")(Pins.scoped {
-          force(DedupOps.keepBestPerClusterFrom(
-            DedupOps.readClusterLabels(spark, p),
-            big.union(gen2))) })
-        time(s"in-memory CC x$mult")(Pins.scoped {
-          force(DedupOps.nearDupClusters(big)) })
-        big.unpersist()
-      }
-      spark.stop(); return
-    }
-    for (mult <- Seq(1, 8)) {
-      val big = docs.crossJoin(
-          spark.range(mult).select(col("id").as("rep")))
-        .select((col("doc_id") + col("rep") * lit(n)).as("doc_id"),
-          concat(col("text"), lit(" rep"), col("rep")).as("text"),
-          col("source"), col("n_chars"))
-        .repartition(32).persist()
-      val nEmb = emb.count()
-      val bigEmb = emb.crossJoin(
-          spark.range(mult).select(col("id").as("rep")))
-        .select((col("vec_id") + col("rep") * lit(nEmb)).as("vec_id"),
-          col("embedding"))
-        .repartition(32).persist()
-      println(s"-- mult=$mult docs=${big.count()} embs=${bigEmb.count()}")
-      time(s"jaccard x$mult")(force(
-        graft.ops.DedupOps.jaccardPairs(big, 0.5)))
-      time(s"minhash x$mult")(force(
-        graft.ops.DedupOps.minhashLsh(big, 4, 2, 0.5)))
-      time(s"embed_lsh x$mult")(force(
-        graft.ops.DedupOps.embeddingPairsLshAuto(bigEmb, 0.47)))
-      time(s"repetition x$mult")(force(
-        graft.ops.TextOps.repetition(big)))
-      time(s"curate_cap x$mult")(force(
-        graft.ops.CurationOps.capPerSource(big, 40)))
-      time(s"pack_shards x$mult")(force(
-        graft.ops.CurationOps.packShards(big, 2000L)))
-      time(s"pack_shards_dist x$mult")(force(
-        graft.ops.CurationOps.packShards(big, 2000L,
-          hint = graft.olap.Ords.Large)))
-      time(s"dup_spans x$mult")(force(
-        graft.ops.DedupOps.dupSpans(big)))
-      time(s"bloom_decontam x$mult")(force(
-        graft.ops.DedupOps.decontaminateBloom(
-          big, docs.limit(5000))))
-      // SemDeDup's knob: k grows with the corpus so per-cell pair work
-      // stays bounded (k=8 at 1x -> k=64 at 8x keeps E[|cell|] fixed)
-      time(s"semantic_dedup k=${8 * mult} x$mult")(force(
-        graft.ops.SimilarityOps.semanticDedup(bigEmb,
-          k = 8 * mult, iters = 2, tau = 0.47)))
-      time(s"chunk_text x$mult")(force(
-        graft.ops.TextOps.chunkText(big, 32, 8)))
-      time(s"keywords x$mult")(force(
-        graft.ops.TextOps.keywords(big)))
-      time(s"char_entropy x$mult")(force(
-        graft.ops.TextOps.charEntropy(big)))
-      time(s"quantize_int8 x$mult")(force(
-        graft.ops.SimilarityOps.quantizeInt8(bigEmb)))
-      time(s"pq_encode x$mult")(force(
-        graft.ops.SimilarityOps.pqEncode(bigEmb, m = 4, kSub = 8,
-          iters = 2)))
-      time(s"pq_topk x$mult")(force(
-        graft.ops.SimilarityOps.pqTopK(bigEmb,
-          bigEmb.filter(col("vec_id") < 5), m = 4, kSub = 8,
-          iters = 2, k = 10)))
-      time(s"lm_score x$mult")(force(
-        graft.ops.TextOps.lmScore(big)))
-      time(s"keep_best_cluster x$mult")(force(
-        graft.ops.DedupOps.keepBestPerCluster(big)))
-      time(s"bm25 x$mult")(force(
-        graft.ops.RetrievalOps.bm25(big,
-          graft.queries.FeatureQueries.BM25_QUERIES)))
-      time(s"lm_bigram x$mult")(force(
-        graft.ops.TextOps.lmScoreBigram(big)))
-      time(s"eval_overlap x$mult")(force(
-        graft.ops.DedupOps.evalNgramOverlap(
-          big, docs.limit(2000))))
-      time(s"quality_gate x$mult")(force(
-        graft.ops.CurationOps.qualityGateTopFraction(big, 0.5)))
-      // events replicate by user shift: the as-of window partitions by
-      // user, so Nx users at fixed per-user history is the 100 TB shape
-      val ev = graft.Tables.load(spark, "/root/testdata/sf0.1", "events")
-      val nUsers = 10000L
-      val bigEv = ev.crossJoin(
-          spark.range(mult).select(col("id").as("rep")))
-        .select((col("event_id") * mult + col("rep")).as("event_id"),
-          (col("user_id") + col("rep") * nUsers).as("user_id"),
-          col("ts"), col("event_type"), col("value"))
-        .repartition(32).persist()
-      println(s"-- events x$mult = ${bigEv.count()}")
-      time(s"asof_join x$mult")(force(
-        graft.ops.TimeOps.asOfJoin(
-          bigEv.filter(col("event_type") === "purchase")
-            .select("event_id", "user_id", "ts"),
-          bigEv.filter(col("event_type") === "click"),
-          "user_id", "ts", "event_id", Seq("value"))))
-      time(s"rolling_features x$mult")(force(
-        graft.ops.TimeOps.rollingFeatures(bigEv, "user_id", "ts",
-          "event_id", "value", 5)))
-      time(s"range_join x$mult")(force(
-        graft.ops.TimeOps.rangeJoin(
-          bigEv.filter(col("event_type") === "click")
-            .select("event_id", "user_id", "ts"),
-          bigEv.filter(col("event_type") === "error")
-            .select(col("event_id").as("win_id"), col("user_id"),
-              col("ts").as("t_start"),
-              (col("ts") + expr("INTERVAL 30 MINUTES")).as("t_end")),
-          "user_id", "ts", "t_start", "t_end", 1800000000L)))
-      bigEv.unpersist()
-      big.unpersist(); bigEmb.unpersist()
     }
     spark.stop()
   }

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.{col, round}
 import org.apache.spark.sql.types.{DecimalType, DoubleType}
 import java.nio.file.{Files, Paths}
@@ -23,14 +22,8 @@ object Verify {
     val (sfDir, outDir) = (args(0), args(1))
     val only: Set[String] =
       if (args.length > 2) args(2).split(",").toSet else Set.empty
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt, logLevel = "WARN")
     new java.io.File(outDir).mkdirs()
     // Decimal output columns per query, collected while writing — used
     // below to wrap the corresponding oracle SQL with identical casts.
@@ -48,14 +41,9 @@ object Verify {
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }
       .foreach { case (name, fn) =>
-      // Pins.scoped: the write (the query's action) runs inside the
-      // scope, so each query's load-bearing persists release as soon as
-      // its parquet is on disk — storage stays bounded by one query's
-      // working set across the whole 140-query dump.
-      // withLease: segments the query touches (plan time through the
-      // parquet write) are pinned against concurrent budget eviction
-      try graft.olap.Pins.scoped {
-       graft.olap.SegmentCache.global.withLease {
+      // the write (the query's action) runs inside the scope, so each
+      // query's persists release as soon as its parquet is on disk
+      try Harness.scoped {
         val raw = fn(spark, sfDir)
         val decs = raw.schema.fields.collect {
           case f if f.dataType.isInstanceOf[DecimalType] => f.name
@@ -81,7 +69,6 @@ object Verify {
           else col(c)
         }.toIndexedSeq: _*)
         out.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
-       }
       } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
