@@ -132,7 +132,6 @@ object ScaleProbe {
       // IVF-PQ: same curve — generations fold, probes unchanged
       val pqPath = "/tmp/graft_scale_compactpq"
       fs.delete(new org.apache.hadoop.fs.Path(pqPath), true)
-      val nVec = emb.count()
       var pq: SimilarityOps.IvfPqIndex = null
       time("ivfpq build + 16 appends")(Pins.scoped {
         pq = SimilarityOps.writeIvfPqIndex(
@@ -280,7 +279,7 @@ object ScaleProbe {
                               else nBatches / 8)
         println(f"-- soak compactEvery=$compactEvery " +
           f"batches=${byId.size} wall=$wall%6.1f s")
-        byId.grouped(win).zipWithIndex.foreach { case (w, i) =>
+        byId.grouped(win).foreach { w =>
           val ms = w.map(_._2._1)
           println(f"   batches ${w.head._1}%3d..${w.last._1}%3d  " +
             f"mean ${ms.sum / ms.size}%5d ms  max ${ms.max}%5d ms  " +
@@ -365,63 +364,78 @@ object ScaleProbe {
       // r19: multi-thread serving soak — 8 threads hammer ONE
       // BoundCube through a pool of mixed query shapes (persisted
       // groupBy segments, CHECKPOINTED mixed-depth cut segments,
-      // dim-calc fused axes, window/topcount) under a 64 KiB budget,
+      // dim-calc fused axes, window/topcount) under a 1-byte budget,
       // every query leased (the executeResult posture). Eviction runs
       // constantly and concurrently; the CacheSpec smoke is 2 threads
       // x 2 shapes — this is the load test: every result must equal
       // its serial run, no stage may fail, and the pinned-skip path
-      // must actually fire.
+      // must actually fire. Each shape takes a year that varies per
+      // iteration, so repeats of one statement stay rare and stored
+      // cell sets (which serve a repeated statement without touching
+      // its segments) cannot hide the segment churn.
       import graft.olap.{Mdx, Query, SegmentCache,
         LevelMembers, Members, MemberSlice}
       val cube = graft.Cubes.sales(spark, "/root/testdata/sf0.1")
       val c = SegmentCache.global
       def canon(df: org.apache.spark.sql.DataFrame): Seq[String] =
         df.collect().map(_.toString).sorted.toSeq
-      val shapes: Seq[(String, () => Seq[String])] = Seq(
-        "nation_rev" -> (() => canon(Query.from(cube)
+      val years = Seq(1995, 1996, 1997, 1998, 1999)
+      val shapes: Seq[(String, Int => Seq[String])] = Seq(
+        "nation_rev" -> (y => canon(Query.from(cube)
           .columns("revenue")
-          .rows(LevelMembers("customer", "nation")).execute())),
-        "mixed_cut" -> (() => canon(Mdx.execute(
-          """SELECT {[Measures].[revenue]} ON COLUMNS,
+          .rows(LevelMembers("customer", "nation"))
+          .where(MemberSlice("time", Seq(y))).execute())),
+        "mixed_cut" -> (y => canon(Mdx.execute(
+          s"""SELECT {[Measures].[revenue]} ON COLUMNS,
             |  ORDER({[customer].[EUROPE],
             |         [customer].[EUROPE].[NATION_13],
             |         [customer].[ASIA]},
             |        [Measures].[revenue], DESC) ON ROWS
-            |FROM [Sales] WHERE ([time].[1996])""".stripMargin, cube))),
-        "dimcalc" -> (() => canon(Mdx.execute(
-          """WITH MEMBER [customer].[EU and AS] AS
+            |FROM [Sales] WHERE ([time].[$y])""".stripMargin, cube))),
+        "dimcalc" -> (y => canon(Mdx.execute(
+          s"""WITH MEMBER [customer].[EU and AS] AS
             |  'Aggregate({[customer].[EUROPE], [customer].[ASIA]})'
             |SELECT {[Measures].[revenue]} ON COLUMNS,
             |  {[customer].[AMERICA], [customer].[EU and AS]} ON ROWS
-            |FROM [Sales]""".stripMargin, cube))),
-        "sliced_part" -> (() => canon(Query.from(cube)
+            |FROM [Sales] WHERE ([time].[$y])""".stripMargin, cube))),
+        "sliced_part" -> (y => canon(Query.from(cube)
           .columns("sum_qty")
           .rows(LevelMembers("part", "brand"))
-          .where(MemberSlice("customer", Seq("ASIA"))).execute())),
-        "topcount" -> (() => canon(Mdx.execute(
-          """SELECT {[Measures].[revenue]} ON COLUMNS,
+          .where(MemberSlice("customer", Seq("ASIA")),
+            MemberSlice("time", Seq(y))).execute())),
+        "topcount" -> (y => canon(Mdx.execute(
+          s"""SELECT {[Measures].[revenue]} ON COLUMNS,
             |  TOPCOUNT([customer].[nation].Members, 5,
             |    [Measures].[revenue]) ON ROWS
-            |FROM [Sales]""".stripMargin, cube))),
-        "literal_set" -> (() => canon(Query.from(cube)
+            |FROM [Sales] WHERE ([time].[$y])""".stripMargin, cube))),
+        "literal_set" -> (y => canon(Query.from(cube)
           .columns("revenue")
           .rows(Members("customer",
-            Seq(Seq("ASIA"), Seq("ASIA", "NATION_2")))).execute())),
-        "year_flag" -> (() => canon(Mdx.execute(
-          """SELECT {[Measures].[revenue], [Measures].[sum_qty]}
+            Seq(Seq("ASIA"), Seq("ASIA", "NATION_2"))))
+          .where(MemberSlice("time", Seq(y))).execute())),
+        "year_flag" -> (y => canon(Mdx.execute(
+          s"""SELECT {[Measures].[revenue], [Measures].[sum_qty]}
             |  ON COLUMNS,
-            |  CROSSJOIN({[time].[1995], [time].[1996]},
+            |  CROSSJOIN({[time].[$y], [time].[${y + 1}]},
             |            {[returnflag].[A], [returnflag].[N]}) ON ROWS
             |FROM [Sales]""".stripMargin, cube))),
-        "ytd_like" -> (() => canon(Mdx.execute(
-          """SELECT {[Measures].[revenue]} ON COLUMNS,
-            |  {[time].[1995].Children} ON ROWS
+        "ytd_like" -> (y => canon(Mdx.execute(
+          s"""SELECT {[Measures].[revenue]} ON COLUMNS,
+            |  {[time].[$y].Children} ON ROWS
             |FROM [Sales] WHERE ([customer].[EUROPE])""".stripMargin,
           cube))))
-      // serial ground truth, unlimited budget
+      val nThreads = 8; val iters = 25
+      // iteration i of thread t runs shape (t + i) and year i / 8 + t:
+      // 200 queries over 40 distinct statements
+      def stmt(tid: Int, i: Int): (Int, Int) =
+        ((tid + i) % shapes.length, years((i / shapes.length + tid) %
+          years.length))
+      val statements = (for (t <- 0 until nThreads; i <- 0 until iters)
+        yield stmt(t, i)).distinct
+      // serial ground truth per distinct statement, unlimited budget
       c.clear(); c.setByteBudget(0L)
-      val serial = shapes.map { case (n, f) =>
-        n -> Harness.scoped { f() } }.toMap
+      val serial = statements.map { case (si, y) =>
+        (si, y) -> Harness.scoped { shapes(si)._2(y) } }.toMap
       c.clear()
       // 1-byte budget = maximum churn: EVERY miss tries to evict every
       // materialized unpinned segment, so threads constantly evict
@@ -430,7 +444,8 @@ object ScaleProbe {
       // its checkpointed blocks (a 64 KiB first cut never evicted:
       // the 7-segment pool is ~10 KB resident)
       c.setByteBudget(1L)
-      val nThreads = 8; val iters = 25
+      val ev0 = c.evictions; val skip0 = c.pinnedSkips
+      val hits0 = c.cellSetHits
       val errs = new java.util.concurrent.ConcurrentLinkedQueue[String]
       val done = new java.util.concurrent.atomic.AtomicInteger
       val t0 = System.nanoTime()
@@ -438,12 +453,13 @@ object ScaleProbe {
         new Thread(() => {
           var i = 0
           while (i < iters) {
-            val (name, f) = shapes((tid + i) % shapes.length)
+            val (si, y) = stmt(tid, i)
+            val name = s"${shapes(si)._1}@$y"
             try {
-              val got = Harness.scoped { f() }
-              if (got != serial(name))
+              val got = Harness.scoped { shapes(si)._2(y) }
+              if (got != serial((si, y)))
                 errs.add(s"t$tid i$i $name: result diverged " +
-                  s"(${got.length} vs ${serial(name).length} rows)")
+                  s"(${got.length} vs ${serial((si, y)).length} rows)")
             } catch { case t: Throwable =>
               errs.add(s"t$tid i$i $name: ${t.getClass.getSimpleName} " +
                 s"${String.valueOf(t.getMessage).take(200)}")
@@ -454,12 +470,18 @@ object ScaleProbe {
       }
       threads.foreach(_.start()); threads.foreach(_.join(600000))
       val secs = (System.nanoTime() - t0) / 1e9
+      val evictions = c.evictions - ev0
+      val pinnedSkips = c.pinnedSkips - skip0
       println(f"servesoak: ${done.get()}/${nThreads * iters} queries " +
-        f"in $secs%.1f s, errors=${errs.size} " +
-        f"evictions=${c.evictions} pinnedSkips=${c.pinnedSkips} " +
+        f"(${statements.length} statements) in $secs%.1f s, " +
+        f"errors=${errs.size} evictions=$evictions " +
+        f"pinnedSkips=$pinnedSkips cellsetHits=${c.cellSetHits - hits0} " +
         f"resident=${c.residentBytes} segs=${c.size}")
       errs.forEach(e => println(s"  ERR $e"))
       assert(errs.isEmpty, s"${errs.size} concurrent failures")
+      assert(evictions > 0 && pinnedSkips > 0,
+        s"the soak must evict ($evictions) and defer pinned segments " +
+          s"($pinnedSkips)")
       c.setByteBudget(0L); c.clear()
       println("servesoak: OK")
     }

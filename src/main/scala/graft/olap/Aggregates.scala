@@ -140,7 +140,7 @@ object AggRouter {
     * groupBy shape as the fact path, but over the (much smaller)
     * pre-aggregate, with each measure folded from its partials.
     */
-  def reAggregate(at: AggTable, cube: BoundCube,
+  def reAggregate(at: AggTable,
       axisDims: Seq[Planner.AxisDim], slicerPred: org.apache.spark.sql.Column,
       measures: Seq[Measure]): DataFrame = {
     lastHit = Some(at.name)
@@ -341,7 +341,8 @@ final class SegmentCache {
   def misses: Long = missCount.sum
   def size: Int = segments.size
 
-  def getOrCompute(key: SegKey)(compute: => DataFrame): DataFrame =
+  def getOrCompute(key: SegKey)(compute: => DataFrame): DataFrame = {
+    leasePin(key)
     segments.get(key) match {
       case Some(df) => hit(key, df)
       case None =>
@@ -355,10 +356,11 @@ final class SegmentCache {
             df.unpersist(blocking = false); winner
           case None => df
         }
-        touch(key); leasePin(key); record(key, out)
+        touch(key); record(key, out)
         refreshBudget(out); enforceBudget()
         out
     }
+  }
 
   /** [[getOrCompute]] variant that stores an EAGER checkpoint
     * ([[Pins.rawCut]]) instead of a lazy persist. Use for segments
@@ -373,7 +375,8 @@ final class SegmentCache {
     * occurrence reads the blocks. evictFrame already releases both
     * storage kinds.
     */
-  def getOrComputeCut(key: SegKey)(compute: => DataFrame): DataFrame =
+  def getOrComputeCut(key: SegKey)(compute: => DataFrame): DataFrame = {
+    leasePin(key)
     segments.get(key) match {
       case Some(df) => hit(key, df)
       case None =>
@@ -389,13 +392,14 @@ final class SegmentCache {
           case None => df
         }
         ckptKeys.add(key)
-        touch(key); leasePin(key); record(key, out)
+        touch(key); record(key, out)
         refreshBudget(out); enforceBudget()
         out
     }
+  }
 
   private def hit(key: SegKey, df: DataFrame): DataFrame = {
-    hitCount.increment(); touch(key); leasePin(key); record(key, df)
+    hitCount.increment(); touch(key); record(key, df)
     df
   }
 
@@ -414,7 +418,11 @@ final class SegmentCache {
   // collect in [[withLease]] (Bench/Verify do; long-lived servers
   // should). Reference analog: the jar's SegmentCacheManager actor
   // serializes eviction against in-flight readers
-  // (mondrian/rolap/agg/SegmentCacheManager, SURVEY §4#5).
+  // (mondrian/rolap/agg/SegmentCacheManager, SURVEY §4#5). A lookup
+  // pins its key BEFORE it reads the map: pin and enforceBudget share
+  // one lock, so a budget pass either sees the pin or has already
+  // removed the segment (the lookup then recomputes) — pinning after
+  // the read let a concurrent pass free the frame in between.
 
   private val pinCounts = TrieMap.empty[SegKey, Int]
   private val pinnedSkipCount = new LongAdder

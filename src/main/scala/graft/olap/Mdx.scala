@@ -1635,7 +1635,7 @@ object Mdx {
       name
     }
 
-    private def scalarExpr(ws: Map[String, SetExpr] = Map.empty,
+    private def scalarExpr(ws: Map[String, SetExpr],
         stopAtAs: Boolean = false,
         setAlias: Option[String] = None): String = {
       val sb = new StringBuilder

@@ -824,7 +824,7 @@ final class Planner(val cube: BoundCube) {
     * frame without __ord passes through.
     */
   private def renumber(members: DataFrame, hasOrd: Boolean,
-      hint: Ords.SizeHint = Ords.Small): DataFrame =
+      hint: Ords.SizeHint): DataFrame =
     if (!hasOrd) members
     else Ords.rowNumber(members, Seq(col(OrdCol).asc), OrdCol, hint)
 
@@ -1116,7 +1116,7 @@ final class Planner(val cube: BoundCube) {
     * the fact never shuffles for the star join.
     */
   private def joinStar(needed: Map[String, Int],
-      slicer: Seq[SlicerItem] = Nil,
+      slicer: Seq[SlicerItem],
       extraCols: Seq[String] = Nil): DataFrame = {
     val base = cube.factFor(requiredFactCols(needed, slicer, extraCols))
     needed.toSeq.sortBy(_._1).foldLeft(base) { case (df, (name, depth)) =>
@@ -1214,7 +1214,7 @@ final class Planner(val cube: BoundCube) {
     */
   private def applyEntryOps(df0: DataFrame, ops: Seq[EntryOp],
       dim: String, label: String,
-      hier: Option[EntryHier] = None): DataFrame = {
+      hier: Option[EntryHier]): DataFrame = {
     def resolve(e: String): Column = {
       var c = e.replace(s"__CURRENT_NAME_${dim}__",
         s"cast(`$label` as string)")
@@ -1391,7 +1391,7 @@ final class Planner(val cube: BoundCube) {
       AggRouter.route(cube, neededJoins(axisDims, allSlicer), allSlicer,
           neededMeasures) match {
         case Some(at) =>
-          AggRouter.reAggregate(at, cube, axisDims,
+          AggRouter.reAggregate(at, axisDims,
             slicerPredicate(allSlicer), neededMeasures)
         case None =>
           val star = joinStar(neededJoins(axisDims, allSlicer), allSlicer)
@@ -1561,8 +1561,8 @@ final class Planner(val cube: BoundCube) {
     * [dim].[member]), ASC) lowers the tuple to a hidden SetAggCalc).
     * Window calcs stay post-axis (they need the final member order).
     */
-  private def applyExprCalcs(df: DataFrame, dims: Seq[AxisDim] = Nil,
-      slicer: Seq[SlicerItem] = Nil): DataFrame =
+  private def applyExprCalcs(df: DataFrame, dims: Seq[AxisDim],
+      slicer: Seq[SlicerItem]): DataFrame =
     neededCalcs.sortBy(_.solveOrder).foldLeft(df) { (acc, cm) =>
       cm.calc match {
         case ExprCalc(sql) =>
@@ -1571,10 +1571,10 @@ final class Planner(val cube: BoundCube) {
             d2.withColumn(cm.name, sexpr(s2))
           } catch { case _: org.apache.spark.sql.AnalysisException => acc }
         case sac: SetAggCalc =>
-          try setAggColumn(acc, cm.name, sac, dims, slicer, Map.empty)
+          try setAggColumn(acc, cm.name, sac, dims, slicer, Map.empty, None)
           catch { case _: org.apache.spark.sql.AnalysisException => acc }
         case lrc: LinRegCalc =>
-          try linRegColumn(acc, cm.name, lrc, dims, slicer, Map.empty)
+          try linRegColumn(acc, cm.name, lrc, dims, slicer, Map.empty, None)
           catch { case _: org.apache.spark.sql.AnalysisException => acc }
         // dim-hosted calc members are axis members, not cell columns —
         // handled by the execute-entry rewrite
@@ -1870,7 +1870,7 @@ final class Planner(val cube: BoundCube) {
             // flatten already folded those into `ops` — so mapping
             // survivors back by caption loses nothing. The sub-query
             // is one fact pass over N literal entries, plan-sized.
-            case Right((d, ps, ops)) if ps.nonEmpty =>
+            case Right((d, ps, _)) if ps.nonEmpty =>
               val names = ps.map(p => of(d, p) match {
                 case Some((cm, _)) => cm.name
                 case None          => String.valueOf(p.last)
@@ -2010,8 +2010,7 @@ final class Planner(val cube: BoundCube) {
           "member to WHERE")
       // every calc-bearing factor flattens to ONE entry list (several
       // factors are allowed — the fused pass evaluates the full entry
-      // cross product in the same single scan; the per-entry fallback
-      // handles exactly one)
+      // cross product in the same single scan)
       val calcIdxs = rowsFactors.indices
         .filter(i => dcl.hasCalcPath(rowsFactors(i), Set.empty))
       case class CalcFactor(dim: String, paths: Vector[Seq[Any]],
@@ -2062,7 +2061,6 @@ final class Planner(val cube: BoundCube) {
         refuse("two calc-bearing factors on the same hierarchy")
       val cf0 = factors.head
       val dim = cf0.dim
-      val paths = cf0.paths
       val entryOps = cf0.ops
       val otherIdxs =
         rowsFactors.indices.filterNot(calcIdxs.contains)
@@ -2108,35 +2106,6 @@ final class Planner(val cube: BoundCube) {
           Some(EntryHier("", parentOf, chainOf, isCalcOf, f.hidden))
         }
       val entryHier: Option[EntryHier] = hierFor(factors.head)
-      val opTexts = factors.flatMap(_.ops).collect {
-        case EntryFilter(c)   => c
-        case EntryOrder(e, _) => e
-      }
-      // Measures-hosted calc measures: the fused agg computes stored
-      // measures; an EXPRESSION calc over them (margin = a/b — the
-      // common type) computes POST-aggregation on the N-row frame,
-      // exactly the normal path's applyExprCalcs, so it rides the
-      // fused pass (r15 — r14 forced the fallback). Context-dependent
-      // calcs (window/SetAgg/LinReg, or CurrentMember-macro
-      // expressions) still need the per-sub-query applyCalcs layer.
-      val calcsByName = (cube.calcMembers ++ qs.withMembers)
-        .filterNot(_.calc.isInstanceOf[DimAggCalc])
-        .groupBy(_.name.toLowerCase).map { case (k, v) => k -> v.head }
-      def exprServable(n: String, seen: Set[String]): Boolean =
-        cube.measures.exists(_.name == n) ||
-          (!seen(n) && calcsByName.get(n.toLowerCase).exists(_.calc match {
-            case ExprCalc(sql) if !sql.contains("__CURRENT_") =>
-              (cube.measures.map(_.name) ++
-                calcsByName.values.map(_.name))
-                .filter(x => x != n && referencedIn(x, Seq(sql)))
-                .forall(exprServable(_, seen + n))
-            case _ => false
-          }))
-      // calc names referenced by a Filter/Order op (or requested as
-      // measures) that the fused frame CANNOT compute post-agg
-      val opCalcNames = calcsByName.values
-        .map(_.name).filter(n => referencedIn(n, opTexts))
-        .filterNot(exprServable(_, Set.empty)).toSeq
       val otherSet = otherFactors.reduceRightOption(CrossJoin(_, _))
       // the other factors' member frames pin the extra tuple
       // coordinates; plan-building only (nothing executes here)
@@ -2153,12 +2122,12 @@ final class Planner(val cube: BoundCube) {
       // evaluates each set member via Evaluator.setContext, which
       // REPLACES the current coordinate on the member's hierarchy — so
       // the cell is CONSTANT across the overridden factor's members):
-      // such queries route to the per-entry fallback, which drops the
-      // overridden factor from the sub-query rows and cross-joins its
-      // member frame back. A set constraining another CALC factor's
-      // hierarchy still refuses (the override would have to rewrite
-      // that factor's own entry predicates — no Mondrian precedent to
-      // pin the combination against).
+      // the overriding entry groups without that factor's keys and
+      // skips its semi-join and WHERE items; the frame join copies the
+      // cell across the factor's members. A set constraining another
+      // CALC factor's hierarchy still refuses (the override would have
+      // to rewrite that factor's own entry predicates — no Mondrian
+      // precedent to pin the combination against).
       def itemDims(items: Seq[SlicerItem]): Set[String] = items.flatMap {
         case MemberSlice(d, _) => Seq(d)
         case SetSlice(d, _)    => Seq(d)
@@ -2182,695 +2151,576 @@ final class Planner(val cube: BoundCube) {
           refuse(s"a calc member's set constrains [${clash.mkString(", ")}]" +
             ", a hierarchy another CALC factor enumerates")
       }
-      // Mixed stored+calculated literal sets (upstream Mondrian
-      // allows them; the calc members of mondrian_test.rb:197-204
-      // are DEFINED against stored siblings): each calc member is a
-      // compound-slicer sub-query; consecutive stored members of one
-      // depth run as a single ordinary sub-query and are labeled by
-      // their leaf name (the member caption), so the axis reads as
-      // Mondrian renders it. All rows surface under the root-level
-      // label column.
       val label = cf0.label
-      // FUSED single-pass path: every axis entry — stored member or
+      // FUSED single-pass lowering: every axis entry — stored member or
       // dim-hosted Aggregate calc — lowers to a row predicate over
       // ONE star frame; a row satisfying several entries explodes
       // into each entry key, and one groupBy aggregates all members
       // (× the other factors' level columns when the set is a
       // crossjoin): one Exchange for N members instead of N fact
       // passes (correct for every aggregator incl. avg/distinct — the
-      // group sees raw fact rows, never pre-aggregates). Taken when
-      // every requested measure is stored OR an expression calc over
-      // stored measures, computed post-agg on the N-row frame — incl.
-      // any a Filter/Order entry op references (context-dependent
-      // calcs — window/SetAgg/LinReg, CurrentMember macros — still
-      // need the per-sub-query applyCalcs layer) — AND the
-      // other factors are uniform-depth (the per-depth cell grain of
-      // mixed frames belongs to the normal path the fallback recurses
-      // into). Roles ride the fused pass too (r14): stored entries are
-      // visibility-filtered against the role-restricted member frame
-      // and the grant slicer ANDs into the scan. This pass reads the raw
-      // fact by design — AggRouter rollups can't serve avg/distinct
-      // over arbitrary member-set filters and the explode key is not
-      // a grain the SegmentCache speaks.
-      if (!hasOverride && opCalcNames.isEmpty &&
-          qs.measures.forall(exprServable(_, Set.empty)) &&
-          otherFrame0.forall(of =>
-            of.mixedDim.isEmpty && of.mixedDepths.isEmpty)) {
-        pruneFor(qs)
-        // Measures-hosted ExprCalcs ride the fused pass: computed on
-        // the aggregated N-row frame in solve order, after the count
-        // coalesce (an expr over a count sees the calc entry's 0)
-        def applyFusedExprCalcs(df0c: DataFrame): DataFrame =
-          neededCalcs.sortBy(_.solveOrder).foldLeft(df0c) { (acc, cm) =>
-            cm.calc match {
-              case ExprCalc(sql) if !acc.columns.contains(cm.name) &&
-                  !sql.contains("__CURRENT_") =>
-                try acc.withColumn(cm.name, sexpr(sql))
-                catch {
-                  // a calc the query SELECTS must not be dropped
-                  // silently: exprServable gated entry into the fused
-                  // path, so a resolution failure here means its
-                  // regex-based reference scan mis-classified — fail
-                  // loudly with the calc's name instead of letting the
-                  // final measure select die with an unrelated
-                  // column-not-found (ADVICE r15)
-                  case ex: org.apache.spark.sql.AnalysisException
-                      if qs.measures.exists(_.equalsIgnoreCase(cm.name)) =>
-                    throw new IllegalArgumentException(
-                      s"calculated measure '${cm.name}' failed to " +
-                        "resolve on the fused dim-calc frame: " +
-                        ex.getMessage, ex)
-                  case _: org.apache.spark.sql.AnalysisException => acc
-                }
-              case _ => acc
-            }
-          }
-        case class AxisEntry(idx: Int, name: String, isCalc: Boolean,
-          items: Seq[SlicerItem])
-        // a role hides out-of-grant STORED members from the axis
-        // (memberFrame visibility, connection_role_test.rb:46-90);
-        // calc members are synthetic and always render. One filtered
-        // dimension-frame probe per literal depth covers all entries
-        // (the collect is <= N rows — the frame filter pushes to the
-        // dimension scan). r13 routed ANY roled cube to the per-entry
-        // fallback; the fused pass now reproduces both role effects —
-        // this visibility filter plus the grant slicer ANDed into the
-        // scan below — so N entries still cost ONE fact pass.
-        def entriesOf(f: CalcFactor): Seq[AxisEntry] = {
-          val es = f.paths.zipWithIndex.map { case (p, i) =>
-            dcl.of(f.dim, p) match {
-              case Some((cm, dc)) =>
-                AxisEntry(i, cm.name, isCalc = true,
-                  resolveSlicer(dcl.sliceOf(cm, dc), qs.withSets))
-              case None =>
-                AxisEntry(i, p.last.toString, isCalc = false,
-                  Seq(MemberSlice(f.dim, p)))
-            }
-          }
-          if (cube.role.isEmpty) es
-          else {
-            val d = cube.dim(f.dim)
-            val storedPaths = es.collect {
-              case e if !e.isCalc =>
-                e.items.head.asInstanceOf[MemberSlice].path
-            }
-            val visible: Set[Seq[String]] = storedPaths
-              .groupBy(_.length).iterator.flatMap { case (len, ps) =>
-                val cols = levelCols(d, len - 1)
-                memberFrame(d, len - 1)
-                  .filter(orAll(ps.map(p => ancestorPredicate(d, p))))
-                  .select(cols.map(col): _*).distinct().collect()
-                  .map(r => cols.indices.map(i => String.valueOf(r.get(i))))
-              }.map(_.toSeq).toSet
-            // injected hidden ancestors are rank-only — aggregated for
-            // the hierarchical Order's comparison, never rendered — so
-            // role visibility does not apply to them (dropping one
-            // would silently shorten descendants' rank chains and
-            // mis-order instead of refusing; ADVICE r15)
-            val kept = es.filter(e => e.isCalc || f.hidden(e.idx) ||
-              visible(e.items.head.asInstanceOf[MemberSlice].path
-                .map(String.valueOf)))
-            // a role-hidden STORED entry that is an ancestor of a
-            // surviving entry would also shorten the rank chain — the
-            // non-breaking Order cannot rank through a member the role
-            // removed, so refuse loudly rather than mis-order
-            if (f.ops.exists {
-              case EntryOrder(_, SortDir.Asc | SortDir.Desc) => true
-              case _ => false
-            }) {
-              val keptIdx = kept.map(_.idx).toSet
-              val norm = f.paths.map(_.map(String.valueOf))
-              val brokenAnc = es.map(_.idx).filterNot(keptIdx).filter {
-                di =>
-                  kept.exists(k => k.idx != di &&
-                    norm(k.idx).length > norm(di).length &&
-                    norm(k.idx).take(norm(di).length) == norm(di))
-              }
-              if (brokenAnc.nonEmpty)
-                refuse("a non-breaking Order over a set whose ancestor " +
-                  "entry [" +
-                  f.paths(brokenAnc.head).mkString("].[") +
-                  "] is hidden by the role (its sibling rank chain " +
-                  "would be incomplete) — use BASC/BDESC")
-            }
-            kept
+      // group sees raw fact rows, never pre-aggregates). Calc measures
+      // run on the aggregated frame through the ordinary applyCalcs
+      // layer with the entry key as an extra grouping column (an
+      // EntryCtx). Roles ride the fused pass too (r14): stored entries
+      // are visibility-filtered against the role-restricted member
+      // frame and the grant slicer ANDs into the scan. This pass reads
+      // the raw fact by design — AggRouter rollups can't serve
+      // avg/distinct over arbitrary member-set filters and the explode
+      // key is not a grain the SegmentCache speaks.
+      pruneFor(qs)
+      // a context-dependent calc (window/SetAgg/LinReg, or an
+      // expression reading a CurrentMember macro), a context override
+      // or a mixed-depth factor is evaluated against ONE calc factor's
+      // entries at the full axis grain: the multi-factor entry cross
+      // product, NECJ tuple support and the pre-crossjoin op pass stay
+      // refused alongside them
+      val contextual = neededCalcs.exists(_.calc match {
+        case ExprCalc(sql)  => sql.contains("__CURRENT_")
+        case _: DimAggCalc => false
+        case _             => true
+      })
+      val mixedOther = otherFrame0.exists(of =>
+        of.mixedDim.nonEmpty || of.mixedDepths.nonEmpty)
+      if (contextual || hasOverride || mixedOther) {
+        val why = "alongside context-dependent (window/set-aggregating) " +
+          "calc measures, a context override or mixed-depth factors"
+        if (factors.length > 1)
+          refuse(s"calc members in more than one CrossJoin factor $why")
+        if (necjTuples)
+          refuse(s"NonEmptyCrossJoin with a calc factor $why")
+        if (entryOps.nonEmpty && otherFactors.nonEmpty)
+          refuse("Filter/Order/positional ops over the calc factor of " +
+            s"a CrossJoin $why")
+      }
+      // `ov`: the (lower-cased) other-factor hierarchies the entry's
+      // set overrides
+      case class AxisEntry(idx: Int, name: String, isCalc: Boolean,
+        items: Seq[SlicerItem], ov: Set[String] = Set.empty)
+      // a role hides out-of-grant STORED members from the axis
+      // (memberFrame visibility, connection_role_test.rb:46-90);
+      // calc members are synthetic and always render. One filtered
+      // dimension-frame probe per literal depth covers all entries
+      // (the collect is <= N rows — the frame filter pushes to the
+      // dimension scan). With the grant slicer ANDed into the scan
+      // below, both role effects ride the fused pass, so N entries
+      // still cost ONE fact pass.
+      def entriesOf(f: CalcFactor): Seq[AxisEntry] = {
+        val es = f.paths.zipWithIndex.map { case (p, i) =>
+          dcl.of(f.dim, p) match {
+            case Some((cm, dc)) =>
+              val items = dcl.sliceOf(cm, dc)
+              AxisEntry(i, cm.name, isCalc = true,
+                resolveSlicer(items, qs.withSets),
+                itemDims(items).map(_.toLowerCase).intersect(otherDimsLc))
+            case None =>
+              AxisEntry(i, p.last.toString, isCalc = false,
+                Seq(MemberSlice(f.dim, p)))
           }
         }
-        val factorEntries: Seq[(CalcFactor, Seq[AxisEntry])] =
-          factors.map(f => f -> entriesOf(f))
-        val qSlicer = qSlicerAll
-        // Same-dim query-slicer items: for a CALC entry they fold
-        // into its predicate through resolveSlicer's compound (OR)
-        // grouping — the union the per-member fallback produces
-        // (query.rb:379-386); for a STORED entry they AND — the
-        // normal axis-path semantics (the slicer restricts the
-        // cells; an excluded member keeps its row, null cells).
-        // Items on other dims filter globally and push to the scan.
-        // With several calc factors, each overlap item folds into
-        // exactly ONE factor's entry predicates (its effect reaches
-        // every tuple through that factor's explode key).
-        def itemDim(i: SlicerItem): Option[String] = i match {
-          case MemberSlice(d, _) => Some(d)
-          case SetSlice(d, _)    => Some(d)
-          case _                 => None
-        }
-        val factorItemDims: Seq[Set[String]] = factorEntries.map {
-          case (_, es) => es.flatMap(_.items).flatMap(itemDim).toSet
-        }
-        val (overlap, shared) = qSlicer.partition(i =>
-          itemDim(i).exists(d => factorItemDims.exists(_.contains(d))))
-        overlap.foreach { i =>
-          if (factorItemDims.count(s => itemDim(i).exists(s)) > 1)
-            refuse("a WHERE item on a dimension constrained by calc " +
-              "members of more than one CrossJoin factor")
-        }
-        def overlapOf(k: Int): Seq[SlicerItem] =
-          overlap.filter(i => itemDim(i).exists(factorItemDims(k)))
-        // the grant/deny slicer (Partial rollup policy) ANDs into the
-        // scan GLOBALLY — for every entry, calc or stored — never into
-        // the per-entry compound OR (a grant OR-folded into a calc
-        // set would WIDEN it; the role spec pins AND semantics)
-        val joinItems = qSlicer ++ roleSlicer ++
-          factorEntries.flatMap(_._2.flatMap(_.items))
-        // AggRouter (SURVEY §4 #6) serves the fused axis too: when a
-        // declared rollup covers every dimension the entries, the
-        // slicer, and the other factors touch — at the depths they
-        // touch — and every needed measure is a decomposable partial,
-        // the single pass reads the ROLLUP rows instead of the fact
-        // (the entry predicates explode level columns the rollup
-        // carries; the group then MERGES partials — sum of sums and
-        // counts, min of mins). avg/distinct keep the raw-fact scan.
-        val routedAt = AggRouter.route(cube,
-          neededJoins(otherDims, joinItems), joinItems, neededMeasures)
-        val sliced0 = routedAt match {
-          case Some(at) =>
-            AggRouter.lastHit = Some(at.name)
-            at.df.filter(slicerPredicate(shared ++ roleSlicer))
-          case None =>
-            joinStar(neededJoins(otherDims, joinItems), joinItems)
-              .filter(slicerPredicate(shared ++ roleSlicer))
-        }
-        // a HIGH-CARDINALITY other factor (reference high_cardinality
-        // opt-out) must never ride a broadcast: its member frame and
-        // the (entry x member)-grained aggregate are both
-        // axis-cardinality-sized, which at scale is millions of rows —
-        // those joins stay shuffles; only the entry frame (N rows) is
-        // always broadcast-safe
-        val otherHighCard = otherDims.exists(_.d.highCardinality)
-        // left-major axis rendering (r18): the final sort and the axis
-        // columns interleave by each factor's ORIGINAL crossjoin
-        // position — Mondrian iterates axis ordinals left-to-right
-        // (query.rb:47-57; axis shapes pinned by query_test.rb:
-        // 157-174,408-432), so CROSSJOIN(years, {…calc…}) renders
-        // year-major, not hoisted calc-first (the last user-visible
-        // divergence from the reference's axis contract, VERDICT r17).
-        // PER-FACTOR member frames (not the combined otherSet product,
-        // whose single renumbered __ord cannot decompose) keep each
-        // stored factor's own explicit order when a calc factor sits
-        // between two stored ones.
-        val otherByIdx: Seq[(Int, AxisFrame, Seq[String], Seq[Column])] =
-          otherIdxs.map { oi =>
-            val rs = evalSet(rowsFactors(oi), qSlicerAll, qs.withSets)
-            val keys = rs.dims.flatMap(ad => levelCols(ad.d, ad.depth))
-            if (rs.hasOrd) {
-              val oc = s"__oord$oi"
-              (oi, rs.copy(members =
-                rs.members.withColumnRenamed(OrdCol, oc)),
-                keys, Seq(col(oc).asc))
-            } else (oi, rs, keys, rs.dims.flatMap(ad =>
-              ad.d.levelsTo(ad.depth).map(l => col(l.ordinal).asc)))
+        if (cube.role.isEmpty) es
+        else {
+          val d = cube.dim(f.dim)
+          val storedPaths = es.collect {
+            case e if !e.isCalc =>
+              e.items.head.asInstanceOf[MemberSlice].path
           }
-        // crossjoined factors restrict the fact to THEIR members early
-        // (broadcast semi-join — dimension-sized), so the groupBy
-        // never aggregates tuples the axis won't show. ONE semi-join
-        // PER FACTOR (r18): the combined otherSet frame is the
-        // factors' cross PRODUCT — m×n rows broadcast where m+n
-        // suffice (the per-factor member predicates are independent,
-        // so chained semi-joins filter identically); at two mid-sized
-        // dims the product broadcast is the difference between
-        // kilobytes and a multi-GB build side. A high-card FACTOR
-        // skips ITS semi-join (its stray groups the final join drops,
-        // same opt-out as the rank-frame hint) without costing the
-        // small factors theirs — pre-r18 one high-card factor
-        // disabled every factor's restriction
-        val sliced = otherByIdx.foldLeft(sliced0) {
-          case (df, (_, rs, keys, _)) =>
-            if (rs.dims.exists(_.d.highCardinality)) df
-            else df.join(
-              broadcast(rs.members.select(keys.map(col): _*).distinct()),
-              keys, "left_semi")
+          val visible: Set[Seq[String]] = storedPaths
+            .groupBy(_.length).iterator.flatMap { case (len, ps) =>
+              val cols = levelCols(d, len - 1)
+              memberFrame(d, len - 1)
+                .filter(orAll(ps.map(p => ancestorPredicate(d, p))))
+                .select(cols.map(col): _*).distinct().collect()
+                .map(r => cols.indices.map(i => String.valueOf(r.get(i))))
+            }.map(_.toSeq).toSet
+          // injected hidden ancestors are rank-only — aggregated for
+          // the hierarchical Order's comparison, never rendered — so
+          // role visibility does not apply to them (dropping one
+          // would silently shorten descendants' rank chains and
+          // mis-order instead of refusing; ADVICE r15)
+          val kept = es.filter(e => e.isCalc || f.hidden(e.idx) ||
+            visible(e.items.head.asInstanceOf[MemberSlice].path
+              .map(String.valueOf)))
+          // a role-hidden STORED entry that is an ancestor of a
+          // surviving entry would also shorten the rank chain — the
+          // non-breaking Order cannot rank through a member the role
+          // removed, so refuse loudly rather than mis-order
+          if (f.ops.exists {
+            case EntryOrder(_, SortDir.Asc | SortDir.Desc) => true
+            case _ => false
+          }) {
+            val keptIdx = kept.map(_.idx).toSet
+            val norm = f.paths.map(_.map(String.valueOf))
+            val brokenAnc = es.map(_.idx).filterNot(keptIdx).filter {
+              di =>
+                kept.exists(k => k.idx != di &&
+                  norm(k.idx).length > norm(di).length &&
+                  norm(k.idx).take(norm(di).length) == norm(di))
+            }
+            if (brokenAnc.nonEmpty)
+              refuse("a non-breaking Order over a set whose ancestor " +
+                "entry [" +
+                f.paths(brokenAnc.head).mkString("].[") +
+                "] is hidden by the role (its sibling rank chain " +
+                "would be incomplete) — use BASC/BDESC")
+          }
+          kept
         }
-        val (aggCols0, post0) =
-          if (routedAt.isEmpty) Agg.toColumnsFused(neededMeasures)
-          else (neededMeasures.map { m =>
-            (m.agg match {
-              case Agg.Sum | Agg.SumExact | Agg.Count => sum(col(m.name))
-              case Agg.Min => min(col(m.name))
-              case Agg.Max => max(col(m.name))
-              case other => throw new IllegalStateException(
-                s"non-decomposable aggregator routed: $other")
-            }).as(m.name)
-          }, neededMeasures.map(m => col(m.name)))
-        // entries are keyed by POSITION, never display name: leaf
-        // captions repeat across parents (a Q1 under every year)
-        // and a duplicated literal member must stay two rows, not
-        // one doubled group.
-        def entryPreds(es: Seq[AxisEntry],
-            ovl: Seq[SlicerItem]): Seq[Column] =
-          es.map { e =>
-            if (e.isCalc)
-              slicerPredicate(resolveSlicer(ovl ++ e.items))
+      }
+      val factorEntries: Seq[(CalcFactor, Seq[AxisEntry])] =
+        factors.map(f => f -> entriesOf(f))
+      val qSlicer = qSlicerAll
+      // Same-dim query-slicer items: for a CALC entry they fold
+      // into its predicate through resolveSlicer's compound (OR)
+      // grouping — the union of the calc's own members
+      // (query.rb:379-386); for a STORED entry they AND — the
+      // normal axis-path semantics (the slicer restricts the
+      // cells; an excluded member keeps its row, null cells).
+      // Items on other dims filter globally and push to the scan.
+      // With several calc factors, each overlap item folds into
+      // exactly ONE factor's entry predicates (its effect reaches
+      // every tuple through that factor's explode key).
+      def itemDim(i: SlicerItem): Option[String] = i match {
+        case MemberSlice(d, _) => Some(d)
+        case SetSlice(d, _)    => Some(d)
+        case _                 => None
+      }
+      val factorItemDims: Seq[Set[String]] = factorEntries.map {
+        case (_, es) => es.flatMap(_.items).flatMap(itemDim).toSet
+      }
+      // a WHERE item on a hierarchy some entry overrides neither folds
+      // into a calc entry nor filters the scan globally: it ANDs into
+      // every NON-overriding entry's predicate
+      val ovDimsAll = factorEntries.flatMap(_._2.flatMap(_.ov)).toSet
+      val (sharedOv, sliceRest) = qSlicer.partition(i =>
+        itemDims(Seq(i)).exists(d => ovDimsAll(d.toLowerCase)))
+      val (overlap, sharedRest) = sliceRest.partition(i =>
+        itemDim(i).exists(d => factorItemDims.exists(_.contains(d))))
+      overlap.foreach { i =>
+        if (factorItemDims.count(s => itemDim(i).exists(s)) > 1)
+          refuse("a WHERE item on a dimension constrained by calc " +
+            "members of more than one CrossJoin factor")
+      }
+      def overlapOf(k: Int): Seq[SlicerItem] =
+        overlap.filter(i => itemDim(i).exists(factorItemDims(k)))
+      // the grant/deny slicer (Partial rollup policy) ANDs into the
+      // scan GLOBALLY — for every entry, calc or stored — never into
+      // the per-entry compound OR (a grant OR-folded into a calc
+      // set would WIDEN it; the role spec pins AND semantics)
+      val joinItems = qSlicer ++ roleSlicer ++
+        factorEntries.flatMap(_._2.flatMap(_.items))
+      // AggRouter (SURVEY §4 #6) serves the fused axis too: when a
+      // declared rollup covers every dimension the entries, the
+      // slicer, and the other factors touch — at the depths they
+      // touch — and every needed measure is a decomposable partial,
+      // the single pass reads the ROLLUP rows instead of the fact
+      // (the entry predicates explode level columns the rollup
+      // carries; the group then MERGES partials — sum of sums and
+      // counts, min of mins). avg/distinct keep the raw-fact scan.
+      val routedAt = AggRouter.route(cube,
+        neededJoins(otherDims, joinItems), joinItems, neededMeasures)
+      val sliced0 = routedAt match {
+        case Some(at) =>
+          AggRouter.lastHit = Some(at.name)
+          at.df.filter(slicerPredicate(sharedRest ++ roleSlicer))
+        case None =>
+          joinStar(neededJoins(otherDims, joinItems), joinItems)
+            .filter(slicerPredicate(sharedRest ++ roleSlicer))
+      }
+      // a HIGH-CARDINALITY other factor (reference high_cardinality
+      // opt-out) must never ride a broadcast: its member frame and
+      // the (entry x member)-grained aggregate are both
+      // axis-cardinality-sized, which at scale is millions of rows —
+      // those joins stay shuffles; only the entry frame (N rows) is
+      // always broadcast-safe
+      val otherHighCard = otherDims.exists(_.d.highCardinality)
+      // left-major axis rendering (r18): the final sort and the axis
+      // columns interleave by each factor's ORIGINAL crossjoin
+      // position — Mondrian iterates axis ordinals left-to-right
+      // (query.rb:47-57; axis shapes pinned by query_test.rb:
+      // 157-174,408-432), so CROSSJOIN(years, {…calc…}) renders
+      // year-major, not hoisted calc-first (the last user-visible
+      // divergence from the reference's axis contract, VERDICT r17).
+      // PER-FACTOR member frames (not the combined otherSet product,
+      // whose single renumbered __ord cannot decompose) keep each
+      // stored factor's own explicit order when a calc factor sits
+      // between two stored ones. Each factor's frame renames its own
+      // __ord to __oord<i> and a mixed-depth frame's depth marker to
+      // `depthCol`; `ovEntries` are the entries overriding the factor.
+      case class OtherFactor(idx: Int, frame: AxisFrame, keys: Seq[String],
+        sort: Seq[Column], depthCol: Option[String], ovEntries: Seq[Int])
+      val others: Seq[OtherFactor] = otherIdxs.map { oi =>
+        val rs = evalSet(rowsFactors(oi), qSlicerAll, qs.withSets)
+        val keys = rs.dims.flatMap(ad => levelCols(ad.d, ad.depth))
+        val oc = s"__oord$oi"
+        val depthCol = rs.mixedDim.map(_ => s"__odepth$oi")
+        val members = depthCol.foldLeft(
+          if (rs.hasOrd) rs.members.withColumnRenamed(OrdCol, oc)
+          else rs.members)((m, dc) => m.withColumnRenamed(DepthCol, dc))
+        val sort =
+          if (rs.hasOrd) Seq(col(oc).asc)
+          else rs.dims.flatMap(ad =>
+            ad.d.levelsTo(ad.depth).map(l => col(l.ordinal).asc))
+        val dimsLc = rs.dims.map(_.d.name.toLowerCase).toSet
+        val ovBy = factorEntries.head._2.filter(_.ov.exists(dimsLc))
+        if (ovBy.exists(e => !dimsLc.subsetOf(e.ov)))
+          refuse("a calc member's set overrides PART of a " +
+            "multi-hierarchy CrossJoin factor — split the factor so " +
+            "the overridden hierarchy stands alone")
+        OtherFactor(oi, rs.copy(members = members), keys, sort, depthCol,
+          ovBy.map(_.idx))
+      }
+      // crossjoined factors restrict the fact to THEIR members early
+      // (broadcast semi-join — dimension-sized), so the groupBy
+      // never aggregates tuples the axis won't show. ONE semi-join
+      // PER FACTOR (r18): the combined otherSet frame is the
+      // factors' cross PRODUCT — m×n rows broadcast where m+n
+      // suffice (the per-factor member predicates are independent,
+      // so chained semi-joins filter identically); at two mid-sized
+      // dims the product broadcast is the difference between
+      // kilobytes and a multi-GB build side. A high-card FACTOR
+      // skips ITS semi-join (its stray groups the final join drops,
+      // same opt-out as the rank-frame hint) without costing the
+      // small factors theirs — pre-r18 one high-card factor
+      // disabled every factor's restriction. So does an overridden
+      // factor (an overriding entry reads rows outside its members); a
+      // mixed-depth factor restricts at its shallowest depth, whose
+      // keys every deeper member carries too.
+      val sliced = others.foldLeft(sliced0) { (df, o) =>
+        if (o.frame.dims.exists(_.d.highCardinality) ||
+            o.ovEntries.nonEmpty) df
+        else {
+          val ks = o.frame.dims.flatMap(ad => levelCols(ad.d,
+            if (o.frame.mixedDim.contains(ad.d.name)) o.frame.depthsOf.min
+            else ad.depth))
+          df.join(broadcast(o.frame.members.select(ks.map(col): _*)
+            .distinct()), ks, "left_semi")
+        }
+      }
+      val (aggCols0, post0) =
+        if (routedAt.isEmpty) Agg.toColumnsFused(neededMeasures)
+        else (neededMeasures.map { m =>
+          (m.agg match {
+            case Agg.Sum | Agg.SumExact | Agg.Count => sum(col(m.name))
+            case Agg.Min => min(col(m.name))
+            case Agg.Max => max(col(m.name))
+            case other => throw new IllegalStateException(
+              s"non-decomposable aggregator routed: $other")
+          }).as(m.name)
+        }, neededMeasures.map(m => col(m.name)))
+      // entries are keyed by POSITION, never display name: leaf
+      // captions repeat across parents (a Q1 under every year)
+      // and a duplicated literal member must stay two rows, not
+      // one doubled group.
+      // `storedFree`: a set over the entries' own hierarchy replaces a
+      // STORED entry's coordinate (only the same-dim WHERE items stay);
+      // a calc entry's set stays in its context.
+      def entryPreds(es: Seq[AxisEntry], ovl: Seq[SlicerItem],
+          storedFree: Boolean = false): Seq[Column] =
+        es.map { e =>
+          val own =
+            if (e.isCalc) slicerPredicate(resolveSlicer(ovl ++ e.items))
+            else if (storedFree) slicerPredicate(ovl)
             else if (ovl.isEmpty) slicerPredicate(e.items)
             else slicerPredicate(e.items) && slicerPredicate(ovl)
-          }
-        // the null slots explode through and a plain IS NOT NULL
-        // filter drops them AFTER the generator: the obvious
-        // `filter(arr, isNotNull)` lambda is a higher-order function
-        // Spark CANNOT codegen (CodegenFallback — interpreted per fact
-        // row; measured 2-3x the whole aggregation at sf1), while
-        // explode + WHERE stays inside whole-stage codegen at the
-        // aggregation's own floor
-        def keyArrOf(es: Seq[AxisEntry], preds: Seq[Column]): Column =
-          // an emptied entry list (ops pruned everything) keeps the
-          // array typed with one never-matching element: the explode
-          // yields nothing and the empty entry frame empties the axis
-          if (es.isEmpty) array(when(lit(false), lit(0)))
-          else array(es.zip(preds).map { case (e, p) =>
-            when(p, lit(e.idx)) }: _*)
-        // Filter/Order over the calc factor of a CrossJoin evaluates
-        // PRE-crossjoin (FilterFunDef: per member of the set, in the
-        // query context — the other factor's coordinate is NOT set):
-        // a first fused pass at ENTRY grain over the un-semi-joined
-        // scan computes each entry's context cells, the ops prune and
-        // reorder the N-row result, and the surviving ordered entries
-        // drive the main pass. Two scans, both rollup-servable; the
-        // collect is N rows — plan-sized, same convention as the
-        // computed-slicer and role-visibility probes.
-        val preCross = factors.length > 1 || otherFactors.nonEmpty
-        val factorEntries2 =
-          if (!preCross) factorEntries
-          else factorEntries.zipWithIndex.map { case ((f0, es0), k) =>
-            // an entry list emptied BEFORE the pre-pass (a below-ops
-            // positional slice dropped the calc and a role hid every
-            // remaining stored entry): skip the pre-pass — the main
-            // pass's keyArrOf already turns an empty entry list into
-            // an empty axis, and reducing zero predicates would throw
-            if (f0.ops.isEmpty || es0.isEmpty) (f0, es0)
-            else {
-              val s2 = sliced0.sparkSession
-              import s2.implicits._
-              val preds0 = entryPreds(es0, overlapOf(k))
-              val p1 = sliced0.where(orAll(preds0))
-                .withColumn(f0.entryCol, explode(keyArrOf(es0, preds0)))
-                .where(col(f0.entryCol).isNotNull)
-                .groupBy(col(f0.entryCol))
-                .agg(aggCols0.head, aggCols0.tail: _*)
-                .select(col(f0.entryCol) +: post0: _*)
-              val ef = es0.map(e => (e.idx, e.name, e.isCalc))
-                .toDF(f0.entryCol, f0.label, f0.calcCol)
-              val j0 = ef.join(broadcast(p1), Seq(f0.entryCol), "left")
-              val countishP = neededMeasures
-                .filter(m =>
-                  m.agg == Agg.Count || m.agg == Agg.DistinctCount)
-                .map(_.name).filter(j0.columns.contains)
-              val j = applyFusedExprCalcs(
-                countishP.foldLeft(j0)((df, m) => df.withColumn(m,
-                  when(col(f0.calcCol) && col(m).isNull, lit(0L))
-                    .otherwise(col(m)))))
-              val kept = applyEntryOps(j.withColumn("__pos",
-                  (col(f0.entryCol) + 1).cast("long")),
-                  f0.ops, f0.dim, f0.label,
-                  hierFor(f0).map(_.copy(entryCol = f0.entryCol)))
-                .orderBy(col("__pos").asc)
-                .select(col(f0.entryCol)).collect().map(_.getInt(0))
-              val byIdx = es0.map(e => e.idx -> e).toMap
-              val reindexed = kept.toSeq.zipWithIndex.map {
-                case (old, i) => byIdx(old).copy(idx = i)
-              }
-              (f0, reindexed)
-            }
-          }
-        // ops with other factors were consumed by the pre-pass above
-        val opsDownstream =
-          if (!preCross) entryOps else Vector.empty[EntryOp]
-        // With several calc factors the explodes CHAIN — a row
-        // multiplies into every (e1, .., eK) combination it satisfies
-        // — and one groupBy aggregates the whole entry cross product,
-        // still in the same single scan.
-        val entryCols = factors.map(_.entryCol)
-        val factorPreds: Seq[Seq[Column]] =
-          factorEntries2.zipWithIndex.map { case ((_, es), k) =>
-            entryPreds(es, overlapOf(k)) }
-        // rows matching NO entry of some factor never form a tuple:
-        // the any-match disjunction filters them BEFORE the first
-        // explode — a plain codegen'd predicate Catalyst pushes toward
-        // the scan, which for a selective entry set (two nations of a
-        // 25-nation dim) prunes the fact before any row multiplies
-        val pruned = factorPreds.filter(_.nonEmpty)
-          .foldLeft(sliced)((df, ps) => df.where(orAll(ps)))
-        val labeled = factorEntries2.zip(factorPreds).foldLeft(pruned) {
-          case (df, ((f, es), preds)) =>
-            df.withColumn(f.entryCol, explode(keyArrOf(es, preds)))
-              .where(col(f.entryCol).isNotNull)
+          val where = sharedOv.filterNot(i =>
+            itemDims(Seq(i)).exists(d => e.ov(d.toLowerCase)))
+          if (where.isEmpty) own else own && slicerPredicate(where)
         }
-        // NECJ tuple existence = at least one fact row in the group —
-        // a count over the SAME single scan, no second pass, WHEN the
-        // NECJ spans the whole axis (the common shape: one group, all
-        // factors in it — support grain == group grain). Over a
-        // routed rollup the count is of ROLLUP rows — existence-
-        // equivalent (a rollup row exists iff fact rows did). An NECJ
-        // nested under an outer CrossJoin evaluates support at its
-        // OWN factors' grain instead — see the support pass below.
-        val necjFullGrain = necjTuples &&
-          necjGroupN == 1 && factorGroup.forall(_ == 0)
-        val aggCols =
-          if (!necjFullGrain) aggCols0
-          else aggCols0 :+ count(lit(1L)).as("__nrows")
-        val post =
-          if (!necjFullGrain) post0 else post0 :+ col("__nrows")
-        val agged = labeled
-          .groupBy((entryCols ++ otherKeys).map(col): _*)
-          .agg(aggCols.head, aggCols.tail: _*)
-          .select((entryCols ++ otherKeys).map(col) ++ post: _*)
-        // a member (tuple) with no satisfying fact rows keeps its axis
-        // row. A CALC entry's count-aggregated cells coalesce to 0
-        // there (Aggregate over an empty set COUNTS zero — what the
-        // rows=None fallback sub-query returns); stored entries
-        // stay null like any axis member outside the slicer.
-        val s = sliced.sparkSession
-        import s.implicits._
-        // the N-row entry frames are the broadcast sides of the axis
-        // cross product, whatever the other factor's size
-        val entryFrames = factorEntries2.map { case (f, es) =>
-          es.map(e => (e.idx, e.name, e.isCalc))
-            .toDF(f.entryCol, f.label, f.calcCol)
+      // the null slots explode through and a plain IS NOT NULL
+      // filter drops them AFTER the generator: the obvious
+      // `filter(arr, isNotNull)` lambda is a higher-order function
+      // Spark CANNOT codegen (CodegenFallback — interpreted per fact
+      // row; measured 2-3x the whole aggregation at sf1), while
+      // explode + WHERE stays inside whole-stage codegen at the
+      // aggregation's own floor
+      def keyArrOf(es: Seq[AxisEntry], preds: Seq[Column]): Column =
+        // an emptied entry list (ops pruned everything) keeps the
+        // array typed with one never-matching element: the explode
+        // yields nothing and the empty entry frame empties the axis
+        if (es.isEmpty) array(when(lit(false), lit(0)))
+        else array(es.zip(preds).map { case (e, p) =>
+          when(p, lit(e.idx)) }: _*)
+      // Key columns an overriding entry nulls on its rows (with the
+      // entries that do), and every key that may hold a null: those,
+      // plus a mixed-depth factor's padded keys and depth marker.
+      val ovOfKey: Map[String, Seq[Int]] = others
+        .filter(_.ovEntries.nonEmpty)
+        .flatMap(o => (o.keys ++ o.depthCol).map(_ -> o.ovEntries)).toMap
+      val nullableKey: Set[String] = ovOfKey.keySet ++ others
+        .filter(_.depthCol.nonEmpty).flatMap(o => o.keys ++ o.depthCol)
+      // left-join a per-entry aggregate back by `keys`: a key an
+      // overriding entry nulls reads as null on that entry's rows of
+      // `left` too, and nullable keys compare null-safely. Plain keys
+      // keep the equi-join on column names.
+      def joinBack(left: DataFrame, right: DataFrame, keys: Seq[String],
+          bcast: Boolean): DataFrame = {
+        def side(df: DataFrame) = if (bcast) broadcast(df) else df
+        if (!keys.exists(nullableKey)) left.join(side(right), keys, "left")
+        else {
+          val r = side(keys.foldLeft(right)((df, k) =>
+            df.withColumnRenamed(k, s"__jb_$k")))
+          val cond = keys.map { k =>
+            val l = ovOfKey.get(k).fold(left(k))(es =>
+              when(left(cf0.entryCol).isin(es: _*), lit(null))
+                .otherwise(left(k)))
+            if (nullableKey(k)) l <=> r(s"__jb_$k") else l === r(s"__jb_$k")
+          }.reduce(_ && _)
+          left.join(r, cond, "left").drop(keys.map(k => s"__jb_$k"): _*)
         }
-        val frame = otherByIdx.map(_._2.members) match {
-          case Seq() => entryFrames.tail.foldLeft(entryFrames.head)(
-            (acc, ef) => acc.crossJoin(broadcast(ef)))
-          case oms => entryFrames.foldLeft(oms.reduce(_ crossJoin _))(
-            (acc, ef) => acc.crossJoin(broadcast(ef)))
-        }
-        val aggedSide = if (otherHighCard) agged else broadcast(agged)
-        val joined0 = frame
-          .join(aggedSide, entryCols ++ otherKeys, "left")
-        val countish = neededMeasures
-          .filter(m => m.agg == Agg.Count || m.agg == Agg.DistinctCount)
-          .map(_.name).filter(joined0.columns.contains)
-        // a tuple is "calc" when ANY factor coordinate is a calc
-        // member — Aggregate over an empty set COUNTS zero there
-        val calcAny = factors.map(f => col(f.calcCol)).reduce(_ || _)
-        val joined = applyFusedExprCalcs(
-          countish.foldLeft(joined0) { (df, m) =>
-            df.withColumn(m,
-              when(calcAny && col(m).isNull, lit(0L))
-                .otherwise(col(m)))
-          })
-        // NECJ drops axis tuples without fact support (the left join
-        // leaves __nrows null there); plain CrossJoin keeps them with
-        // null/zero cells. When the NECJ is NESTED under an outer
-        // CrossJoin, support is evaluated at the NECJ's own grain —
-        // its factors' entry/key columns only, from the scan BEFORE
-        // the outer factors' member restriction (the NECJ context has
-        // no outer-factor coordinate; Mondrian keeps unsupported
-        // outer combinations as null-cell rows) — one small
-        // distinct-support pass per NECJ group, semi-joined in.
-        val tupled =
-          if (!necjTuples) joined
-          else if (necjFullGrain)
-            joined.filter(col("__nrows") >= 1).drop("__nrows")
-          else (0 until necjGroupN).foldLeft(joined) { (df, g) =>
-            val gCalcKs = factors.indices
-              .filter(k => factorGroup(calcIdxs(k)) == g)
-            val gOtherCols = otherIdxs.filter(factorGroup(_) == g)
-              .flatMap { oi =>
-                evalSet(rowsFactors(oi), qSlicerAll, qs.withSets)
-                  .dims.flatMap(ad => levelCols(ad.d, ad.depth))
-              }
-            val supBase = gCalcKs.map(k => factorPreds(k))
-              .filter(_.nonEmpty)
-              .foldLeft(sliced0)((d, ps) => d.where(orAll(ps)))
-            val supLabeled = gCalcKs.foldLeft(supBase) { (d, k) =>
-              val (f, es) = factorEntries2(k)
-              d.withColumn(f.entryCol,
-                  explode(keyArrOf(es, factorPreds(k))))
-                .where(col(f.entryCol).isNotNull)
-            }
-            val gCols =
-              gCalcKs.map(k => factors(k).entryCol) ++ gOtherCols
-            df.join(supLabeled.select(gCols.map(col): _*).distinct(),
-              gCols, "left_semi")
-          }
-        // evaluate-then-prune: Filter/Order/slice ops run on the N
-        // aggregated entry rows (never the fact), positions seeded
-        // from the literal order (ops with other factors ran in the
-        // pre-crossjoin pass instead)
-        val posed =
-          if (opsDownstream.isEmpty) tupled
-          else applyEntryOps(
-            tupled.withColumn("__pos", (col("__entry") + 1).cast("long")),
-            opsDownstream, dim, label,
-            entryHier.map(_.copy(entryCol = cf0.entryCol)))
-        // sort keys and axis columns in factor-position order: a calc
-        // factor sorts by its entry position (post-op __pos when ops
-        // ran downstream — single-factor shape, nothing to interleave),
-        // a stored factor by its own __oord / level ordinals
-        val axisSort: Seq[Column] = rowsFactors.indices.flatMap { fi =>
-          val k = calcIdxs.indexOf(fi)
-          if (k < 0) otherByIdx.find(_._1 == fi).get._4
-          else if (k == 0 && opsDownstream.nonEmpty) Seq(col("__pos").asc)
-          else Seq(col(factors(k).entryCol).asc)
-        }
-        val axisCols: Seq[String] = rowsFactors.indices.flatMap { fi =>
-          val k = calcIdxs.indexOf(fi)
-          if (k < 0) otherByIdx.find(_._1 == fi).get._3
-          else Seq(factors(k).label)
-        }
-        val out = posed.orderBy(axisSort: _*)
-          .select((axisCols ++ qs.measures).map(col): _*)
-        return if (!qs.nonEmpty) out
-          else out.filter(
-            qs.measures.map(col(_).isNotNull).reduce(_ || _))
       }
-      // the per-entry fallback unions sub-queries over ONE calc
-      // factor's entries and always yields its axis rows — it can
-      // neither evaluate the multi-factor entry cross product nor
-      // observe NECJ tuple support
-      if (factors.length > 1)
-        refuse("calc members in more than one CrossJoin factor " +
-          "alongside context-dependent (window/set-aggregating) calc " +
-          "measures or mixed-depth factors — only the fused " +
-          "single-pass lowering evaluates the multi-factor entry " +
-          "cross product")
-      if (necjTuples)
-        refuse("NonEmptyCrossJoin with a calc factor alongside " +
-          "context-dependent (window/set-aggregating) calc measures " +
-          "or mixed-depth factors — only the fused single-pass " +
-          "lowering computes tuple support")
-      if (entryOps.nonEmpty && otherFactors.nonEmpty)
-        refuse("Filter/Order/positional ops over the calc factor of " +
-          "a CrossJoin alongside context-dependent calc measures or " +
-          "mixed-depth factors — the pre-crossjoin condition pass " +
-          "needs the fused lowering")
-      // a path already in the current run starts a NEW run: the
-      // Members lowering distincts its member frame, so a
-      // duplicated literal inside one run would collapse to a
-      // single row instead of rendering twice (the fused path keeps
-      // both via position keys; parity). The duplicate check
-      // NORMALIZES values — a parser-String literal and its
-      // enumerated native-typed twin (Integer year) are the same
-      // member, matching distinctNorm's convention
-      val runs = paths.foldLeft(Vector.empty[Vector[Seq[Any]]]) {
-        (acc, p) =>
-          val isCalc = dcl.of(dim, p).isDefined
-          val pN = p.map(String.valueOf)
-          acc.lastOption match {
-            case Some(run)
-                if !isCalc && dcl.of(dim, run.head).isEmpty &&
-                  run.head.length == p.length &&
-                  !run.exists(_.map(String.valueOf) == pN) =>
-              acc.init :+ (run :+ p)
-            case _ => acc :+ Vector(p)
+      // the cell context of calc measures on the fused frame: the
+      // entry key groups, partitions and joins every context-dependent
+      // calc, whose inner aggregate re-reads the scan at entry × kept
+      // × set grain (contextual calcs imply a single calc factor)
+      def ctxOf(es: Seq[AxisEntry]): EntryCtx = EntryCtx(
+        Seq(cf0.entryCol),
+        (kept, set) => {
+          val dims = kept ++ set
+          val preds = entryPreds(es, overlapOf(0),
+            storedFree = set.exists(_.d.name.equalsIgnoreCase(dim)))
+          val scan = joinStar(neededJoins(dims, joinItems), joinItems)
+            .filter(slicerPredicate(sharedRest ++ roleSlicer))
+          val exploded = (if (preds.isEmpty) scan
+            else scan.where(orAll(preds)))
+            .withColumn(cf0.entryCol, explode(keyArrOf(es, preds)))
+            .where(col(cf0.entryCol).isNotNull)
+          val keptKeys = groupCols(kept).toSet
+          val nulled = ovOfKey.filter(kv => keptKeys(kv._1))
+            .foldLeft(exploded) { case (df, (k, ovEs)) =>
+              df.withColumn(k, when(col(cf0.entryCol).isin(ovEs: _*),
+                lit(null)).otherwise(col(k)))
+            }
+          val keys = cf0.entryCol +: groupCols(dims)
+          val (aggCols, post) = Agg.toColumnsFused(neededMeasures)
+          nulled.groupBy(keys.map(col): _*)
+            .agg(aggCols.head, aggCols.tail: _*)
+            .select(keys.map(col) ++ post: _*)
+        },
+        joinBack, qs.measures)
+      // Filter/Order over the calc factor of a CrossJoin evaluates
+      // PRE-crossjoin (FilterFunDef: per member of the set, in the
+      // query context — the other factor's coordinate is NOT set):
+      // a first fused pass at ENTRY grain over the un-semi-joined
+      // scan computes each entry's context cells, the ops prune and
+      // reorder the N-row result, and the surviving ordered entries
+      // drive the main pass. Two scans, both rollup-servable; the
+      // collect is N rows — plan-sized, same convention as the
+      // computed-slicer and role-visibility probes.
+      val preCross = factors.length > 1 || otherFactors.nonEmpty
+      val factorEntries2 =
+        if (!preCross) factorEntries
+        else factorEntries.zipWithIndex.map { case ((f0, es0), k) =>
+          // an entry list emptied BEFORE the pre-pass (a below-ops
+          // positional slice dropped the calc and a role hid every
+          // remaining stored entry): skip the pre-pass — the main
+          // pass's keyArrOf already turns an empty entry list into
+          // an empty axis, and reducing zero predicates would throw
+          if (f0.ops.isEmpty || es0.isEmpty) (f0, es0)
+          else {
+            val s2 = sliced0.sparkSession
+            import s2.implicits._
+            val preds0 = entryPreds(es0, overlapOf(k))
+            val p1 = sliced0.where(orAll(preds0))
+              .withColumn(f0.entryCol, explode(keyArrOf(es0, preds0)))
+              .where(col(f0.entryCol).isNotNull)
+              .groupBy(col(f0.entryCol))
+              .agg(aggCols0.head, aggCols0.tail: _*)
+              .select(col(f0.entryCol) +: post0: _*)
+            val ef = es0.map(e => (e.idx, e.name, e.isCalc))
+              .toDF(f0.entryCol, f0.label, f0.calcCol)
+            val j0 = ef.join(broadcast(p1), Seq(f0.entryCol), "left")
+            val countishP = neededMeasures
+              .filter(m =>
+                m.agg == Agg.Count || m.agg == Agg.DistinctCount)
+              .map(_.name).filter(j0.columns.contains)
+            val j = applyCalcs(
+              countishP.foldLeft(j0)((df, m) => df.withColumn(m,
+                when(col(f0.calcCol) && col(m).isNull, lit(0L))
+                  .otherwise(col(m)))),
+              Nil, qSlicerAll, qs.withSets, Some(ctxOf(es0)))
+            val kept = applyEntryOps(j.withColumn("__pos",
+                (col(f0.entryCol) + 1).cast("long")),
+                f0.ops, f0.dim, f0.label,
+                hierFor(f0).map(_.copy(entryCol = f0.entryCol)))
+              .orderBy(col("__pos").asc)
+              .select(col(f0.entryCol)).collect().map(_.getInt(0))
+            val byIdx = es0.map(e => e.idx -> e).toMap
+            val reindexed = kept.toSeq.zipWithIndex.map {
+              case (old, i) => byIdx(old).copy(idx = i)
+            }
+            (f0, reindexed)
           }
+        }
+      // ops with other factors were consumed by the pre-pass above
+      val opsDownstream =
+        if (!preCross) entryOps else Vector.empty[EntryOp]
+      // With several calc factors the explodes CHAIN — a row
+      // multiplies into every (e1, .., eK) combination it satisfies
+      // — and one groupBy aggregates the whole entry cross product,
+      // still in the same single scan.
+      val entryCols = factors.map(_.entryCol)
+      val factorPreds: Seq[Seq[Column]] =
+        factorEntries2.zipWithIndex.map { case ((_, es), k) =>
+          entryPreds(es, overlapOf(k)) }
+      // rows matching NO entry of some factor never form a tuple:
+      // the any-match disjunction filters them BEFORE the first
+      // explode — a plain codegen'd predicate Catalyst pushes toward
+      // the scan, which for a selective entry set (two nations of a
+      // 25-nation dim) prunes the fact before any row multiplies
+      val pruned = factorPreds.filter(_.nonEmpty)
+        .foldLeft(sliced)((df, ps) => df.where(orAll(ps)))
+      val labeled = factorEntries2.zip(factorPreds).foldLeft(pruned) {
+        case (df, ((f, es), preds)) =>
+          df.withColumn(f.entryCol, explode(keyArrOf(es, preds)))
+            .where(col(f.entryCol).isNotNull)
       }
-      // literal-set order survives the union: each part carries the
-      // path's global position (a stored run's sub-query orders by
-      // level ordinals internally, so its rows match back to their
-      // literal slot by level-column equality)
-      val starts = runs.scanLeft(0)(_ + _.length)
-      // extra measures a Filter/Order op references beyond the
-      // displayed ones: the sub-queries compute them (incl.
-      // Measures-hosted calcs via applyCalcs), the final select drops
-      // them
-      val qsM = qs.copy(measures =
-        (qs.measures ++ opCalcNames ++ cube.measures.map(_.name)
-          .filter(n => referencedIn(n, opTexts))).distinct)
-      val countishAll = cube.measures
+      // a mixed-depth factor gives each row one key tuple per depth
+      // present (deeper levels null, the depth marker set — the
+      // grouping sets of mixedCells, as an explode); an entry
+      // overriding a factor groups with that factor's keys null
+      val keyed = others.foldLeft(labeled) { (df, o) =>
+        val isOv = col(cf0.entryCol).isin(o.ovEntries: _*)
+        o.depthCol match {
+          case Some(dc) =>
+            val levels = o.frame.dims
+              .filter(ad => o.frame.mixedDim.contains(ad.d.name))
+              .flatMap(ad => levelCols(ad.d, ad.depth))
+            def tuple(dep: Option[Int]): Column = struct(
+              (dep.fold(lit(null).cast("int"))(lit(_)).as(dc) +:
+                o.keys.map { k =>
+                  (if (dep.exists(levels.indexOf(k) <= _)) col(k)
+                   else lit(null).cast(df.schema(k).dataType)).as(k)
+                }): _*)
+            val perDepth = array(o.frame.depthsOf.distinct.sorted
+              .map(dep => tuple(Some(dep))): _*)
+            val arr =
+              if (o.ovEntries.isEmpty) perDepth
+              else when(isOv, array(tuple(None))).otherwise(perDepth)
+            (o.keys :+ dc).foldLeft(df.withColumn("__mx", explode(arr)))(
+              (x, k) => x.withColumn(k, col("__mx").getField(k)))
+              .drop("__mx")
+          case None if o.ovEntries.nonEmpty =>
+            o.keys.foldLeft(df)((x, k) =>
+              x.withColumn(k, when(isOv, lit(null)).otherwise(col(k))))
+          case None => df
+        }
+      }
+      // NECJ tuple existence = at least one fact row in the group —
+      // a count over the SAME single scan, no second pass, WHEN the
+      // NECJ spans the whole axis (the common shape: one group, all
+      // factors in it — support grain == group grain). Over a
+      // routed rollup the count is of ROLLUP rows — existence-
+      // equivalent (a rollup row exists iff fact rows did). An NECJ
+      // nested under an outer CrossJoin evaluates support at its
+      // OWN factors' grain instead — see the support pass below.
+      val necjFullGrain = necjTuples &&
+        necjGroupN == 1 && factorGroup.forall(_ == 0)
+      val aggCols =
+        if (!necjFullGrain) aggCols0
+        else aggCols0 :+ count(lit(1L)).as("__nrows")
+      val post =
+        if (!necjFullGrain) post0 else post0 :+ col("__nrows")
+      val frameKeys = entryCols ++ otherKeys ++ others.flatMap(_.depthCol)
+      val agged = keyed
+        .groupBy(frameKeys.map(col): _*)
+        .agg(aggCols.head, aggCols.tail: _*)
+        .select(frameKeys.map(col) ++ post: _*)
+      // a member (tuple) with no satisfying fact rows keeps its axis
+      // row. A CALC entry's count-aggregated cells coalesce to 0
+      // there (Aggregate over an empty set COUNTS zero); stored
+      // entries stay null like any axis member outside the slicer.
+      val s = sliced.sparkSession
+      import s.implicits._
+      // the N-row entry frames are the broadcast sides of the axis
+      // cross product, whatever the other factor's size
+      val entryFrames = factorEntries2.map { case (f, es) =>
+        es.map(e => (e.idx, e.name, e.isCalc))
+          .toDF(f.entryCol, f.label, f.calcCol)
+      }
+      val frame = others.map(_.frame.members) match {
+        case Seq() => entryFrames.tail.foldLeft(entryFrames.head)(
+          (acc, ef) => acc.crossJoin(broadcast(ef)))
+        case oms => entryFrames.foldLeft(oms.reduce(_ crossJoin _))(
+          (acc, ef) => acc.crossJoin(broadcast(ef)))
+      }
+      val joined0 = joinBack(frame, agged, frameKeys, bcast = !otherHighCard)
+      val countish = neededMeasures
         .filter(m => m.agg == Agg.Count || m.agg == Agg.DistinctCount)
-        .map(_.name).filter(qsM.measures.contains)
-      // per-other-factor hierarchy names (plan-building only): an
-      // overriding calc entry drops the factors its set constrains
-      // from its sub-query rows
-      lazy val otherFactorDims: Seq[Set[String]] = otherFactors.map(f =>
-        evalSet(f, Nil, qs.withSets).dims.map(_.d.name.toLowerCase).toSet)
-      val parts = runs.zip(starts).map { case (run, start) =>
-        dcl.of(dim, run.head) match {
-          case Some((cm, dc)) =>
-            val items = dcl.sliceOf(cm, dc)
-            val ovDims = itemDims(items).map(_.toLowerCase)
-              .intersect(otherDimsLc)
-            val (ovFactors, keepFactors) = otherFactors
-              .zip(otherFactorDims).partition(_._2.exists(ovDims))
-            ovFactors.foreach { case (_, ds) =>
-              if (!ds.forall(ovDims))
-                refuse("a calc member's set overrides PART of a " +
-                  "multi-hierarchy CrossJoin factor — split the " +
-                  "factor so the overridden hierarchy stands alone")
-            }
-            // MDX context override (r16): the set's members REPLACE
-            // the overridden hierarchies' coordinates (AggregateFunDef
-            // via Evaluator.setContext), so the cell is CONSTANT
-            // across those factors' members and a WHERE item on them
-            // is overridden too — the sub-query drops the factors
-            // from its rows and their items from its slicer, then the
-            // member frames cross-join back (dimension-bounded
-            // broadcasts; the value replicates, making the override
-            // literal). rows = the remaining crossjoin factors (None
-            // for a pure literal set); NON EMPTY is applied once at
-            // the top, AFTER the count coalesce, so both paths agree
-            // on count-0 rows
-            val keepSet = keepFactors.map(_._1)
-              .reduceRightOption(CrossJoin(_, _))
-            val subSlicer =
-              if (ovDims.isEmpty) qs.slicer ++ items
-              else qs.slicer.filterNot(i =>
-                itemDims(Seq(i)).exists(d => ovDims(d.toLowerCase))) ++
-                items
-            val sub = qsM.copy(rows = keepSet, nonEmpty = false,
-              slicer = subSlicer)
-            val base0 = execute(sub).withColumn(label, lit(cm.name))
-              .withColumn("__epos", lit(start))
-            // counts over an empty subcube are ZERO on a calc row
-            // (the rows=None sub-query convention); the axis
-            // left-join's nulls coalesce to match the fused path
-            val coalesced =
-              if (keepSet.isEmpty) base0
-              else countishAll.foldLeft(base0)((df, m) =>
-                df.withColumn(m, coalesce(col(m), lit(0L))))
-            val withOv = ovFactors.foldLeft(coalesced) {
-              case (df, (f, _)) =>
-                val af = evalSet(f, qSlicerAll, qs.withSets)
-                val cols = af.dims.flatMap(ad =>
-                  levelCols(ad.d, ad.depth))
-                df.crossJoin(broadcast(
-                  af.members.select(cols.map(col): _*)))
-            }
-            withOv.select(
-              ((label +: otherKeys) ++ qsM.measures :+ "__epos")
-                .map(col): _*)
-          case None =>
-            val d = cube.dim(dim)
-            val leaf = d.levels(run.head.length - 1).col
-            val subRows: SetExpr = (Members(dim, run) +: otherFactors)
-              .reduceRight(CrossJoin(_, _))
-            val sub = qsM.copy(rows = Some(subRows))
-            // flat coalesce, not a nested reduce: a stored run can be
-            // entry-list-sized (10k bound) and a run-deep Column tree
-            // overflows the analyzer around ~1k terms (the orAll class)
-            val ordCol = coalesce(run.zipWithIndex.map { case (p, i) =>
-              when(p.zipWithIndex.map { case (v, li) =>
-                col(d.levels(li).col) === lit(v) }.reduce(_ && _),
-                lit(start + i))
-            }: _*)
-            // the label column is STRING by convention (the fused path
-            // renders entry NAMES): a native-typed leaf (a numeric time
-            // level) unioned with a calc entry's string label would
-            // otherwise coerce the label to the numeric under ANSI and
-            // fail the cast (r16 — surfaced by the time-hosted
-            // context-override shape)
-            execute(sub).withColumn("__epos", ordCol)
-              .select(col(leaf).cast("string").as(label) +:
-                (otherKeys ++ qsM.measures :+ "__epos").map(col): _*)
+        .map(_.name).filter(joined0.columns.contains)
+      // a tuple is "calc" when ANY factor coordinate is a calc
+      // member — Aggregate over an empty set COUNTS zero there
+      val calcAny = factors.map(f => col(f.calcCol)).reduce(_ || _)
+      // calc measures in solve order, after the count coalesce (an
+      // expression over a count sees the calc entry's 0)
+      val joined = applyCalcs(
+        countish.foldLeft(joined0) { (df, m) =>
+          df.withColumn(m,
+            when(calcAny && col(m).isNull, lit(0L))
+              .otherwise(col(m)))
+        }, otherDims, qSlicerAll, qs.withSets,
+        Some(ctxOf(factorEntries2.head._2)))
+      // NECJ drops axis tuples without fact support (the left join
+      // leaves __nrows null there); plain CrossJoin keeps them with
+      // null/zero cells. When the NECJ is NESTED under an outer
+      // CrossJoin, support is evaluated at the NECJ's own grain —
+      // its factors' entry/key columns only, from the scan BEFORE
+      // the outer factors' member restriction (the NECJ context has
+      // no outer-factor coordinate; Mondrian keeps unsupported
+      // outer combinations as null-cell rows) — one small
+      // distinct-support pass per NECJ group, semi-joined in.
+      val tupled =
+        if (!necjTuples) joined
+        else if (necjFullGrain)
+          joined.filter(col("__nrows") >= 1).drop("__nrows")
+        else (0 until necjGroupN).foldLeft(joined) { (df, g) =>
+          val gCalcKs = factors.indices
+            .filter(k => factorGroup(calcIdxs(k)) == g)
+          val gOtherCols =
+            others.filter(o => factorGroup(o.idx) == g).flatMap(_.keys)
+          val supBase = gCalcKs.map(k => factorPreds(k))
+            .filter(_.nonEmpty)
+            .foldLeft(sliced0)((d, ps) => d.where(orAll(ps)))
+          val supLabeled = gCalcKs.foldLeft(supBase) { (d, k) =>
+            val (f, es) = factorEntries2(k)
+            d.withColumn(f.entryCol,
+                explode(keyArrOf(es, factorPreds(k))))
+              .where(col(f.entryCol).isNotNull)
+          }
+          val gCols =
+            gCalcKs.map(k => factors(k).entryCol) ++ gOtherCols
+          df.join(supLabeled.select(gCols.map(col): _*).distinct(),
+            gCols, "left_semi")
         }
+      // evaluate-then-prune: Filter/Order/slice ops run on the N
+      // aggregated entry rows (never the fact), positions seeded
+      // from the literal order (ops with other factors ran in the
+      // pre-crossjoin pass instead)
+      val posed =
+        if (opsDownstream.isEmpty) tupled
+        else applyEntryOps(
+          tupled.withColumn("__pos", (col("__entry") + 1).cast("long")),
+          opsDownstream, dim, label,
+          entryHier.map(_.copy(entryCol = cf0.entryCol)))
+      // sort keys and axis columns in factor-position order: a calc
+      // factor sorts by its entry position (post-op __pos when ops
+      // ran downstream — single-factor shape, nothing to interleave),
+      // a stored factor by its own __oord / level ordinals
+      val axisSort: Seq[Column] = rowsFactors.indices.flatMap { fi =>
+        val k = calcIdxs.indexOf(fi)
+        if (k < 0) others.find(_.idx == fi).get.sort
+        else if (k == 0 && opsDownstream.nonEmpty) Seq(col("__pos").asc)
+        else Seq(col(factors(k).entryCol).asc)
       }
-      val unioned0 = parts.reduce(_.unionByName(_))
-      val finalDf =
-        if (entryOps.nonEmpty)
-          // evaluate-then-prune on the entry-count-sized union (ops
-          // imply no other factors — gated above); extra op measures
-          // drop at the select
-          applyEntryOps(unioned0.withColumn("__pos",
-              (col("__epos") + 1).cast("long")), entryOps, dim, label,
-              entryHier.map(_.copy(entryCol = "__epos")))
-            .orderBy(col("__pos").asc)
-            .select((label +: qs.measures).map(col): _*)
-        else otherFrame0 match {
-          case Some(_) =>
-            // left-major axis rendering (r18, matching the fused path):
-            // sort keys interleave by each factor's ORIGINAL crossjoin
-            // position — the calc factor by its entry position, stored
-            // factors by their OWN order (explicit __ord when the set
-            // was explicitly ordered, else hierarchical level ordinals;
-            // r13 ADVICE: a name-key sort destroyed an Order()'d or
-            // ordinal_column'd factor's internal order). Ordinals live
-            // on the member frames; dimension-sized broadcasts join
-            // them back per factor (null-safe equality: mixed-depth
-            // frames pad deeper keys with null)
-            val perFactor: Seq[(Int, Seq[String], Seq[String],
-                DataFrame)] =
-              otherIdxs.map { oi =>
-                val rs = evalSet(rowsFactors(oi), qSlicerAll, qs.withSets)
-                val keys = rs.dims.flatMap(ad => levelCols(ad.d, ad.depth))
-                if (rs.hasOrd) {
-                  val oc = s"__oord$oi"
-                  (oi, keys, Seq(oc),
-                    rs.members.withColumnRenamed(OrdCol, oc))
-                } else (oi, keys, rs.dims.flatMap(ad =>
-                  ad.d.levelsTo(ad.depth).map(_.ordinal)), rs.members)
-              }
-            val base = perFactor.foldLeft(unioned0) {
-              case (acc, (_, keys, ordCols, members)) =>
-                val extra = ordCols.filterNot(acc.columns.contains)
-                if (extra.isEmpty) acc
-                else {
-                  // rename the broadcast side's keys: acc already
-                  // carries attributes from the SAME cached member
-                  // frame (the override branch crossjoins it back), so
-                  // an exprId-identical join key would be an ambiguous
-                  // self-join reference (surfaced in r19 when literal
-                  // sets began carrying __ord — a self-ordinal level
-                  // like a numeric year skipped this join before)
-                  val fr0 = members.select((keys ++ extra).map(col): _*)
-                    .distinct()
-                  val fr = keys.foldLeft(fr0)((f, k) =>
-                    f.withColumnRenamed(k, s"__frk_$k"))
-                  acc.join(broadcast(fr),
-                      keys.map(k => acc(k) <=> fr(s"__frk_$k"))
-                        .reduce(_ && _),
-                      "left")
-                    .drop(keys.map(k => s"__frk_$k"): _*)
-                }
-            }
-            val cfi = calcIdxs.head
-            val sortCols: Seq[Column] = rowsFactors.indices.flatMap { fi =>
-              if (fi == cfi) Seq(col("__epos").asc)
-              else perFactor.find(_._1 == fi).get._3.map(col(_).asc)
-            }
-            val axisCols: Seq[String] = rowsFactors.indices.flatMap { fi =>
-              if (fi == cfi) Seq(label)
-              else perFactor.find(_._1 == fi).get._2
-            }
-            base.orderBy(sortCols: _*)
-              .select((axisCols ++ qs.measures).map(col): _*)
-          case None =>
-            unioned0.orderBy(col("__epos").asc)
-              .select((label +: qs.measures).map(col): _*)
-        }
-      // NON EMPTY prunes fully-empty CALC rows here too — the
-      // rows=None sub-query always yields its one row, but the
-      // fused path and the normal axis path both drop such rows
-      return if (!qs.nonEmpty) finalDf
-        else finalDf.filter(
+      val axisCols: Seq[String] = rowsFactors.indices.flatMap { fi =>
+        val k = calcIdxs.indexOf(fi)
+        if (k < 0) others.find(_.idx == fi).get.keys
+        else Seq(factors(k).label)
+      }
+      val out = posed.orderBy(axisSort: _*)
+        .select((axisCols ++ qs.measures).map(col): _*)
+      return if (!qs.nonEmpty) out
+        else out.filter(
           qs.measures.map(col(_).isNotNull).reduce(_ || _))
     }
     val q = qs
@@ -2908,11 +2758,14 @@ final class Planner(val cube: BoundCube) {
   /** Calc-member layer in solve order: Expr calcs are plain column
     * expressions; Window calcs lower to Spark Window functions over the
     * member ordinals (SURVEY §2.5 — MDX relative navigation → Window).
+    * With `ctx`, `df` is a fused dim-calc frame and every calc is
+    * evaluated per axis entry.
     */
   private def applyCalcs(df: DataFrame,
       axisDims: Seq[AxisDim],
-      slicer: Seq[SlicerItem] = Nil,
-      withSets: Map[String, SetExpr] = Map.empty): DataFrame =
+      slicer: Seq[SlicerItem],
+      withSets: Map[String, SetExpr],
+      ctx: Option[EntryCtx] = None): DataFrame =
     neededCalcs.sortBy(_.solveOrder).foldLeft(df) {
       (acc, cm) =>
         cm.calc match {
@@ -2921,18 +2774,29 @@ final class Planner(val cube: BoundCube) {
               val (d2, s2) =
                 resolveProps(acc, resolveCurrent(sql, axisDims), axisDims)
               d2.withColumn(cm.name, sexpr(s2))
-            } catch { case _: org.apache.spark.sql.AnalysisException => acc }
+            } catch {
+              // a calc the query SELECTS must not drop silently from a
+              // fused dim-calc frame: fail loudly with the calc's name
+              // instead of letting the final measure select die with an
+              // unrelated column-not-found (ADVICE r15)
+              case ex: org.apache.spark.sql.AnalysisException
+                  if ctx.exists(_.shown.exists(_.equalsIgnoreCase(cm.name))) =>
+                throw new IllegalArgumentException(
+                  s"calculated measure '${cm.name}' failed to resolve on " +
+                    "the fused dim-calc frame: " + ex.getMessage, ex)
+              case _: org.apache.spark.sql.AnalysisException => acc
+            }
           case WindowCalc(base, kind, overDim, resetLevel) =>
             axisDims.find(_.d.name == overDim) match {
               case None => acc // window dim not on axis → undefined, skip
               case Some(ad) =>
-                acc.withColumn(cm.name,
-                  windowColumn(base, kind, ad, axisDims, resetLevel))
+                acc.withColumn(cm.name, windowColumn(base, kind, ad,
+                  axisDims, resetLevel, ctx.fold(Seq.empty[String])(_.cols)))
             }
           case sac: SetAggCalc =>
-            setAggColumn(acc, cm.name, sac, axisDims, slicer, withSets)
+            setAggColumn(acc, cm.name, sac, axisDims, slicer, withSets, ctx)
           case lrc: LinRegCalc =>
-            linRegColumn(acc, cm.name, lrc, axisDims, slicer, withSets)
+            linRegColumn(acc, cm.name, lrc, axisDims, slicer, withSets, ctx)
           case _: DimAggCalc => acc // axis member, not a cell column
         }
     }
@@ -2977,7 +2841,7 @@ final class Planner(val cube: BoundCube) {
 
   private def setAggColumn(acc: DataFrame, name: String, sac: SetAggCalc,
       axisDims: Seq[AxisDim], slicer: Seq[SlicerItem],
-      withSets: Map[String, SetExpr]): DataFrame = {
+      withSets: Map[String, SetExpr], ctx: Option[EntryCtx]): DataFrame = {
     requireNoDimCalcMember(sac.set, withSets,
       s"the ${sac.fn}(set) of measure [$name]")
     val frame = evalSet(sac.set, slicer, withSets)
@@ -2996,8 +2860,9 @@ final class Planner(val cube: BoundCube) {
     // the value repeats per overridden row.
     val keptAxis = axisDims.filterNot(ad =>
       frame.dims.exists(_.d.name == ad.d.name))
-    val keptKeys = groupCols(keptAxis)
-    val inner = aggregate(keptAxis ++ frame.dims, slicer)
+    val keptKeys = ctx.fold(Seq.empty[String])(_.cols) ++ groupCols(keptAxis)
+    val inner = ctx.fold(aggregate(keptAxis ++ frame.dims, slicer))(
+      _.cells(keptAxis, frame.dims))
     val restricted = inner.join(
       broadcast(frame.members.select(setKeys.map(col): _*).distinct()),
       setKeys, "left_semi")
@@ -3037,8 +2902,16 @@ final class Planner(val cube: BoundCube) {
       if (keptKeys.isEmpty) restricted.agg(aggCol)
       else restricted.groupBy(keptKeys.map(col): _*).agg(aggCol)
     if (keptKeys.isEmpty) acc.crossJoin(broadcast(outer))
-    else acc.join(broadcast(outer), keptKeys, "left")
+    else joinLeft(acc, outer, keptKeys, ctx)
   }
+
+  /** Left-join a per-cell frame back onto the axis frame (broadcast):
+    * through the fused dim-calc context's null-safe join when present.
+    */
+  private def joinLeft(acc: DataFrame, side: DataFrame, keys: Seq[String],
+      ctx: Option[EntryCtx]): DataFrame =
+    ctx.fold(acc.join(broadcast(side), keys, "left"))(
+      _.join(acc, side, keys, true))
 
   /** MDX LinRegSlope/Intercept/R2/Variance(set, y, x) per axis cell:
     * one (x, y) point per SET MEMBER — `__LR_RANK__` in the lowered
@@ -3064,11 +2937,11 @@ final class Planner(val cube: BoundCube) {
     */
   private val lrMoments = scala.collection.mutable.HashMap
     .empty[(SetExpr, String, String, Seq[String], Seq[SlicerItem],
-      Map[String, SetExpr]), DataFrame]
+      Map[String, SetExpr], Option[EntryCtx]), DataFrame]
 
   private def linRegColumn(acc: DataFrame, name: String, lrc: LinRegCalc,
       axisDims: Seq[AxisDim], slicer: Seq[SlicerItem],
-      withSets: Map[String, SetExpr]): DataFrame = {
+      withSets: Map[String, SetExpr], ctx: Option[EntryCtx]): DataFrame = {
     requireNoDimCalcMember(lrc.set, withSets,
       s"the LinReg series set of measure [$name]")
     val frame = evalSet(lrc.set, slicer, withSets)
@@ -3077,15 +2950,14 @@ final class Planner(val cube: BoundCube) {
     // that is also on the axis replaces that coordinate
     val keptAxis = axisDims.filterNot(ad =>
       frame.dims.exists(_.d.name == ad.d.name))
-    val keptKeys = groupCols(keptAxis)
-    // The slicer and WITH-set bindings parameterize evalSet and the
-    // inner aggregate, and the dim-calc axis rewrite re-enters this
-    // Planner with a DIFFERENT compound slicer per calc member — so
-    // both belong in the key, or the second member reads the first
-    // member's moments (stale slope/intercept/R2 cells).
+    val keptKeys = ctx.fold(Seq.empty[String])(_.cols) ++ groupCols(keptAxis)
+    // The slicer, the WITH-set bindings and the fused dim-calc entry
+    // context parameterize evalSet and the inner aggregate, so all
+    // belong in the key, or one query reads another's moments (stale
+    // slope/intercept/R2 cells).
     val moments = lrMoments.getOrElseUpdate(
       (lrc.set, lrc.yExpr + lrc.rankSet.fold("")("#" + _), lrc.xExpr,
-        keptKeys, slicer, withSets), {
+        keptKeys, slicer, withSets, ctx), {
     val ordBy =
       if (frame.hasOrd) Seq(col(OrdCol).asc)
       else frame.dims.flatMap(fd =>
@@ -3099,16 +2971,20 @@ final class Planner(val cube: BoundCube) {
         frame.members.select(mCols.distinct.map(col): _*).distinct(),
         ordBy, "__lr_rank", hintOf(frame.dims))
       .select((setKeys :+ "__lr_rank").map(col): _*)
-    val inner = aggregate(keptAxis ++ frame.dims, slicer)
+    val inner = ctx.fold(aggregate(keptAxis ++ frame.dims, slicer))(
+      _.cells(keptAxis, frame.dims))
     // every set member contributes a point even without fact rows (the
     // reference's rank-only CASE series span members with no data), so
     // the ranked members LEFT-join their cell values — per axis cell
     // when the axis keeps other dims
     val series0 =
       if (keptKeys.isEmpty) ranked.join(inner, setKeys, "left")
-      else inner.select(keptKeys.map(col): _*).distinct()
-        .crossJoin(broadcast(ranked))
-        .join(inner, keptKeys ++ setKeys, "left")
+      else {
+        val grid = inner.select(keptKeys.map(col): _*).distinct()
+          .crossJoin(broadcast(ranked))
+        ctx.fold(grid.join(inner, keptKeys ++ setKeys, "left"))(
+          _.join(grid, inner, keptKeys ++ setKeys, false))
+      }
     // Rank over a DIFFERENT set — Mondrian member-identity semantics:
     // the position when the series member IS in that set (same level
     // ⇒ identical key columns, keyed join), 0 when absent, and 0
@@ -3175,7 +3051,7 @@ final class Planner(val cube: BoundCube) {
         when(n === 0.0, lit(Double.NaN)).otherwise(intercept).as(bC))): _*)
       val joined =
         if (keptKeys.isEmpty) acc.crossJoin(broadcast(o))
-        else acc.join(broadcast(o), keptKeys, "left")
+        else joinLeft(acc, o, keptKeys, ctx)
       val px = sexpr(lrc.pointX.getOrElse(throw new IllegalArgumentException(
         "LinRegPoint requires the x-slice argument"))).cast("double")
       return joined
@@ -3196,13 +3072,14 @@ final class Planner(val cube: BoundCube) {
     })
     val outer = moments.select((keptKeys.map(col) :+ stat.as(name)): _*)
     if (keptKeys.isEmpty) acc.crossJoin(broadcast(outer))
-    else acc.join(broadcast(outer), keptKeys, "left")
+    else joinLeft(acc, outer, keptKeys, ctx)
       .withColumn(name, coalesce(col(name), lit(Double.NaN)))
   }
 
   private def windowColumn(base: String, kind: WinKind, ad: AxisDim,
-      axisDims: Seq[AxisDim], resetLevel: Option[String]): Column = {
-    val others = axisDims.filterNot(_.d.name == ad.d.name)
+      axisDims: Seq[AxisDim], resetLevel: Option[String],
+      entryCols: Seq[String]): Column = {
+    val others = entryCols ++ axisDims.filterNot(_.d.name == ad.d.name)
       .flatMap(o => levelCols(o.d, o.depth))
     val resetDepth = resetLevel.map(ad.d.levelIndex).getOrElse(-1)
     val partCols = others ++
@@ -3385,6 +3262,20 @@ object Planner {
   val DepthCol = "__depth"
 
   final case class AxisDim(d: BoundDim, depth: Int)
+
+  /** The per-entry cell context of a fused dim-calc frame (one row per
+    * axis entry × other-factor tuple): `cols` are the entry key columns
+    * a context-dependent calc also groups, partitions and joins by;
+    * `cells(kept, set)` aggregates the entry-exploded scan at entry ×
+    * kept × set grain (a per-entry `aggregate`); `join(left, right,
+    * keys, broadcast)` left-joins a per-entry frame back (null-safe
+    * where a context override or mixed-depth padding leaves null keys);
+    * `shown` are the measures the query selects.
+    */
+  private[olap] final case class EntryCtx(cols: Seq[String],
+      cells: (Seq[AxisDim], Seq[AxisDim]) => DataFrame,
+      join: (DataFrame, DataFrame, Seq[String], Boolean) => DataFrame,
+      shown: Seq[String])
 
   /** Partial-merge function per aggregator for insert-delta segment
     * merge; None = non-decomposable (must recompute).

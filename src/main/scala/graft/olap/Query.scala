@@ -201,7 +201,6 @@ final class CubeMetadata(cube: BoundCube) {
     */
   def memberProperties(dim: String, path: Seq[Any]): Map[String, Any] = {
     val d = cube.dim(dim)
-    val planner = new Planner(cube)
     val levelCols = d.levels.take(path.length).map(_.col)
     val propCols = d.df.columns.toSeq
       .filterNot(c => d.levels.exists(l => l.col == c || l.ordinal == c))

@@ -50,7 +50,9 @@ object CleanPipeline {
     val kept1 = TextOps.qualityFilter(docs, minTokens, minStopRatio)
     // exact dedup stays the agg-ids + join-back shape on purpose: a
     // one-exchange min_by(struct(*), doc_id) variant wins in isolation
-    // (0.63→0.38s warm at sf0.1 — ScaleProbe "exact dedup min_by") but
+    // (0.63→0.38s warm at sf0.1, timed by the "exact dedup min_by" step
+    // of ScaleProbe's since-removed `clean` branch; recover it with
+    // `git show 940c73f:src/main/scala/graft/ScaleProbe.scala`) but
     // LOSES composed (clean 4.6→5.1s): the join-back leaves kept2
     // hash-partitioned on doc_id, which the final near-dup anti-join
     // and the callers' doc_id joins reuse, so the "saved" exchange

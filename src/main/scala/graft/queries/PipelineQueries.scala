@@ -438,7 +438,6 @@ object PipelineQueries {
     // time, recursive shard lookup), and run the same decoder — so
     // the oracle is the same closed-form raster
     "q_multimodal_ingest" -> ((s, dir) => {
-      import s.implicits._
       val filesDir = mediaFilesDir.computeIfAbsent(dir, d => {
         val path = java.nio.file.Files
           .createTempDirectory("graft-media-files").toString

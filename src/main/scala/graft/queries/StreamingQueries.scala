@@ -3,7 +3,6 @@ package graft.queries
 import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.streaming.StreamingCube
 

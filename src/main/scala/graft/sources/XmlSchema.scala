@@ -186,7 +186,7 @@ object XmlSchema {
           nameOverride = attrOpt(u, "name"))
     }
     val measures = (cube \ "Measure").map(bindMeasure)
-    val calcs = (cube \ "CalculatedMember").map(bindCalc(_, measures))
+    val calcs = (cube \ "CalculatedMember").map(bindCalc)
     val bound = BoundCube(cubeName, fact, dims, measures,
       calcMembers = calcs,
       defaultMeasure = attrOpt(cube, "defaultMeasure"))
@@ -225,7 +225,6 @@ object XmlSchema {
     val levelNodes = h \ "Level"
     require(levelNodes.nonEmpty, s"dimension '$dimName' has no levels")
     val levels = levelNodes.map { l =>
-      val props = (l \ "Property").map(p => attr(p, "column"))
       val dependent = (l \ "Property")
         .filter(p => (p \@ "dependsOnLevelValue") == "true")
         .map(p => attr(p, "column")).toSet
@@ -289,7 +288,7 @@ object XmlSchema {
     * declares (Profit = sales - cost). Formulas that navigate
     * dimensions belong in per-query WITH MEMBER MDX.
     */
-  private def bindCalc(c: Node, measures: Seq[Measure]): CalcMember = {
+  private def bindCalc(c: Node): CalcMember = {
     val formula = (c \ "Formula").headOption.map(_.text.trim)
       .orElse(attrOpt(c, "formula"))
       .getOrElse(throw new IllegalArgumentException(

@@ -3,7 +3,6 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
-import org.apache.spark.sql.types._
 
 /** Structured-Streaming cube maintenance — the extension flagged in
   * SURVEY §2.10: fact deltas arrive as a stream, pre-aggregation is a

@@ -717,8 +717,9 @@ class MdxSpec extends SparkSpec {
     assert(rows("AMERICA") === plain)
   }
 
-  test("fused and per-member dim-calc paths agree under a same-dim " +
-      "WHERE: the query slicer ORs into each entry (compound union)") {
+  test("a stored measure and an expression calc over it agree on a " +
+      "dim-calc axis under a same-dim WHERE: the query slicer ORs into " +
+      "each entry (compound union)") {
     val axis =
       """{[customer].[EU and AS]} ON ROWS
         |FROM [Sales]
@@ -727,13 +728,14 @@ class MdxSpec extends SparkSpec {
       """MEMBER [customer].[EU and AS] AS
         |  'Aggregate({[customer].[EUROPE].[NATION_13],
         |              [customer].[ASIA].[NATION_2]})'""".stripMargin
-    // stored measure -> the FUSED single-pass path
+    // stored measure
     val fused = Mdx.execute(
       s"""WITH $calcDef
         |SELECT {[Measures].[revenue]} ON COLUMNS,
         |$axis""".stripMargin, cube).collect().head
       .getAs[java.math.BigDecimal]("revenue").doubleValue()
-    // a Measures-hosted calc forces the per-member sub-query FALLBACK
+    // a Measures-hosted expression calc over it, computed on the same
+    // fused frame
     val viaFallback = Mdx.execute(
       s"""WITH $calcDef
         |MEMBER [Measures].[rev2] AS [Measures].[revenue] * 2
@@ -805,10 +807,10 @@ class MdxSpec extends SparkSpec {
     assert(cnt.get(cnt.fieldIndex("count_order")) === 0L)
   }
 
-  test("the per-member fallback matches the fused path on duplicate " +
-      "literals and NON EMPTY calc rows") {
-    // a Measures-hosted calc forces the fallback; behaviors must not
-    // change with the requested measure set
+  test("an expression calc measure matches the stored measure on " +
+      "duplicate dim-calc literals and NON EMPTY calc rows") {
+    // behaviors must not change with the requested measure set (a
+    // Measures-hosted expression calc vs the stored measure)
     val dup = Mdx.execute(
       """WITH MEMBER [customer].[X] AS 'Aggregate({[customer].[ASIA]})'
         |MEMBER [Measures].[rev2] AS [Measures].[revenue] * 2
@@ -820,9 +822,8 @@ class MdxSpec extends SparkSpec {
     assert(dup(0).getString(0) === "AMERICA" &&
       dup(1).getString(0) === "AMERICA" &&
       dup(0).get(1) === dup(1).get(1))
-    // NON EMPTY drops a calc row whose set matches nothing, on BOTH
-    // paths (the rows=None sub-query always yields its one row, but
-    // axis semantics prune it)
+    // NON EMPTY drops a calc row whose set matches nothing, for BOTH
+    // measure sets (axis semantics prune it)
     def nonEmptyRows(measures: String, withExtra: String): Seq[String] =
       Mdx.execute(
         s"""WITH MEMBER [customer].[none] AS
@@ -929,7 +930,7 @@ class MdxSpec extends SparkSpec {
     // left-major.
     assert(got === Seq((1996, "AMERICA"), (1996, "EU13 and AS2"),
       (1995, "AMERICA"), (1995, "EU13 and AS2")))
-    // the per-entry fallback (Measures-hosted calc) agrees
+    // a Measures-hosted expression calc agrees
     val (fbCols, fbGot) = run("rev2",
       "MEMBER [Measures].[rev2] AS [Measures].[revenue] * 2")
     assert(fbCols === Seq("d_year", "cr_region", "rev2"))
@@ -1007,16 +1008,15 @@ class MdxSpec extends SparkSpec {
         (acc, vals) => acc.flatMap(p => vals.map(p :+ _)))
       val got = rows("revenue", "")
       assert(got === want, s"trial $trial axis=$axis")
-      // the per-entry fallback (Measures-hosted calc) renders the
-      // same order
+      // a Measures-hosted expression calc renders the same order
       val fb = rows("rev2",
         "MEMBER [Measures].[rev2] AS [Measures].[revenue] * 2")
       assert(fb === want, s"trial $trial (fallback) axis=$axis")
     }
   }
 
-  test("the crossjoined dim-calc fallback (Measures-hosted calc) " +
-      "matches the fused path cell for cell") {
+  test("a Measures-hosted expression calc on a crossjoined dim-calc " +
+      "axis matches the stored measure cell for cell") {
     def run(measure: String, extra: String) = Mdx.execute(
       s"""WITH $Eu13As2Def
         |$extra
@@ -1032,10 +1032,10 @@ class MdxSpec extends SparkSpec {
     assert(viaFallback.keySet === fused.keySet)
     fused.foreach { case (k, v) =>
       assert(math.abs(viaFallback(k) - 2 * v) < 1e-6, s"tuple $k") }
-    // an Order()'d other factor keeps ITS order through the fallback
-    // too — the fallback joins the member frame's __ord back instead
-    // of re-sorting by name keys (r13 ADVICE): row order must equal
-    // the fused twin's
+    // an Order()'d other factor keeps ITS order with the calc measure
+    // too — the frame carries the member frame's __ord instead of
+    // re-sorting by name keys (r13 ADVICE): row order must equal the
+    // stored-measure twin's
     def order(measure: String, extra: String): Seq[(String, Int)] =
       Mdx.execute(
         s"""WITH $Eu13As2Def
@@ -1380,7 +1380,7 @@ class MdxSpec extends SparkSpec {
         |        [customer].[ASIA].[NATION_2]}, [time].[1995])""".stripMargin,
       cube).collect().head.get(0)
     assert(fused("EU13 and AS2").get === union)
-    // the Measures-hosted calc forces the fallback; same semantics
+    // the Measures-hosted expression calc: same semantics
     val fb = cells("rev2",
       "MEMBER [Measures].[rev2] AS [Measures].[revenue] * 2")
     assert(fb("AMERICA").isEmpty)
@@ -1414,8 +1414,8 @@ class MdxSpec extends SparkSpec {
     assert(cell(("EU13 and AS2", "R")) === solo)
   }
 
-  test("a mixed-depth other factor routes the dim-calc crossjoin " +
-      "through the fallback and keeps per-depth tuples") {
+  test("a mixed-depth other factor keeps per-depth tuples on the " +
+      "fused dim-calc crossjoin") {
     val rows = Mdx.execute(
       s"""WITH $Eu13As2Def
         |SELECT {[Measures].[revenue]} ON COLUMNS,
@@ -1434,6 +1434,70 @@ class MdxSpec extends SparkSpec {
       r.getAs[java.math.BigDecimal]("revenue").doubleValue()).toMap
     assert(byQ(None) === solo("[time].[1995]"))
     assert(byQ(Some("1995-Q1")) === solo("[time].[1995].[1995-Q1]"))
+  }
+
+  // Expected rows of the next two specs are the output of the previous
+  // per-entry lowering (one sub-query per literal run) on this sf0.001
+  // corpus: each axis row as "entry|year|revenue|calc"
+  private def axisRows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.collect().toSeq.map(_.toSeq.map(String.valueOf).mkString("|"))
+
+  test("a WINDOW calc measure over CROSSJOIN({calc}, years) runs per " +
+      "axis entry: the lag partitions by entry") {
+    val withs = Mdx.parse(
+      s"""WITH $Eu13As2Def
+        |SELECT {[Measures].[revenue]} ON COLUMNS
+        |FROM [Sales]""".stripMargin, cube).withMembers
+    val df = withs.foldLeft(Query.from(cube).columns("revenue", "prev_rev"))(
+        _.withMember(_))
+      .withMember(CalcMember("prev_rev",
+        WindowCalc("revenue", WinKind.LagK(1), "time")))
+      .rows(CrossJoin(
+        Members("customer", Seq(Seq("AMERICA"), Seq("EU13 and AS2"))),
+        LevelMembers("time", "year")))
+      .execute()
+    assert(axisRows(df) === Seq(
+      "AMERICA|1995|12849601.1392000000|null",
+      "AMERICA|1996|11057183.2537000000|12849601.1392000000",
+      "AMERICA|1997|8698093.7983000000|11057183.2537000000",
+      "AMERICA|1998|11170283.7237000000|8698093.7983000000",
+      "AMERICA|1999|9210961.0896000000|11170283.7237000000",
+      "AMERICA|2000|8206958.5577000000|9210961.0896000000",
+      "AMERICA|2001|6097381.0974000000|8206958.5577000000",
+      "EU13 and AS2|1995|4636311.6044000000|null",
+      "EU13 and AS2|1996|3395367.7016000000|4636311.6044000000",
+      "EU13 and AS2|1997|3745465.6790000000|3395367.7016000000",
+      "EU13 and AS2|1998|8114906.8828000000|3745465.6790000000",
+      "EU13 and AS2|1999|6977779.3839000000|8114906.8828000000",
+      "EU13 and AS2|2000|3886494.1578000000|6977779.3839000000",
+      "EU13 and AS2|2001|3024954.5265000000|3886494.1578000000"))
+  }
+
+  test("a CurrentMember-macro calc measure over CROSSJOIN({calc}, " +
+      "years) reads the other factor's member on every entry") {
+    val df = Mdx.execute(
+      s"""WITH $Eu13As2Def
+        |MEMBER [Measures].[rev95] AS
+        |  'IIf([time].CurrentMember.Name = "1995", [Measures].[revenue], 0)'
+        |SELECT {[Measures].[revenue], [Measures].[rev95]} ON COLUMNS,
+        |  CROSSJOIN({[customer].[AMERICA], [customer].[EU13 and AS2]},
+        |            [time].[year].Members) ON ROWS
+        |FROM [Sales]""".stripMargin, cube)
+    assert(axisRows(df) === Seq(
+      "AMERICA|1995|12849601.1392000000|12849601.1392000000",
+      "AMERICA|1996|11057183.2537000000|0E-10",
+      "AMERICA|1997|8698093.7983000000|0E-10",
+      "AMERICA|1998|11170283.7237000000|0E-10",
+      "AMERICA|1999|9210961.0896000000|0E-10",
+      "AMERICA|2000|8206958.5577000000|0E-10",
+      "AMERICA|2001|6097381.0974000000|0E-10",
+      "EU13 and AS2|1995|4636311.6044000000|4636311.6044000000",
+      "EU13 and AS2|1996|3395367.7016000000|0E-10",
+      "EU13 and AS2|1997|3745465.6790000000|0E-10",
+      "EU13 and AS2|1998|8114906.8828000000|0E-10",
+      "EU13 and AS2|1999|6977779.3839000000|0E-10",
+      "EU13 and AS2|2000|3886494.1578000000|0E-10",
+      "EU13 and AS2|2001|3024954.5265000000|0E-10"))
   }
 
   test("a calc member in a compound WHERE set joins the OR union; " +
@@ -1620,9 +1684,9 @@ class MdxSpec extends SparkSpec {
     // Head above a Filter counts the FILTERED set
     assert(rows(s"HEAD(FILTER($SetLit, [Measures].[revenue] > $t), 1)")
       === kept.take(1))
-    // a condition over a Measures-hosted calc routes through the
-    // per-entry fallback (applyCalcs computes it) — same surviving
-    // rows as the stored-measure condition, extra measure dropped
+    // a condition over a Measures-hosted expression calc (applyCalcs
+    // computes it on the fused frame) — same surviving rows as the
+    // stored-measure condition, extra measure dropped
     val viaCalc = rows(
       s"FILTER($SetLit, [Measures].[rev2] > ${2 * t})",
       "MEMBER [Measures].[rev2] AS '[Measures].[revenue] * 2'")
@@ -1716,8 +1780,8 @@ class MdxSpec extends SparkSpec {
     val kids = if (n13First) Seq("NATION_13", "NATION_18")
       else Seq("NATION_18", "NATION_13")
     assert(asc2 === ("N13 solo" +: "EUROPE" +: kids))
-    // a Measures-hosted calc in the sort expression routes through
-    // the per-entry fallback — same hierarchical order
+    // a Measures-hosted expression calc in the sort expression — same
+    // hierarchical order
     assert(rows(s"ORDER($hier, [Measures].[rev2], ASC)",
       "MEMBER [Measures].[rev2] AS '[Measures].[revenue] * 2'") ===
       Seq("N13 solo", "EUROPE", "NATION_18"))
@@ -2596,10 +2660,10 @@ class MdxSpec extends SparkSpec {
     // (non-breaking Order executes for EVERY literal set since r15 —
     // missing ancestors join as hidden rank-only entries; see the
     // "sorts hierarchically" spec)
-    // Filter/Order ops alongside ANOTHER calc factor are fused-only:
-    // a CONTEXT-DEPENDENT calc measure (SetAgg here — an ExprCalc
-    // rides the fused pass since r15) forces the per-entry fallback,
-    // which cannot evaluate the multi-factor entry cross product
+    // Filter/Order ops alongside ANOTHER calc factor and a
+    // CONTEXT-DEPENDENT calc measure (SetAgg here — an ExprCalc has no
+    // per-entry context) refuse: such a measure is evaluated against
+    // one calc factor's entries
     refusal(
       s"""WITH $Eu13As2Def
         |MEMBER [time].[Y95] AS 'Aggregate({[time].[1995]})'
@@ -2614,9 +2678,8 @@ class MdxSpec extends SparkSpec {
     // the calc member's own hierarchy in another factor
     refusal(q("CROSSJOIN({[customer].[EU13 and AS2]}, " +
       "{[customer].[ASIA]})"))
-    // NECJ with a calc factor is fused-only: the tuple-support count
-    // rides the single scan, which CONTEXT-DEPENDENT calc measures
-    // skip (an ExprCalc like revenue*2 rides the fused pass — r15)
+    // NECJ with a calc factor alongside a CONTEXT-DEPENDENT calc
+    // measure refuses (an ExprCalc like revenue*2 executes — r15)
     refusal(
       s"""WITH $Eu13As2Def
         |MEMBER [Measures].[rev95] AS
@@ -2629,7 +2692,7 @@ class MdxSpec extends SparkSpec {
     refusal(q("UNION({[customer].[EU13 and AS2]}, " +
       "CROSSJOIN([customer].[region].Members, {[time].[1995]}))"))
     // calc members on BOTH factors still refuse when a measure is
-    // CONTEXT-DEPENDENT (fused-only shapes meet the fallback)
+    // CONTEXT-DEPENDENT
     refusal(
       s"""WITH $Eu13As2Def
         |MEMBER [time].[Y95] AS 'Aggregate({[time].[1995]})'

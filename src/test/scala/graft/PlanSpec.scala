@@ -697,4 +697,65 @@ class PlanSpec extends SparkSpec {
       s"expected per-factor semi-joins (>=2 LeftSemi), got $semis:\n" +
         twoOthers)
   }
+
+  test("a context override and a mixed-depth factor plan ONE fused fact " +
+      "aggregate: one fact read and one entry-keyed hash exchange, like " +
+      "a non-overriding, uniform-depth twin") {
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    SegmentCache.global.clear()
+    def planFor(member: String, axis: String): DataFrame = Mdx.execute(
+      s"""WITH MEMBER $member
+        |SELECT {[Measures].[revenue], [Measures].[sum_qty]} ON COLUMNS,
+        |  $axis ON ROWS
+        |FROM [Sales]""".stripMargin, cube)
+    // reads of the fact rows in the plan tree itself: lineitem file
+    // scans, or scans of a cached frame that still carries raw fact
+    // columns (a cached frame's own build plan is not walked)
+    def factReads(df: DataFrame): Int =
+      (df.queryExecution.executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.inputPlan
+        case p => p
+      }).collect {
+        case s: FileSourceScanExec
+            if s.relation.location.rootPaths.exists(
+              _.toString.contains("lineitem")) => s
+        case m: InMemoryTableScanExec
+            if m.relation.output.exists(_.name == "l_quantity") => m
+      }.length
+    // the fused aggregate's shuffle is the one hash exchange keyed by
+    // the entry column (the member frames' own exchanges differ with
+    // the set shape, so whole-plan counts are not comparable)
+    def entryExchanges(df: DataFrame): Int = plan(df).linesIterator
+      .count(l => l.contains("Exchange hashpartitioning(__entry"))
+    // q_mdx_dimcalc_override's statement, and its twin whose calc set
+    // stays on its own hierarchy
+    val overrideAxis = "CROSSJOIN({[time].[1995], [time].[EU all]}, " +
+      "{[customer].[AMERICA], [customer].[ASIA]})"
+    val overriding = planFor(
+      "[time].[EU all] AS 'Aggregate({[customer].[EUROPE]})'",
+      overrideAxis)
+    val plainCalc = planFor(
+      "[time].[EU all] AS 'Aggregate({[time].[1996]})'", overrideAxis)
+    // the mixed-depth spec's statement, and its uniform-depth twin
+    val eu = "[customer].[EU13 and AS2] AS " +
+      "'Aggregate({[customer].[EUROPE].[NATION_13], " +
+      "[customer].[ASIA].[NATION_2]})'"
+    val mixed = planFor(eu, "CROSSJOIN({[customer].[EU13 and AS2]}, " +
+      "{[time].[1995], [time].[1995].[1995-Q1]})")
+    val uniform = planFor(eu, "CROSSJOIN({[customer].[EU13 and AS2]}, " +
+      "{[time].[1995], [time].[1996]})")
+    Seq("override" -> (overriding, plainCalc),
+        "mixed-depth" -> (mixed, uniform)).foreach {
+      case (shape, (df, twin)) =>
+        assert(factReads(df) === 1 && factReads(twin) === 1,
+          s"the $shape axis must read the fact once:\n${plan(df)}")
+        assert(entryExchanges(df) === 1 &&
+          entryExchanges(df) === entryExchanges(twin),
+          s"the $shape axis must aggregate in one entry-keyed exchange " +
+            s"(${entryExchanges(df)} vs ${entryExchanges(twin)}):\n" +
+            plan(df))
+    }
+  }
 }
