@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import graft.olap.{Pins, SegmentCache}
+import graft.olap.Query
 
 /** What every main shares: its session, the one way to execute a query
   * for measurement, and the per-query scope.
@@ -34,13 +34,6 @@ object Harness {
     */
   def force(df: DataFrame): Long = df.queryExecution.toRdd.count()
 
-  /** One query's boundary. `Pins.scoped` releases every load-bearing
-    * persist the query creates when its action returns, so the next
-    * query starts with this one's storage freed (the r6 bench paid 5x
-    * on q_pipeline_curate with ~30 stale frames resident).
-    * `withLease` pins the segments the query touches, plan time through
-    * its action, against a concurrent budget eviction.
-    */
-  def scoped[T](body: => T): T =
-    Pins.scoped { SegmentCache.global.withLease(body) }
+  /** One query's boundary: [[graft.olap.Query.scoped]]. */
+  def scoped[T](body: => T): T = Query.scoped(body)
 }

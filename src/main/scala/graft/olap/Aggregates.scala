@@ -415,8 +415,8 @@ final class SegmentCache {
   // evicts regardless of pins — those are correctness flushes, and
   // deferring them would serve stale cells. Same thread-scoped
   // contract and placement as [[Pins.scoped]]: wrap query build AND
-  // collect in [[withLease]] (Bench/Verify do; long-lived servers
-  // should). Reference analog: the jar's SegmentCacheManager actor
+  // collect in [[withLease]] ([[Query.scoped]] opens both; Bench,
+  // Verify and `Query.executeResult` use it). Reference analog: the jar's SegmentCacheManager actor
   // serializes eviction against in-flight readers
   // (mondrian/rolap/agg/SegmentCacheManager, SURVEY §4#5). A lookup
   // pins its key BEFORE it reads the map: pin and enforceBudget share

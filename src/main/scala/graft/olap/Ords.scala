@@ -3,6 +3,7 @@ package graft.olap
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.graft.Sequence
 
 /** Global row-numbering over a sort order, scale-guarded.
   *
@@ -11,13 +12,13 @@ import org.apache.spark.sql.expressions.Window
   * fatal for a high-cardinality axis (a 100M-member level would
   * single-thread and OOM one task). This helper keeps the cheap
   * single-partition window for small frames (by Catalyst's plan-size
-  * estimate) and switches to a distributed two-phase numbering above
-  * the threshold:
-  *
-  *   1. range-repartition by the sort key (parallel range sort),
-  *   2. per-partition `row_number` (window partitioned by partition id),
-  *   3. add per-partition offsets — a partition-count-sized prefix-sum
-  *      frame, broadcast back. No driver-side action anywhere.
+  * estimate) and numbers larger frames with Spark's distributed-sequence
+  * operator over a range-partitioned sort ([[Sequence.attach]]):
+  * `zipWithIndex` over the sorted frame's one RDD, so its per-partition
+  * counts and its numbering read the same partitions. A row's number is
+  * its rank in the sort order however often the frame is recomputed
+  * (tied rows may trade numbers between recomputes), so no persist is
+  * needed for a correct result.
   *
   * The result is the same 1..n numbering a global window produces, at
   * any cardinality.
@@ -25,7 +26,7 @@ import org.apache.spark.sql.expressions.Window
 object Ords {
 
   /** Plan-size threshold: below this the single-partition window wins
-    * (two extra shuffles + a range-sampling pass aren't worth it).
+    * (a range-sampling pass, a shuffle and a count pass aren't worth it).
     * Overridable for tests via spark conf `spark.graft.ord.smallBytes`.
     */
   val DefaultSmallBytes: Long = 64L << 20
@@ -82,68 +83,29 @@ object Ords {
     else distributed(df, sort, out)
   }
 
-  /** Numbering-frame lifecycle: delegated to [[Pins]] (query-scoped
-    * release, or a materialize-then-FIFO global fallback). NOT free-run
-    * FIFO eviction: unpinning a frame whose lazy consumers have not
-    * executed would let the two subtrees of the offsets join resample
-    * range bounds independently — the exact wrong-ordinal bug the
-    * persist prevents (ADVICE r6). See [[Pins]] for the contract.
-    */
-  private def pin(df: DataFrame): DataFrame = Pins.pin(df)
-
-  /** Release every globally pinned frame (cache flush / teardown). */
-  def releaseAll(): Unit = Pins.releaseAll()
-
   private def distributed(df: DataFrame, sort: Seq[Column],
-      out: String): DataFrame = {
-    // monotonically_increasing_id() = (partitionId << 33) + rowIndex,
-    // and after sortWithinPartitions the row index follows the sort
-    // order — so the within-partition rank costs NO window and NO
-    // second shuffle of the data.
-    //
-    // PERSISTED, not shared-by-ReuseExchange: the rows branch and the
-    // per-partition-count branch below both consume this frame, and as
-    // two independent materializations each would run its own
-    // RangePartitioner sampling with a different per-RDD seed —
-    // slightly different range bounds, so the counts would describe a
-    // DIFFERENT partitioning than the rows they offset (observed: 1..n
-    // drifts from the third partition on at 10M rows). The persist
-    // pins one lineage — both branches read the one cached
-    // materialization — which is exactly why release must wait for the
-    // consumers to execute (Pins' contract). Global numbering
-    // inherently takes two passes over the frame; materializing it
-    // once is that cost, spill-backed at scale.
-    val parted = pin(df.repartitionByRange(sort: _*)
-      .sortWithinPartitions(sort: _*)
-      .withColumn("__pid", spark_partition_id())
-      .withColumn("__mid", monotonically_increasing_id())
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    val within = parted.withColumn("__rn",
-      col("__mid") - shiftleft(col("__pid").cast("long"), 33))
-    // per-partition counts → prefix-sum offsets: a frame with one row
-    // per partition, the only single-partition hop in the plan
-    val offsets = parted.groupBy(col("__pid"))
-      .agg(count(lit(1)).as("__cnt"))
-      .withColumn("__off", coalesce(
-        sum(col("__cnt")).over(Window.orderBy(col("__pid"))
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select(col("__pid"), col("__off"))
-    within.join(broadcast(offsets), "__pid")
-      .withColumn(out, (col("__rn") + col("__off") + 1L).cast("int"))
-      .drop("__pid", "__mid", "__rn", "__off")
-  }
+      out: String): DataFrame =
+    Sequence.attach(df.orderBy(sort: _*), "__seq")
+      .withColumn(out, (col("__seq") + 1L).cast("int"))
+      .drop("__seq")
+
+  /** Rows per bucket of the distributed running sum (2^20): the bound on
+    * one window task's input.
+    */
+  private val BucketBits = 20
 
   /** `df` + `out` = inclusive running sum of `value` in `sort` order,
     * scale-guarded like [[rowNumber]]: small frames keep the cheap
-    * single-partition window; large frames run a two-phase
-    * range-partitioned prefix sum — per-partition running sums plus a
-    * broadcast partition-offset join, so no data-sized frame ever
+    * single-partition window; large frames number the sorted rows with
+    * the distributed sequence, cut it into buckets of 2^[[BucketBits]]
+    * consecutive rows, and add a per-bucket running window to a
+    * broadcast prefix of bucket totals, so no data-sized frame ever
     * exchanges to one partition. `value` is accumulated as long.
     *
     * The sort keys must form a TOTAL order (unique): with ties, the
     * per-row cumulative value depends on tie order, which differs
-    * between the two paths and across materializations of the
-    * range-partitioned one.
+    * between the two paths and between the two consumers of the
+    * sequence (each may recompute it).
     */
   def runningSum(df: DataFrame, sort: Seq[Column], value: Column,
       out: String, hint: SizeHint = Auto): DataFrame = {
@@ -162,32 +124,26 @@ object Ords {
 
   private def distributedSum(df: DataFrame, sort: Seq[Column],
       value: Column, out: String): DataFrame = {
-    // Same persisted-range-partition skeleton as [[distributed]] (one
-    // RangePartitioner sampling shared by both consumers). Unlike
-    // row-numbering there is no window-free trick for a running sum, so
-    // the within-partition prefix costs one extra hash exchange on
-    // __pid — paid by the NARROW (sort key, value) frame a caller
-    // passes here, never the full rows, and every hop stays parallel.
-    val parted = pin(df.repartitionByRange(sort: _*)
-      .sortWithinPartitions(sort: _*)
-      .withColumn("__pid", spark_partition_id())
-      .withColumn("__v", value.cast("long"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    val within = parted.withColumn("__ps",
-      sum(col("__v")).over(Window.partitionBy(col("__pid"))
-        .orderBy(sort: _*)
+    // both consumers below see the same __seq even when each recomputes
+    // it: a row's position is its rank in the (total) sort order
+    val seq = Sequence.attach(
+        df.withColumn("__v", value.cast("long")).orderBy(sort: _*), "__seq")
+      .withColumn("__b", shiftright(col("__seq"), BucketBits))
+    val within = seq.withColumn("__ps",
+      sum(col("__v")).over(Window.partitionBy(col("__b"))
+        .orderBy(col("__seq"))
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-    // one row per partition → exclusive prefix of partition totals;
-    // the only single-partition hop in the plan
-    val offsets = parted.groupBy(col("__pid"))
-      .agg(sum(col("__v")).as("__cnt"))
+    // one row per bucket → exclusive prefix of bucket totals; the only
+    // single-partition hop in the plan
+    val offsets = seq.groupBy(col("__b"))
+      .agg(sum(col("__v")).as("__tot"))
       .withColumn("__off", coalesce(
-        sum(col("__cnt")).over(Window.orderBy(col("__pid"))
+        sum(col("__tot")).over(Window.orderBy(col("__b"))
           .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select(col("__pid"), col("__off"))
-    within.join(broadcast(offsets), "__pid")
+      .select(col("__b"), col("__off"))
+    within.join(broadcast(offsets), "__b")
       .withColumn(out, col("__ps") + col("__off"))
-      .drop("__pid", "__v", "__ps", "__off")
+      .drop("__b", "__seq", "__v", "__ps", "__off")
   }
 
   /** Scalar total row count joined in as a broadcast column — replaces

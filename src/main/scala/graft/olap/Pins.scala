@@ -3,22 +3,17 @@ package graft.olap
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.LogicalRDD
 
-/** Lifecycle manager for load-bearing persisted intermediates (the
-  * range-partitioned numbering frames in [[Ords]], the shingle /
-  * candidate / band frames in `graft.ops.DedupOps`) AND for eager
-  * lineage-cut checkpoints (the iterative CC / closure / k-means round
-  * frames).
+/** Lifecycle manager for persisted intermediates that feed several
+  * consumers inside one query (the shingle / candidate / band frames in
+  * `graft.ops.DedupOps`, the regression folds in the Planner) AND for
+  * eager lineage-cut checkpoints (the iterative CC / closure / k-means
+  * round frames).
   *
-  * These persists are correctness-critical, not just caches: each frame
-  * feeds 2+ consumers inside one query plan, and if the frame is NOT in
-  * the cache when a consumer executes, the consumers replan with fresh
-  * exchanges whose RangePartitioner sampling derives from new RDD ids —
-  * the two subtrees of an offsets join can then see DIFFERENT partition
-  * bounds and produce wrong ordinals (the nondeterministic-
-  * exchange-reuse bug the persists exist to prevent). So the safe
-  * release point is "after the consuming query has executed", never
-  * "when a FIFO cap overflows" (ADVICE r6: a cap-eviction racing an
-  * unexecuted lazy consumer silently corrupts results).
+  * A pinned persist only saves recomputation: every pinned frame is
+  * deterministic, so a consumer that finds it evicted recomputes the
+  * same rows. Un-released, though, each one stays resident for the
+  * session's lifetime (the r6 official bench carried dozens of stale
+  * frames into `q_pipeline_curate`, 5×-ing it).
   *
   * Checkpoints need the same management for a different reason:
   * `localCheckpoint` persists its RDD OUTSIDE the SQL CacheManager, so
@@ -30,29 +25,20 @@ import org.apache.spark.sql.execution.LogicalRDD
   *
   * Two registration modes:
   *
-  *  - '''Scoped''' (the query-boundary mode `Bench`/`Verify` and the
-  *    engine's execute path use): `Pins.scoped { build-and-collect }`
+  *  - '''Scoped''' (the query boundary `Bench`, `Verify` and
+  *    `Query.executeResult` open): `Pins.scoped { build-and-collect }`
   *    registers every pin/cut created on this thread inside the block
-  *    and releases them all when the block exits — by which point the
-  *    query's actions have run, so release is unconditionally safe, and
-  *    storage occupancy across a query sequence is bounded by ONE
-  *    query's working set instead of growing with session age (the
-  *    r6 official bench carried dozens of stale frames from earlier
-  *    queries into `q_pipeline_curate`, 5×-ing it).
+  *    and releases them all when the block exits, by which point the
+  *    query's actions have run. Storage occupancy across a query
+  *    sequence is then bounded by ONE query's working set instead of
+  *    growing with session age.
   *
   *  - '''Global fallback''' (no scope on the thread — ad-hoc library
-  *    use): a FIFO registry bounded at [[MaxGlobal]]. To keep cap
-  *    eviction out of the unsafe window, `pin` EAGERLY materializes the
-  *    frame (one count over the to-be-cached data, work the first
-  *    consumer would do anyway), so by the time a frame can be evicted
-  *    its cache entry is fully built and, in sequential use, its
-  *    consumers have long since run. The residual constraint — do not
-  *    re-collect a consumer of a frame after [[MaxGlobal]] further pins
-  *    or [[releaseAll]] — is inherent to cap-based release (for an
-  *    evicted persist it costs a deterministic recompute; for an
-  *    evicted local checkpoint it fails LOUDLY with a missing-block
-  *    error, never silently); long-lived servers should wrap query
-  *    execution in [[scoped]] instead.
+  *    use): a FIFO registry bounded at [[MaxGlobal]], so unscoped
+  *    storage stays bounded too. Re-collecting a consumer of an evicted
+  *    persist costs a recompute; of an evicted local checkpoint it
+  *    fails LOUDLY with a missing-block error, never silently.
+  *    Long-lived servers should wrap query execution in [[scoped]].
   */
 object Pins {
 
@@ -68,30 +54,22 @@ object Pins {
         new java.util.ArrayDeque[java.util.ArrayList[() => Unit]]
     }
 
-  private def register(df: DataFrame, release: () => Unit,
-      materialize: () => Unit): DataFrame = {
+  private def register(df: DataFrame, release: () => Unit): DataFrame = {
     val stack = scopes.get()
-    if (!stack.isEmpty) { stack.peekLast().add(release); df }
-    else {
-      // materialize BEFORE the frame becomes eviction-eligible: the
-      // cache entry is complete, so a later cap eviction can only cost
-      // a recompute of an already-consumed frame, never hand two lazy
-      // consumers differently-sampled range bounds
-      materialize()
-      global.synchronized {
-        global.addLast(release)
-        while (global.size > MaxGlobal) global.pollFirst().apply()
-      }
-      df
+    if (!stack.isEmpty) stack.peekLast().add(release)
+    else global.synchronized {
+      global.addLast(release)
+      while (global.size > MaxGlobal) global.pollFirst().apply()
     }
+    df
   }
 
   /** Register a `.persist()`ed frame for release at the current scope's
     * exit (innermost scope wins), or in the bounded global registry
-    * when no scope is open on this thread. Returns `df`.
+    * when no scope is open on this thread. Returns `df`; runs no action.
     */
   def pin(df: DataFrame): DataFrame =
-    register(df, () => df.unpersist(blocking = false), () => df.count())
+    register(df, () => df.unpersist(blocking = false))
 
   /** Eager lineage cut, UNREGISTERED: a reliable checkpoint
     * (HDFS/object store — survives executor loss, the right mode on a
@@ -117,11 +95,9 @@ object Pins {
   def cut(df: DataFrame): DataFrame = adopt(rawCut(df))
 
   /** Register an already-materialized checkpoint frame (a [[rawCut]]
-    * survivor) for scope-exit / global-FIFO release. No re-count: the
-    * eager checkpoint already materialized it.
+    * survivor) for scope-exit / global-FIFO release.
     */
-  def adopt(df: DataFrame): DataFrame =
-    register(df, () => freeCut(df), () => ())
+  def adopt(df: DataFrame): DataFrame = register(df, () => freeCut(df))
 
   /** Free the executor blocks behind a checkpointed frame NOW — the
     * plan's [[LogicalRDD]] leaves are unpersisted directly, which is

@@ -124,13 +124,14 @@ final class Query private (
   /** Execute and materialize into the cell-set Result (axis positions,
     * value transposition, formatted values — reference result.rb).
     */
-  def executeResult(): Result = SegmentCache.global.withLease {
-    // read lease (r19): this is the fully-scoped serving call — it
-    // both plans (segment hits/misses pin here) and collects
+  def executeResult(): Result = Query.scoped {
+    // this is the fully-scoped serving call — it both plans (segment
+    // hits/misses lease here, persists pin here) and collects
     // (Result.fromDataFrame), so a concurrent budget eviction cannot
-    // free a checkpointed segment under this query's jobs. execute()
-    // returns a lazy DataFrame, so callers of THAT scope their own
-    // lease around build + actions (as Bench/Verify do).
+    // free a checkpointed segment under this query's jobs, and its
+    // pins are released when it returns. execute() returns a lazy
+    // DataFrame, so callers of THAT open their own [[Query.scoped]]
+    // around build + actions (as Bench/Verify do).
     // every outer axis (sections slowest, then chapters, then pages)
     // contributes page-key columns, in grid-major order
     val pageCols = Seq(sectionsSet, chaptersSet, pagesSet).flatten
@@ -153,6 +154,16 @@ final class Query private (
 }
 
 object Query {
+  /** One query's boundary: build the query AND run its actions inside.
+    * `Pins.scoped` releases every persist the query pins when the block
+    * exits, so the next query starts with this one's storage freed (the
+    * r6 bench paid 5x on q_pipeline_curate with ~30 stale frames
+    * resident). `withLease` holds the segments the query touches, plan
+    * time through its actions, against a concurrent budget eviction.
+    */
+  def scoped[T](body: => T): T =
+    Pins.scoped { SegmentCache.global.withLease(body) }
+
   /** olap.from('Sales') (connection.rb:108-110). */
   def from(cube: BoundCube): Query =
     new Query(cube, Nil, None, Nil, false, Map.empty, Nil)

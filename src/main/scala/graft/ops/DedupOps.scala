@@ -60,20 +60,17 @@ object DedupOps {
   val P = 2147483647L
 
   /** Lifecycle for the intermediate frames the dedup/ANN paths persist
-    * (shingles, candidate sets, unit vectors, band frames): the
-    * persists are load-bearing — each frame feeds 2+ consumers and
-    * recomputing the postings pipeline per consumer is the alternative
-    * — but un-released they accumulate one MEMORY_AND_DISK entry per
-    * call for the session lifetime (the r6 official bench reached
-    * `q_pipeline_curate` with dozens of stale frames resident and paid
-    * 5× for it). Delegated to [[graft.olap.Pins]]: query-boundary
-    * scoped release where the caller opens a scope (`Bench`/`Verify`
-    * do), materialize-then-bounded-FIFO otherwise.
+    * (shingles, candidate sets, unit vectors, band frames): each frame
+    * feeds 2+ consumers, and the persist saves recomputing the postings
+    * pipeline per consumer — but un-released they accumulate one
+    * MEMORY_AND_DISK entry per call for the session lifetime (the r6
+    * official bench reached `q_pipeline_curate` with dozens of stale
+    * frames resident and paid 5× for it). Delegated to
+    * [[graft.olap.Pins]]: query-boundary scoped release where the
+    * caller opens a scope (`Bench`/`Verify` do), a bounded FIFO
+    * otherwise.
     */
   private[ops] def pin(df: DataFrame): DataFrame = graft.olap.Pins.pin(df)
-
-  /** Release every globally pinned frame (teardown / tests). */
-  def releaseAll(): Unit = graft.olap.Pins.releaseAll()
 
   /** Exact dedup survivors: min doc_id per content hash. The classic
     * hash-groupBy — one shuffle on the 128-bit digest, no skew (hashes
@@ -739,9 +736,9 @@ object DedupOps {
       rows: Int = 2, threshold: Double = 0.5): ClusterIndex =
       graft.olap.Pins.scoped {
     // Pins.scoped (opt r20): every consumer of the pinned frames (the
-    // five table writes) executes inside; callers on threads without a
-    // query scope (direct library use, streaming setup) otherwise paid
-    // one eager count() per pin in the global registry.
+    // five table writes) executes inside, so the frames are released
+    // when the build ends, not left to the global FIFO on threads
+    // without a query scope (direct library use, streaming setup).
     val spark = docs.sparkSession
     Artifacts.claimIndexDir(spark, path, ClusterMarker,
       clusterMarkerJson(bands, rows, threshold))
@@ -898,12 +895,10 @@ object DedupOps {
       ingestId: Long): Unit = graft.olap.Pins.scoped {
     // Pins.scoped (opt r20): this runs on the streaming micro-batch
     // thread, where no query-boundary scope is open — unscoped, every
-    // pin() below fell to the global registry, whose EAGER materialize
-    // added one count() job per pinned frame per batch (two extra jobs
-    // per micro-batch) and held the cache entries long past the batch.
-    // Every consumer of the pinned frames executes inside this body
-    // (the concurrent table writes are awaited), so scope-exit release
-    // is safe.
+    // pin() below would fall to the global registry and hold its cache
+    // entry long past the batch. Every consumer of the pinned frames
+    // executes inside this body (the concurrent table writes are
+    // awaited), so the frames are released at the end of the batch.
     require(ingestId > 0, "ingest id 0 is the base build")
     val spark = newDocs.sparkSession
     // validate the target BEFORE any write: the path must be a real
@@ -1089,9 +1084,9 @@ object DedupOps {
     val target = committed.foldLeft(0L)(math.max)
     if (target <= lastGen) return lastGen
     // Pins.scoped (opt r20, same rationale as appendEdgesToClusterIndex):
-    // on the micro-batch thread the CC pins would otherwise eagerly
-    // count() in the global registry; the labels write below consumes
-    // everything before the scope exits.
+    // the labels write below consumes every CC pin before the scope
+    // exits, so they are released at the end of the batch instead of
+    // lingering in the global registry of the micro-batch thread.
     graft.olap.Pins.scoped {
     val old = spark.read.parquet(s"${index.path}/labels")
       .filter(col("gen").cast("long") === lastGen)
