@@ -3,11 +3,14 @@ package graft.olap
 import java.util.concurrent.atomic.LongAdder
 
 import scala.collection.concurrent.TrieMap
+import scala.util.control.NonFatal
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.trees.TreePattern
 import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.functions._
+import org.apache.spark.util.SizeEstimator
 
 /** Aggregate-table routing + segment cache — the two genuinely custom
   * optimizer mechanisms of the reference engine (SURVEY §4 #5/#6):
@@ -546,7 +549,8 @@ final class SegmentCache {
   /** One block-manager storage snapshot for a whole budget pass —
     * `getRDDStorageInfo` walks every RDD in the cluster, so fetching
     * it per segment made one enforcement O(segments × rddInfos)
-    * driver work per miss (r18 ADVICE).
+    * driver work per miss (r18 ADVICE). Only checkpointed segments
+    * read it, so callers take it lazily.
     */
   private def storageSnapshot(): Array[org.apache.spark.storage.RDDInfo] =
     segments.values.headOption
@@ -565,32 +569,32 @@ final class SegmentCache {
     * against the budget nor is worth evicting).
     */
   private def bytesOf(df: DataFrame, isCkpt: Boolean,
-      infos: Array[org.apache.spark.storage.RDDInfo]): Long =
+      infos: => Array[org.apache.spark.storage.RDDInfo]): Long =
     if (isCkpt) df.queryExecution.analyzed match {
-      case l: org.apache.spark.sql.execution.LogicalRDD =>
+      case l: LogicalRDD =>
         infos.find(_.id == l.rdd.id)
           .map(i => i.memSize + i.diskSize).getOrElse(0L)
       case _ => 0L
     }
     else df.queryExecution.withCachedData match {
-      case r: org.apache.spark.sql.execution.columnar.InMemoryRelation =>
+      case r: InMemoryRelation =>
         r.cacheBuilder.sizeInBytesStats.value.longValue
       case other => other.collect {
         // un-rooted fallback (cache manager substituted deeper): sum
         // every cached subtree — the pre-r19 behavior
-        case r: org.apache.spark.sql.execution.columnar.InMemoryRelation =>
+        case r: InMemoryRelation =>
           r.cacheBuilder.sizeInBytesStats.value.longValue
       }.sum
     }
 
   /** Total materialized bytes across all resident segments and stored
-    * cell sets (one storage snapshot for the whole sum).
+    * cell sets.
     */
   def residentBytes: Long = {
-    val infos = storageSnapshot()
+    lazy val infos = storageSnapshot()
     segments.map { case (k, df) =>
       bytesOf(df, ckptKeys.contains(k), infos) }.sum +
-      storedCellSets.map { case (_, cs) => bytesOf(cs.frame.get, false, infos) }.sum
+      storedCellSets.map { case (_, cs) => cs.bytes }.sum
   }
 
   /** Evict until resident bytes fit the budget: stored cell sets
@@ -609,9 +613,8 @@ final class SegmentCache {
   private def enforceBudget(): Unit = {
     if (budgetBytes == Long.MaxValue) return
     synchronized {
-      val infos = storageSnapshot()
-      val cells = storedCellSets.map { case (k, cs) =>
-        (k, cs, bytesOf(cs.frame.get, false, infos)) }
+      lazy val infos = storageSnapshot()
+      val cells = storedCellSets.map { case (k, cs) => (k, cs, cs.bytes) }
       val entries = segments.toSeq.map { case (k, df) =>
         (k, bytesOf(df, ckptKeys.contains(k), infos)) }
       var total = cells.map(_._3).sum + entries.map(_._2).sum
@@ -638,32 +641,40 @@ final class SegmentCache {
   // ---- cell sets --------------------------------------------------
   // Mondrian answers a statement whose cells are all in its segment
   // cache in-process, with no SQL (SURVEY §4 #5). The analog here is
-  // the statement's persisted render, keyed by (cube, QueryIR). A
-  // build records, thread-locally, every segment frame the cache
-  // hands it (slicer resolution and nested planners included); the
-  // render stays valid exactly while each of those frames is still the
-  // resident one for its key, by reference. So every path that drops
-  // or replaces a segment — flushCube, flushRegion, mergeOrEvict,
-  // budget eviction, clear — invalidates it with no hook of its own;
-  // dropCellSetsOn only releases the storage early.
+  // the statement's rendered rows, held on the driver and keyed by
+  // (cube, QueryIR). A build records, thread-locally, every segment
+  // frame the cache hands it (slicer resolution and nested planners
+  // included); the rows stay valid exactly while each of those frames
+  // is still the resident one for its key, by reference. So every
+  // path that drops or replaces a segment — flushCube, flushRegion,
+  // mergeOrEvict, budget eviction, clear — invalidates them with no
+  // hook of its own; dropCellSetsOn only releases the storage early.
   //
   // Lifecycle: the first sight returns the lazy render untouched and
   // records its frames; a second sight with the same frames returns
-  // its render `persist()`ed, so the caller's own action (under the
-  // caller's lease or timeout) materializes it; later sights return
-  // that frame — one job over a few cached blocks instead of the
-  // render's jobs, Catalyst passes and codegen.
+  // its render `persist()`ed (the stage), so the caller's own action
+  // (under the caller's lease or timeout) materializes it. The first
+  // serve collects the stage once — one job over its cached blocks —
+  // releases the persist and keeps the rows on the driver; every serve
+  // returns them as a local relation, which Spark answers with no job,
+  // Catalyst pass or codegen of the render's.
 
   /** One statement's record: the segment frames its last build read
-    * and, once stored, its render — served only once `persisted`.
-    * `refused` remembers a failed [[answerable]] check for these
-    * frames. Reference equality (a plain class) makes the TrieMap
-    * replace/remove calls CAS on the exact record.
+    * and, once stored, its frame — the stage, served only once
+    * `persisted`, then from its first serve the rows, `rowBytes` of
+    * them. `refused` remembers a failed [[answerable]] check, or rows
+    * too large to hold, for these frames. Reference equality (a plain
+    * class) makes the TrieMap replace/remove calls CAS on the exact
+    * record.
     */
   private final class CellSet(val deps: Map[SegKey, DataFrame],
-      val frame: Option[DataFrame], val refused: Boolean) {
+      val frame: Option[DataFrame], val refused: Boolean,
+      val rowBytes: Option[Long] = None) {
     @volatile var used: Long = tick.incrementAndGet()
-    @volatile var persisted = false
+    @volatile var persisted = rowBytes.isDefined
+    /** Budget size: the rows, or the stage's cached blocks. */
+    def bytes: Long =
+      rowBytes.getOrElse(frame.fold(0L)(bytesOf(_, isCkpt = false, Array.empty)))
   }
 
   import SegmentCache.CellSetKey
@@ -716,21 +727,51 @@ final class SegmentCache {
 
   private def serve(key: CellSetKey): Option[DataFrame] =
     cellSets.get(key).filter(_.persisted).flatMap { cs =>
-      // a materialized cell set over the budget goes before it is read
+      // a cell set over the budget goes before it is read
       cs.frame.foreach(refreshBudget)
       enforceBudget()
       // pin before the residency check: a dependency evicted after it
-      // would free blocks the persisted render's lineage still names
+      // would free blocks the stage's lineage still names
       cs.deps.keys.foreach(leasePin)
       if (!cellSets.get(key).exists(_ eq cs) || !resident(cs.deps)) None
-      else {
-        cs.used = tick.incrementAndGet()
-        cellSetHitCount.increment()
-        // still a segment hit per dependency: the cells come from them
-        cs.deps.keys.foreach { k => hitCount.increment(); touch(k) }
-        cs.frame
+      else (if (cs.rowBytes.isDefined) Some(cs) else unstage(key, cs)).map {
+        held =>
+          held.used = tick.incrementAndGet()
+          cellSetHitCount.increment()
+          // still a segment hit per dependency: the cells come from them
+          cs.deps.keys.foreach { k => hitCount.increment(); touch(k) }
+          held.frame.get
       }
     }
+
+  /** First serve: collect the stage's rows, release its persist and
+    * hold the rows. A stage whose blocks are not all resident is
+    * dropped rather than recomputed inside `execute`. Rows over
+    * `spark.driver.maxResultSize`, or a collect Spark aborts on that
+    * limit, are refused like the other refusals. Some only when the
+    * rows landed.
+    */
+  private def unstage(key: CellSetKey, cs: CellSet): Option[CellSet] = {
+    val stage = cs.frame.get
+    val loaded = stage.queryExecution.withCachedData match {
+      case r: InMemoryRelation => r.cacheBuilder.isCachedColumnBuffersLoaded
+      case _                   => false
+    }
+    if (!loaded) { dropCellSet(key, cs); None }
+    else {
+      val spark = stage.sparkSession
+      val limit = spark.sparkContext.getConf
+        .getSizeAsBytes("spark.driver.maxResultSize", "1g")
+      val rows = try Some(stage.collect()) catch { case NonFatal(_) => None }
+      val next = rows.map(r => (r, SizeEstimator.estimate(r)))
+        .filter { case (_, n) => limit <= 0 || n <= limit } match {
+        case Some((r, n)) => new CellSet(cs.deps, Some(spark.createDataFrame(
+          java.util.Arrays.asList(r: _*), stage.schema)), false, Some(n))
+        case None => new CellSet(cs.deps, None, true)
+      }
+      Option.when(install(key, Some(cs), next) && next.persisted)(next)
+    }
+  }
 
   /** Second sight: persist the render when it is answerable from the
     * cache, else remember the refusal for these frames. Only the build
@@ -821,8 +862,9 @@ final class SegmentCache {
   private def dropCellSet(k: CellSetKey, cs: CellSet): Unit =
     if (cellSets.remove(k, cs)) release(cs)
 
+  /** A stage's persist is the only storage a record holds. */
   private def release(cs: CellSet): Unit =
-    cs.frame.foreach(_.unpersist(blocking = false))
+    if (cs.rowBytes.isEmpty) cs.frame.foreach(_.unpersist(blocking = false))
 
   /** Flush every segment and cell set of a cube (reference
     * flush_schema_cache).

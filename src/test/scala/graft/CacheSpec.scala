@@ -1,7 +1,10 @@
 package graft
 // (AggGen-style recommendation specs live at the bottom of this file)
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.JobCount
+import org.apache.spark.storage.StorageLevel
 import graft.olap._
 
 /** Segment-cache + aggregate-table routing specs (SURVEY §4 #5/#6). */
@@ -378,6 +381,60 @@ class CacheSpec extends SparkSpec {
           |  TOPCOUNT([part].[brand].Members, 3, [Measures].[revenue]) ON ROWS
           |FROM [Sales] WHERE ([returnflag].[R])""".stripMargin, cb)
         .collect().toSeq
+    }
+  }
+
+  /** Runs `statement` on a cube the cache has never seen. The second
+    * run stages (persists) the render. From the first served run on,
+    * every run returns the first render's rows, moves the counters as
+    * [[servedOnThirdRun]] does, and its frame's collect starts no Spark
+    * job. The only job left is the first serve's one collect of the
+    * stage, run while planning, after which the stage's persist is
+    * gone.
+    */
+  private def servedWithNoJobs(statement: BoundCube => DataFrame): Unit = {
+    val c = SegmentCache.global
+    val sc = spark.sparkContext
+    val fresh = cube.copy()
+    val size0 = c.size
+    val first = statement(fresh).collect().toSeq
+    val deps = c.size - size0
+    assert(deps > 0, "the statement must read segments")
+    val stage = statement(fresh)
+    assert(stage.storageLevel !== StorageLevel.NONE,
+      "the second run must stage its render")
+    assert(stage.collect().toSeq === first)
+    for (run <- 3 to 5) {
+      val (hits0, misses0, served0) = (c.hits, c.misses, c.cellSetHits)
+      val (df, planJobs) = JobCount(sc)(statement(fresh))
+      val (rows, jobs) = JobCount(sc)(df.collect().toSeq)
+      assert(rows === first, s"run $run")
+      assert(jobs === 0, s"run $run: a served frame's collect starts no job")
+      assert(planJobs === (if (run == 3) 1 else 0),
+        s"run $run: only the first serve collects, once, from its stage")
+      assert(stage.storageLevel === StorageLevel.NONE,
+        "the first serve must release the staged persist")
+      assert(c.cellSetHits === served0 + 1, s"run $run must be a cell-set hit")
+      assert(c.misses === misses0, "a cell-set hit adds no miss")
+      assert(c.hits === hits0 + deps, "one segment hit per dependency")
+    }
+    c.flushCube(fresh.cubeId)
+  }
+
+  test("cell sets: a served builder statement starts no Spark job") {
+    servedWithNoJobs { cb =>
+      Query.from(cb).columns("revenue", "sum_qty")
+        .rows(LevelMembers("customer", "region"))
+        .where(MemberSlice("time", Seq(1997))).execute()
+    }
+  }
+
+  test("cell sets: a served MDX statement starts no Spark job") {
+    servedWithNoJobs { cb =>
+      Mdx.execute(
+        """SELECT {[Measures].[revenue]} ON COLUMNS,
+          |  [customer].[region].Members ON ROWS
+          |FROM [Sales] WHERE ([returnflag].[N])""".stripMargin, cb)
     }
   }
 

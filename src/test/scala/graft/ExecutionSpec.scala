@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.JobCount
 import graft.olap._
 
 /** Execution-control specs (§2.13): profiling output and query
@@ -11,7 +12,9 @@ class ExecutionSpec extends SparkSpec {
   private lazy val cube = Cubes.sales(spark, Sf)
 
   test("profiled execute returns plan text and phase timings") {
-    val df = Query.from(cube)
+    // a cube the cache has never seen, so this always profiles a render
+    val fresh = cube.copy()
+    val df = Query.from(fresh)
       .columns("revenue")
       .rows(LevelMembers("customer", "region"))
       .execute()
@@ -22,6 +25,22 @@ class ExecutionSpec extends SparkSpec {
     assert(r.profile.logicalPlan.nonEmpty)
     assert(r.profile.totalMs >= r.profile.executeMs)
     assert(r.profile.marks === Seq("axis" -> 3L))
+    SegmentCache.global.flushCube(fresh.cubeId)
+  }
+
+  test("a served statement profiles as a LocalTableScan and runs no job") {
+    val fresh = cube.copy()
+    def run() = Query.from(fresh).columns("revenue")
+      .rows(LevelMembers("customer", "nation")).execute()
+    val expected = run().collect().toSeq
+    // the second run stages the render, the third is its first serve
+    (2 to 3).foreach(_ => run().collect())
+    val (r, jobs) = JobCount(spark.sparkContext)(Execution.profiled(run()))
+    assert(jobs === 0)
+    assert(r.profile.physicalPlan.contains("LocalTableScan"),
+      r.profile.physicalPlan)
+    assert(r.rows === expected)
+    SegmentCache.global.flushCube(fresh.cubeId)
   }
 
   test("a 0.1s timeout aborts a slow query") {
