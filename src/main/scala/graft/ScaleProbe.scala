@@ -476,7 +476,8 @@ object ScaleProbe {
         f"(${statements.length} statements) in $secs%.1f s, " +
         f"errors=${errs.size} evictions=$evictions " +
         f"pinnedSkips=$pinnedSkips cellsetHits=${c.cellSetHits - hits0} " +
-        f"resident=${c.residentBytes} segs=${c.size}")
+        f"resident=${c.residentBytes} segs=${c.size} " +
+        f"cellsetRecords=${c.cellSetRecords}")
       errs.forEach(e => println(s"  ERR $e"))
       assert(errs.isEmpty, s"${errs.size} concurrent failures")
       assert(evictions > 0 && pinnedSkips > 0,

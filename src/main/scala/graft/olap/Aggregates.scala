@@ -1,6 +1,6 @@
 package graft.olap
 
-import java.util.concurrent.atomic.LongAdder
+import java.util.concurrent.atomic.{AtomicLong, LongAdder}
 
 import scala.collection.concurrent.TrieMap
 import scala.util.control.NonFatal
@@ -359,7 +359,7 @@ final class SegmentCache {
             df.unpersist(blocking = false); winner
           case None => df
         }
-        touch(key); record(key, out)
+        touch(key)
         refreshBudget(out); enforceBudget()
         out
     }
@@ -395,14 +395,14 @@ final class SegmentCache {
           case None => df
         }
         ckptKeys.add(key)
-        touch(key); record(key, out)
+        touch(key)
         refreshBudget(out); enforceBudget()
         out
     }
   }
 
   private def hit(key: SegKey, df: DataFrame): DataFrame = {
-    hitCount.increment(); touch(key); record(key, df)
+    hitCount.increment(); touch(key)
     df
   }
 
@@ -599,7 +599,8 @@ final class SegmentCache {
 
   /** Evict until resident bytes fit the budget: stored cell sets
     * first, least-recently-served first (each is a derived copy of
-    * cells its segments still hold), then least-recently-hit segments.
+    * cells), then least-recently-hit segments, and with them the
+    * first-sight records older than the last segment evicted.
     * The most recently used segment is never evicted (the one
     * just inserted or hit — evicting it would thrash: its consumer is
     * about to read it), and a LEASE-PINNED segment is skipped — a
@@ -626,15 +627,21 @@ final class SegmentCache {
       }
       val byLru = entries.sortBy { case (k, _) => lastUse.getOrElse(k, 0L) }
       val newest = byLru.lastOption.map(_._1)
+      var evictedUse = 0L
       for ((k, bytes) <- byLru
            if total > budgetBytes && !newest.contains(k) && bytes > 0) {
         if (pinCount(k) > 0) pinnedSkipCount.increment()
         else {
+          evictedUse = lastUse.getOrElse(k, 0L)
           evict(k)
           evictedCount.increment()
           total -= bytes
         }
       }
+      // first-sight records hold no bytes: bound them by age instead,
+      // dropping those colder than the last segment evicted
+      cellSets.foreach { case (k, cs) =>
+        if (cs.frame.isEmpty && cs.used < evictedUse) dropCellSet(k, cs) }
     }
   }
 
@@ -642,32 +649,32 @@ final class SegmentCache {
   // Mondrian answers a statement whose cells are all in its segment
   // cache in-process, with no SQL (SURVEY §4 #5). The analog here is
   // the statement's rendered rows, held on the driver and keyed by
-  // (cube, QueryIR). A build records, thread-locally, every segment
-  // frame the cache hands it (slicer resolution and nested planners
-  // included); the rows stay valid exactly while each of those frames
-  // is still the resident one for its key, by reference. So every
-  // path that drops or replaces a segment — flushCube, flushRegion,
-  // mergeOrEvict, budget eviction, clear — invalidates them with no
-  // hook of its own; dropCellSetsOn only releases the storage early.
+  // (cube, QueryIR). Like Mondrian's per-cube cache control, validity
+  // follows from what changed the data: each cube has a data epoch that
+  // flushCube, flushRegion, mergeOrEvict and clear bump, dropping the
+  // cube's records. A record carries the epoch read before its render
+  // and is used only while that is still the cube's epoch, so a build
+  // that spans a data change installs nothing. Budget eviction
+  // invalidates nothing: served rows read no segment.
   //
   // Lifecycle: the first sight returns the lazy render untouched and
-  // records its frames; a second sight with the same frames returns
-  // its render `persist()`ed (the stage), so the caller's own action
+  // records the statement; a second sight at the same epoch returns its
+  // render `persist()`ed (the stage), so the caller's own action
   // (under the caller's lease or timeout) materializes it. The first
   // serve collects the stage once — one job over its cached blocks —
   // releases the persist and keeps the rows on the driver; every serve
   // returns them as a local relation, which Spark answers with no job,
   // Catalyst pass or codegen of the render's.
 
-  /** One statement's record: the segment frames its last build read
+  /** One statement's record: the cube epoch its render was planned at
     * and, once stored, its frame — the stage, served only once
     * `persisted`, then from its first serve the rows, `rowBytes` of
     * them. `refused` remembers a failed [[answerable]] check, or rows
-    * too large to hold, for these frames. Reference equality (a plain
+    * too large to hold, for this epoch. Reference equality (a plain
     * class) makes the TrieMap replace/remove calls CAS on the exact
     * record.
     */
-  private final class CellSet(val deps: Map[SegKey, DataFrame],
+  private final class CellSet(val epoch: Long,
       val frame: Option[DataFrame], val refused: Boolean,
       val rowBytes: Option[Long] = None) {
     @volatile var used: Long = tick.incrementAndGet()
@@ -685,64 +692,53 @@ final class SegmentCache {
   def cellSetHits: Long = cellSetHitCount.sum
   /** Renders persisted as cell sets. */
   def cellSetStores: Long = cellSetStoreCount.sum
+  /** Records held, stored or not. */
+  def cellSetRecords: Int = cellSets.size
 
-  private final class Recording {
-    val deps = scala.collection.mutable.HashMap.empty[SegKey, DataFrame]
-    // one key handed two different frames: a merge ran mid-build
-    var torn = false
-    def add(k: SegKey, df: DataFrame): Unit =
-      deps.put(k, df).foreach(prev => if (prev ne df) torn = true)
-    def frames: Map[SegKey, DataFrame] = if (torn) Map.empty else deps.toMap
-  }
-  private val recording = new ThreadLocal[Recording]
+  private val epochs = TrieMap.empty[Long, AtomicLong]
+  private def epochOf(cubeId: Long): AtomicLong =
+    epochs.getOrElseUpdate(cubeId, new AtomicLong)
 
-  private def record(k: SegKey, df: DataFrame): Unit = {
-    val r = recording.get()
-    if (r != null) r.add(k, df)
-  }
-
-  /** Serve `ir` on `cube` through the cell-set layer; `render` plans it.
-    * A build nested in another (a computed slicer's sub-query) only
-    * records into the outer one.
+  /** The cube's data changed: bump its epoch, then drop its records. A
+    * record installed meanwhile sees the new epoch in [[install]].
     */
+  private def bump(cubeId: Long): Unit = {
+    epochOf(cubeId).incrementAndGet()
+    cellSets.foreach { case (k, cs) => if (k.cubeId == cubeId) dropCellSet(k, cs) }
+  }
+
+  /** Serve `ir` on `cube` through the cell-set layer; `render` plans it. */
   def cellSet(cube: BoundCube, ir: QueryIR)(render: => DataFrame): DataFrame =
-    if (recording.get() != null || mentionsCurrentDate(ir)) render
+    if (mentionsCurrentDate(ir)) render
     else {
       val key = CellSetKey(cube.cubeId, ir)
-      serve(key).getOrElse {
+      val epoch = epochOf(cube.cubeId).get
+      serve(key, epoch).getOrElse {
         val prior = cellSets.get(key)
-        val rec = new Recording
-        recording.set(rec)
-        val df = try render finally recording.remove()
-        val deps = rec.frames
-        // a render that reads no segment is not answered from the cache
-        if (deps.nonEmpty) prior match {
-          case Some(p) if sameFrames(p.deps, deps) =>
-            if (p.frame.isEmpty && !p.refused) store(key, p, df, cube.fact)
-          case _ => install(key, prior, new CellSet(deps, None, false))
+        val df = render
+        prior match {
+          case Some(p) if p.epoch == epoch =>
+            if (p.frame.isEmpty && !p.refused) store(key, p, df)
+          case _ => install(key, prior, new CellSet(epoch, None, false))
         }
         df
       }
     }
 
-  private def serve(key: CellSetKey): Option[DataFrame] =
-    cellSets.get(key).filter(_.persisted).flatMap { cs =>
-      // a cell set over the budget goes before it is read
-      cs.frame.foreach(refreshBudget)
-      enforceBudget()
-      // pin before the residency check: a dependency evicted after it
-      // would free blocks the stage's lineage still names
-      cs.deps.keys.foreach(leasePin)
-      if (!cellSets.get(key).exists(_ eq cs) || !resident(cs.deps)) None
-      else (if (cs.rowBytes.isDefined) Some(cs) else unstage(key, cs)).map {
-        held =>
-          held.used = tick.incrementAndGet()
-          cellSetHitCount.increment()
-          // still a segment hit per dependency: the cells come from them
-          cs.deps.keys.foreach { k => hitCount.increment(); touch(k) }
-          held.frame.get
+  private def serve(key: CellSetKey, epoch: Long): Option[DataFrame] =
+    cellSets.get(key).filter(cs => cs.persisted && cs.epoch == epoch)
+      .flatMap { cs =>
+        // a cell set over the budget goes before it is read
+        cs.frame.foreach(refreshBudget)
+        enforceBudget()
+        if (!cellSets.get(key).exists(_ eq cs)) None
+        else (if (cs.rowBytes.isDefined) Some(cs) else unstage(key, cs)).map {
+          held =>
+            held.used = tick.incrementAndGet()
+            cellSetHitCount.increment()
+            held.frame.get
+        }
       }
-    }
 
   /** First serve: collect the stage's rows, release its persist and
     * hold the rows. A stage whose blocks are not all resident is
@@ -765,25 +761,24 @@ final class SegmentCache {
       val rows = try Some(stage.collect()) catch { case NonFatal(_) => None }
       val next = rows.map(r => (r, SizeEstimator.estimate(r)))
         .filter { case (_, n) => limit <= 0 || n <= limit } match {
-        case Some((r, n)) => new CellSet(cs.deps, Some(spark.createDataFrame(
+        case Some((r, n)) => new CellSet(cs.epoch, Some(spark.createDataFrame(
           java.util.Arrays.asList(r: _*), stage.schema)), false, Some(n))
-        case None => new CellSet(cs.deps, None, true)
+        case None => new CellSet(cs.epoch, None, true)
       }
       Option.when(install(key, Some(cs), next) && next.persisted)(next)
     }
   }
 
   /** Second sight: persist the render when it is answerable from the
-    * cache, else remember the refusal for these frames. Only the build
+    * cache, else remember the refusal for this epoch. Only the build
     * that wins the record persists: a losing duplicate's `unpersist`
     * would uncache the winner's identical plan.
     */
-  private def store(key: CellSetKey, prior: CellSet, df: DataFrame,
-      fact: DataFrame): Unit =
-    if (!answerable(df, fact, prior.deps))
-      install(key, Some(prior), new CellSet(prior.deps, None, true))
+  private def store(key: CellSetKey, prior: CellSet, df: DataFrame): Unit =
+    if (!answerable(df))
+      install(key, Some(prior), new CellSet(prior.epoch, None, true))
     else {
-      val next = new CellSet(prior.deps, Some(df), false)
+      val next = new CellSet(prior.epoch, Some(df), false)
       if (install(key, Some(prior), next)) {
         df.persist()
         // a drop that ran before this persist released nothing
@@ -793,8 +788,8 @@ final class SegmentCache {
     }
 
   /** Replace `prior` (or an absent record) with `next`; false when a
-    * concurrent build won, or when a dependency was dropped meanwhile —
-    * its eviction may have scanned the records before `next` landed.
+    * concurrent build won, or when the cube's epoch moved past `next`'s
+    * — the bump may have swept the records before `next` landed.
     */
   private def install(key: CellSetKey, prior: Option[CellSet],
       next: CellSet): Boolean = {
@@ -802,43 +797,31 @@ final class SegmentCache {
       case Some(p) => cellSets.replace(key, p, next) && { release(p); true }
       case None    => cellSets.putIfAbsent(key, next).isEmpty
     }
-    if (won && !resident(next.deps)) { dropCellSet(key, next); false }
-    else won
+    if (won && epochOf(key.cubeId).get != next.epoch) {
+      dropCellSet(key, next); false
+    } else won
   }
 
-  private def resident(deps: Map[SegKey, DataFrame]): Boolean =
-    deps.forall { case (k, df) => segments.get(k).exists(_ eq df) }
-
-  private def sameFrames(a: Map[SegKey, DataFrame],
-      b: Map[SegKey, DataFrame]): Boolean =
-    a.size == b.size && a.forall { case (k, df) => b.get(k).exists(_ eq df) }
-
-  /** Refusals. A stored render must be a function of its segments and
-    * the static dimension frames alone, so refuse a plan that is
-    * nondeterministic or reads the clock (`Vba.now`/`dateFn`/`timeFn`,
-    * Spark's current_* family); one with a leaf — after cache
-    * substitution — that reads the cube's fact outside a segment (a
-    * delta or flush would not invalidate it); and one with a
-    * checkpoint leaf the cache does not own (a per-query pin, freed
-    * when the query's scope closes, which the persisted render's
-    * lineage would still name).
+  /** Refusals. A stored render must be a function of the cube's data
+    * alone, so refuse a plan that is nondeterministic or reads the
+    * clock (`Vba.now`/`dateFn`/`timeFn`, Spark's current_* family), and
+    * one with a checkpoint leaf — after cache substitution — that is
+    * not a segment the cache holds (a per-query pin, freed when the
+    * query's scope closes, which the persisted render's lineage would
+    * still name).
     */
-  private def answerable(df: DataFrame, fact: DataFrame,
-      deps: Map[SegKey, DataFrame]): Boolean = {
+  private def answerable(df: DataFrame): Boolean = {
     val plan = df.queryExecution.analyzed
+    val cuts = segments.collect { case (k, s) if ckptKeys.contains(k) =>
+      s.queryExecution.analyzed }.collect { case l: LogicalRDD => l.rdd.id }.toSet
     // substitute through an alias, so `df`'s own plan is not frozen
     // before its persist
-    def leaves(d: DataFrame) =
-      d.alias("__cellset").queryExecution.withCachedData.collectLeaves()
-    lazy val factLeaves =
-      fact.queryExecution.analyzed.collectLeaves() ++ leaves(fact)
-    val ownCuts = deps.values.flatMap(_.queryExecution.analyzed
-      .collectLeaves().collect { case l: LogicalRDD => l.rdd.id }).toSet
     plan.deterministic && !plan.containsPattern(TreePattern.CURRENT_LIKE) &&
-      leaves(df).forall {
-        case l: LogicalRDD => ownCuts(l.rdd.id)
-        case l => !factLeaves.exists(l.sameResult)
-      }
+      df.alias("__cellset").queryExecution.withCachedData.collectLeaves()
+        .forall {
+          case l: LogicalRDD => cuts(l.rdd.id)
+          case _             => true
+        }
   }
 
   /** CurrentDateMember resolves "now" at plan time: never store it.
@@ -855,10 +838,6 @@ final class SegmentCache {
   private def storedCellSets: Seq[(CellSetKey, CellSet)] =
     cellSets.toSeq.filter(_._2.persisted)
 
-  private def dropCellSetsOn(k: SegKey): Unit =
-    cellSets.foreach { case (ck, cs) =>
-      if (cs.deps.contains(k)) dropCellSet(ck, cs) }
-
   private def dropCellSet(k: CellSetKey, cs: CellSet): Unit =
     if (cellSets.remove(k, cs)) release(cs)
 
@@ -871,7 +850,7 @@ final class SegmentCache {
     */
   def flushCube(cubeId: Long): Unit = {
     segments.keys.filter(_.cubeId == cubeId).foreach(evict)
-    cellSets.foreach { case (k, cs) => if (k.cubeId == cubeId) dropCellSet(k, cs) }
+    bump(cubeId)
   }
 
   /** Incremental maintenance on an insert-delta: merge each cached
@@ -884,11 +863,12 @@ final class SegmentCache {
     * The merged frame is localCheckpoint'ed (eager) before the old
     * segment is released: block loss must NOT re-run the lineage, which
     * would re-read a landing directory that meanwhile contains the
-    * delta and double-count it.
+    * delta and double-count it. The cube's epoch moves once, after the
+    * segments have.
     */
   def mergeOrEvict(cubeId: Long)(
       deltaFor: SegKey => Option[(DataFrame, Seq[(String, String)])]): Unit =
-    segments.keys.filter(_.cubeId == cubeId).foreach { k =>
+    try segments.keys.filter(_.cubeId == cubeId).foreach { k =>
       deltaFor(k) match {
         case None => evict(k)
         case Some((delta, mergeFns)) => segments.get(k).foreach { old =>
@@ -899,11 +879,10 @@ final class SegmentCache {
           segments.put(k, merged)
           ckptKeys.add(k)
           evictFrame(old)
-          dropCellSetsOn(k)
           mergedCount.increment()
         }
       }
-    }
+    } finally bump(cubeId)
 
   private val mergedCount = new LongAdder
   def merges: Long = mergedCount.sum
@@ -940,12 +919,16 @@ final class SegmentCache {
     * segment survives only when its slicer on that dimension provably
     * excludes the region; a segment with no slicer on the dimension
     * contains the region's cells (e.g. in its totals), so it flushes.
+    * Cell sets are not sliced by region: the cube's epoch moves and all
+    * of its cell sets go.
     */
-  def flushRegion(cubeId: Long, dim: String, path: Seq[Any]): Unit =
+  def flushRegion(cubeId: Long, dim: String, path: Seq[Any]): Unit = {
     segments.keys
       .filter(_.cubeId == cubeId)
       .filterNot(k => excludesRegion(k.slicer, dim, path))
       .foreach(evict)
+    bump(cubeId)
+  }
 
   private def excludesRegion(slicer: Seq[SlicerItem], dim: String,
       path: Seq[Any]): Boolean =
@@ -964,6 +947,7 @@ final class SegmentCache {
 
   def clear(): Unit = {
     segments.keys.foreach(evict)
+    epochs.values.foreach(_.incrementAndGet())
     cellSets.foreach { case (k, cs) => dropCellSet(k, cs) }
   }
 
@@ -971,7 +955,6 @@ final class SegmentCache {
     lastUse.remove(k)
     ckptKeys.remove(k)
     segments.remove(k).foreach(evictFrame)
-    dropCellSetsOn(k)
   }
 
   /** A segment is either `.persist()`ed (getOrCompute) or a merged

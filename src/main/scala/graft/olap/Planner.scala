@@ -1918,9 +1918,10 @@ final class Planner(val cube: BoundCube) {
       slicer: Seq[SlicerItem]): Seq[SlicerItem] =
     new DimCalcLowering(Nil, Map.empty).expandSlicer(slicer)
 
-  /** Plan a statement. The one choke point for MDX and builder queries:
-    * a statement whose segments are all still resident is served from
-    * its persisted render (the cell-set layer, [[SegmentCache.cellSet]]).
+  /** Plan a statement. The one choke point for MDX and builder queries,
+    * nested sub-queries included: a statement repeated while its cube's
+    * data epoch is unchanged is served from its stored rows (the
+    * cell-set layer, [[SegmentCache.cellSet]]).
     */
   def execute(q: QueryIR): DataFrame =
     if (!SegmentCache.enabled) render(q)

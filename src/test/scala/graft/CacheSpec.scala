@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.JobCount
 import org.apache.spark.storage.StorageLevel
 import graft.olap._
+import graft.streaming.StreamingCube
 
 /** Segment-cache + aggregate-table routing specs (SURVEY §4 #5/#6). */
 class CacheSpec extends SparkSpec {
@@ -344,7 +345,7 @@ class CacheSpec extends SparkSpec {
 
   /** Runs `statement` three times on a cube the cache has never seen
     * (a copy gets a fresh cubeId): the third run must be a cell-set hit
-    * that still counts one segment hit per dependency.
+    * that touches no segment.
     */
   private def servedOnThirdRun[T](statement: BoundCube => T): Unit = {
     val c = SegmentCache.global
@@ -359,7 +360,7 @@ class CacheSpec extends SparkSpec {
     assert(second === first && third === first)
     assert(c.cellSetHits === served0 + 1, "third run must be a cell-set hit")
     assert(c.misses === misses0, "a cell-set hit adds no miss")
-    assert(c.hits === hits0 + deps, "one segment hit per dependency")
+    assert(c.hits === hits0, "a cell-set hit reads no segment")
     c.flushCube(fresh.cubeId)
   }
 
@@ -416,7 +417,7 @@ class CacheSpec extends SparkSpec {
         "the first serve must release the staged persist")
       assert(c.cellSetHits === served0 + 1, s"run $run must be a cell-set hit")
       assert(c.misses === misses0, "a cell-set hit adds no miss")
-      assert(c.hits === hits0 + deps, "one segment hit per dependency")
+      assert(c.hits === hits0, "a cell-set hit reads no segment")
     }
     c.flushCube(fresh.cubeId)
   }
@@ -475,9 +476,8 @@ class CacheSpec extends SparkSpec {
     c.flushCube(fresh.cubeId)
   }
 
-  test("cell sets: a Now() calc member, a CurrentDateMember axis and a " +
-      "fact read outside a segment are never stored; drill-through is " +
-      "untouched") {
+  test("cell sets: a Now() calc member and a CurrentDateMember axis are " +
+      "never stored; drill-through is untouched") {
     val c = SegmentCache.global
     val fresh = cube.copy()
     def neverStored[T](what: String)(run: => T): Unit = {
@@ -497,11 +497,6 @@ class CacheSpec extends SparkSpec {
       .rows(CurrentDateMember("time", "month", "BEFORE"))
       .execute().collect())
     finally spark.conf.unset("spark.graft.now")
-    // NonEmptyCrossJoin finds its occurring tuples in the fact itself
-    neverStored("NonEmptyCrossJoin")(Query.from(fresh).columns("revenue")
-      .rows(NonEmptyCrossJoin(LevelMembers("returnflag", "returnflag"),
-        LevelMembers("linestatus", "linestatus")))
-      .execute().collect())
     val drill =
       """DRILLTHROUGH SELECT {[Measures].[revenue]} ON COLUMNS
         |FROM [Sales]
@@ -512,6 +507,83 @@ class CacheSpec extends SparkSpec {
     assert(rows.nonEmpty)
     neverStored("DRILLTHROUGH")(assert(drilled() === rows))
     c.flushCube(fresh.cubeId)
+  }
+
+  test("cell sets: a fused dim-calc statement and a NonEmptyCrossJoin " +
+      "read the fact outside a segment, are served, and re-render after " +
+      "flushCube and a merge") {
+    val c = SegmentCache.global
+    val sc = spark.sparkContext
+    def servedUntilDataChanges(what: String)(
+        statement: BoundCube => DataFrame): Unit = {
+      val fresh = cube.copy()
+      val first = statement(fresh).collect().toSeq
+      // the run after a first sight stages; the one after that serves
+      def served(): Unit = {
+        assert(statement(fresh).collect().toSeq === first, s"$what staged")
+        val hits0 = c.cellSetHits
+        val df = statement(fresh)
+        assert(c.cellSetHits === hits0 + 1, s"$what must be served")
+        val (rows, jobs) = JobCount(sc)(df.collect().toSeq)
+        assert(rows === first, s"$what: served rows")
+        assert(jobs === 0, s"$what: a served collect starts no job")
+      }
+      def reRenders(change: String)(bump: => Unit): Unit = {
+        bump
+        val hits0 = c.cellSetHits
+        assert(statement(fresh).collect().toSeq === first)
+        assert(c.cellSetHits === hits0, s"$what: $change must re-render")
+      }
+      served()
+      reRenders("flushCube")(c.flushCube(fresh.cubeId))
+      served()
+      // an empty insert-delta: mergeOrEvict moves the epoch, no cell
+      // changes
+      reRenders("a merge")(StreamingCube.applyDeltaBatch(
+        fresh.fact.limit(0), fresh, c, new Planner(fresh)))
+      c.flushCube(fresh.cubeId)
+    }
+    servedUntilDataChanges("dim-calc override") { cb =>
+      Mdx.execute(
+        """WITH MEMBER [time].[EU all] AS
+          |  'Aggregate({[customer].[EUROPE]})'
+          |SELECT {[Measures].[revenue], [Measures].[sum_qty]} ON COLUMNS,
+          |  CROSSJOIN({[time].[1995], [time].[EU all]},
+          |            {[customer].[AMERICA], [customer].[ASIA]}) ON ROWS
+          |FROM [Sales]""".stripMargin, cb)
+    }
+    // NonEmptyCrossJoin finds its occurring tuples in the fact itself
+    servedUntilDataChanges("NonEmptyCrossJoin") { cb =>
+      Query.from(cb).columns("revenue")
+        .rows(NonEmptyCrossJoin(LevelMembers("returnflag", "returnflag"),
+          LevelMembers("linestatus", "linestatus")))
+        .execute()
+    }
+  }
+
+  test("cell sets: a render that spans a data change installs nothing") {
+    val c = new SegmentCache
+    val fresh = cube.copy()
+    val ir = QueryIR(measures = Seq("revenue"), rows = None)
+    def call(bumps: Boolean): DataFrame = c.cellSet(fresh, ir) {
+      val df = spark.range(7).selectExpr("id * 3 AS m")
+      if (bumps) c.flushCube(fresh.cubeId)
+      df
+    }
+    // a first sight at the current epoch, so the next call is a second
+    // sight that would stage its render
+    call(bumps = false)
+    assert(c.cellSetRecords === 1)
+    (1 to 3).foreach { i =>
+      val df = call(bumps = true)
+      assert(df.storageLevel === StorageLevel.NONE, s"call $i staged")
+      assert(df.collect().length === 7)
+      assert(c.cellSetRecords === 0, s"call $i left a record")
+    }
+    assert(c.cellSetStores === 0, "nothing may be stored")
+    assert(c.cellSetHits === 0, "nothing may be served")
+    assert(call(bumps = false).collect().length === 7)
+    assert(c.cellSetRecords === 1, "a render at a steady epoch records")
   }
 
   test("agg router answers a coarser query from a registered rollup") {
