@@ -3,6 +3,7 @@ package graft.olap
 import java.util.concurrent.atomic.{AtomicLong, LongAdder}
 
 import scala.collection.concurrent.TrieMap
+import scala.util.{Failure, Success, Try}
 import scala.util.control.NonFatal
 
 import org.apache.spark.sql.DataFrame
@@ -854,64 +855,86 @@ final class SegmentCache {
   }
 
   /** Incremental maintenance on an insert-delta: merge each cached
-    * segment in place when its measures are decomposable, evict the
-    * rest (they recompute lazily on next use). `deltaFor` returns the
-    * delta aggregated at the segment's exact grain plus the per-measure
-    * partial-merge functions ("sum" | "min" | "max"), or None when the
-    * segment is not mergeable.
+    * segment of the cube in place when its measures are decomposable,
+    * evict the rest (they recompute lazily on next use). `deltaFor`,
+    * called on this thread once per segment, returns the delta's rows
+    * at the segment's exact grain and slicer as raw partials plus the
+    * per-measure partial-merge functions ("sum" | "min" | "max"), or
+    * None when the segment is not mergeable.
     *
-    * The merged frame is localCheckpoint'ed (eager) before the old
-    * segment is released: block loss must NOT re-run the lineage, which
-    * would re-read a landing directory that meanwhile contains the
-    * delta and double-count it. The cube's epoch moves once, after the
-    * segments have.
+    * Each merge is one union re-aggregate ([[mergeFrames]]), cut
+    * eagerly before the old segment is released: block loss must NOT
+    * re-run the lineage, which would re-read a landing directory that
+    * meanwhile contains the delta and double-count it. The merges run
+    * concurrently, at most `defaultParallelism` at once, on this thread
+    * and worker threads made here, so every job carries this thread's
+    * Spark local properties (job group, scheduler pool). All workers
+    * are joined, then the merged segments are installed on this thread.
+    *
+    * All-or-nothing: when any `deltaFor` or merge fails, the cuts made
+    * are freed, every segment of the cube is evicted and the first
+    * failure is rethrown, so no reader sees a half-merged cube and a
+    * replayed batch counts once. Either way the cube's epoch moves
+    * once, after the segments have.
     */
   def mergeOrEvict(cubeId: Long)(
-      deltaFor: SegKey => Option[(DataFrame, Seq[(String, String)])]): Unit =
-    try segments.keys.filter(_.cubeId == cubeId).foreach { k =>
-      deltaFor(k) match {
-        case None => evict(k)
-        case Some((delta, mergeFns)) => segments.get(k).foreach { old =>
-          // rawCut (not a bare localCheckpoint): evict() must be able
-          // to free the merged frame's blocks later, which for a
-          // checkpoint only Pins.freeCut can do
-          val merged = Pins.rawCut(mergeFrames(old, delta, k.grain, mergeFns))
-          segments.put(k, merged)
+      deltaFor: SegKey => Option[(DataFrame, Seq[(String, String)])]): Unit = {
+    var cuts = Seq.empty[DataFrame]
+    try {
+      val plans = segments.keys.filter(_.cubeId == cubeId).toSeq
+        .map(k => k -> deltaFor(k))
+      val merges = plans.collect { case (k, Some((rows, fns))) =>
+        // rawCut (not a bare localCheckpoint): evict() must be able to
+        // free the merged frame's blocks later, which for a checkpoint
+        // only Pins.freeCut can do
+        segments.get(k).map(old =>
+          (k, old, () => Pins.rawCut(mergeFrames(old, rows, k.grain, fns))))
+      }.flatten
+      val width = merges.headOption
+        .fold(1)(_._2.sparkSession.sparkContext.defaultParallelism)
+      val results = SegmentCache.concurrently(width, merges.map(_._3))
+      cuts = results.flatMap(_.toOption)
+      val merged = results.map(_.get)
+      plans.collect { case (k, None) => k }.foreach(evict)
+      merges.zip(merged).foreach { case ((k, old, _), cut) =>
+        // a segment flushed or recomputed meanwhile is not overwritten
+        if (segments.replace(k, old, cut)) {
           ckptKeys.add(k)
           evictFrame(old)
           mergedCount.increment()
-        }
+        } else { evictFrame(cut); evict(k) }
       }
+    } catch {
+      case e: Throwable =>
+        cuts.foreach(evictFrame)
+        segments.keys.filter(_.cubeId == cubeId).foreach(evict)
+        throw e
     } finally bump(cubeId)
+  }
 
   private val mergedCount = new LongAdder
   def merges: Long = mergedCount.sum
 
-  /** old ⟗ delta on the grain keys; each measure column combined with
-    * its partial-merge fn, null-safe on either side (a grain tuple may
-    * exist only in the delta or only in the old segment).
+  /** (old ∪ rows) grouped on the grain keys, each measure folded with
+    * its partial-merge fn and cast back to the segment's type: the union
+    * and a decimal sum both widen it under Spark's result-type rules. A
+    * grain tuple only the delta has becomes a new row.
     */
-  private def mergeFrames(old: DataFrame, delta: DataFrame,
+  private def mergeFrames(old: DataFrame, rows: DataFrame,
       grain: Seq[String], mergeFns: Seq[(String, String)]): DataFrame = {
-    val suffixed = delta.select(
-      (grain.map(col) ++
-        mergeFns.map { case (m, _) => col(m).as(s"${m}__d") }): _*)
-    val joined = old.join(suffixed, grain.toSeq, "full_outer")
-    val outCols = grain.map(col) ++ mergeFns.map { case (m, fn) =>
-      val a = col(m); val b = col(s"${m}__d")
+    val cols = (grain ++ mergeFns.map(_._1)).map(col)
+    val both = old.select(cols: _*).union(rows.select(cols: _*))
+    val aggCols = mergeFns.map { case (m, fn) =>
       (fn match {
-        case "sum" =>
-          // decimal(38,s)+decimal(38,s) overflows to scale s-1 under
-          // Spark's result-type rule; cast back to the segment's type
-          when(a.isNull, b).when(b.isNull, a).otherwise(a + b)
-            .cast(old.schema(m).dataType)
-        case "min" => least(a, b)
-        case "max" => greatest(a, b)
+        case "sum" => sum(m)
+        case "min" => min(m)
+        case "max" => max(m)
         case other => throw new IllegalArgumentException(
           s"unknown merge fn '$other'")
-      }).as(m)
+      }).cast(old.schema(m).dataType).as(m)
     }
-    joined.select(outCols: _*)
+    if (grain.isEmpty) both.agg(aggCols.head, aggCols.tail: _*)
+    else both.groupBy(grain.map(col): _*).agg(aggCols.head, aggCols.tail: _*)
   }
 
   /** Flush segments whose cells can intersect the (dim, path-prefix)
@@ -977,4 +1000,38 @@ object SegmentCache {
   val global = new SegmentCache
   /** Engine flag: disable to force every aggregate to recompute. */
   @volatile var enabled = true
+
+  /** Name prefix of the worker threads [[SegmentCache.mergeOrEvict]]
+    * starts.
+    */
+  private[graft] val MergeThreadPrefix = "graft-segment-merge"
+
+  /** Run `tasks` on this thread and at most `width - 1` worker threads
+    * made here — a new thread inherits this one's Spark local
+    * properties — and return each task's outcome once every worker has
+    * been joined. An interrupt during the join is re-asserted after it.
+    */
+  private def concurrently[T](width: Int, tasks: Seq[() => T]): Seq[Try[T]] = {
+    val out = new Array[Try[T]](tasks.length)
+    val next = new java.util.concurrent.atomic.AtomicInteger
+    def drain(): Unit = {
+      var i = next.getAndIncrement()
+      while (i < tasks.length) {
+        out(i) = try Success(tasks(i)()) catch { case e: Throwable => Failure(e) }
+        i = next.getAndIncrement()
+      }
+    }
+    val workers = (1 until math.min(width, tasks.length)).map { i =>
+      val t = new Thread(() => drain(), s"$MergeThreadPrefix-$i")
+      t.setDaemon(true); t.start(); t
+    }
+    drain()
+    var interrupted = false
+    workers.foreach { t =>
+      while (t.isAlive)
+        try t.join() catch { case _: InterruptedException => interrupted = true }
+    }
+    if (interrupted) Thread.currentThread().interrupt()
+    out.toSeq
+  }
 }

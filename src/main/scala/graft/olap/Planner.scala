@@ -3132,13 +3132,16 @@ final class Planner(val cube: BoundCube) {
     if (covered == want) Some(dims.result()) else None
   }
 
-  /** Aggregate an INSERT-delta batch at a cached segment's exact
-    * (grain, slicer, measures) so the segment can be merged in place
+  /** An INSERT-delta batch's rows at a cached segment's exact (grain,
+    * slicer, measures), one raw partial per measure and row
+    * ([[Planner.rowPartial]]), so the segment can be merged in place
     * instead of evicted — the streaming-maintenance analog of the
-    * reference's segment update after fact inserts. None when the
-    * segment holds a non-decomposable measure (avg, distinct count,
-    * stats): those must recompute. Min/Max merge is insert-only (a
-    * delete could shift them) — deletes should evict.
+    * reference's segment update after fact inserts. The rows are not
+    * aggregated here: the merge folds them into the segment with one
+    * union re-aggregate, so each merge costs one exchange. None when
+    * the segment holds a non-decomposable measure (avg, distinct
+    * count, stats): those must recompute. Min/Max merge is insert-only
+    * (a delete could shift them) — deletes should evict.
     */
   def deltaSegment(grain: Seq[String], slicer: Seq[SlicerItem],
       measureNames: Seq[String], delta: DataFrame): Option[DataFrame] = {
@@ -3149,11 +3152,8 @@ final class Planner(val cube: BoundCube) {
       val p2 = new Planner(
         cube.copy(fact = delta, factPruner = None, aggTables = Nil))
       val star = p2.joinStar(p2.neededJoins(axisDims, slicer), slicer)
-      val sliced = star.filter(p2.slicerPredicate(slicer))
-      val aggCols = ms.map(m => Agg.toColumn(m.agg, m.expr).as(m.name))
-      if (grain.isEmpty) sliced.agg(aggCols.head, aggCols.tail: _*)
-      else sliced.groupBy(grain.map(col): _*)
-        .agg(aggCols.head, aggCols.tail: _*)
+      star.filter(p2.slicerPredicate(slicer)).select(grain.map(col) ++
+        ms.map(m => Planner.rowPartial(m.agg, m.expr).as(m.name)): _*)
     }
   }
 
@@ -3286,6 +3286,16 @@ object Planner {
     case Agg.Min => Some("min")
     case Agg.Max => Some("max")
     case _ => None
+  }
+
+  /** One fact row's partial of a decomposable measure, in the form its
+    * merge fn folds: SumExact's DECIMAL(38,10) cast, Count's 0/1, and
+    * the plain expression for Sum, Min and Max.
+    */
+  def rowPartial(agg: Agg, e: String): Column = agg match {
+    case Agg.SumExact => expr(s"CAST(($e) AS DECIMAL(38,10))")
+    case Agg.Count    => when(expr(e).isNull, 0L).otherwise(1L)
+    case _            => expr(e)
   }
 
   /** An evaluated axis set: member tuples + the dims/depths involved.

@@ -407,10 +407,11 @@ object StreamingCube {
     * delta aggregated at its own grain/slicer (decomposable measures:
     * sum/count/min/max) or (b) evicts (avg, distinct-count, stats).
     *
-    * Scale: the delta aggregate is a groupBy over the micro-batch only
-    * — cost proportional to the DELTA, not the 100 TB fact. The merge
-    * itself is a full-outer join between two pre-aggregated frames
-    * (segment-sized, not fact-sized).
+    * Scale: each merge reads the micro-batch and the segment only —
+    * cost proportional to the DELTA and the segment, not the 100 TB
+    * fact: one union re-aggregate of the segment and the batch's rows
+    * at its grain, one exchange. The segments' merges run concurrently
+    * (see [[applyDeltaBatch]]).
     */
   def maintainMerge(deltas: DataFrame, cube: graft.olap.BoundCube,
       cache: graft.olap.SegmentCache): org.apache.spark.sql.streaming.StreamingQuery = {
@@ -424,7 +425,13 @@ object StreamingCube {
   }
 
   /** One micro-batch of the merge path (also the batch-backfill entry —
-    * the spec drives it directly).
+    * the spec drives it directly). Every mergeable segment of the cube
+    * folds the batch in through [[graft.olap.SegmentCache.mergeOrEvict]]:
+    * the merges run concurrently on threads made by this call, so their
+    * jobs carry the caller's job group and scheduler pool, and all of
+    * them are joined before it returns. All-or-nothing: if any merge
+    * fails, every segment of the cube is evicted and the error rethrown,
+    * so a replayed batch is counted once.
     */
   def applyDeltaBatch(batch: DataFrame, cube: graft.olap.BoundCube,
       cache: graft.olap.SegmentCache,

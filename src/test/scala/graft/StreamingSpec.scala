@@ -115,6 +115,154 @@ class StreamingSpec extends SparkSpec {
     cache.flushCube(cube.cubeId)
   }
 
+  test("delta merge equals a fresh cube over fact and delta for Sum, " +
+      "SumExact, Count, Min and Max") {
+    import graft.olap.{CrossJoin, LevelMembers, MemberSlice, Planner, Query,
+      SegmentCache}
+    val cube = Cubes.sales(spark, Sf).copy()
+    val cache = SegmentCache.global
+    val fact = Cubes.salesFact(spark, Sf)
+    val y = fact.select(year(min(col("o_orderdate")))).head().getInt(0)
+    val orders = fact.filter(year(col("o_orderdate")) === y)
+      .select("l_orderkey").distinct().orderBy("l_orderkey")
+      .limit(3).collect().map(_.getLong(0))
+    // a customer with no orders in year y: the delta adds a
+    // (customer, year) tuple the segment at that grain lacks
+    val idle = Tables.load(spark, Sf, "customer")
+      .join(Tables.load(spark, Sf, "orders")
+          .filter(year(col("o_orderdate")) === y),
+        col("c_custkey") === col("o_custkey"), "left_anti")
+      .orderBy("c_custkey").select("c_custkey", "c_name").head()
+    // three year-y orders' lines moved to that customer, one price
+    // raised past the fact's max and one cut below its min
+    val delta = fact.filter(col("l_orderkey").isin(orders.toSeq: _*))
+      .withColumn("o_custkey", lit(idle.getLong(0)))
+      .withColumn("l_extendedprice",
+        when(col("l_linenumber") === 1, col("l_extendedprice") * 1000)
+          .when(col("l_linenumber") === 2, lit(0.01))
+          .otherwise(col("l_extendedprice")))
+    val ms = Seq("sum_qty", "revenue", "count_order", "min_price", "max_price")
+    // a grand total, a sliced grain, and the grain the new tuple lands in
+    def answers(c: graft.olap.BoundCube) = Seq(
+      Query.from(c).columns(ms: _*),
+      Query.from(c).columns(ms: _*).rows(LevelMembers("customer", "nation"))
+        .where(MemberSlice("time", Seq(y))),
+      Query.from(c).columns(ms: _*).rows(CrossJoin(
+        LevelMembers("customer", "customer"), LevelMembers("time", "year")))
+    ).map(_.execute().collect().toSeq)
+    def idleCount(rows: Seq[org.apache.spark.sql.Row]) =
+      rows.find(r => r.getAs[String]("c_name") == idle.getString(1) &&
+          r.getAs[Any]("d_year") == y)
+        .flatMap(r => Option(r.getAs[Any]("count_order")))
+    val before = answers(cube)
+    assert(idleCount(before(2)).isEmpty)
+    val merges0 = cache.merges
+    StreamingCube.applyDeltaBatch(delta, cube, cache, new Planner(cube))
+    assert(cache.merges - merges0 >= 3, "every segment merges")
+    val misses0 = cache.misses
+    val after = answers(cube)
+    assert(cache.misses === misses0, "every answer reads a merged segment")
+    val fresh = answers(cube.copy(fact = fact.union(delta), factPruner = None))
+    // Row.toString carries each decimal's full scale: exact equality
+    def cells(a: Seq[Seq[org.apache.spark.sql.Row]]) = a.map(_.map(_.toString).toSet)
+    assert(cells(after) === cells(fresh))
+    assert(cells(after).zip(cells(before)).forall { case (a, b) => a != b })
+    assert(idleCount(after(2)) === Some(delta.count()))
+    cache.flushCube(cube.cubeId)
+  }
+
+  test("delta merge: more segments than defaultParallelism all merge, " +
+      "every job carries the caller's job group, and no merge thread " +
+      "outlives the call") {
+    import scala.jdk.CollectionConverters._
+    import graft.olap.{LevelMembers, MemberSlice, Planner, Query, SegmentCache}
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.graft.JobCount
+    val cube = Cubes.events(spark, Sf).copy()
+    val cache = SegmentCache.global
+    val sc = spark.sparkContext
+    def q(c: graft.olap.BoundCube) = Query.from(c).columns("n_events", "sum_value")
+    val statements: Seq[graft.olap.BoundCube => Query] = Seq(
+      q(_),
+      q(_).rows(LevelMembers("event_type", "event_type")),
+      q(_).rows(LevelMembers("time", "year")),
+      q(_).rows(LevelMembers("time", "quarter")),
+      q(_).rows(LevelMembers("time", "month")),
+      q(_).rows(LevelMembers("time", "day")),
+      q(_).rows(LevelMembers("time", "month"))
+        .where(MemberSlice("event_type", Seq("click"))))
+    assert(statements.length > sc.defaultParallelism)
+    def answers(c: graft.olap.BoundCube) =
+      statements.map(_(c).execute().collect().map(_.toString).toSet)
+    val before = answers(cube)
+    val delta = Tables.load(spark, Sf, "events")
+      .filter(col("event_type") === "click")
+      .withColumn("l_datekey", to_date(col("ts")))
+    def mergeThreads() = Thread.getAllStackTraces.keySet.asScala
+      .count(t => t.isAlive && t.getName.startsWith(SegmentCache.MergeThreadPrefix))
+    val peak = new java.util.concurrent.atomic.AtomicInteger
+    val threadsAtJobStart = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        peak.accumulateAndGet(mergeThreads(), math.max)
+    }
+    val merges0 = cache.merges
+    sc.addSparkListener(threadsAtJobStart)
+    sc.setJobGroup("streaming-spec-merge", "insert-delta merge")
+    val (_, groups) =
+      try JobCount.groups(sc)(
+        StreamingCube.applyDeltaBatch(delta, cube, cache, new Planner(cube)))
+      finally { sc.clearJobGroup(); sc.removeSparkListener(threadsAtJobStart) }
+    assert(mergeThreads() === 0, "a merge thread outlived the call")
+    assert(groups.nonEmpty)
+    assert(groups.forall(_.contains("streaming-spec-merge")), groups)
+    assert(peak.get <= sc.defaultParallelism)
+    assert(cache.merges - merges0 >= statements.length, "every segment merges")
+    val after = answers(cube)
+    assert(after === answers(cube.copy(fact = cube.fact.union(delta))))
+    assert(after.zip(before).forall { case (a, b) => a != b })
+    cache.flushCube(cube.cubeId)
+  }
+
+  test("delta merge is all-or-nothing: when one segment's merge fails, " +
+      "no segment of the cube keeps the delta") {
+    import graft.olap.{LevelMembers, Planner, Query, SegmentCache}
+    val cube = Cubes.events(spark, Sf).copy()
+    val cache = SegmentCache.global
+    val planner = new Planner(cube)
+    def total() = Query.from(cube).columns("n_events").execute()
+      .head().getAs[Long]("n_events")
+    def byType() = Query.from(cube).columns("n_events")
+      .rows(LevelMembers("event_type", "event_type")).execute().collect()
+      .map(r => r.getAs[String]("event_type") -> r.getAs[Long]("n_events")).toMap
+    val total0 = total()
+    val types0 = byType()
+    assert(types0.values.sum === total0)
+    val delta = Tables.load(spark, Sf, "events")
+      .filter(col("event_type") === "click")
+      .withColumn("l_datekey", to_date(col("ts")))
+    var calls = 0
+    val err = intercept[Exception] {
+      cache.mergeOrEvict(cube.cubeId) { key =>
+        calls += 1
+        val n = calls
+        planner.deltaSegment(key.grain, key.slicer, key.measures, delta)
+          .map { rows =>
+            // the second segment's merge fails when its job runs
+            (if (n == 2) rows.filter(expr("raise_error('injected merge failure') IS NULL"))
+             else rows, planner.mergePlanFor(key.measures))
+          }
+      }
+    }
+    assert(calls === 2)
+    assert(Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+      .exists(e => String.valueOf(e.getMessage).contains("injected merge failure")), err)
+    val misses0 = cache.misses
+    assert(total() === total0, "the grand total kept the delta")
+    assert(byType() === types0, "the per-type cells kept the delta")
+    assert(cache.misses === misses0 + 2, "every segment of the cube is evicted")
+    cache.flushCube(cube.cubeId)
+  }
+
   test("stateful sessionization carries state across micro-batches") {
     import spark.implicits._
     val events = Tables.load(spark, Sf, "events")

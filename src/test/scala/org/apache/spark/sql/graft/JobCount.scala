@@ -1,7 +1,5 @@
 package org.apache.spark.sql.graft
 
-import java.util.concurrent.atomic.AtomicInteger
-
 import org.apache.spark.SparkContext
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
@@ -12,17 +10,27 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
   */
 object JobCount {
   def apply[T](sc: SparkContext)(body: => T): (T, Int) = {
-    val jobs = new AtomicInteger
+    val (out, started) = groups(sc)(body)
+    (out, started.length)
+  }
+
+  /** The `spark.jobGroup.id` of each job the block starts, None where
+    * the job carries no group.
+    */
+  def groups[T](sc: SparkContext)(body: => T): (T, Seq[Option[String]]) = {
+    val started =
+      new java.util.concurrent.ConcurrentLinkedQueue[Option[String]]
     val listener = new SparkListener {
       override def onJobStart(j: SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
+        started.add(Option(j.properties)
+          .flatMap(p => Option(p.getProperty(SparkContext.SPARK_JOB_GROUP_ID))))
     }
     sc.listenerBus.waitUntilEmpty()
     sc.addSparkListener(listener)
     try {
       val out = body
       sc.listenerBus.waitUntilEmpty()
-      (out, jobs.get)
+      (out, started.toArray(Array.empty[Option[String]]).toSeq)
     } finally sc.removeSparkListener(listener)
   }
 }
