@@ -151,9 +151,11 @@ object Demo {
       import spark.implicits._
       (0L to 64L).toDF("doc_id")
     }
-    val stars = graft.ops.DedupOps.componentsStar(chain, nodes)
+    // driverEdgeLimit = 0 forces the distributed star rounds
+    val stars = graft.ops.DedupOps.componentsAuto(chain, nodes,
+        driverEdgeLimit = 0L)
       .groupBy("cluster_id").count().collect()
-    println(s"componentsStar on a 64-link chain: " +
+    println(s"distributed components on a 64-link chain: " +
       s"${stars.length} component(s), sizes=" +
       stars.map(_.getLong(1)).mkString(","))
 

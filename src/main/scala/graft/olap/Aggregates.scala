@@ -6,7 +6,7 @@ import scala.collection.concurrent.TrieMap
 import scala.util.{Failure, Success, Try}
 import scala.util.control.NonFatal
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.trees.TreePattern
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.execution.columnar.InMemoryRelation
@@ -54,9 +54,6 @@ object AggRouter {
     */
   @volatile var lastHit: Option[String] = None
 
-  private val reAggable: Set[Agg] =
-    Set(Agg.Sum, Agg.SumExact, Agg.Count, Agg.Min, Agg.Max)
-
   /** An agg table answers the query iff every needed dim is present at
     * >= the needed depth (so all level columns root..depth exist),
     * every needed measure is stored with a decomposable aggregator, and
@@ -71,7 +68,8 @@ object AggRouter {
         at.depthOf(d).exists(_ >= depth)
       } &&
       measures.forall(m =>
-        at.measures.get(m.name).contains(m.agg) && reAggable(m.agg))
+        at.measures.get(m.name).contains(m.agg) &&
+          Agg.partialMerge(m.agg).isDefined)
     }
     candidates.sortBy(_.width).headOption
   }
@@ -129,7 +127,8 @@ object AggRouter {
   def buildRecommended(cube: BoundCube, workload: Seq[Map[String, Int]],
       maxRows: Long): BoundCube = {
     val planner = new Planner(cube)
-    val ms = cube.measures.filter(m => reAggable(m.agg)).map(_.name)
+    val ms = cube.measures.filter(m => Agg.partialMerge(m.agg).isDefined)
+      .map(_.name)
     val ats = recommend(cube, workload, maxRows).zipWithIndex.map {
       case (grain, i) =>
         planner.buildAggTable(s"agg_rec_$i",
@@ -149,20 +148,17 @@ object AggRouter {
       measures: Seq[Measure]): DataFrame = {
     lastHit = Some(at.name)
     val sliced = at.df.filter(slicerPred)
-    val aggCols = measures.map { m =>
-      val c = col(m.name)
-      (m.agg match {
-        case Agg.Sum | Agg.SumExact | Agg.Count => sum(c)
-        case Agg.Min => min(c)
-        case Agg.Max => max(c)
-        case other => throw new IllegalStateException(
-          s"non-decomposable aggregator routed: $other")
-      }).as(m.name)
-    }
-    val keys = Planner.groupCols(axisDims)
-    if (keys.isEmpty) sliced.agg(aggCols.head, aggCols.tail: _*)
-    else sliced.groupBy(keys.map(col): _*).agg(aggCols.head, aggCols.tail: _*)
+    val aggCols = mergeColumns(measures)
+    sliced.groupBy(Planner.groupCols(axisDims).map(col): _*)
+      .agg(aggCols.head, aggCols.tail: _*)
   }
+
+  /** Each routed measure's partial column folded by its merge rule
+    * ([[Agg.partialMerge]]); [[route]] admits only measures that have
+    * one.
+    */
+  def mergeColumns(measures: Seq[Measure]): Seq[Column] =
+    measures.map(m => Agg.partialMerge(m.agg).get(col(m.name)).as(m.name))
 }
 
 /** One declared level mapping of a physical aggregate table: the
@@ -858,9 +854,9 @@ final class SegmentCache {
     * segment of the cube in place when its measures are decomposable,
     * evict the rest (they recompute lazily on next use). `deltaFor`,
     * called on this thread once per segment, returns the delta's rows
-    * at the segment's exact grain and slicer as raw partials plus the
-    * per-measure partial-merge functions ("sum" | "min" | "max"), or
-    * None when the segment is not mergeable.
+    * at the segment's exact grain and slicer as raw partials plus each
+    * measure's partial-merge function ([[Agg.partialMerge]]), or None
+    * when the segment is not mergeable.
     *
     * Each merge is one union re-aggregate ([[mergeFrames]]), cut
     * eagerly before the old segment is released: block loss must NOT
@@ -878,7 +874,8 @@ final class SegmentCache {
     * once, after the segments have.
     */
   def mergeOrEvict(cubeId: Long)(
-      deltaFor: SegKey => Option[(DataFrame, Seq[(String, String)])]): Unit = {
+      deltaFor: SegKey => Option[(DataFrame, Seq[(String, Column => Column)])])
+      : Unit = {
     var cuts = Seq.empty[DataFrame]
     try {
       val plans = segments.keys.filter(_.cubeId == cubeId).toSeq
@@ -921,20 +918,14 @@ final class SegmentCache {
     * grain tuple only the delta has becomes a new row.
     */
   private def mergeFrames(old: DataFrame, rows: DataFrame,
-      grain: Seq[String], mergeFns: Seq[(String, String)]): DataFrame = {
+      grain: Seq[String],
+      mergeFns: Seq[(String, Column => Column)]): DataFrame = {
     val cols = (grain ++ mergeFns.map(_._1)).map(col)
     val both = old.select(cols: _*).union(rows.select(cols: _*))
     val aggCols = mergeFns.map { case (m, fn) =>
-      (fn match {
-        case "sum" => sum(m)
-        case "min" => min(m)
-        case "max" => max(m)
-        case other => throw new IllegalArgumentException(
-          s"unknown merge fn '$other'")
-      }).cast(old.schema(m).dataType).as(m)
+      fn(col(m)).cast(old.schema(m).dataType).as(m)
     }
-    if (grain.isEmpty) both.agg(aggCols.head, aggCols.tail: _*)
-    else both.groupBy(grain.map(col): _*).agg(aggCols.head, aggCols.tail: _*)
+    both.groupBy(grain.map(col): _*).agg(aggCols.head, aggCols.tail: _*)
   }
 
   /** Flush segments whose cells can intersect the (dim, path-prefix)

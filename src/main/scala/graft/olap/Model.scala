@@ -97,6 +97,19 @@ object Agg {
         s"+ regr_intercept($e, $e2)")
   }
 
+  /** How partial aggregates of a decomposable measure merge: Sum,
+    * SumExact and Count by sum, Min by min, Max by max. The one rule
+    * rollup routing, the fused dim-calc pass over a rollup and the
+    * insert-delta segment merge all fold partials with. None = not
+    * decomposable (avg, distinct count, stats): recompute from the fact.
+    */
+  def partialMerge(agg: Agg): Option[Column => Column] = agg match {
+    case Sum | SumExact | Count => Some(c => sum(c))
+    case Min                    => Some(c => min(c))
+    case Max                    => Some(c => max(c))
+    case _                      => None
+  }
+
   private def pctOf(a: Agg): Option[Double] = a match {
     case Percentile(p)  => Some(p)
     case NthQuartile(n) => Some(n / 4.0)

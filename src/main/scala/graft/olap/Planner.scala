@@ -34,8 +34,8 @@ final class Planner(val cube: BoundCube) {
     * single-measure query must not pay for the cube's 12 aggregates).
     * Defaults to all measures for direct evalSet/metadata use.
     */
-  private var neededMeasures: Seq[Measure] = cube.measures
-  private var neededCalcs: Seq[CalcMember] = cube.calcMembers
+  private[olap] var neededMeasures: Seq[Measure] = cube.measures
+  private[olap] var neededCalcs: Seq[CalcMember] = cube.calcMembers
   // every calc member in scope (schema + WITH), unfiltered: member-path
   // LITERALS in sets don't register in pruneFor's text scan, so
   // "is this path a calc member" checks must not rely on neededCalcs
@@ -77,7 +77,7 @@ final class Planner(val cube: BoundCube) {
   /** Fixpoint over calc-member dependencies: a calc is needed if its name
     * is referenced; its formula text then pulls in further measures/calcs.
     */
-  private def pruneFor(q: QueryIR): Unit = {
+  private[olap] def pruneFor(q: QueryIR): Unit = {
     val allCalcs = cube.calcMembers ++ q.withMembers
     allCalcMembers = allCalcs
     spacedMeasureRx = buildSpacedRx(
@@ -115,7 +115,7 @@ final class Planner(val cube: BoundCube) {
   /** Distinct members of levels 0..depth of a dimension, with ordinal
     * columns for hierarchical sorting.
     */
-  private def memberFrame(d: BoundDim, depth: Int): DataFrame = {
+  private[olap] def memberFrame(d: BoundDim, depth: Int): DataFrame = {
     val cols = memberCols(d, depth)
     val cached = d.membersAt(depth, cols)
     // ragged hierarchies (schema.rb hide_member_if): members hidden at
@@ -162,7 +162,7 @@ final class Planner(val cube: BoundCube) {
   /** Path deeper than the hierarchy matches nothing (memberExists on an
     * over-deep path must be false, not an exception — ADVICE r1).
     */
-  private def ancestorPredicate(d: BoundDim, path: Seq[Any]): Column =
+  private[olap] def ancestorPredicate(d: BoundDim, path: Seq[Any]): Column =
     if (path.isEmpty || path.length > d.levels.length) lit(false)
     else path.zipWithIndex
       .map { case (v, i) => col(d.levels(i).col) === lit(v) }
@@ -1066,9 +1066,7 @@ final class Planner(val cube: BoundCube) {
       // default asc places nulls first, so a mixed-depth frame's
       // parents (null deeper ordinals) precede their children — the
       // hierarchical (PRE) default
-      val ords = a.dims.flatMap(ad =>
-        ad.d.levelsTo(ad.depth).map(l => col(l.ordinal).asc))
-      a.copy(members = Ords.rowNumber(a.members, ords, OrdCol,
+      a.copy(members = Ords.rowNumber(a.members, axisSort(a), OrdCol,
           hintOf(a.dims)),
         hasOrd = true)
     }
@@ -1076,7 +1074,7 @@ final class Planner(val cube: BoundCube) {
   // ------------------------------------------------------------ star agg
 
   /** Dims (with depth) that must be joined under the aggregate. */
-  private def neededJoins(axisDims: Seq[AxisDim],
+  private[olap] def neededJoins(axisDims: Seq[AxisDim],
       slicer: Seq[SlicerItem]): Map[String, Int] = {
     val fromAxis = axisDims.map(ad => ad.d.name -> ad.depth)
     val fromSlicer = slicer.flatMap {
@@ -1115,7 +1113,7 @@ final class Planner(val cube: BoundCube) {
   /** Fact joined with the needed dimensions — dimension side broadcast so
     * the fact never shuffles for the star join.
     */
-  private def joinStar(needed: Map[String, Int],
+  private[olap] def joinStar(needed: Map[String, Int],
       slicer: Seq[SlicerItem],
       extraCols: Seq[String] = Nil): DataFrame = {
     val base = cube.factFor(requiredFactCols(needed, slicer, extraCols))
@@ -1212,7 +1210,7 @@ final class Planner(val cube: BoundCube) {
     * rank window is cheap by construction and no op re-touches the
     * scan.
     */
-  private def applyEntryOps(df0: DataFrame, ops: Seq[EntryOp],
+  private[olap] def applyEntryOps(df0: DataFrame, ops: Seq[EntryOp],
       dim: String, label: String,
       hier: Option[EntryHier]): DataFrame = {
     def resolve(e: String): Column = {
@@ -1397,12 +1395,7 @@ final class Planner(val cube: BoundCube) {
           val star = joinStar(neededJoins(axisDims, allSlicer), allSlicer)
           val sliced = star.filter(slicerPredicate(allSlicer))
           val (aggCols, post) = Agg.toColumnsFused(neededMeasures)
-          val keys = groupCols(axisDims)
-          val agged =
-            if (keys.isEmpty) sliced.agg(aggCols.head, aggCols.tail: _*)
-            else sliced.groupBy(keys.map(col): _*)
-              .agg(aggCols.head, aggCols.tail: _*)
-          agged.select(keys.map(col) ++ post: _*)
+          aggregateAt(sliced, groupCols(axisDims), aggCols, post)
       }
     if (!SegmentCache.enabled) compute
     else {
@@ -1523,7 +1516,7 @@ final class Planner(val cube: BoundCube) {
     * policy only axis visibility is restricted (memberFrame), so no
     * fact filter is emitted.
     */
-  private def roleSlicer: Seq[SlicerItem] =
+  private[olap] def roleSlicer: Seq[SlicerItem] =
     cube.role.toSeq.flatMap { role =>
       val grantSlices = role.grants.groupBy(_._1)
         .filter { case (dim, _) =>
@@ -1658,7 +1651,7 @@ final class Planner(val cube: BoundCube) {
     * loss, the one unacceptable failure mode), so every entry point
     * expands through here or refuses loudly.
     */
-  private final class DimCalcLowering(withMembers: Seq[CalcMember],
+  private[olap] final class DimCalcLowering(withMembers: Seq[CalcMember],
       withSets: Map[String, SetExpr]) {
     private val byName = (cube.calcMembers ++ withMembers).collect {
       case cm @ CalcMember(_, dc: DimAggCalc, _, _, _, _) =>
@@ -1948,813 +1941,43 @@ final class Planner(val cube: BoundCube) {
       else q0.copy(
         rows = Some((outerAxes ++ q0.rows.toSeq).reduceRight(CrossJoin(_, _))),
         pages = None, chapters = None, sections = None)
-    val qPre = if (q1.measures.nonEmpty) q1
-               else q1.copy(measures = Seq(cube.defaultMeasureName))
-    val qs = qPre
+    val q = if (q1.measures.nonEmpty) q1
+            else q1.copy(measures = Seq(cube.defaultMeasureName))
     // Detect dim-hosted calc members in ANY rows-axis shape — never
     // just the bare literal Members arm. A calc path that reaches the
     // ordinary Members lowering predicate-filters to nothing and the
     // rows vanish SILENTLY (the one unacceptable failure mode), so:
     // a calc-bearing literal set — alone or CrossJoined with calc-free
     // factors (query_test.rb:157-174 pins crossjoin iteration over
-    // calc members) — lowers below; every other shape refuses loudly.
-    def deref(s: SetExpr, seen: Set[String]): SetExpr = s match {
-      case NamedSetRef(n) if !seen(n) && qs.withSets.contains(n) =>
-        deref(qs.withSets(n), seen + n)
-      case other => other
-    }
-    // a NonEmptyCrossJoin on the path to a calc factor decomposes like
-    // CrossJoin plus a tuple-existence filter: NECJ keeps exactly the
-    // tuples with fact support, which the fused pass knows from a
-    // count over the same single scan (calc-free NECJ subtrees stay
-    // whole — the ordinary set machinery evaluates them)
-    var necjTuples = false
-    var necjGroupN = 0
-    // each factor carries the id of the OUTERMOST calc-bearing NECJ
-    // it sits under (-1 = none): tuple support is evaluated per NECJ
-    // over ITS OWN factors' coordinates — an outer CrossJoin factor
-    // is not in the NECJ's context, so CROSSJOIN(NECJ({calc}, years),
-    // flags.Members) keeps unsupported flag combinations as null-cell
-    // rows (Mondrian NonEmptyCrossJoinFunDef). An NECJ nested inside
-    // another keeps the outer group: full-grain support implies the
-    // inner grain's.
-    def splitCross(s: SetExpr, g: Int): Seq[(SetExpr, Int)] =
-      deref(s, Set.empty) match {
-        case CrossJoin(a, b) => splitCross(a, g) ++ splitCross(b, g)
-        case NonEmptyCrossJoin(a, b)
-            if dcl.hasCalcPath(a, Set.empty) ||
-              dcl.hasCalcPath(b, Set.empty) =>
-          necjTuples = true
-          val gid = if (g >= 0) g else { necjGroupN += 1; necjGroupN - 1 }
-          splitCross(a, gid) ++ splitCross(b, gid)
-        case other => Seq((other, g))
-      }
-    val rowsFactorsTagged =
-      if (dcl.isEmpty) Nil
-      else qs.rows.map(splitCross(_, -1)).getOrElse(Nil)
-    val rowsFactors = rowsFactorsTagged.map(_._1)
-    val factorGroup = rowsFactorsTagged.map(_._2)
-    val calcFactorIdx =
-      rowsFactors.indexWhere(dcl.hasCalcPath(_, Set.empty))
-    if (calcFactorIdx >= 0) {
-      def refuse(why: String): Nothing = throw new IllegalArgumentException(
-        "calculated member(s) " +
-          dcl.calcNames(qs.rows.get, Set.empty).distinct
-            .mkString("[", "], [", "]") +
-          s" in an unsupported axis set shape ($why): a dim-hosted " +
-          "Aggregate member is supported in a literal member set — " +
-          "optionally combined with enumerable same-dimension sets " +
-          "via Union/Head/Tail/Subset/Distinct, filtered/ordered by " +
-          "Filter or Order, and CrossJoined (or " +
-          "NonEmptyCrossJoined) with calculated-member-free sets on " +
-          "other dimensions — rewrite the axis set or move the " +
-          "member to WHERE")
-      // every calc-bearing factor flattens to ONE entry list (several
-      // factors are allowed — the fused pass evaluates the full entry
-      // cross product in the same single scan)
-      val calcIdxs = rowsFactors.indices
-        .filter(i => dcl.hasCalcPath(rowsFactors(i), Set.empty))
-      case class CalcFactor(dim: String, paths: Vector[Seq[Any]],
-        ops: Vector[EntryOp], label: String, entryCol: String,
-        calcCol: String, hidden: Set[Int] = Set.empty)
-      val qSlicerAll = resolveSlicer(qs.slicer, qs.withSets)
-      // non-breaking Order needs every entry's strict ancestors' CELLS
-      // for the hierarchical comparison (Mondrian evaluates them
-      // whether or not they are set members): ancestors missing from
-      // the set join the entry list as HIDDEN entries — aggregated in
-      // the same pass, ranked like any sibling, dropped before the
-      // axis renders (applyEntryOps excludes them from the live frame)
-      def injectHiddenAncestors(f: CalcFactor): CalcFactor = {
-        val needs = f.ops.exists {
-          case EntryOrder(_, SortDir.Asc | SortDir.Desc) => true
-          case _ => false
-        }
-        if (!needs) return f
-        val norm = f.paths.map(_.map(String.valueOf))
-        val have = norm.toSet
-        val missing = norm.flatMap(p => (1 until p.length).map(p.take))
-          .distinct.filterNot(have)
-        if (missing.isEmpty) return f
-        val missingOrig = missing.map { mp =>
-          val src = f.paths.zip(norm)
-            .find(_._2.take(mp.length) == mp).get._1
-          src.take(mp.length)
-        }
-        f.copy(paths = f.paths ++ missingOrig,
-          hidden = (f.paths.length until
-            f.paths.length + missingOrig.length).toSet)
-      }
-      val factors = calcIdxs.zipWithIndex.map { case (fi, k) =>
-        dcl.flatten(rowsFactors(fi), qSlicerAll) match {
-          case Right((d, ps, ops)) =>
-            if (ps.isEmpty)
-              refuse("the entry list is empty after positional slicing")
-            // factor 0 keeps the bare column names so the single-factor
-            // plan (and the entry-op machinery) is unchanged
-            val tag = if (k == 0) "" else s"_$k"
-            injectHiddenAncestors(
-              CalcFactor(d, ps, ops, cube.dim(d).levels.head.col,
-                s"__entry$tag", s"__calc$tag"))
-          case Left(why) => refuse(why)
-        }
-      }
-      if (factors.map(_.dim.toLowerCase).distinct.length < factors.length)
-        refuse("two calc-bearing factors on the same hierarchy")
-      val cf0 = factors.head
-      val dim = cf0.dim
-      val entryOps = cf0.ops
-      val otherIdxs =
-        rowsFactors.indices.filterNot(calcIdxs.contains)
-      val otherFactors = otherIdxs.map(rowsFactors)
-      // Filter/Order and post-slicing need the entries' CELLS first
-      // (evaluate-then-prune). With calc-free other factors OR a
-      // second calc-bearing factor present, the fused path runs a
-      // PRE-crossjoin pass per op-bearing factor at ITS OWN entry
-      // grain (the MDX condition context carries no other factor's
-      // coordinate — FilterFunDef evaluates its own set before the
-      // crossjoin exists; r14 refused the two-calc-factor form)
-      // NON-breaking Order (OrderFunDef's default ASC/DESC):
-      // Mondrian's hierarchical sort puts ancestors before
-      // descendants and compares SIBLING ancestors by their cells
-      // (FunUtil.compareHierarchicallyButSiblingsByValue). Every
-      // comparison resolves within the ENTRY LIST because ancestors
-      // missing from the set were injected above as hidden entries
-      def hierFor(f: CalcFactor): Option[EntryHier] =
-        if (!f.ops.exists {
-          case EntryOrder(_, SortDir.Asc | SortDir.Desc) => true
-          case _ => false
-        }) None
-        else {
-          val norm = f.paths.map(_.map(String.valueOf))
-          // first occurrence wins for duplicated literals; hidden
-          // ancestors were injected above, so every strict prefix of
-          // every path resolves (the getOrElse is an invariant guard)
-          val posOf = norm.zipWithIndex.reverse.toMap
-          val parentOf = norm.indices.map { i =>
-            i -> (if (norm(i).length <= 1) -1
-              else posOf.getOrElse(norm(i).init, refuse(
-                "internal: entry [" + f.paths(i).mkString("].[") +
-                  "]'s ancestor missing after hidden-ancestor " +
-                  "injection")))
-          }.toMap
-          val chainOf = norm.indices.map { i =>
-            i -> ((1 until norm(i).length)
-              .map(k => posOf(norm(i).take(k))) :+ i)
-          }.toMap
-          val isCalcOf = f.paths.indices.map { i =>
-            i -> dcl.of(f.dim, f.paths(i)).isDefined
-          }.toMap
-          Some(EntryHier("", parentOf, chainOf, isCalcOf, f.hidden))
-        }
-      val entryHier: Option[EntryHier] = hierFor(factors.head)
-      val otherSet = otherFactors.reduceRightOption(CrossJoin(_, _))
-      // the other factors' member frames pin the extra tuple
-      // coordinates; plan-building only (nothing executes here)
-      val otherFrame0 = otherSet.map(s => evalSet(s, qSlicerAll, qs.withSets))
-      val otherDims = otherFrame0.map(_.dims).getOrElse(Nil)
-      val otherKeys = otherDims.flatMap(ad => levelCols(ad.d, ad.depth))
-      factors.foreach { f =>
-        if (otherDims.exists(_.d.name.equalsIgnoreCase(f.dim)))
-          refuse("the calc member's own hierarchy appears in another " +
-            "CrossJoin factor")
-      }
-      // a calc set constraining a dimension ANOTHER factor enumerates
-      // executes through MDX context override since r16 (AggregateFunDef
-      // evaluates each set member via Evaluator.setContext, which
-      // REPLACES the current coordinate on the member's hierarchy — so
-      // the cell is CONSTANT across the overridden factor's members):
-      // the overriding entry groups without that factor's keys and
-      // skips its semi-join and WHERE items; the frame join copies the
-      // cell across the factor's members. A set constraining another
-      // CALC factor's hierarchy still refuses (the override would have
-      // to rewrite that factor's own entry predicates — no Mondrian
-      // precedent to pin the combination against).
-      def itemDims(items: Seq[SlicerItem]): Set[String] = items.flatMap {
-        case MemberSlice(d, _) => Seq(d)
-        case SetSlice(d, _)    => Seq(d)
-        case ExprSlice(_, ds)  => ds
-        case EvalSlice(set) =>
-          evalSet(set, Nil, qs.withSets).dims.map(_.d.name)
-      }.toSet
-      val constrainedOf: Map[String, Set[String]] = factors.map { f =>
-        f.dim -> f.paths.flatMap(p => dcl.of(f.dim, p).toSeq).flatMap {
-          case (cm, dc) => itemDims(dcl.sliceOf(cm, dc))
-        }.toSet
-      }.toMap
-      val otherDimsLc = otherDims.map(_.d.name.toLowerCase).toSet
-      val hasOverride = factors.exists(f =>
-        constrainedOf(f.dim).exists(d => otherDimsLc(d.toLowerCase)))
-      factors.foreach { f =>
-        val calcEnum = factors.filterNot(_ eq f).map(_.dim)
-        val clash = calcEnum.filter(d => constrainedOf(f.dim)
-          .exists(_.equalsIgnoreCase(d)))
-        if (clash.nonEmpty)
-          refuse(s"a calc member's set constrains [${clash.mkString(", ")}]" +
-            ", a hierarchy another CALC factor enumerates")
-      }
-      val label = cf0.label
-      // FUSED single-pass lowering: every axis entry — stored member or
-      // dim-hosted Aggregate calc — lowers to a row predicate over
-      // ONE star frame; a row satisfying several entries explodes
-      // into each entry key, and one groupBy aggregates all members
-      // (× the other factors' level columns when the set is a
-      // crossjoin): one Exchange for N members instead of N fact
-      // passes (correct for every aggregator incl. avg/distinct — the
-      // group sees raw fact rows, never pre-aggregates). Calc measures
-      // run on the aggregated frame through the ordinary applyCalcs
-      // layer with the entry key as an extra grouping column (an
-      // EntryCtx). Roles ride the fused pass too (r14): stored entries
-      // are visibility-filtered against the role-restricted member
-      // frame and the grant slicer ANDs into the scan. This pass reads
-      // the raw fact by design — AggRouter rollups can't serve
-      // avg/distinct over arbitrary member-set filters and the explode
-      // key is not a grain the SegmentCache speaks.
-      pruneFor(qs)
-      // a context-dependent calc (window/SetAgg/LinReg, or an
-      // expression reading a CurrentMember macro), a context override
-      // or a mixed-depth factor is evaluated against ONE calc factor's
-      // entries at the full axis grain: the multi-factor entry cross
-      // product, NECJ tuple support and the pre-crossjoin op pass stay
-      // refused alongside them
-      val contextual = neededCalcs.exists(_.calc match {
-        case ExprCalc(sql)  => sql.contains("__CURRENT_")
-        case _: DimAggCalc => false
-        case _             => true
-      })
-      val mixedOther = otherFrame0.exists(of =>
-        of.mixedDim.nonEmpty || of.mixedDepths.nonEmpty)
-      if (contextual || hasOverride || mixedOther) {
-        val why = "alongside context-dependent (window/set-aggregating) " +
-          "calc measures, a context override or mixed-depth factors"
-        if (factors.length > 1)
-          refuse(s"calc members in more than one CrossJoin factor $why")
-        if (necjTuples)
-          refuse(s"NonEmptyCrossJoin with a calc factor $why")
-        if (entryOps.nonEmpty && otherFactors.nonEmpty)
-          refuse("Filter/Order/positional ops over the calc factor of " +
-            s"a CrossJoin $why")
-      }
-      // `ov`: the (lower-cased) other-factor hierarchies the entry's
-      // set overrides
-      case class AxisEntry(idx: Int, name: String, isCalc: Boolean,
-        items: Seq[SlicerItem], ov: Set[String] = Set.empty)
-      // a role hides out-of-grant STORED members from the axis
-      // (memberFrame visibility, connection_role_test.rb:46-90);
-      // calc members are synthetic and always render. One filtered
-      // dimension-frame probe per literal depth covers all entries
-      // (the collect is <= N rows — the frame filter pushes to the
-      // dimension scan). With the grant slicer ANDed into the scan
-      // below, both role effects ride the fused pass, so N entries
-      // still cost ONE fact pass.
-      def entriesOf(f: CalcFactor): Seq[AxisEntry] = {
-        val es = f.paths.zipWithIndex.map { case (p, i) =>
-          dcl.of(f.dim, p) match {
-            case Some((cm, dc)) =>
-              val items = dcl.sliceOf(cm, dc)
-              AxisEntry(i, cm.name, isCalc = true,
-                resolveSlicer(items, qs.withSets),
-                itemDims(items).map(_.toLowerCase).intersect(otherDimsLc))
-            case None =>
-              AxisEntry(i, p.last.toString, isCalc = false,
-                Seq(MemberSlice(f.dim, p)))
-          }
-        }
-        if (cube.role.isEmpty) es
-        else {
-          val d = cube.dim(f.dim)
-          val storedPaths = es.collect {
-            case e if !e.isCalc =>
-              e.items.head.asInstanceOf[MemberSlice].path
-          }
-          val visible: Set[Seq[String]] = storedPaths
-            .groupBy(_.length).iterator.flatMap { case (len, ps) =>
-              val cols = levelCols(d, len - 1)
-              memberFrame(d, len - 1)
-                .filter(orAll(ps.map(p => ancestorPredicate(d, p))))
-                .select(cols.map(col): _*).distinct().collect()
-                .map(r => cols.indices.map(i => String.valueOf(r.get(i))))
-            }.map(_.toSeq).toSet
-          // injected hidden ancestors are rank-only — aggregated for
-          // the hierarchical Order's comparison, never rendered — so
-          // role visibility does not apply to them (dropping one
-          // would silently shorten descendants' rank chains and
-          // mis-order instead of refusing; ADVICE r15)
-          val kept = es.filter(e => e.isCalc || f.hidden(e.idx) ||
-            visible(e.items.head.asInstanceOf[MemberSlice].path
-              .map(String.valueOf)))
-          // a role-hidden STORED entry that is an ancestor of a
-          // surviving entry would also shorten the rank chain — the
-          // non-breaking Order cannot rank through a member the role
-          // removed, so refuse loudly rather than mis-order
-          if (f.ops.exists {
-            case EntryOrder(_, SortDir.Asc | SortDir.Desc) => true
-            case _ => false
-          }) {
-            val keptIdx = kept.map(_.idx).toSet
-            val norm = f.paths.map(_.map(String.valueOf))
-            val brokenAnc = es.map(_.idx).filterNot(keptIdx).filter {
-              di =>
-                kept.exists(k => k.idx != di &&
-                  norm(k.idx).length > norm(di).length &&
-                  norm(k.idx).take(norm(di).length) == norm(di))
-            }
-            if (brokenAnc.nonEmpty)
-              refuse("a non-breaking Order over a set whose ancestor " +
-                "entry [" +
-                f.paths(brokenAnc.head).mkString("].[") +
-                "] is hidden by the role (its sibling rank chain " +
-                "would be incomplete) — use BASC/BDESC")
-          }
-          kept
-        }
-      }
-      val factorEntries: Seq[(CalcFactor, Seq[AxisEntry])] =
-        factors.map(f => f -> entriesOf(f))
-      val qSlicer = qSlicerAll
-      // Same-dim query-slicer items: for a CALC entry they fold
-      // into its predicate through resolveSlicer's compound (OR)
-      // grouping — the union of the calc's own members
-      // (query.rb:379-386); for a STORED entry they AND — the
-      // normal axis-path semantics (the slicer restricts the
-      // cells; an excluded member keeps its row, null cells).
-      // Items on other dims filter globally and push to the scan.
-      // With several calc factors, each overlap item folds into
-      // exactly ONE factor's entry predicates (its effect reaches
-      // every tuple through that factor's explode key).
-      def itemDim(i: SlicerItem): Option[String] = i match {
-        case MemberSlice(d, _) => Some(d)
-        case SetSlice(d, _)    => Some(d)
-        case _                 => None
-      }
-      val factorItemDims: Seq[Set[String]] = factorEntries.map {
-        case (_, es) => es.flatMap(_.items).flatMap(itemDim).toSet
-      }
-      // a WHERE item on a hierarchy some entry overrides neither folds
-      // into a calc entry nor filters the scan globally: it ANDs into
-      // every NON-overriding entry's predicate
-      val ovDimsAll = factorEntries.flatMap(_._2.flatMap(_.ov)).toSet
-      val (sharedOv, sliceRest) = qSlicer.partition(i =>
-        itemDims(Seq(i)).exists(d => ovDimsAll(d.toLowerCase)))
-      val (overlap, sharedRest) = sliceRest.partition(i =>
-        itemDim(i).exists(d => factorItemDims.exists(_.contains(d))))
-      overlap.foreach { i =>
-        if (factorItemDims.count(s => itemDim(i).exists(s)) > 1)
-          refuse("a WHERE item on a dimension constrained by calc " +
-            "members of more than one CrossJoin factor")
-      }
-      def overlapOf(k: Int): Seq[SlicerItem] =
-        overlap.filter(i => itemDim(i).exists(factorItemDims(k)))
-      // the grant/deny slicer (Partial rollup policy) ANDs into the
-      // scan GLOBALLY — for every entry, calc or stored — never into
-      // the per-entry compound OR (a grant OR-folded into a calc
-      // set would WIDEN it; the role spec pins AND semantics)
-      val joinItems = qSlicer ++ roleSlicer ++
-        factorEntries.flatMap(_._2.flatMap(_.items))
-      // AggRouter (SURVEY §4 #6) serves the fused axis too: when a
-      // declared rollup covers every dimension the entries, the
-      // slicer, and the other factors touch — at the depths they
-      // touch — and every needed measure is a decomposable partial,
-      // the single pass reads the ROLLUP rows instead of the fact
-      // (the entry predicates explode level columns the rollup
-      // carries; the group then MERGES partials — sum of sums and
-      // counts, min of mins). avg/distinct keep the raw-fact scan.
-      val routedAt = AggRouter.route(cube,
-        neededJoins(otherDims, joinItems), joinItems, neededMeasures)
-      val sliced0 = routedAt match {
-        case Some(at) =>
-          AggRouter.lastHit = Some(at.name)
-          at.df.filter(slicerPredicate(sharedRest ++ roleSlicer))
+    // calc members) — lowers through the fused pass ([[FusedAxis]]);
+    // every other shape refuses loudly there.
+    FusedAxis.render(this, dcl, q).getOrElse {
+      pruneFor(q)
+      q.rows match {
         case None =>
-          joinStar(neededJoins(otherDims, joinItems), joinItems)
-            .filter(slicerPredicate(sharedRest ++ roleSlicer))
+          val cells = aggregate(Nil, q.slicer)
+          val withCalcs = applyCalcs(cells, Nil, q.slicer, q.withSets)
+          withCalcs.select(q.measures.map(col): _*)
+        case Some(set) =>
+          val axis = evalSet(set, q.slicer, q.withSets)
+          val joined = joinCells(axis, q.slicer)
+          val withCalcs = applyCalcs(joined, axis.dims, q.slicer, q.withSets)
+          nonEmptyRows(q, withCalcs).orderBy(axisSort(axis): _*)
+            .select((groupCols(axis.dims) ++ q.measures).map(col): _*)
       }
-      // a HIGH-CARDINALITY other factor (reference high_cardinality
-      // opt-out) must never ride a broadcast: its member frame and
-      // the (entry x member)-grained aggregate are both
-      // axis-cardinality-sized, which at scale is millions of rows —
-      // those joins stay shuffles; only the entry frame (N rows) is
-      // always broadcast-safe
-      val otherHighCard = otherDims.exists(_.d.highCardinality)
-      // left-major axis rendering (r18): the final sort and the axis
-      // columns interleave by each factor's ORIGINAL crossjoin
-      // position — Mondrian iterates axis ordinals left-to-right
-      // (query.rb:47-57; axis shapes pinned by query_test.rb:
-      // 157-174,408-432), so CROSSJOIN(years, {…calc…}) renders
-      // year-major, not hoisted calc-first (the last user-visible
-      // divergence from the reference's axis contract, VERDICT r17).
-      // PER-FACTOR member frames (not the combined otherSet product,
-      // whose single renumbered __ord cannot decompose) keep each
-      // stored factor's own explicit order when a calc factor sits
-      // between two stored ones. Each factor's frame renames its own
-      // __ord to __oord<i> and a mixed-depth frame's depth marker to
-      // `depthCol`; `ovEntries` are the entries overriding the factor.
-      case class OtherFactor(idx: Int, frame: AxisFrame, keys: Seq[String],
-        sort: Seq[Column], depthCol: Option[String], ovEntries: Seq[Int])
-      val others: Seq[OtherFactor] = otherIdxs.map { oi =>
-        val rs = evalSet(rowsFactors(oi), qSlicerAll, qs.withSets)
-        val keys = rs.dims.flatMap(ad => levelCols(ad.d, ad.depth))
-        val oc = s"__oord$oi"
-        val depthCol = rs.mixedDim.map(_ => s"__odepth$oi")
-        val members = depthCol.foldLeft(
-          if (rs.hasOrd) rs.members.withColumnRenamed(OrdCol, oc)
-          else rs.members)((m, dc) => m.withColumnRenamed(DepthCol, dc))
-        val sort =
-          if (rs.hasOrd) Seq(col(oc).asc)
-          else rs.dims.flatMap(ad =>
-            ad.d.levelsTo(ad.depth).map(l => col(l.ordinal).asc))
-        val dimsLc = rs.dims.map(_.d.name.toLowerCase).toSet
-        val ovBy = factorEntries.head._2.filter(_.ov.exists(dimsLc))
-        if (ovBy.exists(e => !dimsLc.subsetOf(e.ov)))
-          refuse("a calc member's set overrides PART of a " +
-            "multi-hierarchy CrossJoin factor — split the factor so " +
-            "the overridden hierarchy stands alone")
-        OtherFactor(oi, rs.copy(members = members), keys, sort, depthCol,
-          ovBy.map(_.idx))
-      }
-      // crossjoined factors restrict the fact to THEIR members early
-      // (broadcast semi-join — dimension-sized), so the groupBy
-      // never aggregates tuples the axis won't show. ONE semi-join
-      // PER FACTOR (r18): the combined otherSet frame is the
-      // factors' cross PRODUCT — m×n rows broadcast where m+n
-      // suffice (the per-factor member predicates are independent,
-      // so chained semi-joins filter identically); at two mid-sized
-      // dims the product broadcast is the difference between
-      // kilobytes and a multi-GB build side. A high-card FACTOR
-      // skips ITS semi-join (its stray groups the final join drops,
-      // same opt-out as the rank-frame hint) without costing the
-      // small factors theirs — pre-r18 one high-card factor
-      // disabled every factor's restriction. So does an overridden
-      // factor (an overriding entry reads rows outside its members); a
-      // mixed-depth factor restricts at its shallowest depth, whose
-      // keys every deeper member carries too.
-      val sliced = others.foldLeft(sliced0) { (df, o) =>
-        if (o.frame.dims.exists(_.d.highCardinality) ||
-            o.ovEntries.nonEmpty) df
-        else {
-          val ks = o.frame.dims.flatMap(ad => levelCols(ad.d,
-            if (o.frame.mixedDim.contains(ad.d.name)) o.frame.depthsOf.min
-            else ad.depth))
-          df.join(broadcast(o.frame.members.select(ks.map(col): _*)
-            .distinct()), ks, "left_semi")
-        }
-      }
-      val (aggCols0, post0) =
-        if (routedAt.isEmpty) Agg.toColumnsFused(neededMeasures)
-        else (neededMeasures.map { m =>
-          (m.agg match {
-            case Agg.Sum | Agg.SumExact | Agg.Count => sum(col(m.name))
-            case Agg.Min => min(col(m.name))
-            case Agg.Max => max(col(m.name))
-            case other => throw new IllegalStateException(
-              s"non-decomposable aggregator routed: $other")
-          }).as(m.name)
-        }, neededMeasures.map(m => col(m.name)))
-      // entries are keyed by POSITION, never display name: leaf
-      // captions repeat across parents (a Q1 under every year)
-      // and a duplicated literal member must stay two rows, not
-      // one doubled group.
-      // `storedFree`: a set over the entries' own hierarchy replaces a
-      // STORED entry's coordinate (only the same-dim WHERE items stay);
-      // a calc entry's set stays in its context.
-      def entryPreds(es: Seq[AxisEntry], ovl: Seq[SlicerItem],
-          storedFree: Boolean = false): Seq[Column] =
-        es.map { e =>
-          val own =
-            if (e.isCalc) slicerPredicate(resolveSlicer(ovl ++ e.items))
-            else if (storedFree) slicerPredicate(ovl)
-            else if (ovl.isEmpty) slicerPredicate(e.items)
-            else slicerPredicate(e.items) && slicerPredicate(ovl)
-          val where = sharedOv.filterNot(i =>
-            itemDims(Seq(i)).exists(d => e.ov(d.toLowerCase)))
-          if (where.isEmpty) own else own && slicerPredicate(where)
-        }
-      // the null slots explode through and a plain IS NOT NULL
-      // filter drops them AFTER the generator: the obvious
-      // `filter(arr, isNotNull)` lambda is a higher-order function
-      // Spark CANNOT codegen (CodegenFallback — interpreted per fact
-      // row; measured 2-3x the whole aggregation at sf1), while
-      // explode + WHERE stays inside whole-stage codegen at the
-      // aggregation's own floor
-      def keyArrOf(es: Seq[AxisEntry], preds: Seq[Column]): Column =
-        // an emptied entry list (ops pruned everything) keeps the
-        // array typed with one never-matching element: the explode
-        // yields nothing and the empty entry frame empties the axis
-        if (es.isEmpty) array(when(lit(false), lit(0)))
-        else array(es.zip(preds).map { case (e, p) =>
-          when(p, lit(e.idx)) }: _*)
-      // Key columns an overriding entry nulls on its rows (with the
-      // entries that do), and every key that may hold a null: those,
-      // plus a mixed-depth factor's padded keys and depth marker.
-      val ovOfKey: Map[String, Seq[Int]] = others
-        .filter(_.ovEntries.nonEmpty)
-        .flatMap(o => (o.keys ++ o.depthCol).map(_ -> o.ovEntries)).toMap
-      val nullableKey: Set[String] = ovOfKey.keySet ++ others
-        .filter(_.depthCol.nonEmpty).flatMap(o => o.keys ++ o.depthCol)
-      // left-join a per-entry aggregate back by `keys`: a key an
-      // overriding entry nulls reads as null on that entry's rows of
-      // `left` too, and nullable keys compare null-safely. Plain keys
-      // keep the equi-join on column names.
-      def joinBack(left: DataFrame, right: DataFrame, keys: Seq[String],
-          bcast: Boolean): DataFrame = {
-        def side(df: DataFrame) = if (bcast) broadcast(df) else df
-        if (!keys.exists(nullableKey)) left.join(side(right), keys, "left")
-        else {
-          val r = side(keys.foldLeft(right)((df, k) =>
-            df.withColumnRenamed(k, s"__jb_$k")))
-          val cond = keys.map { k =>
-            val l = ovOfKey.get(k).fold(left(k))(es =>
-              when(left(cf0.entryCol).isin(es: _*), lit(null))
-                .otherwise(left(k)))
-            if (nullableKey(k)) l <=> r(s"__jb_$k") else l === r(s"__jb_$k")
-          }.reduce(_ && _)
-          left.join(r, cond, "left").drop(keys.map(k => s"__jb_$k"): _*)
-        }
-      }
-      // the cell context of calc measures on the fused frame: the
-      // entry key groups, partitions and joins every context-dependent
-      // calc, whose inner aggregate re-reads the scan at entry × kept
-      // × set grain (contextual calcs imply a single calc factor)
-      def ctxOf(es: Seq[AxisEntry]): EntryCtx = EntryCtx(
-        Seq(cf0.entryCol),
-        (kept, set) => {
-          val dims = kept ++ set
-          val preds = entryPreds(es, overlapOf(0),
-            storedFree = set.exists(_.d.name.equalsIgnoreCase(dim)))
-          val scan = joinStar(neededJoins(dims, joinItems), joinItems)
-            .filter(slicerPredicate(sharedRest ++ roleSlicer))
-          val exploded = (if (preds.isEmpty) scan
-            else scan.where(orAll(preds)))
-            .withColumn(cf0.entryCol, explode(keyArrOf(es, preds)))
-            .where(col(cf0.entryCol).isNotNull)
-          val keptKeys = groupCols(kept).toSet
-          val nulled = ovOfKey.filter(kv => keptKeys(kv._1))
-            .foldLeft(exploded) { case (df, (k, ovEs)) =>
-              df.withColumn(k, when(col(cf0.entryCol).isin(ovEs: _*),
-                lit(null)).otherwise(col(k)))
-            }
-          val keys = cf0.entryCol +: groupCols(dims)
-          val (aggCols, post) = Agg.toColumnsFused(neededMeasures)
-          nulled.groupBy(keys.map(col): _*)
-            .agg(aggCols.head, aggCols.tail: _*)
-            .select(keys.map(col) ++ post: _*)
-        },
-        joinBack, qs.measures)
-      // Filter/Order over the calc factor of a CrossJoin evaluates
-      // PRE-crossjoin (FilterFunDef: per member of the set, in the
-      // query context — the other factor's coordinate is NOT set):
-      // a first fused pass at ENTRY grain over the un-semi-joined
-      // scan computes each entry's context cells, the ops prune and
-      // reorder the N-row result, and the surviving ordered entries
-      // drive the main pass. Two scans, both rollup-servable; the
-      // collect is N rows — plan-sized, same convention as the
-      // computed-slicer and role-visibility probes.
-      val preCross = factors.length > 1 || otherFactors.nonEmpty
-      val factorEntries2 =
-        if (!preCross) factorEntries
-        else factorEntries.zipWithIndex.map { case ((f0, es0), k) =>
-          // an entry list emptied BEFORE the pre-pass (a below-ops
-          // positional slice dropped the calc and a role hid every
-          // remaining stored entry): skip the pre-pass — the main
-          // pass's keyArrOf already turns an empty entry list into
-          // an empty axis, and reducing zero predicates would throw
-          if (f0.ops.isEmpty || es0.isEmpty) (f0, es0)
-          else {
-            val s2 = sliced0.sparkSession
-            import s2.implicits._
-            val preds0 = entryPreds(es0, overlapOf(k))
-            val p1 = sliced0.where(orAll(preds0))
-              .withColumn(f0.entryCol, explode(keyArrOf(es0, preds0)))
-              .where(col(f0.entryCol).isNotNull)
-              .groupBy(col(f0.entryCol))
-              .agg(aggCols0.head, aggCols0.tail: _*)
-              .select(col(f0.entryCol) +: post0: _*)
-            val ef = es0.map(e => (e.idx, e.name, e.isCalc))
-              .toDF(f0.entryCol, f0.label, f0.calcCol)
-            val j0 = ef.join(broadcast(p1), Seq(f0.entryCol), "left")
-            val countishP = neededMeasures
-              .filter(m =>
-                m.agg == Agg.Count || m.agg == Agg.DistinctCount)
-              .map(_.name).filter(j0.columns.contains)
-            val j = applyCalcs(
-              countishP.foldLeft(j0)((df, m) => df.withColumn(m,
-                when(col(f0.calcCol) && col(m).isNull, lit(0L))
-                  .otherwise(col(m)))),
-              Nil, qSlicerAll, qs.withSets, Some(ctxOf(es0)))
-            val kept = applyEntryOps(j.withColumn("__pos",
-                (col(f0.entryCol) + 1).cast("long")),
-                f0.ops, f0.dim, f0.label,
-                hierFor(f0).map(_.copy(entryCol = f0.entryCol)))
-              .orderBy(col("__pos").asc)
-              .select(col(f0.entryCol)).collect().map(_.getInt(0))
-            val byIdx = es0.map(e => e.idx -> e).toMap
-            val reindexed = kept.toSeq.zipWithIndex.map {
-              case (old, i) => byIdx(old).copy(idx = i)
-            }
-            (f0, reindexed)
-          }
-        }
-      // ops with other factors were consumed by the pre-pass above
-      val opsDownstream =
-        if (!preCross) entryOps else Vector.empty[EntryOp]
-      // With several calc factors the explodes CHAIN — a row
-      // multiplies into every (e1, .., eK) combination it satisfies
-      // — and one groupBy aggregates the whole entry cross product,
-      // still in the same single scan.
-      val entryCols = factors.map(_.entryCol)
-      val factorPreds: Seq[Seq[Column]] =
-        factorEntries2.zipWithIndex.map { case ((_, es), k) =>
-          entryPreds(es, overlapOf(k)) }
-      // rows matching NO entry of some factor never form a tuple:
-      // the any-match disjunction filters them BEFORE the first
-      // explode — a plain codegen'd predicate Catalyst pushes toward
-      // the scan, which for a selective entry set (two nations of a
-      // 25-nation dim) prunes the fact before any row multiplies
-      val pruned = factorPreds.filter(_.nonEmpty)
-        .foldLeft(sliced)((df, ps) => df.where(orAll(ps)))
-      val labeled = factorEntries2.zip(factorPreds).foldLeft(pruned) {
-        case (df, ((f, es), preds)) =>
-          df.withColumn(f.entryCol, explode(keyArrOf(es, preds)))
-            .where(col(f.entryCol).isNotNull)
-      }
-      // a mixed-depth factor gives each row one key tuple per depth
-      // present (deeper levels null, the depth marker set — the
-      // grouping sets of mixedCells, as an explode); an entry
-      // overriding a factor groups with that factor's keys null
-      val keyed = others.foldLeft(labeled) { (df, o) =>
-        val isOv = col(cf0.entryCol).isin(o.ovEntries: _*)
-        o.depthCol match {
-          case Some(dc) =>
-            val levels = o.frame.dims
-              .filter(ad => o.frame.mixedDim.contains(ad.d.name))
-              .flatMap(ad => levelCols(ad.d, ad.depth))
-            def tuple(dep: Option[Int]): Column = struct(
-              (dep.fold(lit(null).cast("int"))(lit(_)).as(dc) +:
-                o.keys.map { k =>
-                  (if (dep.exists(levels.indexOf(k) <= _)) col(k)
-                   else lit(null).cast(df.schema(k).dataType)).as(k)
-                }): _*)
-            val perDepth = array(o.frame.depthsOf.distinct.sorted
-              .map(dep => tuple(Some(dep))): _*)
-            val arr =
-              if (o.ovEntries.isEmpty) perDepth
-              else when(isOv, array(tuple(None))).otherwise(perDepth)
-            (o.keys :+ dc).foldLeft(df.withColumn("__mx", explode(arr)))(
-              (x, k) => x.withColumn(k, col("__mx").getField(k)))
-              .drop("__mx")
-          case None if o.ovEntries.nonEmpty =>
-            o.keys.foldLeft(df)((x, k) =>
-              x.withColumn(k, when(isOv, lit(null)).otherwise(col(k))))
-          case None => df
-        }
-      }
-      // NECJ tuple existence = at least one fact row in the group —
-      // a count over the SAME single scan, no second pass, WHEN the
-      // NECJ spans the whole axis (the common shape: one group, all
-      // factors in it — support grain == group grain). Over a
-      // routed rollup the count is of ROLLUP rows — existence-
-      // equivalent (a rollup row exists iff fact rows did). An NECJ
-      // nested under an outer CrossJoin evaluates support at its
-      // OWN factors' grain instead — see the support pass below.
-      val necjFullGrain = necjTuples &&
-        necjGroupN == 1 && factorGroup.forall(_ == 0)
-      val aggCols =
-        if (!necjFullGrain) aggCols0
-        else aggCols0 :+ count(lit(1L)).as("__nrows")
-      val post =
-        if (!necjFullGrain) post0 else post0 :+ col("__nrows")
-      val frameKeys = entryCols ++ otherKeys ++ others.flatMap(_.depthCol)
-      val agged = keyed
-        .groupBy(frameKeys.map(col): _*)
-        .agg(aggCols.head, aggCols.tail: _*)
-        .select(frameKeys.map(col) ++ post: _*)
-      // a member (tuple) with no satisfying fact rows keeps its axis
-      // row. A CALC entry's count-aggregated cells coalesce to 0
-      // there (Aggregate over an empty set COUNTS zero); stored
-      // entries stay null like any axis member outside the slicer.
-      val s = sliced.sparkSession
-      import s.implicits._
-      // the N-row entry frames are the broadcast sides of the axis
-      // cross product, whatever the other factor's size
-      val entryFrames = factorEntries2.map { case (f, es) =>
-        es.map(e => (e.idx, e.name, e.isCalc))
-          .toDF(f.entryCol, f.label, f.calcCol)
-      }
-      val frame = others.map(_.frame.members) match {
-        case Seq() => entryFrames.tail.foldLeft(entryFrames.head)(
-          (acc, ef) => acc.crossJoin(broadcast(ef)))
-        case oms => entryFrames.foldLeft(oms.reduce(_ crossJoin _))(
-          (acc, ef) => acc.crossJoin(broadcast(ef)))
-      }
-      val joined0 = joinBack(frame, agged, frameKeys, bcast = !otherHighCard)
-      val countish = neededMeasures
-        .filter(m => m.agg == Agg.Count || m.agg == Agg.DistinctCount)
-        .map(_.name).filter(joined0.columns.contains)
-      // a tuple is "calc" when ANY factor coordinate is a calc
-      // member — Aggregate over an empty set COUNTS zero there
-      val calcAny = factors.map(f => col(f.calcCol)).reduce(_ || _)
-      // calc measures in solve order, after the count coalesce (an
-      // expression over a count sees the calc entry's 0)
-      val joined = applyCalcs(
-        countish.foldLeft(joined0) { (df, m) =>
-          df.withColumn(m,
-            when(calcAny && col(m).isNull, lit(0L))
-              .otherwise(col(m)))
-        }, otherDims, qSlicerAll, qs.withSets,
-        Some(ctxOf(factorEntries2.head._2)))
-      // NECJ drops axis tuples without fact support (the left join
-      // leaves __nrows null there); plain CrossJoin keeps them with
-      // null/zero cells. When the NECJ is NESTED under an outer
-      // CrossJoin, support is evaluated at the NECJ's own grain —
-      // its factors' entry/key columns only, from the scan BEFORE
-      // the outer factors' member restriction (the NECJ context has
-      // no outer-factor coordinate; Mondrian keeps unsupported
-      // outer combinations as null-cell rows) — one small
-      // distinct-support pass per NECJ group, semi-joined in.
-      val tupled =
-        if (!necjTuples) joined
-        else if (necjFullGrain)
-          joined.filter(col("__nrows") >= 1).drop("__nrows")
-        else (0 until necjGroupN).foldLeft(joined) { (df, g) =>
-          val gCalcKs = factors.indices
-            .filter(k => factorGroup(calcIdxs(k)) == g)
-          val gOtherCols =
-            others.filter(o => factorGroup(o.idx) == g).flatMap(_.keys)
-          val supBase = gCalcKs.map(k => factorPreds(k))
-            .filter(_.nonEmpty)
-            .foldLeft(sliced0)((d, ps) => d.where(orAll(ps)))
-          val supLabeled = gCalcKs.foldLeft(supBase) { (d, k) =>
-            val (f, es) = factorEntries2(k)
-            d.withColumn(f.entryCol,
-                explode(keyArrOf(es, factorPreds(k))))
-              .where(col(f.entryCol).isNotNull)
-          }
-          val gCols =
-            gCalcKs.map(k => factors(k).entryCol) ++ gOtherCols
-          df.join(supLabeled.select(gCols.map(col): _*).distinct(),
-            gCols, "left_semi")
-        }
-      // evaluate-then-prune: Filter/Order/slice ops run on the N
-      // aggregated entry rows (never the fact), positions seeded
-      // from the literal order (ops with other factors ran in the
-      // pre-crossjoin pass instead)
-      val posed =
-        if (opsDownstream.isEmpty) tupled
-        else applyEntryOps(
-          tupled.withColumn("__pos", (col("__entry") + 1).cast("long")),
-          opsDownstream, dim, label,
-          entryHier.map(_.copy(entryCol = cf0.entryCol)))
-      // sort keys and axis columns in factor-position order: a calc
-      // factor sorts by its entry position (post-op __pos when ops
-      // ran downstream — single-factor shape, nothing to interleave),
-      // a stored factor by its own __oord / level ordinals
-      val axisSort: Seq[Column] = rowsFactors.indices.flatMap { fi =>
-        val k = calcIdxs.indexOf(fi)
-        if (k < 0) others.find(_.idx == fi).get.sort
-        else if (k == 0 && opsDownstream.nonEmpty) Seq(col("__pos").asc)
-        else Seq(col(factors(k).entryCol).asc)
-      }
-      val axisCols: Seq[String] = rowsFactors.indices.flatMap { fi =>
-        val k = calcIdxs.indexOf(fi)
-        if (k < 0) others.find(_.idx == fi).get.keys
-        else Seq(factors(k).label)
-      }
-      val out = posed.orderBy(axisSort: _*)
-        .select((axisCols ++ qs.measures).map(col): _*)
-      return if (!qs.nonEmpty) out
-        else out.filter(
-          qs.measures.map(col(_).isNotNull).reduce(_ || _))
-    }
-    val q = qs
-    pruneFor(q)
-    q.rows match {
-      case None =>
-        val cells = aggregate(Nil, q.slicer)
-        val withCalcs = applyCalcs(cells, Nil, q.slicer, q.withSets)
-        withCalcs.select(q.measures.map(col): _*)
-      case Some(set) =>
-        val axis = evalSet(set, q.slicer, q.withSets)
-        val joined = joinCells(axis, q.slicer)
-        val withCalcs = applyCalcs(joined, axis.dims, q.slicer, q.withSets)
-        val pruned =
-          if (!q.nonEmpty) withCalcs
-          else {
-            // NON EMPTY drops rows empty in every DISPLAYED column
-            // (q.measures), not in dependency-only measures (ADVICE r1)
-            val shown = q.measures.filter(withCalcs.columns.contains)
-            val basis = if (shown.nonEmpty) shown
-                        else neededMeasures.map(_.name)
-            val anyData = basis.map(col(_).isNotNull).reduce(_ || _)
-            withCalcs.filter(anyData)
-          }
-        val sortCols: Seq[Column] =
-          if (axis.hasOrd) Seq(col(OrdCol).asc)
-          else axis.dims.flatMap(ad =>
-            ad.d.levelsTo(ad.depth).map(l => col(l.ordinal).asc))
-        val out = axis.dims.flatMap(ad => levelCols(ad.d, ad.depth)) ++
-          q.measures
-        pruned.orderBy(sortCols: _*).select(out.map(col): _*)
     }
   }
+
+  /** NON EMPTY drops rows empty in every DISPLAYED column (q.measures),
+    * not in dependency-only measures (ADVICE r1).
+    */
+  private[olap] def nonEmptyRows(q: QueryIR, df: DataFrame): DataFrame =
+    if (!q.nonEmpty) df
+    else {
+      val shown = q.measures.filter(df.columns.contains)
+      val basis = if (shown.nonEmpty) shown else neededMeasures.map(_.name)
+      df.filter(basis.map(col(_).isNotNull).reduce(_ || _))
+    }
 
   /** Calc-member layer in solve order: Expr calcs are plain column
     * expressions; Window calcs lower to Spark Window functions over the
@@ -2762,7 +1985,7 @@ final class Planner(val cube: BoundCube) {
     * With `ctx`, `df` is a fused dim-calc frame and every calc is
     * evaluated per axis entry.
     */
-  private def applyCalcs(df: DataFrame,
+  private[olap] def applyCalcs(df: DataFrame,
       axisDims: Seq[AxisDim],
       slicer: Seq[SlicerItem],
       withSets: Map[String, SetExpr],
@@ -2959,10 +2182,7 @@ final class Planner(val cube: BoundCube) {
     val moments = lrMoments.getOrElseUpdate(
       (lrc.set, lrc.yExpr + lrc.rankSet.fold("")("#" + _), lrc.xExpr,
         keptKeys, slicer, withSets, ctx), {
-    val ordBy =
-      if (frame.hasOrd) Seq(col(OrdCol).asc)
-      else frame.dims.flatMap(fd =>
-        fd.d.levelsTo(fd.depth).map(l => col(l.ordinal).asc))
+    val ordBy = axisSort(frame)
     val mCols = frame.dims.flatMap(fd => memberCols(fd.d, fd.depth)) ++
       (if (frame.hasOrd) Seq(OrdCol) else Nil)
     // series position through Ords: a single window for
@@ -2999,10 +2219,7 @@ final class Planner(val cube: BoundCube) {
         if (rKeys != setKeys)
           series0.withColumn("__lr_xrank", lit(0))
         else {
-          val rOrd =
-            if (rf.hasOrd) Seq(col(OrdCol).asc)
-            else rf.dims.flatMap(fd =>
-              fd.d.levelsTo(fd.depth).map(l => col(l.ordinal).asc))
+          val rOrd = axisSort(rf)
           val rCols = rf.dims.flatMap(fd =>
             memberCols(fd.d, fd.depth)) ++
             (if (rf.hasOrd) Seq(OrdCol) else Nil)
@@ -3138,16 +2355,17 @@ final class Planner(val cube: BoundCube) {
     * instead of evicted — the streaming-maintenance analog of the
     * reference's segment update after fact inserts. The rows are not
     * aggregated here: the merge folds them into the segment with one
-    * union re-aggregate, so each merge costs one exchange. None when
-    * the segment holds a non-decomposable measure (avg, distinct
-    * count, stats): those must recompute. Min/Max merge is insert-only
+    * union re-aggregate by each measure's [[Agg.partialMerge]], so each
+    * merge costs one exchange. None when the segment holds a
+    * non-decomposable measure (avg, distinct count, stats): those must
+    * recompute. Min/Max merge is insert-only
     * (a delete could shift them) — deletes should evict.
     */
   def deltaSegment(grain: Seq[String], slicer: Seq[SlicerItem],
       measureNames: Seq[String], delta: DataFrame): Option[DataFrame] = {
     val ms = measureNames.flatMap(n => cube.measures.find(_.name == n))
     if (ms.length != measureNames.length) return None
-    if (!ms.forall(m => Planner.mergeFnOf(m.agg).isDefined)) return None
+    if (!ms.forall(m => Agg.partialMerge(m.agg).isDefined)) return None
     axisDimsForGrain(grain).map { axisDims =>
       val p2 = new Planner(
         cube.copy(fact = delta, factPruner = None, aggTables = Nil))
@@ -3158,9 +2376,10 @@ final class Planner(val cube: BoundCube) {
   }
 
   /** Merge plan for a segment's measures: measure → partial-merge fn. */
-  def mergePlanFor(measureNames: Seq[String]): Seq[(String, String)] =
+  def mergePlanFor(measureNames: Seq[String])
+      : Seq[(String, Column => Column)] =
     measureNames.flatMap(n => cube.measures.find(_.name == n)
-      .flatMap(m => Planner.mergeFnOf(m.agg)).map(n -> _))
+      .flatMap(m => Agg.partialMerge(m.agg)).map(n -> _))
 
   // --------------------------------------------------------- drill-through
 
@@ -3264,6 +2483,15 @@ object Planner {
 
   final case class AxisDim(d: BoundDim, depth: Int)
 
+  /** An axis frame's presentation order: its explicit order column
+    * (`ordCol`, for a caller that renamed [[OrdCol]]) when it has one,
+    * else every dim's level ordinals root-first.
+    */
+  def axisSort(a: AxisFrame, ordCol: String = OrdCol): Seq[Column] =
+    if (a.hasOrd) Seq(col(ordCol).asc)
+    else a.dims.flatMap(ad =>
+      ad.d.levelsTo(ad.depth).map(l => col(l.ordinal).asc))
+
   /** The per-entry cell context of a fused dim-calc frame (one row per
     * axis entry × other-factor tuple): `cols` are the entry key columns
     * a context-dependent calc also groups, partitions and joins by;
@@ -3277,16 +2505,6 @@ object Planner {
       cells: (Seq[AxisDim], Seq[AxisDim]) => DataFrame,
       join: (DataFrame, DataFrame, Seq[String], Boolean) => DataFrame,
       shown: Seq[String])
-
-  /** Partial-merge function per aggregator for insert-delta segment
-    * merge; None = non-decomposable (must recompute).
-    */
-  def mergeFnOf(agg: Agg): Option[String] = agg match {
-    case Agg.Sum | Agg.SumExact | Agg.Count => Some("sum")
-    case Agg.Min => Some("min")
-    case Agg.Max => Some("max")
-    case _ => None
-  }
 
   /** One fact row's partial of a decomposable measure, in the form its
     * merge fn folds: SumExact's DECIMAL(38,10) cast, Count's 0/1, and
@@ -3338,6 +2556,16 @@ object Planner {
       orAll(l) || orAll(r)
     }
   }
+
+  /** `df` grouped on `keys` (none: one grand-total row), aggregated by
+    * `aggCols` and projected to the keys plus the measures' `post`
+    * columns ([[Agg.toColumnsFused]]).
+    */
+  def aggregateAt(df: DataFrame, keys: Seq[String], aggCols: Seq[Column],
+      post: Seq[Column]): DataFrame =
+    df.groupBy(keys.map(col): _*)
+      .agg(aggCols.head, aggCols.tail: _*)
+      .select(keys.map(col) ++ post: _*)
 
   def groupCols(dims: Seq[AxisDim]): Seq[String] =
     dims.flatMap(ad => levelCols(ad.d, ad.depth))

@@ -377,84 +377,11 @@ object DedupOps {
     */
   private def cut(df: DataFrame): DataFrame = graft.olap.Pins.rawCut(df)
 
-  /** Connected components over an undirected edge list — min-label
-    * propagation: every node starts as its own cluster and repeatedly
-    * takes the minimum label in its neighborhood until a fixpoint.
-    * Deterministic (labels are min doc_ids), so oracle-reproducible
-    * against a recursive-CTE transitive closure.
-    *
-    * Scale design: each round is one shuffle join (edges ⋈ labels on
-    * the dst key) plus one map-side-combining min aggregation — the
-    * textbook distributed CC inner loop. Rounds = graph diameter;
-    * near-dup graphs are dense blobs with tiny diameters (a chain of
-    * borderline-similar documents is the pathological case, bounded by
-    * `maxIters`; corpora with genuinely deep chains would switch to
-    * the large-star/small-star doubling variant, which reuses exactly
-    * this join+min round shape). The per-round `changed` count is a
-    * driver-side convergence test like the k-means model collect —
-    * O(1) rows, not data.
-    */
-  def components(edges: DataFrame, nodes: DataFrame,
-      maxIters: Int = 20): DataFrame = {
-    val sym = edges.select(col("doc_a").as("src"), col("doc_b").as("dst"))
-      .union(edges.select(col("doc_b").as("src"),
-        col("doc_a").as("dst")))
-      .persist()
-    var labels = nodes.select(col("doc_id"),
-      col("doc_id").as("cluster_id"))
-    var changed = 1L
-    var it = 0
-    while (changed > 0 && it < maxIters) {
-      val nbrMin = sym
-        .join(labels.select(col("doc_id").as("dst"),
-          col("cluster_id").as("nbr")), "dst")
-        .groupBy(col("src"))
-        .agg(min("nbr").as("nbr_min"))
-      // localCheckpoint, not persist: `next` references `labels` TWICE
-      // (neighbor-min join + the update join), so an un-truncated
-      // logical plan doubles each round — exponential plan text that
-      // OOMs the driver rendering it long before the data matters.
-      // The eager checkpoint cuts lineage to the materialized RDD;
-      // superseded round RDDs are freed by the ContextCleaner once
-      // unreferenced.
-      val next = labels
-        .join(nbrMin.withColumnRenamed("src", "doc_id"),
-          Seq("doc_id"), "left")
-        .select(col("doc_id"),
-          least(col("cluster_id"),
-            coalesce(col("nbr_min"), col("cluster_id")))
-            .as("cluster_id"))
-        .transform(cut)
-      changed = next
-        .join(labels.select(col("doc_id"),
-          col("cluster_id").as("old")), "doc_id")
-        .filter(col("cluster_id") =!= col("old")).count()
-      // the changed-count consumed both frames; the superseded round's
-      // checkpoint blocks are dead now (round 0's `labels` is the
-      // caller's plain projection — not ours to free)
-      if (it > 0) graft.olap.Pins.freeCut(labels)
-      labels = next
-      it += 1
-    }
-    sym.unpersist(blocking = false)
-    // a silent non-converged return would hand back WRONG clusters
-    // (a >maxIters-diameter chain split mid-propagation); fail loudly
-    if (changed > 0) {
-      graft.olap.Pins.freeCut(labels)
-      throw new IllegalStateException(
-        s"components() did not converge in $maxIters rounds " +
-          s"($changed labels still changing) — raise maxIters or use " +
-          "[[componentsStar]] for deep-chain graphs")
-    }
-    // checkpointed: materialized, lineage-free; released at the
-    // consuming query's scope exit
-    graft.olap.Pins.adopt(labels)
-  }
-
   /** Connected components by alternating large-star / small-star
     * rounds (Kiveris et al. 2014, "Connected Components in MapReduce
-    * and Beyond") — the deep-chain-safe variant [[components]]'
-    * scaladoc points to: each round contracts paths toward component
+    * and Beyond") over an ALREADY canonical (u, v) edge frame
+    * (self-loops removed, deduped — [[componentsAuto]] has paid that
+    * normalize shuffle). Each round contracts paths toward component
     * minima, converging in O(log n) rounds on ANY topology, where
     * min-label propagation needs diameter rounds (a 1000-link chain of
     * borderline near-dups costs ~10 rounds here vs 1000 there).
@@ -465,21 +392,9 @@ object DedupOps {
     * against that (node, min) table, so a hub node whose neighborhood
     * is the whole component never materializes a giant array.
     * Convergence is detected on a one-row (count, hash-sum) signature
-    * of the canonical edge set — O(1) driver data per round.
-    */
-  def componentsStar(edges: DataFrame, nodes: DataFrame,
-      maxRounds: Int = 30): DataFrame =
-    componentsStarCanonical(
-      edges.select(col("doc_a").as("u"), col("doc_b").as("v"))
-        .filter(col("u") =!= col("v")).distinct(),
-      nodes, maxRounds)
-
-  /** [[componentsStar]] over an ALREADY canonical (u, v) edge frame
-    * (self-loops removed, deduped) — skips the normalize
-    * filter+distinct shuffle that [[componentsAuto]]'s routing has
-    * already paid on the same frame. The one checkpoint here is still
-    * required: the loop's per-round freeCut discipline assumes `e` is
-    * a cut it owns.
+    * of the canonical edge set — O(1) driver data per round. The one
+    * checkpoint here is required: the loop's per-round freeCut
+    * discipline assumes `e` is a cut it owns.
     */
   private def componentsStarCanonical(e0: DataFrame, nodes: DataFrame,
       maxRounds: Int): DataFrame = {
@@ -545,7 +460,7 @@ object DedupOps {
     if (!converged) {
       graft.olap.Pins.freeCut(e)
       throw new IllegalStateException(
-        s"componentsStar did not converge in $maxRounds rounds")
+        s"star components did not converge in $maxRounds rounds")
     }
     // fixpoint: every edge points a node at its component minimum;
     // uncovered nodes are their own singleton component
@@ -567,10 +482,11 @@ object DedupOps {
     * distributed star rounds (each ~4 exchanges + a signature action)
     * — the same bounded-driver-model trade as the k-means centroid and
     * bloom-bytes collects. Above `driverEdgeLimit` (default 2M edges ≈
-    * 32 MB of longs) it falls through to [[componentsStar]], the
+    * 32 MB of longs; 0 forces it) it falls through to the distributed
+    * large-star/small-star rounds ([[componentsStarCanonical]]), the
     * O(log n)-round any-topology variant — the 100 TB path. Labels are
     * identical by construction (component-minimum doc_id both ways;
-    * spec-pinned against both variants and a reference union-find).
+    * spec-pinned against each other and a reference union-find).
     */
   def componentsAuto(edges: DataFrame, nodes: DataFrame,
       maxRounds: Int = 30, driverEdgeLimit: Long = 2000000L): DataFrame = {

@@ -631,6 +631,39 @@ class CacheSpec extends SparkSpec {
     assert(viaAgg.toSeq === direct.toSeq)
   }
 
+  test("agg router merges Count, Min and Max partials for an ordinary " +
+      "axis and a fused dim-calc crossjoin") {
+    val base = Cubes.sales(spark, Sf)
+    val ms = Seq("count_order", "min_price", "max_price")
+    val at = new Planner(base).buildAggTable("nation_year_cmm",
+      Seq(("customer", "nation"), ("time", "year")), ms)
+    val routed = base.withAggTables(at)
+    def ordinary(c: BoundCube) = Query.from(c).columns(ms: _*)
+      .rows(LevelMembers("customer", "region"))
+      .where(MemberSlice("time", Seq(1995)))
+      .execute().collect()
+    def fused(c: BoundCube) = Mdx.execute(
+      """WITH MEMBER [customer].[EU13 and AS2] AS
+        |  'Aggregate({[customer].[EUROPE].[NATION_13],
+        |              [customer].[ASIA].[NATION_2]})'
+        |SELECT {[Measures].[count_order], [Measures].[min_price],
+        |        [Measures].[max_price]} ON COLUMNS,
+        |  CROSSJOIN({[customer].[AMERICA], [customer].[EU13 and AS2]},
+        |            {[time].[1995], [time].[1996]}) ON ROWS
+        |FROM [Sales]""".stripMargin, c).collect()
+    Seq("ordinary" -> (ordinary _), "fused" -> (fused _)).foreach {
+      case (what, run) =>
+        AggRouter.lastHit = None
+        val viaAgg = run(routed)
+        assert(AggRouter.lastHit === Some("nation_year_cmm"),
+          s"the $what axis must be served from the rollup, not the fact")
+        assert(viaAgg.nonEmpty && viaAgg.forall(r => !r.anyNull), what)
+        SegmentCache.enabled = false
+        val direct = try run(base) finally SegmentCache.enabled = true
+        assert(viaAgg.toSeq === direct.toSeq, what)
+    }
+  }
+
   test("declared AggPattern matches physical rollups, applies excludes, and routes") {
     val base = Cubes.sales(spark, Sf)
     // simulate PRE-EXISTING physical rollup tables (an external build

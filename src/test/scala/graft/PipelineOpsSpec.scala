@@ -709,7 +709,7 @@ class PipelineOpsSpec extends SparkSpec {
     assert(got.values.groupBy(identity).exists(_._2.size >= 2))
   }
 
-  test("componentsStar equals union-find on random graphs") {
+  test("star components equal union-find on random graphs") {
     import spark.implicits._
     import org.scalacheck.Gen
     import org.scalacheck.rng.Seed
@@ -726,7 +726,9 @@ class PipelineOpsSpec extends SparkSpec {
       val (n, es) = gen.apply(params, Seed(1000L + i)).get
       val edges = es.toDF("doc_a", "doc_b")
       val nodes = (0L until n).toDF("doc_id")
-      val rows = DedupOps.componentsStar(edges, nodes).collect()
+      // driverEdgeLimit = 0 forces the distributed star rounds
+      val rows = DedupOps.componentsAuto(edges, nodes,
+        driverEdgeLimit = 0L).collect()
       assert(rows.length === n.toInt,
         s"case $i: one label row per node, got ${rows.length} for $n")
       val got = rows.map(r => (r.getLong(0), r.getLong(1))).toMap
@@ -1193,21 +1195,33 @@ class PipelineOpsSpec extends SparkSpec {
     assert(df(1L) !== df(3L)) // different set -> (a.s.) different
   }
 
-  test("componentsStar matches min-label components and union-find") {
+  test("star components match union-find on near-dup pairs and a deep chain") {
     import spark.implicits._
     val pairs = DedupOps.minhashLsh(docs, 4, 2, 0.5)
       .select("doc_a", "doc_b")
     val nodes = docs.select("doc_id")
-    val minLabel = DedupOps.components(pairs, nodes).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toMap
-    val star = DedupOps.componentsStar(pairs, nodes).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toMap
-    assert(star === minLabel)
+    val star = DedupOps.componentsAuto(pairs, nodes, driverEdgeLimit = 0L)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
+    // an independent driver union-find over the same pairs
+    val parent = scala.collection.mutable.Map[Long, Long]()
+    def find(x: Long): Long = {
+      val p = parent.getOrElse(x, x)
+      if (p == x) x else { val r = find(p); parent(x) = r; r }
+    }
+    pairs.as[(Long, Long)].collect().foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    val ids = nodes.as[Long].collect()
+    assert(star === ids.map(id => id -> find(id)).toMap)
+    assert(star.values.toSet.size < ids.length,
+      "the near-dup pairs must merge at least one cluster")
     // the deep-chain case the star rounds exist for: an 80-link path
     // needs 80 min-label rounds but converges here in O(log n)
     val chain = (0L until 80L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
     val chainNodes = (0L to 80L).toDF("doc_id")
-    val got = DedupOps.componentsStar(chain, chainNodes, maxRounds = 12)
+    val got = DedupOps.componentsAuto(chain, chainNodes, maxRounds = 12,
+        driverEdgeLimit = 0L)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
     assert(got.size === 81)
     assert(got.values.forall(_ == 0L),
