@@ -36,7 +36,7 @@ private[olap] final class FusedAxis private (p: Planner,
 
   private def refuse(why: String): Nothing = throw new IllegalArgumentException(
     "calculated member(s) " +
-      dcl.calcNames(qs.rows.get, Set.empty).distinct
+      dcl.calcNames(qs.rows.get).distinct
         .mkString("[", "], [", "]") +
       s" in an unsupported axis set shape ($why): a dim-hosted " +
       "Aggregate member is supported in a literal member set — " +
@@ -50,7 +50,7 @@ private[olap] final class FusedAxis private (p: Planner,
   // ------------------------------------------------------- entry lists
 
   private val calcIdxs = rowsFactors.indices
-    .filter(i => dcl.hasCalcPath(rowsFactors(i), Set.empty))
+    .filter(i => dcl.hasCalcPath(rowsFactors(i)))
   private val otherIdxs = rowsFactors.indices.filterNot(calcIdxs.contains)
   private val qSlicer = p.resolveSlicer(qs.slicer, qs.withSets)
   // every calc-bearing factor flattens to ONE entry list (several
@@ -73,17 +73,6 @@ private[olap] final class FusedAxis private (p: Planner,
   if (factors.map(_.dim.toLowerCase).distinct.length < factors.length)
     refuse("two calc-bearing factors on the same hierarchy")
   private val cf0 = factors.head
-  // the other factors' combined frame pins the extra tuple coordinates;
-  // plan-building only (its members are never read)
-  private val otherFrame0 = otherIdxs.map(rowsFactors)
-    .reduceRightOption(CrossJoin(_, _))
-    .map(s => p.evalSet(s, qSlicer, qs.withSets))
-  private val otherDims = otherFrame0.map(_.dims).getOrElse(Nil)
-  factors.foreach { f =>
-    if (otherDims.exists(_.d.name.equalsIgnoreCase(f.dim)))
-      refuse("the calc member's own hierarchy appears in another " +
-        "CrossJoin factor")
-  }
   // a calc set constraining a dimension ANOTHER factor enumerates
   // executes through MDX context override (AggregateFunDef evaluates
   // each set member via Evaluator.setContext, which REPLACES the
@@ -95,19 +84,11 @@ private[olap] final class FusedAxis private (p: Planner,
   // hierarchy still refuses (the override would have to rewrite that
   // factor's own entry predicates — no Mondrian precedent to pin the
   // combination against).
-  private def itemDims(items: Seq[SlicerItem]): Set[String] = items.flatMap {
-    case MemberSlice(d, _) => Seq(d)
-    case SetSlice(d, _)    => Seq(d)
-    case ExprSlice(_, ds)  => ds
-    case EvalSlice(set) =>
-      p.evalSet(set, Nil, qs.withSets).dims.map(_.d.name)
-  }.toSet
   private val constrainedOf: Map[String, Set[String]] = factors.map { f =>
     f.dim -> f.paths.flatMap(path => dcl.of(f.dim, path).toSeq).flatMap {
-      case (cm, dc) => itemDims(dcl.sliceOf(cm, dc))
+      case (cm, dc) => dcl.dimsOf(dcl.sliceOf(cm, dc))
     }.toSet
   }.toMap
-  private val otherDimsLc = otherDims.map(_.d.name.toLowerCase).toSet
   factors.foreach { f =>
     val calcEnum = factors.filterNot(_ eq f).map(_.dim)
     val clash = calcEnum.filter(d => constrainedOf(f.dim)
@@ -117,6 +98,19 @@ private[olap] final class FusedAxis private (p: Planner,
         ", a hierarchy another CALC factor enumerates")
   }
   p.pruneFor(qs)
+  // the calc-free factors' member frames, evaluated once with the
+  // statement's measures; they pin the extra tuple coordinates
+  private val otherFrames: Seq[AxisFrame] = otherIdxs.map(oi =>
+    p.evalSet(rowsFactors(oi), qSlicer, qs.withSets))
+  require(otherFrames.count(_.mixedDim.isDefined) <= 1,
+    "CrossJoin of two mixed-depth sets is not supported")
+  private val otherDims = otherFrames.flatMap(_.dims)
+  factors.foreach { f =>
+    if (otherDims.exists(_.d.name.equalsIgnoreCase(f.dim)))
+      refuse("the calc member's own hierarchy appears in another " +
+        "CrossJoin factor")
+  }
+  private val otherDimsLc = otherDims.map(_.d.name.toLowerCase).toSet
   // a context-dependent calc (window/SetAgg/LinReg, or an expression
   // reading a CurrentMember macro), a context override or a mixed-depth
   // factor is evaluated against ONE calc factor's entries at the full
@@ -130,7 +124,7 @@ private[olap] final class FusedAxis private (p: Planner,
     })
     val hasOverride = factors.exists(f =>
       constrainedOf(f.dim).exists(d => otherDimsLc(d.toLowerCase)))
-    val mixedOther = otherFrame0.exists(of =>
+    val mixedOther = otherFrames.exists(of =>
       of.mixedDim.nonEmpty || of.mixedDepths.nonEmpty)
     if (contextual || hasOverride || mixedOther) {
       val why = "alongside context-dependent (window/set-aggregating) " +
@@ -158,7 +152,7 @@ private[olap] final class FusedAxis private (p: Planner,
           val items = dcl.sliceOf(cm, dc)
           AxisEntry(i, cm.name, isCalc = true,
             p.resolveSlicer(items, qs.withSets),
-            itemDims(items).map(_.toLowerCase).intersect(otherDimsLc))
+            dcl.dimsOf(items).map(_.toLowerCase).intersect(otherDimsLc))
         case None =>
           AxisEntry(i, path.last.toString, isCalc = false,
             Seq(MemberSlice(f.dim, path)))
@@ -219,13 +213,8 @@ private[olap] final class FusedAxis private (p: Planner,
   // filter globally and push to the scan. With several calc factors, each
   // overlap item folds into exactly ONE factor's entry predicates (its
   // effect reaches every tuple through that factor's explode key).
-  private def itemDim(i: SlicerItem): Option[String] = i match {
-    case MemberSlice(d, _) => Some(d)
-    case SetSlice(d, _)    => Some(d)
-    case _                 => None
-  }
   private val factorItemDims: Seq[Set[String]] = factorEntries.map {
-    case (_, es) => es.flatMap(_.items).flatMap(itemDim).toSet
+    case (_, es) => es.flatMap(_.items).flatMap(_.memberDim).toSet
   }
   // a WHERE item on a hierarchy some entry overrides neither folds into
   // a calc entry nor filters the scan globally: it ANDs into every
@@ -233,17 +222,17 @@ private[olap] final class FusedAxis private (p: Planner,
   private val (sharedOv, sliceRest) = {
     val ovDimsAll = factorEntries.flatMap(_._2.flatMap(_.ov)).toSet
     qSlicer.partition(i =>
-      itemDims(Seq(i)).exists(d => ovDimsAll(d.toLowerCase)))
+      dcl.dimsOf(Seq(i)).exists(d => ovDimsAll(d.toLowerCase)))
   }
   private val (overlap, sharedRest) = sliceRest.partition(i =>
-    itemDim(i).exists(d => factorItemDims.exists(_.contains(d))))
+    i.memberDim.exists(d => factorItemDims.exists(_.contains(d))))
   overlap.foreach { i =>
-    if (factorItemDims.count(s => itemDim(i).exists(s)) > 1)
+    if (factorItemDims.count(s => i.memberDim.exists(s)) > 1)
       refuse("a WHERE item on a dimension constrained by calc " +
         "members of more than one CrossJoin factor")
   }
   private def overlapOf(k: Int): Seq[SlicerItem] =
-    overlap.filter(i => itemDim(i).exists(factorItemDims(k)))
+    overlap.filter(i => i.memberDim.exists(factorItemDims(k)))
   // the grant/deny slicer (Partial rollup policy) ANDs into the scan
   // GLOBALLY — for every entry, calc or stored — never into the
   // per-entry compound OR (a grant OR-folded into a calc set would WIDEN
@@ -283,21 +272,21 @@ private[olap] final class FusedAxis private (p: Planner,
   // renames its own __ord to __oord<i> and a mixed-depth frame's depth
   // marker to `depthCol`; `ovEntries` are the entries overriding the
   // factor.
-  private val others: Seq[OtherFactor] = otherIdxs.map { oi =>
-    val rs = p.evalSet(rowsFactors(oi), qSlicer, qs.withSets)
-    val oc = s"__oord$oi"
-    val depthCol = rs.mixedDim.map(_ => s"__odepth$oi")
-    val members = depthCol.foldLeft(
-      if (rs.hasOrd) rs.members.withColumnRenamed(OrdCol, oc)
-      else rs.members)((m, dc) => m.withColumnRenamed(DepthCol, dc))
-    val dimsLc = rs.dims.map(_.d.name.toLowerCase).toSet
-    val ovBy = factorEntries.head._2.filter(_.ov.exists(dimsLc))
-    if (ovBy.exists(e => !dimsLc.subsetOf(e.ov)))
-      refuse("a calc member's set overrides PART of a " +
-        "multi-hierarchy CrossJoin factor — split the factor so " +
-        "the overridden hierarchy stands alone")
-    OtherFactor(oi, rs.copy(members = members), groupCols(rs.dims),
-      axisSort(rs, oc), depthCol, ovBy.map(_.idx))
+  private val others: Seq[OtherFactor] = otherIdxs.zip(otherFrames).map {
+    case (oi, rs) =>
+      val oc = s"__oord$oi"
+      val depthCol = rs.mixedDim.map(_ => s"__odepth$oi")
+      val members = depthCol.foldLeft(
+        if (rs.hasOrd) rs.members.withColumnRenamed(OrdCol, oc)
+        else rs.members)((m, dc) => m.withColumnRenamed(DepthCol, dc))
+      val dimsLc = rs.dims.map(_.d.name.toLowerCase).toSet
+      val ovBy = factorEntries.head._2.filter(_.ov.exists(dimsLc))
+      if (ovBy.exists(e => !dimsLc.subsetOf(e.ov)))
+        refuse("a calc member's set overrides PART of a " +
+          "multi-hierarchy CrossJoin factor — split the factor so " +
+          "the overridden hierarchy stands alone")
+      OtherFactor(oi, rs.copy(members = members), groupCols(rs.dims),
+        axisSort(rs, oc), depthCol, ovBy.map(_.idx))
   }
   // crossjoined factors restrict the fact to THEIR members early
   // (broadcast semi-join — dimension-sized), so the groupBy never
@@ -343,7 +332,7 @@ private[olap] final class FusedAxis private (p: Planner,
         else if (ovl.isEmpty) p.slicerPredicate(e.items)
         else p.slicerPredicate(e.items) && p.slicerPredicate(ovl)
       val where = sharedOv.filterNot(i =>
-        itemDims(Seq(i)).exists(d => e.ov(d.toLowerCase)))
+        dcl.dimsOf(Seq(i)).exists(d => e.ov(d.toLowerCase)))
       if (where.isEmpty) own else own && p.slicerPredicate(where)
     }
 
@@ -737,18 +726,12 @@ private[olap] object FusedAxis {
     */
   def render(p: Planner, dcl: Planner#DimCalcLowering,
       qs: QueryIR): Option[DataFrame] = {
-    def deref(s: SetExpr, seen: Set[String]): SetExpr = s match {
-      case NamedSetRef(n) if !seen(n) && qs.withSets.contains(n) =>
-        deref(qs.withSets(n), seen + n)
-      case other => other
-    }
     var groups = 0
     def splitCross(s: SetExpr, g: Int): Seq[(SetExpr, Int)] =
-      deref(s, Set.empty) match {
+      dcl.deref(s) match {
         case CrossJoin(a, b) => splitCross(a, g) ++ splitCross(b, g)
         case NonEmptyCrossJoin(a, b)
-            if dcl.hasCalcPath(a, Set.empty) ||
-              dcl.hasCalcPath(b, Set.empty) =>
+            if dcl.hasCalcPath(a) || dcl.hasCalcPath(b) =>
           val gid = if (g >= 0) g else { groups += 1; groups - 1 }
           splitCross(a, gid) ++ splitCross(b, gid)
         case other => Seq((other, g))
@@ -756,7 +739,7 @@ private[olap] object FusedAxis {
     val tagged =
       if (dcl.isEmpty) Nil
       else qs.rows.map(splitCross(_, -1)).getOrElse(Nil)
-    if (!tagged.exists(t => dcl.hasCalcPath(t._1, Set.empty))) None
+    if (!tagged.exists(t => dcl.hasCalcPath(t._1))) None
     else Some(new FusedAxis(p, dcl, qs, tagged.map(_._1), tagged.map(_._2),
       groups).render())
   }

@@ -129,7 +129,16 @@ object SortDir {
   * single member, tuple of members from different dims, or a same-dim set
   * (compound slicer = aggregate over the union, SURVEY §4 #12).
   */
-sealed trait SlicerItem
+sealed trait SlicerItem {
+  /** The dimension a member-path item (a member or a same-dim set)
+    * slices; None for a predicate or a computed set.
+    */
+  def memberDim: Option[String] = this match {
+    case MemberSlice(d, _) => Some(d)
+    case SetSlice(d, _)    => Some(d)
+    case _                 => None
+  }
+}
 final case class MemberSlice(dim: String, path: Seq[Any]) extends SlicerItem
 final case class SetSlice(dim: String, paths: Seq[Seq[Any]])
     extends SlicerItem

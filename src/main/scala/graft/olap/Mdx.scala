@@ -1518,17 +1518,20 @@ object Mdx {
 
     /** Lookahead: is the first argument of Fn( ... a SET (vs a plain SQL
       * scalar like MIN(col1, col2))? A set starts with '{', a set
-      * function name, a StrToSet, or a bracketed DIMENSION name.
+      * function name, a WITH SET name, a StrToSet, or a bracketed
+      * DIMENSION name.
       */
-    private def setAggArgIsSet: Boolean = peekAt(2) match {
-      case Some(TPunct("{")) => true
-      case Some(TIdent(f)) =>
-        SetFns.contains(f.toUpperCase) || f.equalsIgnoreCase("STRTOSET") ||
-          f.equalsIgnoreCase("STRTOMEMBER")
-      case Some(TBracket(nm)) =>
-        cube.dims.exists(_.name.equalsIgnoreCase(nm))
-      case _ => false
-    }
+    private def setAggArgIsSet(ws: Map[String, SetExpr]): Boolean =
+      peekAt(2) match {
+        case Some(TPunct("{")) => true
+        case Some(TIdent(f)) =>
+          SetFns.contains(f.toUpperCase) || ws.contains(f) ||
+            f.equalsIgnoreCase("STRTOSET") ||
+            f.equalsIgnoreCase("STRTOMEMBER")
+        case Some(TBracket(nm)) =>
+          cube.dims.exists(_.name.equalsIgnoreCase(nm))
+        case _ => false
+      }
 
     /** Parse `Fn(set[, measureOrExpr | EXCLUDEEMPTY|INCLUDEEMPTY])`,
       * register the hidden calc, return its column name. Two sugar
@@ -1683,7 +1686,7 @@ object Mdx {
             lastTokRef = -1; pendingDiv = false
             prevWasIdent = false
           case Some(TIdent(s)) if SetAggFns(s.toUpperCase) &&
-              peekAt(1).contains(TPunct("(")) && setAggArgIsSet =>
+              peekAt(1).contains(TPunct("(")) && setAggArgIsSet(ws) =>
             next()
             sb.append(setAggRef(s.toUpperCase, ws))
             lastTokRef = -1; pendingDiv = false

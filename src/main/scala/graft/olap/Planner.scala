@@ -36,10 +36,10 @@ final class Planner(val cube: BoundCube) {
     */
   private[olap] var neededMeasures: Seq[Measure] = cube.measures
   private[olap] var neededCalcs: Seq[CalcMember] = cube.calcMembers
-  // every calc member in scope (schema + WITH), unfiltered: member-path
-  // LITERALS in sets don't register in pruneFor's text scan, so
-  // "is this path a calc member" checks must not rely on neededCalcs
-  private var allCalcMembers: Seq[CalcMember] = cube.calcMembers
+  // the statement's WITH members, unfiltered: member-path LITERALS in
+  // sets don't register in pruneFor's text scan, so "is this path a
+  // calc member" checks must not rely on neededCalcs
+  private var withMembers: Seq[CalcMember] = Nil
 
   /** Expression strings referenced anywhere in a set tree (filter
     * conditions, order keys, top-k measures).
@@ -79,7 +79,7 @@ final class Planner(val cube: BoundCube) {
     */
   private[olap] def pruneFor(q: QueryIR): Unit = {
     val allCalcs = cube.calcMembers ++ q.withMembers
-    allCalcMembers = allCalcs
+    withMembers = q.withMembers
     spacedMeasureRx = buildSpacedRx(
       cube.measures.map(_.name) ++ allCalcs.map(_.name))
     var texts: Seq[String] =
@@ -168,18 +168,18 @@ final class Planner(val cube: BoundCube) {
       .map { case (v, i) => col(d.levels(i).col) === lit(v) }
       .reduce(_ && _)
 
-  /** Pad a single-dimension member frame to `target` depth: missing
-    * level + ordinal columns become typed nulls (from the dimension
-    * frame's schema); [[DepthCol]] records each member's own depth.
+  /** `df` with the columns `cols` of dimension `d` as typed nulls (from
+    * the dimension frame's schema) and, unless it has one, a
+    * [[DepthCol]] recording its members' own `depth`: a frame at one
+    * depth padded to a deeper grain of a mixed-depth frame.
     */
-  private def padFrame(f: AxisFrame, target: Int): DataFrame = {
-    val ad = f.dims.head
-    val types = ad.d.df.schema.map(sf => sf.name -> sf.dataType).toMap
-    val missing = memberCols(ad.d, target).diff(memberCols(ad.d, ad.depth))
-    val base = missing.foldLeft(f.members)((df, c) =>
-      df.withColumn(c, lit(null).cast(types(c))))
+  private def padded(df: DataFrame, d: BoundDim, cols: Seq[String],
+      depth: Int): DataFrame = {
+    val types = d.df.schema.map(sf => sf.name -> sf.dataType).toMap
+    val base = cols.foldLeft(df)((x, c) =>
+      x.withColumn(c, lit(null).cast(types(c))))
     if (base.columns.contains(DepthCol)) base
-    else base.withColumn(DepthCol, lit(ad.depth))
+    else base.withColumn(DepthCol, lit(depth))
   }
 
   /** Axis members ⋈ their cells. Uniform frames join on the grain
@@ -222,14 +222,11 @@ final class Planner(val cube: BoundCube) {
   private def mixedCells(others: Seq[AxisDim], md: AxisDim,
       depths: Seq[Int], slicer: Seq[SlicerItem]): DataFrame = {
     val levels = levelCols(md.d, md.depth)
-    val types = md.d.df.schema.map(sf => sf.name -> sf.dataType).toMap
     val allSlicer = slicer ++ roleSlicer
     val deepDims = others :+ md
     def perDepth: DataFrame = depths.map { dep =>
-      val agg = aggregate(others :+ AxisDim(md.d, dep), slicer)
-      val padded = levels.drop(dep + 1).foldLeft(agg)((df, c) =>
-        df.withColumn(c, lit(null).cast(types(c))))
-      padded.withColumn(DepthCol, lit(dep))
+      padded(aggregate(others :+ AxisDim(md.d, dep), slicer), md.d,
+        levels.drop(dep + 1), dep)
     }.reduce(_ unionByName _)
     if (AggRouter.route(cube, neededJoins(deepDims, allSlicer), allSlicer,
         neededMeasures).isDefined) return perDepth
@@ -284,10 +281,9 @@ final class Planner(val cube: BoundCube) {
       require(paths.nonEmpty, "empty member set")
       if (paths.forall(_.length == paths.head.length)) {
         val depth = math.min(paths.head.length, d.levels.length) - 1
-        val pred = orAll(paths.map(p => ancestorPredicate(d, p)))
-        val base = memberFrame(d, depth).filter(pred)
-        if (paths.length == 1)
-          AxisFrame(base, Seq(AxisDim(d, depth)))
+        val f = membersWhere(d, depth,
+          orAll(paths.map(p => ancestorPredicate(d, p))))
+        if (paths.length == 1) f
         else {
           // a literal set is an ORDERED list: Mondrian renders it in
           // WRITTEN order, not level-ordinal order (SetFunDef — the
@@ -303,9 +299,8 @@ final class Planner(val cube: BoundCube) {
             case (acc, (p, i)) =>
               acc.when(ancestorPredicate(d, p), (i + 2).toLong)
           }
-          AxisFrame(renumber(base.withColumn(OrdCol, ordExpr),
-              hasOrd = true, hintOf(Seq(AxisDim(d, depth)))),
-            Seq(AxisDim(d, depth)), hasOrd = true)
+          renumbered(f.copy(hasOrd = true),
+            f.members.withColumn(OrdCol, ordExpr))
         }
       } else {
         // mixed-depth literal set ({[d].[a], [d].[a].[b]}): lower to a
@@ -326,7 +321,7 @@ final class Planner(val cube: BoundCube) {
         if (path.isEmpty) lit(true)
         else if (path.length >= d.levels.length) lit(false)
         else ancestorPredicate(d, path)
-      AxisFrame(memberFrame(d, depth).filter(pred), Seq(AxisDim(d, depth)))
+      membersWhere(d, depth, pred)
 
     case Descendants(dim, path, level) =>
       val d = cube.dim(dim)
@@ -334,90 +329,20 @@ final class Planner(val cube: BoundCube) {
       require(depth >= path.length, "Descendants level above member level")
       // DESCENDANTS([Dim], [Level]) — descendants of the implicit All
       // root at that level = every member of the level
-      val dpred = if (path.isEmpty) lit(true) else ancestorPredicate(d, path)
-      AxisFrame(memberFrame(d, depth).filter(dpred),
-        Seq(AxisDim(d, depth)))
+      membersWhere(d, depth,
+        if (path.isEmpty) lit(true) else ancestorPredicate(d, path))
 
     case MemberRange(dim, level, from, to) =>
       val d = cube.dim(dim)
       val depth = d.levelIndex(level)
-      val l = d.levels(depth)
-      AxisFrame(
-        memberFrame(d, depth).filter(col(l.col).between(lit(from), lit(to))),
-        Seq(AxisDim(d, depth)))
+      membersWhere(d, depth,
+        col(d.levels(depth).col).between(lit(from), lit(to)))
 
     case CousinSet(dim, mPath, aPath) =>
-      // Cousin(member, ancestor): sibling positions per level below the
-      // ancestor depth (dense_rank over the dimension-bounded member
-      // frame — j-level siblings within their parent), then the row
-      // under the NEW ancestor with the member's position vector. A
-      // position gap in the target subtree yields an empty set (the
-      // jar's null member).
-      val d = cube.dim(dim)
-      require(mPath.length <= d.levels.length,
-        s"Cousin: member path deeper than [${d.name}]")
-      // jar CousinFunDef edge semantics (ADVICE r5): equal levels →
-      // the second argument itself; member ABOVE the "ancestor" → the
-      // null member, i.e. an empty set. (Divergence: a nonexistent
-      // member path yields an empty set here where the jar raises
-      // member-not-found — path existence is not validated.)
-      if (aPath.length == mPath.length)
-        return evalSet(Members(dim, Seq(aPath)), slicer, withSets)
-      if (aPath.length > mPath.length)
-        return AxisFrame(
-          memberFrame(d, mPath.length - 1).filter(lit(false)),
-          Seq(AxisDim(d, mPath.length - 1)))
-      val depth = mPath.length - 1
-      val aDepth = aPath.length - 1
-      val lvls = d.levels
-      val posCols = (aDepth + 1 to depth).map { j =>
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy(d.levelsTo(j - 1).map(l => col(l.col)): _*)
-          .orderBy(col(lvls(j).ordinal).asc, col(lvls(j).col).asc)
-        s"__pos$j" -> dense_rank().over(w)
-      }
-      val withPos = posCols.foldLeft(memberFrame(d, depth)) {
-        case (df, (n, c)) => df.withColumn(n, c)
-      }
-      val src = withPos.filter(ancestorPredicate(d, mPath))
-        .select(posCols.map { case (n, _) => col(n).as(s"s$n") }: _*)
-        .limit(1)
-      val out = withPos.filter(ancestorPredicate(d, aPath))
-        .join(broadcast(src),
-          posCols.map { case (n, _) => col(n) === col(s"s$n") }
-            .reduce(_ && _))
-        .select(memberCols(d, depth).map(col): _*)
-      AxisFrame(out, Seq(AxisDim(d, depth)))
+      cousin(cube.dim(dim), mPath, aPath, slicer, withSets)
 
     case CurrentDateMember(dim, level, matchType) =>
-      val d = cube.dim(dim)
-      val depth = d.levelIndex(level)
-      // deterministic "now": session conf, else today. The dimension's
-      // date axis is its date-typed primary key (time dims) or the
-      // deepest level column.
-      val spark = d.df.sparkSession
-      val nowStr = spark.conf.getOption("spark.graft.now")
-        .getOrElse(java.time.LocalDate.now().toString)
-      val now = lit(nowStr).cast("date")
-      val dateCol =
-        if (d.df.schema.exists(f => f.name == d.primaryKey &&
-            f.dataType == org.apache.spark.sql.types.DateType)) d.primaryKey
-        else d.levels.last.col
-      val cols = memberCols(d, depth)
-      val picked = matchType.toUpperCase match {
-        case "EXACT" =>
-          d.df.filter(col(dateCol) === now).select(cols.map(col): _*)
-            .distinct()
-        case "AFTER" =>
-          d.df.filter(col(dateCol) >= now).select(cols.map(col): _*)
-            .orderBy(d.levelsTo(depth).map(l => col(l.ordinal).asc): _*)
-            .limit(1)
-        case _ => // BEFORE: closest member at or before now
-          d.df.filter(col(dateCol) <= now).select(cols.map(col): _*)
-            .orderBy(d.levelsTo(depth).map(l => col(l.ordinal).desc): _*)
-            .limit(1)
-      }
-      AxisFrame(picked, Seq(AxisDim(d, depth)))
+      currentDateMember(cube.dim(dim), level, matchType)
 
     case CrossJoin(l, r) =>
       val a = evalSet(l, slicer, withSets)
@@ -470,43 +395,22 @@ final class Planner(val cube: BoundCube) {
         evalSet(r, slicer, withSets), all)
 
     case IntersectSet(l, r) =>
-      val a = evalSet(l, slicer, withSets)
-      val b = evalSet(r, slicer, withSets)
-      val joinCols = groupCols(a.dims)
-      val kept = a.members.join(
-        b.members.select(joinCols.map(col): _*).distinct(),
-        joinCols, "left_semi")
-      a.copy(members = renumber(kept, a.hasOrd, hintOf(a.dims)))
+      restrict(l, r, slicer, withSets, "left_semi")((a, _) =>
+        groupCols(a.dims))
 
     case ExceptSet(l, r) =>
-      val a = evalSet(l, slicer, withSets)
-      val b = evalSet(r, slicer, withSets)
-      val joinCols = b.dims.flatMap(ad => levelCols(ad.d, ad.depth))
-      val kept = a.members.join(b.members.select(joinCols.map(col): _*)
-        .distinct(), joinCols, "left_anti")
-      a.copy(members = renumber(kept, a.hasOrd, hintOf(a.dims)))
+      restrict(l, r, slicer, withSets, "left_anti")((_, b) =>
+        groupCols(b.dims))
 
     case ExistsSet(l, r) =>
-      val a = evalSet(l, slicer, withSets)
-      val b = evalSet(r, slicer, withSets)
-      val common = a.members.columns.intersect(b.members.columns)
-        .filterNot(_ == OrdCol).toSeq
-      val kept = a.members.join(b.members.select(common.map(col): _*)
-        .distinct(), common, "left_semi")
-      a.copy(members = renumber(kept, a.hasOrd, hintOf(a.dims)))
+      restrict(l, r, slicer, withSets, "left_semi")((a, b) =>
+        a.members.columns.intersect(b.members.columns)
+          .filterNot(_ == OrdCol).toSeq)
 
     case DistinctSet(s) =>
       val a = evalSet(s, slicer, withSets)
       if (!a.hasOrd) a.copy(members = a.members.distinct())
-      else {
-        // keep the first occurrence of each member tuple (DistinctFunDef)
-        val wk = Window.partitionBy(groupCols(a.dims).map(col): _*)
-        val kept = a.members
-          .withColumn("__minOrd", min(col(OrdCol)).over(wk))
-          .filter(col(OrdCol) === col("__minOrd")).drop("__minOrd")
-        a.copy(members = renumber(kept, hasOrd = true,
-        hintOf(a.dims)), hasOrd = true)
-      }
+      else renumbered(a, firstOccurrence(a.members, groupCols(a.dims)))
 
     case NamedSetRef(name) =>
       val s = withSets.getOrElse(name,
@@ -520,7 +424,7 @@ final class Planner(val cube: BoundCube) {
       // S.CurrentOrdinal needs an explicit position column
       val a = if (cond.contains("__CURRENT_ORDINAL__")) realizeOrd(a0)
               else a0
-      val cells = cellsFor(a, slicer)
+      val cells = cellsFor(a, slicer, withSets)
       var c = resolveCurrent(cond, a.dims)
       if (c.contains("__CURRENT_EMPTY__")) {
         // IsEmpty(S.Current): every measure cell of the tuple is empty
@@ -533,20 +437,19 @@ final class Planner(val cube: BoundCube) {
       }
       if (c.contains("__CURRENT_ORDINAL__"))
         c = c.replace("__CURRENT_ORDINAL__", s"(`$OrdCol` - 1)")
-      val kept = cells.filter(sexpr(c))
-        .select(a.members.columns.map(col): _*)
-      a.copy(members = renumber(kept, a.hasOrd, hintOf(a.dims)))
+      renumbered(a, cells.filter(sexpr(c))
+        .select(a.members.columns.map(col): _*))
 
     case OrderSet(s, e, dir) =>
       val a = evalSet(s, slicer, withSets)
-      val cells = cellsFor(a, slicer)
+      val cells = cellsFor(a, slicer, withSets)
       dir match {
         case SortDir.BAsc | SortDir.BDesc =>
-          val key = sexpr(resolveCurrent(e, a.dims))
-          ordered(a, cells,
-            Seq(if (dir == SortDir.BAsc) key.asc else key.desc))
+          ordered(a, cells, Seq(cellSort(sexpr(resolveCurrent(e, a.dims)),
+            desc = dir == SortDir.BDesc)))
         case _ =>
-          tupleHierOrderSet(a, cells, e, dir == SortDir.Desc, slicer)
+          tupleHierOrderSet(a, cells, e, dir == SortDir.Desc, slicer,
+            withSets)
       }
 
     case TopCount(s, n, e, bottom) if e.isEmpty =>
@@ -557,9 +460,8 @@ final class Planner(val cube: BoundCube) {
 
     case TopCount(s, n, e, bottom) =>
       val a = evalSet(s, slicer, withSets)
-      val cells = cellsFor(a, slicer)
-      val key = if (bottom) sexpr(e).asc else sexpr(e).desc
-      val o = ordered(a, cells, Seq(key))
+      val o = ordered(a, cellsFor(a, slicer, withSets),
+        Seq(cellSort(sexpr(e), desc = !bottom)))
       o.copy(members = o.members.filter(col(OrdCol) <= n))
 
     case TopPercent(s, pct, e, bottom) =>
@@ -578,16 +480,13 @@ final class Planner(val cube: BoundCube) {
 
     case TailSet(s, n) =>
       val a = realizeOrd(evalSet(s, slicer, withSets))
-      val withCnt = Ords.withTotal(a.members, "__cnt")
-      a.copy(members = renumber(withCnt
-        .filter(col(OrdCol) > col("__cnt") - n).drop("__cnt"),
-        hasOrd = true, hintOf(a.dims)))
+      renumbered(a, Ords.withTotal(a.members, "__cnt")
+        .filter(col(OrdCol) > col("__cnt") - n).drop("__cnt"))
 
     case SubsetSet(s, start, n) =>
       val a = realizeOrd(evalSet(s, slicer, withSets))
-      a.copy(members = renumber(
-        a.members.filter(col(OrdCol) > start && col(OrdCol) <= start + n),
-        hasOrd = true, hintOf(a.dims)))
+      renumbered(a,
+        a.members.filter(col(OrdCol) > start && col(OrdCol) <= start + n))
 
     case ExtractSet(s, dimNames) =>
       val a = evalSet(s, slicer, withSets)
@@ -606,86 +505,16 @@ final class Planner(val cube: BoundCube) {
       evalSet(s, slicer, withSets)
 
     case DrilldownMember(s, ms) =>
-      val a = evalSet(s, slicer, withSets)
-      val b = evalSet(ms, slicer, withSets)
-      val bd = singleHierarchy(a, b, "DrilldownMember")
-      if (bd.depth + 1 >= bd.d.levels.length) a // leaf members: no-op
-      else {
-        val keys = levelCols(bd.d, bd.depth)
-        // members of the base set at exactly the drill depth...
-        val aAtDepth = atDepth(a, bd.depth).select(keys.map(col): _*)
-          .distinct()
-        // ...that are also in the drill set
-        val toDrill = aAtDepth.join(
-          b.members.select(keys.map(col): _*).distinct(), keys, "left_semi")
-        val children = memberFrame(bd.d, bd.depth + 1)
-          .join(broadcast(toDrill), keys, "left_semi")
-        hierarchizeFrame(unionFrames(a,
-          AxisFrame(children, Seq(AxisDim(bd.d, bd.depth + 1))),
-          all = false), post = false)
-      }
+      drilldownMember(evalSet(s, slicer, withSets),
+        evalSet(ms, slicer, withSets))
 
     case DrilldownLevelTop(s, n, e, bottom) =>
-      val a = evalSet(s, slicer, withSets)
-      require(a.dims.length == 1 && a.mixedDim.isEmpty,
-        "DrilldownLevelTop needs a uniform single-hierarchy set")
-      val ad = a.dims.head
-      if (ad.depth + 1 >= ad.d.levels.length) a
-      else {
-        val keys = levelCols(ad.d, ad.depth)
-        val children = memberFrame(ad.d, ad.depth + 1)
-          .join(broadcast(a.members.select(keys.map(col): _*).distinct()),
-            keys, "left_semi")
-        val cf = AxisFrame(children, Seq(AxisDim(ad.d, ad.depth + 1)))
-        // rank children WITHIN each parent by the cell expression — the
-        // window partitions on the parent keys, so no global sort
-        val cells = cellsFor(cf, slicer)
-        val key = if (bottom) sexpr(e).asc else sexpr(e).desc
-        val w = Window.partitionBy(keys.map(col): _*)
-          .orderBy(key +: tieBreak(cf): _*)
-        val top = cells.withColumn("__rk", row_number().over(w))
-          .filter(col("__rk") <= n)
-          .select(cf.members.columns.map(col): _*)
-        hierarchizeFrame(unionFrames(a, cf.copy(members = top),
-          all = false), post = false)
-      }
+      drilldownLevelTop(evalSet(s, slicer, withSets), n, e, bottom, slicer,
+        withSets)
 
     case ToggleDrillState(s, ms) =>
-      val a = evalSet(s, slicer, withSets)
-      val b = evalSet(ms, slicer, withSets)
-      val bd = singleHierarchy(a, b, "ToggleDrillState")
-      if (bd.depth + 1 >= bd.d.levels.length) a
-      else {
-        val pd = bd.depth
-        val keys = levelCols(bd.d, pd)
-        val withDepth =
-          if (a.members.columns.contains(DepthCol)) a.members
-          else a.members.withColumn(DepthCol, lit(a.dims.head.depth))
-        val bKeys = b.members.select(keys.map(col): _*).distinct()
-        // a toggle member is "drilled" when any of its children is
-        // already present in the set
-        val drilled = bKeys.join(
-          withDepth.filter(col(DepthCol) === pd + 1)
-            .select(keys.map(col): _*).distinct(), keys, "left_semi")
-        // drilled parents collapse: drop their strict descendants
-        val marked = withDepth.join(
-          broadcast(drilled.withColumn("__drilled", lit(1))), keys, "left")
-        val kept = marked
-          .filter(col("__drilled").isNull || col(DepthCol) <= pd)
-          .drop("__drilled")
-        // un-drilled toggle members present in the set expand
-        val toOpen = atDepth(a, pd).select(keys.map(col): _*).distinct()
-          .join(bKeys, keys, "left_semi")
-          .join(drilled, keys, "left_anti")
-        val children = memberFrame(bd.d, pd + 1)
-          .join(broadcast(toOpen), keys, "left_semi")
-        val keptFrame = a.copy(members =
-          if (a.members.columns.contains(DepthCol)) kept
-          else kept.drop(DepthCol))
-        hierarchizeFrame(unionFrames(keptFrame,
-          AxisFrame(children, Seq(AxisDim(bd.d, pd + 1))),
-          all = false), post = false)
-      }
+      toggleDrillState(evalSet(s, slicer, withSets),
+        evalSet(ms, slicer, withSets))
   }
 
   /** The drill-set side of a drilldown op: both sets must live on one
@@ -709,6 +538,208 @@ final class Planner(val cube: BoundCube) {
     else if (a.dims.head.depth == depth) a.members
     else a.members.limit(0)
 
+  /** The members of `l` whose `keys` occur (`how` = left_semi) or do not
+    * occur (left_anti) in `r` — Intersect, Except and Exists — positions
+    * compacted.
+    */
+  private def restrict(l: SetExpr, r: SetExpr, slicer: Seq[SlicerItem],
+      withSets: Map[String, SetExpr], how: String)(
+      keys: (AxisFrame, AxisFrame) => Seq[String]): AxisFrame = {
+    val a = evalSet(l, slicer, withSets)
+    val b = evalSet(r, slicer, withSets)
+    val ks = keys(a, b)
+    renumbered(a, a.members.join(b.members.select(ks.map(col): _*)
+      .distinct(), ks, how))
+  }
+
+  /** `a` with its members replaced by the subset `kept`: an explicit
+    * order is compacted to 1..n, so downstream positional ops
+    * (Head/Subset) keep working on gap-free positions.
+    */
+  private def renumbered(a: AxisFrame, kept: DataFrame): AxisFrame =
+    if (!a.hasOrd) a.copy(members = kept)
+    else numbered(a, kept, Seq(col(OrdCol).asc))
+
+  /** The first occurrence (lowest [[OrdCol]]) of each `keys` tuple
+    * (DistinctFunDef; the non-ALL UnionFunDef).
+    */
+  private def firstOccurrence(df: DataFrame, keys: Seq[String]): DataFrame = {
+    val wk = Window.partitionBy(keys.map(col): _*)
+    df.withColumn("__minOrd", min(col(OrdCol)).over(wk))
+      .filter(col(OrdCol) === col("__minOrd")).drop("__minOrd")
+  }
+
+  /** The members of `d` at `depth` that satisfy `pred`. */
+  private def membersWhere(d: BoundDim, depth: Int, pred: Column): AxisFrame =
+    AxisFrame(memberFrame(d, depth).filter(pred), Seq(AxisDim(d, depth)))
+
+  /** The members one level below `depth` whose parent keys are in
+    * `parents` (a dimension-sized broadcast semi-join).
+    */
+  private def childrenOf(d: BoundDim, depth: Int,
+      parents: DataFrame): AxisFrame =
+    AxisFrame(memberFrame(d, depth + 1)
+      .join(broadcast(parents), levelCols(d, depth), "left_semi"),
+      Seq(AxisDim(d, depth + 1)))
+
+  /** A drill result: `a` and the drilled `children`, hierarchized. */
+  private def drillUnion(a: AxisFrame, children: AxisFrame): AxisFrame =
+    hierarchizeFrame(unionFrames(a, children, all = false), post = false)
+
+  /** DrilldownMember: the children of every member of `a` at the drill
+    * depth that is also in `b` join the set.
+    */
+  private def drilldownMember(a: AxisFrame, b: AxisFrame): AxisFrame = {
+    val bd = singleHierarchy(a, b, "DrilldownMember")
+    if (bd.depth + 1 >= bd.d.levels.length) a // leaf members: no-op
+    else {
+      val keys = levelCols(bd.d, bd.depth)
+      // members of the base set at exactly the drill depth...
+      val aAtDepth = atDepth(a, bd.depth).select(keys.map(col): _*)
+        .distinct()
+      // ...that are also in the drill set
+      val toDrill = aAtDepth.join(
+        b.members.select(keys.map(col): _*).distinct(), keys, "left_semi")
+      drillUnion(a, childrenOf(bd.d, bd.depth, toDrill))
+    }
+  }
+
+  /** DrilldownLevelTop/Bottom: each member plus its top (bottom) `n`
+    * children by `e`.
+    */
+  private def drilldownLevelTop(a: AxisFrame, n: Int, e: String,
+      bottom: Boolean, slicer: Seq[SlicerItem],
+      withSets: Map[String, SetExpr]): AxisFrame = {
+    require(a.dims.length == 1 && a.mixedDim.isEmpty,
+      "DrilldownLevelTop needs a uniform single-hierarchy set")
+    val ad = a.dims.head
+    if (ad.depth + 1 >= ad.d.levels.length) a
+    else {
+      val keys = levelCols(ad.d, ad.depth)
+      val cf = childrenOf(ad.d, ad.depth,
+        a.members.select(keys.map(col): _*).distinct())
+      // rank children WITHIN each parent by the cell expression — the
+      // window partitions on the parent keys, so no global sort
+      val cells = cellsFor(cf, slicer, withSets)
+      val w = Window.partitionBy(keys.map(col): _*)
+        .orderBy(cellSort(sexpr(e), desc = !bottom) +: tieBreak(cf): _*)
+      val top = cells.withColumn("__rk", row_number().over(w))
+        .filter(col("__rk") <= n)
+        .select(cf.members.columns.map(col): _*)
+      drillUnion(a, cf.copy(members = top))
+    }
+  }
+
+  /** ToggleDrillState: per member of `b` in `a`, collapse its
+    * descendants when it is drilled, add its children when it is not.
+    */
+  private def toggleDrillState(a: AxisFrame, b: AxisFrame): AxisFrame = {
+    val bd = singleHierarchy(a, b, "ToggleDrillState")
+    if (bd.depth + 1 >= bd.d.levels.length) a
+    else {
+      val pd = bd.depth
+      val keys = levelCols(bd.d, pd)
+      val withDepth = padded(a.members, bd.d, Nil, a.dims.head.depth)
+      val bKeys = b.members.select(keys.map(col): _*).distinct()
+      // a toggle member is "drilled" when any of its children is
+      // already present in the set
+      val drilled = bKeys.join(
+        withDepth.filter(col(DepthCol) === pd + 1)
+          .select(keys.map(col): _*).distinct(), keys, "left_semi")
+      // drilled parents collapse: drop their strict descendants
+      val marked = withDepth.join(
+        broadcast(drilled.withColumn("__drilled", lit(1))), keys, "left")
+      val kept = marked
+        .filter(col("__drilled").isNull || col(DepthCol) <= pd)
+        .drop("__drilled")
+      // un-drilled toggle members present in the set expand
+      val toOpen = atDepth(a, pd).select(keys.map(col): _*).distinct()
+        .join(bKeys, keys, "left_semi")
+        .join(drilled, keys, "left_anti")
+      val keptFrame = a.copy(members =
+        if (a.members.columns.contains(DepthCol)) kept
+        else kept.drop(DepthCol))
+      drillUnion(keptFrame, childrenOf(bd.d, pd, toOpen))
+    }
+  }
+
+  /** Cousin(member, ancestor): sibling positions per level below the
+    * ancestor depth (dense_rank over the dimension-bounded member
+    * frame — j-level siblings within their parent), then the row
+    * under the NEW ancestor with the member's position vector. A
+    * position gap in the target subtree yields an empty set (the
+    * jar's null member).
+    */
+  private def cousin(d: BoundDim, mPath: Seq[Any], aPath: Seq[Any],
+      slicer: Seq[SlicerItem],
+      withSets: Map[String, SetExpr]): AxisFrame = {
+    require(mPath.length <= d.levels.length,
+      s"Cousin: member path deeper than [${d.name}]")
+    // jar CousinFunDef edge semantics (ADVICE r5): equal levels →
+    // the second argument itself; member ABOVE the "ancestor" → the
+    // null member, i.e. an empty set. (Divergence: a nonexistent
+    // member path yields an empty set here where the jar raises
+    // member-not-found — path existence is not validated.)
+    if (aPath.length == mPath.length)
+      return evalSet(Members(d.name, Seq(aPath)), slicer, withSets)
+    if (aPath.length > mPath.length)
+      return membersWhere(d, mPath.length - 1, lit(false))
+    val depth = mPath.length - 1
+    val aDepth = aPath.length - 1
+    val lvls = d.levels
+    val posCols = (aDepth + 1 to depth).map { j =>
+      val w = Window
+        .partitionBy(d.levelsTo(j - 1).map(l => col(l.col)): _*)
+        .orderBy(col(lvls(j).ordinal).asc, col(lvls(j).col).asc)
+      s"__pos$j" -> dense_rank().over(w)
+    }
+    val withPos = posCols.foldLeft(memberFrame(d, depth)) {
+      case (df, (n, c)) => df.withColumn(n, c)
+    }
+    val src = withPos.filter(ancestorPredicate(d, mPath))
+      .select(posCols.map { case (n, _) => col(n).as(s"s$n") }: _*)
+      .limit(1)
+    val out = withPos.filter(ancestorPredicate(d, aPath))
+      .join(broadcast(src),
+        posCols.map { case (n, _) => col(n) === col(s"s$n") }
+          .reduce(_ && _))
+      .select(memberCols(d, depth).map(col): _*)
+    AxisFrame(out, Seq(AxisDim(d, depth)))
+  }
+
+  /** CurrentDateMember: the member of `level` holding "now" — the
+    * session conf `spark.graft.now`, else today, so results are
+    * deterministic. The dimension's date axis is its date-typed primary
+    * key (time dims) or the deepest level column.
+    */
+  private def currentDateMember(d: BoundDim, level: String,
+      matchType: String): AxisFrame = {
+    val depth = d.levelIndex(level)
+    val spark = d.df.sparkSession
+    val nowStr = spark.conf.getOption("spark.graft.now")
+      .getOrElse(java.time.LocalDate.now().toString)
+    val now = lit(nowStr).cast("date")
+    val dateCol =
+      if (d.df.schema.exists(f => f.name == d.primaryKey &&
+          f.dataType == org.apache.spark.sql.types.DateType)) d.primaryKey
+      else d.levels.last.col
+    val cols = memberCols(d, depth)
+    val picked = matchType.toUpperCase match {
+      case "EXACT" =>
+        d.df.filter(col(dateCol) === now).select(cols.map(col): _*)
+          .distinct()
+      case "AFTER" =>
+        d.df.filter(col(dateCol) >= now).select(cols.map(col): _*)
+          .orderBy(d.levelsTo(depth).map(l => col(l.ordinal).asc): _*)
+          .limit(1)
+      case _ => // BEFORE: closest member at or before now
+        d.df.filter(col(dateCol) <= now).select(cols.map(col): _*)
+          .orderBy(d.levelsTo(depth).map(l => col(l.ordinal).desc): _*)
+          .limit(1)
+    }
+    AxisFrame(picked, Seq(AxisDim(d, depth)))
+  }
+
   /** Union of two evaluated axis frames (the UnionSet lowering, shared
     * by the drilldown family). Same-dimension sides at DIFFERENT levels
     * union into a mixed-depth frame: both sides padded to the deepest
@@ -728,10 +759,14 @@ final class Planner(val cube: BoundCube) {
         val target = math.max(a0.dims.head.depth, b0.dims.head.depth)
         val dims = Seq(AxisDim(d, target))
         val depths = (a0.depthsOf ++ b0.depthsOf).distinct.sorted
-        (a0.copy(members = padFrame(a0, target), dims = dims,
-          mixedDepths = depths, mixedDim = Some(d.name)),
-         b0.copy(members = padFrame(b0, target), dims = dims,
-           mixedDepths = depths, mixedDim = Some(d.name)))
+        // each side's missing level + ordinal columns become typed nulls
+        def pad(f: AxisFrame): AxisFrame = {
+          val dep = f.dims.head.depth
+          f.copy(members = padded(f.members, d,
+              memberCols(d, target).diff(memberCols(d, dep)), dep),
+            dims = dims, mixedDepths = depths, mixedDim = Some(d.name))
+        }
+        (pad(a0), pad(b0))
       }
     val keyCols =
       if (a.mixedDepths.isEmpty) groupCols(a.dims)
@@ -754,15 +789,7 @@ final class Planner(val cube: BoundCube) {
         .withColumn(OrdCol, col(OrdCol) + col("__off"))
         .select(cols.map(col): _*)
       val u = ra.members.unionByName(shifted)
-      val deduped =
-        if (all) u
-        else {
-          val wk = Window.partitionBy(keyCols.map(col): _*)
-          u.withColumn("__minOrd", min(col(OrdCol)).over(wk))
-            .filter(col(OrdCol) === col("__minOrd")).drop("__minOrd")
-        }
-      a.copy(members = renumber(deduped, hasOrd = true,
-        hintOf(a.dims)), hasOrd = true)
+      renumbered(ra, if (all) u else firstOccurrence(u, keyCols))
     }
   }
 
@@ -777,9 +804,7 @@ final class Planner(val cube: BoundCube) {
       ad.d.levelsTo(ad.depth).map(l =>
         if (post) col(l.ordinal).asc_nulls_last
         else col(l.ordinal).asc_nulls_first))
-    a.copy(members = Ords.rowNumber(a.members, ords, OrdCol,
-        hintOf(a.dims)),
-      hasOrd = true)
+    numbered(a, a.members, ords)
   }
 
   /** TopPercent/TopSum share the cumulative-prefix shape (SURVEY §2.6):
@@ -790,8 +815,8 @@ final class Planner(val cube: BoundCube) {
       slicer: Seq[SlicerItem], withSets: Map[String, SetExpr])(
       keep: (Column, Column, Column) => Column): AxisFrame = {
     val a = evalSet(s, slicer, withSets)
-    val cells = cellsFor(a, slicer)
-    val key = if (bottom) sexpr(e).asc else sexpr(e).desc
+    val cells = cellsFor(a, slicer, withSets)
+    val key = cellSort(sexpr(e), desc = !bottom)
     // the cumulative prefix genuinely needs one ordered pass; cells are
     // at the set's post-aggregation grain (dimension-bounded), so the
     // single-partition window here is over axis-scale data, never fact
@@ -819,20 +844,18 @@ final class Planner(val cube: BoundCube) {
   private def hintOf(dims: Seq[AxisDim]): Ords.SizeHint =
     if (dims.exists(_.d.highCardinality)) Ords.Large else Ords.Small
 
-  /** Compact an explicit __ord to 1..n after row removal so downstream
-    * positional ops (Head/Subset) keep working on gap-free positions; a
-    * frame without __ord passes through.
-    */
-  private def renumber(members: DataFrame, hasOrd: Boolean,
-      hint: Ords.SizeHint): DataFrame =
-    if (!hasOrd) members
-    else Ords.rowNumber(members, Seq(col(OrdCol).asc), OrdCol, hint)
+  /** `a` with `members` numbered 1..n into [[OrdCol]] by `sort`. */
+  private def numbered(a: AxisFrame, members: DataFrame,
+      sort: Seq[Column]): AxisFrame =
+    a.copy(members = Ords.rowNumber(members, sort, OrdCol, hintOf(a.dims)),
+      hasOrd = true)
 
   /** Cells at the grain of `a` with all base measures + expression calc
     * members — the working set for cell-dependent set operators.
     */
-  private def cellsFor(a: AxisFrame, slicer: Seq[SlicerItem]): DataFrame =
-    applyExprCalcs(joinCells(a, slicer), a.dims, slicer)
+  private def cellsFor(a: AxisFrame, slicer: Seq[SlicerItem],
+      withSets: Map[String, SetExpr]): DataFrame =
+    applyCalcs(joinCells(a, slicer), a.dims, slicer, withSets, setOp = true)
 
   private def ordered(a: AxisFrame, cells: DataFrame,
       sortCols: Seq[Column]): AxisFrame =
@@ -906,17 +929,16 @@ final class Planner(val cube: BoundCube) {
     * meanings.
     */
   private def tupleHierOrderSet(a: AxisFrame, cells: DataFrame, e: String,
-      desc: Boolean, slicer: Seq[SlicerItem]): AxisFrame = {
+      desc: Boolean, slicer: Seq[SlicerItem],
+      withSets: Map[String, SetExpr]): AxisFrame = {
     require(!e.contains("__CURRENT_ORDINAL__"),
       "CurrentOrdinal in a non-breaking Order key is not supported — " +
         "the hierarchical sort evaluates ancestors outside the live " +
         "positional order; use BASC/BDESC")
-    // empty cell = -infinity (FunUtil.compareValues): ASC empties FIRST
-    def rankSort(v: Column) = if (desc) v.desc_nulls_last else v.asc_nulls_first
     // a single-level set has no hierarchy to preserve: plain value sort
     if (a.dims.length == 1 && a.dims.head.depth == 0)
       return ordered(a, cells,
-        Seq(rankSort(sexpr(resolveCurrent(e, a.dims)))))
+        Seq(cellSort(sexpr(resolveCurrent(e, a.dims)), desc)))
     var joined = a.members
     val sortCols = Seq.newBuilder[Column]
     for (i <- a.dims.indices) {
@@ -962,7 +984,7 @@ final class Planner(val cube: BoundCube) {
                 .distinct()
               val frame = AxisFrame(members, prevDims :+ AxisDim(d, k),
                 mixedDepths = a.mixedDepths, mixedDim = a.mixedDim)
-              k -> cellsFor(frame, slicer)
+              k -> cellsFor(frame, slicer, withSets)
             }.toMap
           case None if passDepths.length == 1 =>
             val src = if (selfMixed) a.members.filter(col(DepthCol) >= 0)
@@ -970,9 +992,8 @@ final class Planner(val cube: BoundCube) {
             val frame = AxisFrame(
               src.select((prevCols :+ lvls.head).map(col): _*).distinct(),
               prevDims :+ AxisDim(d, 0))
-            Map(0 -> cellsFor(frame, slicer))
+            Map(0 -> cellsFor(frame, slicer, withSets))
           case None =>
-            val tps = d.df.schema.map(sf => sf.name -> sf.dataType).toMap
             val pfLvls = lvls.take(passDepths.max + 1)
             val union = passDepths.map { k =>
               val src = if (selfMixed) a.members.filter(col(DepthCol) >= k)
@@ -980,13 +1001,12 @@ final class Planner(val cube: BoundCube) {
               val proj = src
                 .select((prevCols ++ lvls.take(k + 1)).map(col): _*)
                 .distinct()
-              pfLvls.drop(k + 1).foldLeft(proj)((df2, c) =>
-                df2.withColumn(c, lit(null).cast(tps(c))))
-                .withColumn(DepthCol, lit(k))
+              padded(proj, d, pfLvls.drop(k + 1), k)
             }.reduce(_ unionByName _)
             val pc = cellsFor(AxisFrame(union,
               prevDims :+ AxisDim(d, passDepths.max),
-              mixedDepths = passDepths, mixedDim = Some(d.name)), slicer)
+              mixedDepths = passDepths, mixedDim = Some(d.name)), slicer,
+              withSets)
             passDepths.map(k => k -> pc.filter(col(DepthCol) === k)).toMap
         }
       for (k <- 0 to dMax) {
@@ -1003,7 +1023,7 @@ final class Planner(val cube: BoundCube) {
         val depthKey = if (prevMixed.isDefined) Seq(DepthCol) else Nil
         val w = Window
           .partitionBy((depthKey ++ prevCols ++ lvls.take(k)).map(col): _*)
-          .orderBy(rankSort(sexpr(resolved)), col(lvls(k)).asc)
+          .orderBy(cellSort(sexpr(resolved), desc), col(lvls(k)).asc)
         val keyCols = depthKey ++ prevCols ++ lvls.take(k + 1)
         val rf0 = src.select(
           keyCols.map(c => col(c).as(s"__rk${i}_${k}_$c")) :+
@@ -1043,20 +1063,27 @@ final class Planner(val cube: BoundCube) {
       return Left("a multi-dimension set combined with a calc-bearing " +
         "set")
     val d = a.dims.head.d
-    val lvls = levelCols(d, a.dims.head.depth)
-    val rows = a.members.orderBy(col(OrdCol).asc)
-      .select(lvls.map(col): _*).limit(10001).collect()
-    if (rows.length > 10000)
-      return Left(s"a set of more than 10000 members on [${d.name}] " +
-        "combined with a calc-bearing set")
-    // mixed-depth frames null-pad deeper levels: a member's path is
-    // its level values up to the first null (same as computed slicers)
-    val paths = rows.toVector.map { r =>
+    boundedPaths(a.members.orderBy(col(OrdCol).asc), a.dims.head)
+      .map(ps => (d.name, ps)).toRight(s"a set of more than 10000 " +
+        s"members on [${d.name}] combined with a calc-bearing set")
+  }
+
+  /** The member paths of `members`, rows of a single-dimension frame on
+    * `ad`, in their order; None past 10,000 members — a set that becomes
+    * a slicer or an entry list must stay plan-sized. Mixed-depth frames
+    * null-pad deeper levels: a member's path is its level values up to
+    * the first null.
+    */
+  private def boundedPaths(members: DataFrame,
+      ad: AxisDim): Option[Vector[Seq[Any]]] = {
+    val lvls = levelCols(ad.d, ad.depth)
+    val rows = members.select(lvls.map(col): _*).limit(10001).collect()
+    if (rows.length > 10000) None
+    else Some(rows.toVector.map { r =>
       val vals = lvls.indices.map(r.get)
       val cut = vals.indexWhere(_ == null)
       (if (cut < 0) vals else vals.take(cut)).toSeq
-    }.filter(_.nonEmpty)
-    Right((d.name, paths))
+    }.filter(_.nonEmpty))
   }
 
   /** Ensure an explicit __ord column exists (hierarchical order default). */
@@ -1066,9 +1093,7 @@ final class Planner(val cube: BoundCube) {
       // default asc places nulls first, so a mixed-depth frame's
       // parents (null deeper ordinals) precede their children — the
       // hierarchical (PRE) default
-      a.copy(members = Ords.rowNumber(a.members, axisSort(a), OrdCol,
-          hintOf(a.dims)),
-        hasOrd = true)
+      numbered(a, a.members, axisSort(a))
     }
 
   // ------------------------------------------------------------ star agg
@@ -1270,9 +1295,7 @@ final class Planner(val cube: BoundCube) {
             "the live positional order; use BASC/BDESC")
         val key = resolve(e)
         val idc = col(h.entryCol).cast("int")
-        val sortVal = // empty cell = -infinity (FunUtil.compareValues)
-          if (dir == SortDir.Desc) col("__hval").desc_nulls_last
-          else col("__hval").asc_nulls_first
+        val sortVal = cellSort(col("__hval"), dir == SortDir.Desc)
         val parEx = coalesce(
           element_at(typedLit(h.parentOf), idc), lit(-1))
         val calcEx = coalesce(
@@ -1300,12 +1323,7 @@ final class Planner(val cube: BoundCube) {
             .cast("long"))
           .drop("__ci", "__hkey")
       case EntryOrder(e, dir) =>
-        val key = resolve(e)
-        // empty cell = -infinity (FunUtil.compareValues), matching the
-        // ordinary OrderSet breaking path's Spark-default null order
-        val sort =
-          if (dir == SortDir.BDesc) key.desc_nulls_last
-          else key.asc_nulls_first
+        val sort = cellSort(resolve(e), dir == SortDir.BDesc)
         df.withColumn("__pos", row_number()
           .over(Window.orderBy(sort, col("__pos").asc)).cast("long"))
       case EntryHead(n) => df.filter(col("__pos") <= n)
@@ -1543,38 +1561,6 @@ final class Planner(val cube: BoundCube) {
       grantSlices ++ denySlices
     }
 
-  /** Expression calc members whose inputs resolve against `df`; calcs with
-    * missing dependencies (e.g. referencing a window calc that needs a dim
-    * not in this context) are skipped, mirroring Mondrian's per-context
-    * member validity (ValidMeasureFunDef semantics).
-    */
-  /** Scalar + set-aggregate calcs at a set's own grain — used by the
-    * cell-dependent set ops (Filter/Order/TopK), whose key expressions
-    * can reference calc members (e.g. ORDER(set, ([Measures].[m],
-    * [dim].[member]), ASC) lowers the tuple to a hidden SetAggCalc).
-    * Window calcs stay post-axis (they need the final member order).
-    */
-  private def applyExprCalcs(df: DataFrame, dims: Seq[AxisDim],
-      slicer: Seq[SlicerItem]): DataFrame =
-    neededCalcs.sortBy(_.solveOrder).foldLeft(df) { (acc, cm) =>
-      cm.calc match {
-        case ExprCalc(sql) =>
-          try {
-            val (d2, s2) = resolveProps(acc, resolveCurrent(sql, dims), dims)
-            d2.withColumn(cm.name, sexpr(s2))
-          } catch { case _: org.apache.spark.sql.AnalysisException => acc }
-        case sac: SetAggCalc =>
-          try setAggColumn(acc, cm.name, sac, dims, slicer, Map.empty, None)
-          catch { case _: org.apache.spark.sql.AnalysisException => acc }
-        case lrc: LinRegCalc =>
-          try linRegColumn(acc, cm.name, lrc, dims, slicer, Map.empty, None)
-          catch { case _: org.apache.spark.sql.AnalysisException => acc }
-        // dim-hosted calc members are axis members, not cell columns —
-        // handled by the execute-entry rewrite
-        case _ => acc
-      }
-    }
-
   // ------------------------------------------------------------- execute
 
   /** Resolve computed ([[EvalSlice]]) slicer entries to literal
@@ -1594,21 +1580,14 @@ final class Planner(val cube: BoundCube) {
           "a computed slicer set must cover exactly one dimension; " +
             "write multi-dimension slicers as a tuple of entries")
         val d = a.dims.head.d
-        val lvls = levelCols(d, a.dims.head.depth)
-        val rows = a.members.select(lvls.map(col): _*)
-          .limit(10001).collect()
-        require(rows.length <= 10000,
+        val bounded = boundedPaths(a.members, a.dims.head)
+        require(bounded.isDefined,
           s"computed slicer on [${d.name}] evaluates to more than " +
             "10000 members — slice by a set literal or level instead")
-        // mixed-depth frames null-pad deeper levels: a member's path
-        // is its level values up to the first null
-        val paths = rows.toSeq.map { r =>
-          val vals = lvls.indices.map(r.get)
-          val cut = vals.indexWhere(_ == null)
-          (if (cut < 0) vals else vals.take(cut)).toSeq
-        }.filter(_.nonEmpty)
-        if (paths.length == 1) MemberSlice(d.name, paths.head)
-        else SetSlice(d.name, paths)
+        bounded.get match {
+          case Seq(one) => MemberSlice(d.name, one)
+          case paths    => SetSlice(d.name, paths)
+        }
       case other => other
     } match { case resolved =>
       // re-apply COMPOUND grouping post-resolution (query.rb:379-386:
@@ -1616,15 +1595,8 @@ final class Planner(val cube: BoundCube) {
       // groups literal paths, but a computed entry resolving to the
       // same dimension as another item would otherwise stay a second
       // item and AND into a contradiction
-      val (memberish, rest) = resolved.partition {
-        case _: MemberSlice | _: SetSlice => true
-        case _ => false
-      }
-      val dims = memberish.map {
-        case MemberSlice(d, _) => d
-        case SetSlice(d, _) => d
-        case _ => ""
-      }
+      val (memberish, rest) = resolved.partition(_.memberDim.isDefined)
+      val dims = memberish.flatMap(_.memberDim)
       if (dims.distinct.length == dims.length) resolved
       else {
         val grouped = memberish.map {
@@ -1694,29 +1666,36 @@ final class Planner(val cube: BoundCube) {
     /** The calc member's resolved set as compound slicer items. */
     def sliceOf(cm: CalcMember, dc: DimAggCalc): Seq[SlicerItem] =
       slices(resolve(dc.set, Set(cm.name.toLowerCase)))
-    /** True when any literal path anywhere in the set tree names a
-      * calc member (named-set refs chased; cycles tolerated).
+    /** The dimensions slicer items constrain; a computed set's by
+      * evaluating it.
       */
-    def hasCalcPath(s: SetExpr, seen: Set[String]): Boolean = s match {
-      case Members(d, ps) => ps.exists(p => of(d, p).isDefined)
-      case NamedSetRef(n) => !seen(n) &&
-        withSets.get(n).exists(hasCalcPath(_, seen + n))
-      // every SetExpr is a case class: walk nested sets generically
-      case other: Product => other.productIterator.exists {
-        case e: SetExpr => hasCalcPath(e, seen)
-        case _          => false
-      }
+    def dimsOf(items: Seq[SlicerItem]): Set[String] = items.flatMap {
+      case ExprSlice(_, ds) => ds
+      case EvalSlice(set)   => evalSet(set, Nil, withSets).dims.map(_.d.name)
+      case i                => i.memberDim.toSeq
+    }.toSet
+    /** `s` with WITH SET references chased to the set they name. */
+    def deref(s: SetExpr, seen: Set[String] = Set.empty): SetExpr = s match {
+      case NamedSetRef(n) if !seen(n) && withSets.contains(n) =>
+        deref(withSets(n), seen + n)
+      case other => other
     }
-    def calcNames(s: SetExpr, seen: Set[String]): Seq[String] = s match {
+    /** The calc members the literal paths anywhere in the set tree name
+      * (named-set refs chased; cycles tolerated).
+      */
+    def calcNames(s: SetExpr,
+        seen: Set[String] = Set.empty): Seq[String] = s match {
       case Members(d, ps) => ps.flatMap(p => of(d, p).map(_._1.name))
       case NamedSetRef(n) =>
         if (seen(n)) Nil
         else withSets.get(n).toSeq.flatMap(calcNames(_, seen + n))
+      // every SetExpr is a case class: walk nested sets generically
       case other: Product => other.productIterator.toSeq.flatMap {
         case e: SetExpr => calcNames(e, seen)
         case _          => Nil
       }
     }
+    def hasCalcPath(s: SetExpr): Boolean = calcNames(s).nonEmpty
     /** Flatten a calc-bearing set-function tree to ONE literal entry
       * list on one dimension, plus post-evaluation [[EntryOp]]s. Union
       * concatenates position-keyed entries (UnionFunDef: the non-ALL
@@ -1730,11 +1709,6 @@ final class Planner(val cube: BoundCube) {
       */
     def flatten(s0: SetExpr, slicer: Seq[SlicerItem] = Nil)
         : Either[String, (String, Vector[Seq[Any]], Vector[EntryOp])] = {
-      def deref(s: SetExpr, seen: Set[String]): SetExpr = s match {
-        case NamedSetRef(n) if !seen(n) && withSets.contains(n) =>
-          deref(withSets(n), seen + n)
-        case other => other
-      }
       // dedup on a NORMALIZED key: literal Members paths carry parser
       // Strings while enumerated sides carry native column values (an
       // Integer year), and Mondrian's UnionFunDef treats them as one
@@ -1746,13 +1720,13 @@ final class Planner(val cube: BoundCube) {
       }
       def go(s: SetExpr)
           : Either[String, (String, Vector[Seq[Any]], Vector[EntryOp])] =
-        deref(s, Set.empty) match {
+        deref(s) match {
           case Members(d, ps) => Right((d, ps.toVector, Vector.empty))
           // an entirely calc-FREE subtree — navigational OR
           // cell-dependent (Filter/Order/Top* evaluate under `slicer`)
           // — enumerates to literal entries wholesale (bounded), so
           // the set functions compose it with calc members
-          case other if !hasCalcPath(other, Set.empty) =>
+          case other if !hasCalcPath(other) =>
             enumerateEntryPaths(other, withSets, slicer)
               .map { case (d, ps) => (d, ps, Vector.empty[EntryOp]) }
           case UnionSet(a, b, all) =>
@@ -1827,13 +1801,7 @@ final class Planner(val cube: BoundCube) {
               // stay on the host dim so the compound OR is well-formed;
               // a lone calc in braces behaves like the member form
               if (stored.nonEmpty || calcPs.length > 1) {
-                val dims = items.flatMap {
-                  case EvalSlice(set) =>
-                    evalSet(set, Nil, withSets).dims.map(_.d.name)
-                  case MemberSlice(d, _) => Seq(d)
-                  case SetSlice(d, _)    => Seq(d)
-                  case ExprSlice(_, ds)  => ds
-                }.toSet
+                val dims = dimsOf(items)
                 require(dims == Set(dim),
                   s"calculated member [${cm.name}] aggregates a set on " +
                     s"[${dims.mkString(", ")}] and cannot join a " +
@@ -1846,7 +1814,7 @@ final class Planner(val cube: BoundCube) {
               calcItems
           }
         case es @ EvalSlice(set) =>
-          if (!hasCalcPath(set, Set.empty)) Seq(es)
+          if (!hasCalcPath(set)) Seq(es)
           else flatten(set) match {
             // a computed slicer set that flattens to a literal entry
             // list (Union/Head/Tail/Subset/Distinct over literal
@@ -1983,15 +1951,25 @@ final class Planner(val cube: BoundCube) {
     * expressions; Window calcs lower to Spark Window functions over the
     * member ordinals (SURVEY §2.5 — MDX relative navigation → Window).
     * With `ctx`, `df` is a fused dim-calc frame and every calc is
-    * evaluated per axis entry.
+    * evaluated per axis entry. With `setOp`, `df` is a set's cells for a
+    * cell-dependent set op (Filter/Order/TopK), whose keys can reference
+    * calc members (ORDER(set, ([Measures].[m], [dim].[member]), ASC)
+    * lowers the tuple to a hidden SetAggCalc): Window calcs stay
+    * post-axis (they need the final member order), and a set-aggregate
+    * calc whose inputs do not resolve here is skipped, like an Expr calc
+    * (Mondrian's per-context member validity, ValidMeasureFunDef).
     */
   private[olap] def applyCalcs(df: DataFrame,
       axisDims: Seq[AxisDim],
       slicer: Seq[SlicerItem],
       withSets: Map[String, SetExpr],
-      ctx: Option[EntryCtx] = None): DataFrame =
+      ctx: Option[EntryCtx] = None, setOp: Boolean = false): DataFrame =
     neededCalcs.sortBy(_.solveOrder).foldLeft(df) {
       (acc, cm) =>
+        def orSkip(f: => DataFrame): DataFrame =
+          if (!setOp) f
+          else try f catch {
+            case _: org.apache.spark.sql.AnalysisException => acc }
         cm.calc match {
           case ExprCalc(sql) =>
             try {
@@ -2010,6 +1988,7 @@ final class Planner(val cube: BoundCube) {
                     "the fused dim-calc frame: " + ex.getMessage, ex)
               case _: org.apache.spark.sql.AnalysisException => acc
             }
+          case _: WindowCalc if setOp => acc
           case WindowCalc(base, kind, overDim, resetLevel) =>
             axisDims.find(_.d.name == overDim) match {
               case None => acc // window dim not on axis → undefined, skip
@@ -2017,20 +1996,14 @@ final class Planner(val cube: BoundCube) {
                 acc.withColumn(cm.name, windowColumn(base, kind, ad,
                   axisDims, resetLevel, ctx.fold(Seq.empty[String])(_.cols)))
             }
-          case sac: SetAggCalc =>
-            setAggColumn(acc, cm.name, sac, axisDims, slicer, withSets, ctx)
-          case lrc: LinRegCalc =>
-            linRegColumn(acc, cm.name, lrc, axisDims, slicer, withSets, ctx)
+          case sac: SetAggCalc => orSkip(
+            setAggColumn(acc, cm.name, sac, axisDims, slicer, withSets, ctx))
+          case lrc: LinRegCalc => orSkip(
+            linRegColumn(acc, cm.name, lrc, axisDims, slicer, withSets, ctx))
           case _: DimAggCalc => acc // axis member, not a cell column
         }
     }
 
-  /** MDX Sum/Avg/Min/Max/Count/Aggregate(set[, measure]) per axis cell:
-    * aggregate the subcube at (axis grain × set grain) restricted to the
-    * set's members, then fold the per-member values back to the axis
-    * grain. One extra aggregation + a broadcast join — the set member
-    * frame stays on the dimension side, never a fact re-scan per cell.
-    */
   /** Sum/Avg/Aggregate(set) and LinReg series sets iterate member
     * VALUES; a dim-hosted calc member inside one would need per-member
     * cell evaluation (its value is itself an aggregate), which the
@@ -2042,54 +2015,58 @@ final class Planner(val cube: BoundCube) {
     * text scan, so neededCalcs would miss it.
     */
   private def requireNoDimCalcMember(set: SetExpr,
-      withSets: Map[String, SetExpr], ctx: String): Unit = {
-    val hosted = allCalcMembers.collect {
-      case CalcMember(n, dc: DimAggCalc, _, _, _, _) =>
-        n.toLowerCase -> dc.dim.toLowerCase
-    }.toMap
-    if (hosted.isEmpty) return
-    def walk(s: SetExpr, seen: Set[String]): Boolean = s match {
-      case Members(d, ps) => ps.exists(p => p.lastOption.exists(n =>
-        hosted.get(n.toString.toLowerCase).contains(d.toLowerCase)))
-      case NamedSetRef(n) => !seen(n) &&
-        withSets.get(n).exists(walk(_, seen + n))
-      case other: Product => other.productIterator.exists {
-        case e: SetExpr => walk(e, seen)
-        case _          => false
-      }
-    }
-    require(!walk(set, Set.empty),
+      withSets: Map[String, SetExpr], ctx: String): Unit =
+    require(!new DimCalcLowering(withMembers, withSets).hasCalcPath(set),
       s"calculated member inside $ctx is not supported — aggregate " +
         "the member's own set there instead")
+
+  /** The subcube a set-aggregating calc member folds per axis cell: its
+    * set's `frame` and key columns, and the axis it keeps. MDX context
+    * override: a set over a hierarchy that is ALSO on the axis replaces
+    * that hierarchy's cell coordinate (its members carry their own
+    * ancestors), so the axis dim drops out of the grain and the value
+    * repeats per overridden row.
+    */
+  private final class SetAggScope(set: SetExpr, what: String,
+      axisDims: Seq[AxisDim], slicer: Seq[SlicerItem],
+      withSets: Map[String, SetExpr], ctx: Option[EntryCtx]) {
+    requireNoDimCalcMember(set, withSets, what)
+    val frame: AxisFrame = evalSet(set, slicer, withSets)
+    val setKeys: Seq[String] = groupCols(frame.dims)
+    val keptAxis: Seq[AxisDim] = axisDims.filterNot(ad =>
+      frame.dims.exists(_.d.name == ad.d.name))
+    val keptKeys: Seq[String] =
+      ctx.fold(Seq.empty[String])(_.cols) ++ groupCols(keptAxis)
+    /** The cells at kept axis × set grain (per entry in a fused frame). */
+    def cells: DataFrame = ctx.fold(aggregate(keptAxis ++ frame.dims,
+      slicer))(_.cells(keptAxis, frame.dims))
+    /** `acc` with the per-kept-cell frame `side` joined on (broadcast). */
+    def attach(acc: DataFrame, side: DataFrame): DataFrame =
+      if (keptKeys.isEmpty) acc.crossJoin(broadcast(side))
+      else joinLeft(acc, side, keptKeys, ctx)
   }
 
+  /** MDX Sum/Avg/Min/Max/Count/Aggregate(set[, measure]) per axis cell:
+    * aggregate the subcube at (axis grain × set grain) restricted to the
+    * set's members, then fold the per-member values back to the axis
+    * grain. One extra aggregation + a broadcast join — the set member
+    * frame stays on the dimension side, never a fact re-scan per cell.
+    */
   private def setAggColumn(acc: DataFrame, name: String, sac: SetAggCalc,
       axisDims: Seq[AxisDim], slicer: Seq[SlicerItem],
       withSets: Map[String, SetExpr], ctx: Option[EntryCtx]): DataFrame = {
-    requireNoDimCalcMember(sac.set, withSets,
-      s"the ${sac.fn}(set) of measure [$name]")
-    val frame = evalSet(sac.set, slicer, withSets)
-    val setKeys = frame.dims.flatMap(fd => levelCols(fd.d, fd.depth))
+    val sc = new SetAggScope(sac.set, s"the ${sac.fn}(set) of measure " +
+      s"[$name]", axisDims, slicer, withSets, ctx)
+    val members = sc.frame.members.select(sc.setKeys.map(col): _*)
+      .distinct()
     if (sac.fn == "COUNT" && sac.includeEmpty) {
       // member count is axis-independent: no fact scan at all. Joined
       // in as a lazy broadcast scalar — not a driver-side count() —
       // so building the query plan never runs a job.
-      val cnt = frame.members.select(setKeys.map(col): _*).distinct()
-        .agg(count(lit(1)).as(name))
-      return acc.crossJoin(broadcast(cnt))
+      return acc.crossJoin(broadcast(members.agg(count(lit(1)).as(name))))
     }
-    // MDX context override: a set over a hierarchy that is ALSO on the
-    // axis replaces that hierarchy's cell coordinate (its members carry
-    // their own ancestors), so the axis dim drops out of the grain and
-    // the value repeats per overridden row.
-    val keptAxis = axisDims.filterNot(ad =>
-      frame.dims.exists(_.d.name == ad.d.name))
-    val keptKeys = ctx.fold(Seq.empty[String])(_.cols) ++ groupCols(keptAxis)
-    val inner = ctx.fold(aggregate(keptAxis ++ frame.dims, slicer))(
-      _.cells(keptAxis, frame.dims))
-    val restricted = inner.join(
-      broadcast(frame.members.select(setKeys.map(col): _*).distinct()),
-      setKeys, "left_semi")
+    val restricted = sc.cells.join(broadcast(members), sc.setKeys,
+      "left_semi")
     val m = cube.measures.find(_.name == sac.measure)
     // the measure slot may carry a lowered EXPRESSION
     // (Aggregate(set, [Measures].[m] * 2), mondrian_test.rb:224-229):
@@ -2122,11 +2099,9 @@ final class Planner(val cube: BoundCube) {
       case other => throw new IllegalArgumentException(
         s"unknown set aggregate '$other'")
     }).as(name)
-    val outer =
-      if (keptKeys.isEmpty) restricted.agg(aggCol)
-      else restricted.groupBy(keptKeys.map(col): _*).agg(aggCol)
-    if (keptKeys.isEmpty) acc.crossJoin(broadcast(outer))
-    else joinLeft(acc, outer, keptKeys, ctx)
+    sc.attach(acc,
+      if (sc.keptKeys.isEmpty) restricted.agg(aggCol)
+      else restricted.groupBy(sc.keptKeys.map(col): _*).agg(aggCol))
   }
 
   /** Left-join a per-cell frame back onto the axis frame (broadcast):
@@ -2136,6 +2111,32 @@ final class Planner(val cube: BoundCube) {
       ctx: Option[EntryCtx]): DataFrame =
     ctx.fold(acc.join(broadcast(side), keys, "left"))(
       _.join(acc, side, keys, true))
+
+  /** Per-query memo of LinReg moment folds: the common WITH block
+    * declares several statistics over the SAME (set, y, x) series
+    * (slope + intercept + R2 together), and each would otherwise
+    * re-aggregate the subcube — one fact pass per statistic. The fold
+    * is keyed by the kept grain too (the same series under different
+    * axes folds differently) and pinned, so every statistic reads the
+    * one persisted moments frame.
+    */
+  private val lrMoments = scala.collection.mutable.HashMap
+    .empty[(SetExpr, String, String, Seq[String], Seq[SlicerItem],
+      Map[String, SetExpr], Option[EntryCtx]), DataFrame]
+
+  /** Each member of `f` with its 1-based position in `f`'s order as
+    * `name`, keyed by its level columns: a single window for
+    * dimension-bounded sets, the distributed numbering when the dim is
+    * flagged high_cardinality ([[Ords]]).
+    */
+  private def seriesRank(f: AxisFrame, name: String): DataFrame = {
+    val ordBy = axisSort(f)
+    val cols = f.dims.flatMap(fd => memberCols(fd.d, fd.depth)) ++
+      (if (f.hasOrd) Seq(OrdCol) else Nil)
+    Ords.rowNumber(f.members.select(cols.distinct.map(col): _*).distinct(),
+        ordBy, name, hintOf(f.dims))
+      .select((groupCols(f.dims) :+ name).map(col): _*)
+  }
 
   /** MDX LinRegSlope/Intercept/R2/Variance(set, y, x) per axis cell:
     * one (x, y) point per SET MEMBER — `__LR_RANK__` in the lowered
@@ -2151,30 +2152,13 @@ final class Planner(val cube: BoundCube) {
     * 266.67/104.17 values (mondrian_test.rb:689-766) are Σ(y-ŷ)², not
     * the /n variance.
     */
-  /** Per-query memo of LinReg moment folds: the common WITH block
-    * declares several statistics over the SAME (set, y, x) series
-    * (slope + intercept + R2 together), and each would otherwise
-    * re-aggregate the subcube — one fact pass per statistic. The fold
-    * is keyed by the kept grain too (the same series under different
-    * axes folds differently) and pinned, so every statistic reads the
-    * one persisted moments frame.
-    */
-  private val lrMoments = scala.collection.mutable.HashMap
-    .empty[(SetExpr, String, String, Seq[String], Seq[SlicerItem],
-      Map[String, SetExpr], Option[EntryCtx]), DataFrame]
-
   private def linRegColumn(acc: DataFrame, name: String, lrc: LinRegCalc,
       axisDims: Seq[AxisDim], slicer: Seq[SlicerItem],
       withSets: Map[String, SetExpr], ctx: Option[EntryCtx]): DataFrame = {
-    requireNoDimCalcMember(lrc.set, withSets,
-      s"the LinReg series set of measure [$name]")
-    val frame = evalSet(lrc.set, slicer, withSets)
-    val setKeys = frame.dims.flatMap(fd => levelCols(fd.d, fd.depth))
-    // context override as in setAggColumn: a series over a hierarchy
-    // that is also on the axis replaces that coordinate
-    val keptAxis = axisDims.filterNot(ad =>
-      frame.dims.exists(_.d.name == ad.d.name))
-    val keptKeys = ctx.fold(Seq.empty[String])(_.cols) ++ groupCols(keptAxis)
+    val sc = new SetAggScope(lrc.set,
+      s"the LinReg series set of measure [$name]", axisDims, slicer,
+      withSets, ctx)
+    val (setKeys, keptKeys) = (sc.setKeys, sc.keptKeys)
     // The slicer, the WITH-set bindings and the fused dim-calc entry
     // context parameterize evalSet and the inner aggregate, so all
     // belong in the key, or one query reads another's moments (stale
@@ -2182,18 +2166,8 @@ final class Planner(val cube: BoundCube) {
     val moments = lrMoments.getOrElseUpdate(
       (lrc.set, lrc.yExpr + lrc.rankSet.fold("")("#" + _), lrc.xExpr,
         keptKeys, slicer, withSets, ctx), {
-    val ordBy = axisSort(frame)
-    val mCols = frame.dims.flatMap(fd => memberCols(fd.d, fd.depth)) ++
-      (if (frame.hasOrd) Seq(OrdCol) else Nil)
-    // series position through Ords: a single window for
-    // dimension-bounded sets, the distributed range-partitioned
-    // numbering when the dim is flagged high_cardinality
-    val ranked = Ords.rowNumber(
-        frame.members.select(mCols.distinct.map(col): _*).distinct(),
-        ordBy, "__lr_rank", hintOf(frame.dims))
-      .select((setKeys :+ "__lr_rank").map(col): _*)
-    val inner = ctx.fold(aggregate(keptAxis ++ frame.dims, slicer))(
-      _.cells(keptAxis, frame.dims))
+    val ranked = seriesRank(sc.frame, "__lr_rank")
+    val inner = sc.cells
     // every set member contributes a point even without fact rows (the
     // reference's rank-only CASE series span members with no data), so
     // the ranked members LEFT-join their cell values — per axis cell
@@ -2215,22 +2189,12 @@ final class Planner(val cube: BoundCube) {
       case None => series0
       case Some(rs) =>
         val rf = evalSet(rs, slicer, withSets)
-        val rKeys = rf.dims.flatMap(fd => levelCols(fd.d, fd.depth))
-        if (rKeys != setKeys)
+        if (groupCols(rf.dims) != setKeys)
           series0.withColumn("__lr_xrank", lit(0))
-        else {
-          val rOrd = axisSort(rf)
-          val rCols = rf.dims.flatMap(fd =>
-            memberCols(fd.d, fd.depth)) ++
-            (if (rf.hasOrd) Seq(OrdCol) else Nil)
-          val ranked2 = Ords.rowNumber(
-              rf.members.select(rCols.distinct.map(col): _*).distinct(),
-              rOrd, "__lr_xrank", hintOf(rf.dims))
-            .select((rKeys :+ "__lr_xrank").map(col): _*)
-          series0.join(broadcast(ranked2), setKeys, "left")
-            .withColumn("__lr_xrank",
-              coalesce(col("__lr_xrank"), lit(0)))
-        }
+        else
+          series0.join(broadcast(seriesRank(rf, "__lr_xrank")), setKeys,
+              "left")
+            .withColumn("__lr_xrank", coalesce(col("__lr_xrank"), lit(0)))
     }
     def lower(e: String): Column =
       sexpr(e.replace("__LR_RANK__", "__lr_rank")
@@ -2267,9 +2231,7 @@ final class Planner(val cube: BoundCube) {
       val o = moments.select((keptKeys.map(col) ++ Seq(
         when(n === 0.0, lit(Double.NaN)).otherwise(slope).as(mC),
         when(n === 0.0, lit(Double.NaN)).otherwise(intercept).as(bC))): _*)
-      val joined =
-        if (keptKeys.isEmpty) acc.crossJoin(broadcast(o))
-        else joinLeft(acc, o, keptKeys, ctx)
+      val joined = sc.attach(acc, o)
       val px = sexpr(lrc.pointX.getOrElse(throw new IllegalArgumentException(
         "LinRegPoint requires the x-slice argument"))).cast("double")
       return joined
@@ -2288,10 +2250,10 @@ final class Planner(val cube: BoundCube) {
       case other => throw new IllegalArgumentException(
         s"unknown LinReg statistic '$other'")
     })
-    val outer = moments.select((keptKeys.map(col) :+ stat.as(name)): _*)
-    if (keptKeys.isEmpty) acc.crossJoin(broadcast(outer))
-    else joinLeft(acc, outer, keptKeys, ctx)
-      .withColumn(name, coalesce(col(name), lit(Double.NaN)))
+    val joined = sc.attach(acc,
+      moments.select((keptKeys.map(col) :+ stat.as(name)): _*))
+    if (keptKeys.isEmpty) joined
+    else joined.withColumn(name, coalesce(col(name), lit(Double.NaN)))
   }
 
   private def windowColumn(base: String, kind: WinKind, ad: AxisDim,
@@ -2482,6 +2444,14 @@ object Planner {
   val DepthCol = "__depth"
 
   final case class AxisDim(d: BoundDim, depth: Int)
+
+  /** A sort by a cell value in which an empty cell is -infinity
+    * (FunUtil.compareValues): first ascending, last descending — Spark's
+    * default null order. A TOP op sorts descending, a BOTTOM one
+    * ascending.
+    */
+  def cellSort(v: Column, desc: Boolean): Column =
+    if (desc) v.desc_nulls_last else v.asc_nulls_first
 
   /** An axis frame's presentation order: its explicit order column
     * (`ordCol`, for a caller that renamed [[OrdCol]]) when it has one,

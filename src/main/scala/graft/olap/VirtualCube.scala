@@ -104,12 +104,8 @@ final class VirtualCube(
         Planner.AxisDim(cube.dim(dn), cube.dim(dn).levelIndex(ln))
       }
       // only slicer items whose dimension the base cube shares apply
-      val applicable = slicer.filter {
-        case MemberSlice(d, _) => cube.dims.exists(_.name == d)
-        case SetSlice(d, _) => cube.dims.exists(_.name == d)
-        case ExprSlice(_, _) => true
-        case EvalSlice(_) => true
-      }
+      val applicable = slicer.filter(_.memberDim.forall(d =>
+        cube.dims.exists(_.name == d)))
       val keys = Planner.groupCols(axisDims)
       (planner.aggregate(axisDims, applicable)
         .select((keys.map(col) ++ measures.map(col)): _*), keys)
@@ -140,12 +136,8 @@ final class VirtualCube(
     val ownerDims = dims.filter { case (d, _) =>
       owner.dims.exists(_.name == d)
     }
-    val ownerSlicer = slicer.filter {
-      case MemberSlice(d, _) => owner.dims.exists(_.name == d)
-      case SetSlice(d, _)    => owner.dims.exists(_.name == d)
-      case ExprSlice(_, _)   => true
-      case EvalSlice(_)      => true
-    }
+    val ownerSlicer = slicer.filter(_.memberDim.forall(d =>
+      owner.dims.exists(_.name == d)))
     val base = new Planner(owner)
       .drillThrough(ownerSlicer, own, ownerDims, maxRows = maxRows)
     // foreign fields keep their OWNING cube's type (ADVICE r5): a

@@ -240,6 +240,25 @@ class MdxSpec extends SparkSpec {
     }
   }
 
+  test("a set aggregate over a WITH SET name equals its inline-braces " +
+      "twin as a cell, a Filter key and an Order key") {
+    val set = "{[customer].[AMERICA], [customer].[EUROPE]}"
+    def run(arg: String, rows: String): Seq[org.apache.spark.sql.Row] =
+      Mdx.execute(
+        s"""WITH SET [Top] AS '$set'
+          |MEMBER [Measures].[s] AS 'Sum($arg, [Measures].[revenue])'
+          |SELECT {[Measures].[revenue], [Measures].[s]} ON COLUMNS,
+          |  $rows ON ROWS
+          |FROM [Sales]""".stripMargin, cube).collect().toSeq
+    for (rows <- Seq("[time].[year].Members",
+        "Filter([time].[year].Members, [Measures].[s] > 0)",
+        "Order([time].[year].Members, [Measures].[s], BDESC)")) {
+      val named = run("Top", rows)
+      assert(named.nonEmpty, rows)
+      assert(named === run(set, rows), rows)
+    }
+  }
+
   test("PAGES axis is the page-major outer coordinate") {
     val df = Mdx.execute(
       """SELECT {[Measures].[revenue]} ON COLUMNS,

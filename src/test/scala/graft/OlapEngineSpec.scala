@@ -208,4 +208,17 @@ class OlapEngineSpec extends SparkSpec {
     assert(u.count() === e.count() + Query.from(cube).columns("revenue")
       .rows(asia).execute().count())
   }
+
+  test("exists keeps the left tuples present in the right set") {
+    val nations = LevelMembers("customer", "nation")
+    val america = Members("customer", Seq(Seq("AMERICA")))
+    val got = Query.from(cube).columns("revenue")
+      .rows(ExistsSet(nations, america)).execute().collect().toSeq
+    val plain = Query.from(cube).columns("revenue").rows(nations).execute()
+      .collect().toSeq.filter(_.getAs[String]("cr_region") == "AMERICA")
+    assert(got.nonEmpty)
+    assert(got === plain)
+    assert(got.length === Query.from(cube).columns("revenue")
+      .rows(Children("customer", Seq("AMERICA"))).execute().count())
+  }
 }
