@@ -846,9 +846,13 @@ final class SegmentCache {
     * flush_schema_cache).
     */
   def flushCube(cubeId: Long): Unit = {
-    segments.keys.filter(_.cubeId == cubeId).foreach(evict)
+    keysOf(cubeId).foreach(evict)
     bump(cubeId)
   }
+
+  /** The keys of a cube's cached segments. */
+  def keysOf(cubeId: Long): Seq[SegKey] =
+    segments.keys.filter(_.cubeId == cubeId).toSeq
 
   /** Incremental maintenance on an insert-delta: merge each cached
     * segment of the cube in place when its measures are decomposable,
@@ -878,8 +882,7 @@ final class SegmentCache {
       : Unit = {
     var cuts = Seq.empty[DataFrame]
     try {
-      val plans = segments.keys.filter(_.cubeId == cubeId).toSeq
-        .map(k => k -> deltaFor(k))
+      val plans = keysOf(cubeId).map(k => k -> deltaFor(k))
       val merges = plans.collect { case (k, Some((rows, fns))) =>
         // rawCut (not a bare localCheckpoint): evict() must be able to
         // free the merged frame's blocks later, which for a checkpoint
@@ -904,7 +907,7 @@ final class SegmentCache {
     } catch {
       case e: Throwable =>
         cuts.foreach(evictFrame)
-        segments.keys.filter(_.cubeId == cubeId).foreach(evict)
+        keysOf(cubeId).foreach(evict)
         throw e
     } finally bump(cubeId)
   }
@@ -937,8 +940,7 @@ final class SegmentCache {
     * of its cell sets go.
     */
   def flushRegion(cubeId: Long, dim: String, path: Seq[Any]): Unit = {
-    segments.keys
-      .filter(_.cubeId == cubeId)
+    keysOf(cubeId)
       .filterNot(k => excludesRegion(k.slicer, dim, path))
       .foreach(evict)
     bump(cubeId)

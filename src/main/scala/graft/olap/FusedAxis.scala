@@ -97,7 +97,6 @@ private[olap] final class FusedAxis private (p: Planner,
       refuse(s"a calc member's set constrains [${clash.mkString(", ")}]" +
         ", a hierarchy another CALC factor enumerates")
   }
-  p.pruneFor(qs)
   // the calc-free factors' member frames, evaluated once with the
   // statement's measures; they pin the extra tuple coordinates
   private val otherFrames: Seq[AxisFrame] = otherIdxs.map(oi =>
@@ -117,11 +116,7 @@ private[olap] final class FusedAxis private (p: Planner,
   // axis grain: the multi-factor entry cross product, NECJ tuple support
   // and the pre-crossjoin op pass stay refused alongside them
   locally {
-    val contextual = p.neededCalcs.exists(_.calc match {
-      case ExprCalc(sql)  => sql.contains("__CURRENT_")
-      case _: DimAggCalc => false
-      case _             => true
-    })
+    val contextual = p.neededCalcs.exists(p.scope.contextual)
     val hasOverride = factors.exists(f =>
       constrainedOf(f.dim).exists(d => otherDimsLc(d.toLowerCase)))
     val mixedOther = otherFrames.exists(of =>
@@ -454,7 +449,10 @@ private[olap] final class FusedAxis private (p: Planner,
       val (aggCols, post) = Agg.toColumnsFused(p.neededMeasures)
       aggregateAt(nulled, cf0.entryCol +: groupCols(dims), aggCols, post)
     },
-    joinBack, qs.measures)
+    joinBack, {
+      case Scalar.CurrentName(d) if d.equalsIgnoreCase(cf0.dim) =>
+        col(cf0.label).cast("string")
+    })
 
   /** One fused pass over `base`: explode by the entry lists, key the
     * other factors' columns, aggregate at the axis-frame keys, left-join
@@ -500,7 +498,7 @@ private[olap] final class FusedAxis private (p: Planner,
         df.withColumn(m,
           when(calcAny && col(m).isNull, lit(0L)).otherwise(col(m)))
       }, os.flatMap(_.frame.dims), qSlicer, qs.withSets,
-      Some(ctxOf(lists.head.es)))
+      ctx = Some(ctxOf(lists.head.es)))
   }
 
   // ------------------------------------------------------- entry ops
@@ -544,7 +542,7 @@ private[olap] final class FusedAxis private (p: Planner,
   private def entryOps(df: DataFrame, f: CalcFactor,
       ops: Seq[EntryOp]): DataFrame =
     p.applyEntryOps(df.withColumn("__pos", (col(f.entryCol) + 1).cast("long")),
-      ops, f.dim, f.label, hierOf(f))
+      ops, f.dim, f.label, hierOf(f), qSlicer)
 
   /** Filter/Order over the calc factor of a CrossJoin (or over either
     * of two calc factors) evaluates PRE-crossjoin (FilterFunDef

@@ -62,8 +62,10 @@ final case class DistinctSet(set: SetExpr) extends SetExpr
 /** Exists(s1, s2): tuples of s1 present in s2 (left-semi). */
 final case class ExistsSet(left: SetExpr, right: SetExpr) extends SetExpr
 
-/** Filter(set, cond) — cond is a Spark SQL predicate over measure/level
-  * columns; evaluated against cells at the set's grain (HAVING semantics).
+/** Filter(set, cond) — cond is a Spark SQL predicate over measure, calc
+  * and level columns, evaluated against cells at the set's grain (HAVING
+  * semantics). Its current-member, ordinal and emptiness names
+  * ([[Scalar.Name]]) bind to the set's own tuple.
   */
 final case class FilterSet(set: SetExpr, cond: String) extends SetExpr
 /** Order(set, expr, direction). B-variants break the hierarchy (pure value

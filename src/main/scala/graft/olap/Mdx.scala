@@ -192,17 +192,17 @@ object Mdx {
       }
       val rank = dimOf(set) match {
         case Some(d) => s"Rank([$d].CurrentMember, ${render(set)})"
-        case None => "__LR_RANK__"
+        case None => Scalar.text(Scalar.SeriesRank)
       }
       val xrank = rankSet.map { rs =>
         dimOf(rs) match {
           case Some(d) => s"Rank([$d].CurrentMember, ${render(rs)})"
-          case None => "__LR_XRANK__"
+          case None => Scalar.text(Scalar.OtherRank)
         }
       }
       def back(e: String): String =
-        xrank.foldLeft(e.replace("__LR_RANK__", rank))(
-          (s, xr) => s.replace("__LR_XRANK__", xr))
+        xrank.foldLeft(e.replace(Scalar.text(Scalar.SeriesRank), rank))(
+          (s, xr) => s.replace(Scalar.text(Scalar.OtherRank), xr))
       val lead = pointX.map(px => s"$px, ").getOrElse("")
       s"$fnName($lead${render(set)}, ${back(y)}, ${back(x)})"
     case _ => cm.name
@@ -224,9 +224,12 @@ object Mdx {
     while (i < n) {
       val c = in(i)
       if (c.isWhitespace) i += 1
-      else if (c == '[') {
-        val j = in.indexOf(']', i)
-        if (j < 0) throw MdxException(s"Lexical error: unclosed '[' at $i")
+      else if (c == '[' || c == '`') {
+        // a backquoted name is the Spark SQL spelling of a bracketed one
+        // (the scalar lowering writes names that are not plain
+        // identifiers that way)
+        val j = in.indexOf(if (c == '[') ']' else '`', i + 1)
+        if (j < 0) throw MdxException(s"Lexical error: unclosed '$c' at $i")
         out += TBracket(in.substring(i + 1, j)); i = j + 1
       } else if (c == '\'' || c == '"') {
         val j = in.indexOf(c, i + 1)
@@ -1358,7 +1361,7 @@ object Mdx {
       val d = dimNamed(dn)
       if (atPunct(".") && peekAt(1).exists(isKw(_, "CurrentMember"))) {
         eatPunct("."); next()
-        MemberArg(d, s"__CURRENT_NAME_${d.name}__", None)
+        MemberArg(d, Scalar.text(Scalar.CurrentName(d.name)), None)
       } else {
         var segs = Seq.empty[String]
         while (atPunct(".") && peekAt(1).exists(_.isInstanceOf[TBracket])) {
@@ -1443,14 +1446,15 @@ object Mdx {
       "LINREGPOINT")
 
     /** While parsing a LinReg y/x argument, the series set —
-      * `Rank([dim].CurrentMember, <this set>)` lowers to the
-      * `__LR_RANK__` macro (the member's position in the series).
+      * `Rank([dim].CurrentMember, <this set>)` lowers to the series
+      * rank name ([[Scalar.SeriesRank]], the member's position in the
+      * series).
       */
     private var lrRankSet: Option[SetExpr] = None
 
     /** A Rank over a DIFFERENT set than the series, captured while
       * parsing LinReg y/x (at most one distinct auxiliary set per
-      * call) — lowers to `__LR_XRANK__`.
+      * call) — lowers to [[Scalar.OtherRank]].
       */
     private var lrXRankSet: Option[SetExpr] = None
 
@@ -1589,7 +1593,11 @@ object Mdx {
             // anything else is an expression evaluated per member over
             // the restricted subcube (validation of measure refs
             // happens inside the scalar lowering)
-            measure = scalarExpr(ws)
+            // a bare reference stores the plain name, however quoted
+            measure = scalarExpr(ws) match {
+              case q if q.matches("`[^`]+`") => q.substring(1, q.length - 1)
+              case e => e
+            }
         }
       }
       eatPunct(")")
@@ -1654,12 +1662,6 @@ object Mdx {
       val refs = scala.collection.mutable.ArrayBuffer.empty[(String, Boolean)]
       var lastTokRef = -1     // refs index, when the previous token was a ref
       var pendingDiv = false  // previous token was '/'
-      def addRef(m: String): Unit = {
-        refs += ((m, pendingDiv))
-        sb.append(s"@REF{${refs.size - 1}}")
-        lastTokRef = refs.size - 1
-        pendingDiv = false
-      }
       val stopKw = Set("SELECT", "MEMBER", "SET", "FROM", "ON")
       while (!done) {
         peek match {
@@ -1670,314 +1672,24 @@ object Mdx {
               stopKw(s.toUpperCase) => done = true
           case Some(TIdent(s)) if depth == 0 && stopAtAs &&
               s.equalsIgnoreCase("AS") => done = true
-          case Some(TIdent(s)) if s.equalsIgnoreCase("Measures") &&
-              peekAt(1).contains(TPunct(".")) &&
-              peekAt(2).exists(_.isInstanceOf[TBracket]) =>
-            // unbracketed reference style: Measures.[x]
-            next(); eatPunct(".")
-            next() match {
-              case TBracket(m) => addRef(m)
-              case t2 => throw MdxException(
-                s"Syntax error: bad measure ref $t2")
-            }
-            prevWasIdent = false
-          case Some(TPunct("(")) if !prevWasIdent && atTupleStart =>
-            sb.append(tupleRef())
-            lastTokRef = -1; pendingDiv = false
-            prevWasIdent = false
-          case Some(TIdent(s)) if SetAggFns(s.toUpperCase) &&
-              peekAt(1).contains(TPunct("(")) && setAggArgIsSet(ws) =>
-            next()
-            sb.append(setAggRef(s.toUpperCase, ws))
-            lastTokRef = -1; pendingDiv = false
-            prevWasIdent = false
-          case Some(TIdent(s)) if LinRegFns(s.toUpperCase) &&
-              peekAt(1).contains(TPunct("(")) =>
-            next()
-            sb.append(linRegRef(s.toUpperCase, ws))
-            lastTokRef = -1; pendingDiv = false
-            prevWasIdent = false
-          case Some(TIdent(s)) if s.equalsIgnoreCase("Rank") &&
-              lrRankSet.isDefined && peekAt(1).contains(TPunct("(")) =>
-            // Rank([dim].CurrentMember, <series set>) inside a LinReg
-            // y/x argument — the member's 1-based series position
-            next(); eatPunct("(")
-            val d = next() match {
-              case TBracket(nm) => dimNamed(nm)
-              case t => throw MdxException(
-                s"Syntax error: Rank needs [dim].CurrentMember, got $t")
-            }
-            eatPunct(".")
-            next() match {
-              case TIdent(f) if f.equalsIgnoreCase("CurrentMember") => ()
-              case t => throw MdxException(
-                s"Syntax error: Rank in a LinReg series supports only " +
-                  s"[${d.name}].CurrentMember, got $t")
-            }
-            eatPunct(",")
-            val rset = setExpr(ws)
-            eatPunct(")")
-            if (rset == lrRankSet.get) sb.append(" __LR_RANK__ ")
-            else {
-              // ranking in a DIFFERENT set: member-identity semantics
-              // (position when present at the same level, 0 otherwise)
-              if (lrXRankSet.exists(_ != rset)) throw MdxException(
-                "Rank inside a LinReg call supports at most one set " +
-                  "besides the series itself")
-              lrXRankSet = Some(rset)
-              sb.append(" __LR_XRANK__ ")
-            }
-            lastTokRef = -1; pendingDiv = false
-            prevWasIdent = false
-          case Some(TIdent(s)) if udfByName(s).exists(u =>
-              u.syntax == UdfSyntax.Function &&
-                u.returns != UdfType.MemberSet) &&
-              peekAt(1).contains(TPunct("(")) =>
-            // function-syntax scalar UDF: expands to a SQL fragment in
-            // place (stays codegen'd with the surrounding expression)
-            next()
-            sb.append(" " + udfSql(udfInvoke(udfByName(s).get, Nil, ws), s) +
-              " ")
-            lastTokRef = -1; pendingDiv = false
-            prevWasIdent = false
-          case Some(TPunct("{")) =>
-            // a set literal in scalar position only makes sense as the
-            // object of a set-typed property/method UDF:
-            // {...}.firstUpperName (schema_definition_test.rb:1074-1090)
-            val set = setTermBase(ws)
-            udfPostfix(SetArg(set), ws) match {
-              case Some(sql) => sb.append(" " + sql + " ")
-              case None => throw MdxException(
-                "Syntax error: set literal in scalar position requires " +
-                  "a set-typed UDF property/method")
-            }
-            lastTokRef = -1; pendingDiv = false
-            prevWasIdent = false
-          case Some(TIdent(s)) if s.equalsIgnoreCase("IsEmpty") &&
-              peekAt(1).contains(TPunct("(")) =>
-            // IsEmpty(expr) → NULL test (IsEmptyFunDef);
-            // IsEmpty(S.Current) with the Filter set alias → "every
-            // measure of the current tuple is empty" macro the planner
-            // expands over the cell frame's measure columns
-            next(); eatPunct("(")
-            val aliasCurrent = setAlias.isDefined && (peek match {
-              case Some(TIdent(s2)) =>
-                s2.equalsIgnoreCase(setAlias.get) &&
-                  peekAt(1).contains(TPunct(".")) &&
-                  peekAt(2).exists(isKw(_, "Current"))
-              case _ => false
-            })
-            if (aliasCurrent) {
-              next(); eatPunct("."); next()
-              sb.append(" __CURRENT_EMPTY__ ")
-            } else {
-              val inner = scalarExpr(ws, setAlias = setAlias)
-              sb.append(s" (($inner) IS NULL) ")
-            }
-            eatPunct(")")
-            lastTokRef = -1; pendingDiv = false; prevWasIdent = false
-          case Some(TIdent(s)) if setAlias.exists(_.equalsIgnoreCase(s)) &&
-              peekAt(1).contains(TPunct(".")) &&
-              peekAt(2).exists(isKw(_, "CurrentOrdinal")) =>
-            // S.CurrentOrdinal — 0-based position of the current tuple
-            // in the aliased set (NamedSetCurrentOrdinalFunDef)
-            next(); eatPunct("."); next()
-            sb.append(" __CURRENT_ORDINAL__ ")
-            lastTokRef = -1; pendingDiv = false; prevWasIdent = false
-          case Some(TIdent(s)) if s.equalsIgnoreCase("IsDirty") &&
-              peekAt(1).contains(TPunct("(")) =>
-            // IsDirty() — "may this cell be stale mid-cache-flush?"
-            // (jar IsDirtyFunDef; mondrian_test.rb:242-246 expects
-            // false). This engine evaluates every query against source
-            // data under Spark's immutable-plan execution — a cell is
-            // never served from a half-invalidated cache — so the
-            // truthful constant is false.
-            next(); eatPunct("("); eatPunct(")")
-            sb.append(" false ")
-            lastTokRef = -1; pendingDiv = false; prevWasIdent = false
-          case Some(TIdent(s)) if s.equalsIgnoreCase("Parameter") &&
-              peekAt(1).contains(TPunct("(")) =>
-            next()
-            sb.append(parameterValue() match {
-              case str: String => s"'${str.replace("'", "''")}'"
-              case other => other.toString
-            })
-            lastTokRef = -1; pendingDiv = false
-          case Some(TIdent(s)) if s.equalsIgnoreCase("CAST") &&
-              peekAt(1).contains(TPunct("(")) =>
-            // MDX Cast(expr AS Type) (CastFunDef, mondrian_test.rb
-            // Cast tests): MDX type names → Spark SQL types
-            next(); eatPunct("(")
-            val inner = scalarExpr(ws, stopAtAs = true)
-            eatKw("AS")
-            val tname = next() match {
-              case TIdent(t) => t
-              case TBracket(t) => t
-              case t => throw MdxException(
-                s"Syntax error: bad Cast type $t")
-            }
-            val sparkType = tname.toUpperCase match {
-              case "BOOLEAN" => "BOOLEAN"
-              case "STRING" => "STRING"
-              case "INTEGER" | "INT" => "INT"
-              case "LONG" => "BIGINT"
-              // MDX NUMERIC is double-typed (CastFunDef)
-              case "NUMERIC" | "DOUBLE" | "SINGLE" => "DOUBLE"
-              case "DECIMAL" | "CURRENCY" => "DECIMAL(19,4)"
-              case "DATE" | "DATETIME" => "TIMESTAMP"
-              case o => throw MdxException(s"Cast: unknown type '$o'")
-            }
-            eatPunct(")")
-            sb.append(s" CAST($inner AS $sparkType) ")
-            lastTokRef = -1; pendingDiv = false; prevWasIdent = false
-          case Some(TIdent(s)) if s.equalsIgnoreCase("FORMAT") &&
-              peekAt(1).contains(TPunct("(")) =>
-            // MDX Format(expr, 'vb-format') — lowered through the VB
-            // format engine's Column surface, spliced back as SQL so it
-            // stays inside the surrounding codegen'd expression
-            next(); eatPunct("(")
-            val inner = scalarExpr(ws)
-            eatPunct(",")
-            val fmt = next() match {
-              case TStr(f) => f
-              case t => throw MdxException(
-                s"Syntax error: Format needs a format string, got $t")
-            }
-            eatPunct(")")
-            sb.append(" " + graft.functions.FormatString.sqlFor(inner, fmt)
-              + " ")
-            lastTokRef = -1; pendingDiv = false; prevWasIdent = false
-          case Some(TIdent(s)) if s.equalsIgnoreCase("SETTOSTR") &&
-              peekAt(1).contains(TPunct("(")) =>
-            // SetToStr(set) — constant-folded at parse time to the MDX
-            // rendering of the set (SetToStrFunDef)
-            next(); eatPunct("(")
-            val set = setExpr(ws)
-            eatPunct(")")
-            sb.append(s" '${render(set).replace("'", "''")}' ")
-            lastTokRef = -1; pendingDiv = false; prevWasIdent = false
-          case Some(TIdent(s)) if s.equalsIgnoreCase("TUPLETOSTR") &&
-              peekAt(1).contains(TPunct("(")) =>
-            // TupleToStr((m1, m2, ...)) — "(member, member)" rendering
-            next(); eatPunct("(")
-            val wrapped = atPunct("(")
-            if (wrapped) eatPunct("(")
-            var parts = Vector.empty[String]
-            def onePath(): Unit = {
-              val p = memberPath()
-              parts :+= ("[" + p.mkString("].[") + "]")
-            }
-            onePath()
-            while (atPunct(",")) { eatPunct(","); onePath() }
-            if (wrapped) eatPunct(")")
-            eatPunct(")")
-            val rendered =
-              if (parts.length == 1) parts.head
-              else parts.mkString("(", ", ", ")")
-            sb.append(s" '${rendered.replace("'", "''")}' ")
-            lastTokRef = -1; pendingDiv = false; prevWasIdent = false
-          case Some(t) =>
-            next()
-            prevWasIdent = t.isInstanceOf[TIdent]
-            t match {
-              case TBracket(s) =>
-                // [Measures].[x] or bare [x] measure reference; or
-                // [dim].CurrentMember[.Name|.Caption] inside a Filter/
-                // Order condition (reference query_test.rb:295-297) —
-                // emitted as a macro the planner resolves to the set's
-                // deepest level column for that dimension.
-                if (s.equalsIgnoreCase("Measures")) {
-                  eatPunct(".")
-                  next() match {
-                    case TBracket(m) => addRef(m)
-                    case t2 => throw MdxException(
-                      s"Syntax error: bad measure ref $t2")
-                  }
-                } else if (cube.dims.exists(_.name.equalsIgnoreCase(s)) &&
-                    atPunct(".") && peekAt(1).exists(
-                      isKw(_, "CurrentMember"))) {
-                  val d = cube.dims.find(_.name.equalsIgnoreCase(s)).get
-                  eatPunct("."); next() // CurrentMember
-                  if (atPunct(".") && peekAt(1).exists(t2 =>
-                      isKw(t2, "Name") || isKw(t2, "Caption"))) {
-                    eatPunct("."); next()
-                    sb.append(s" __CURRENT_NAME_${d.name}__ ")
-                  } else if (atPunct(".") &&
-                      peekAt(1).exists(isKw(_, "Properties"))) {
-                    // .Properties('P') — member property of the current
-                    // member (PropertiesFunDef; cube.rb:470-480): the
-                    // planner joins the dimension's property column in
-                    eatPunct("."); next(); eatPunct("(")
-                    val prop = next() match {
-                      case TStr(p) => p
-                      case t => throw MdxException(
-                        s"Syntax error: Properties needs a name, got $t")
-                    }
-                    eatPunct(")")
-                    sb.append(s" __CURRENT_PROP_${d.name}__${prop}__ ")
-                  } else {
-                    // .UpperName property / .toUpperName('x') method UDF
-                    // on the current member; bare CurrentMember otherwise
-                    val obj = MemberArg(d, s"__CURRENT_NAME_${d.name}__",
-                      None)
-                    sb.append(udfPostfix(obj, ws) match {
-                      case Some(sql) => s" $sql "
-                      case None => s" __CURRENT_NAME_${d.name}__ "
-                    })
-                  }
-                  lastTokRef = -1; pendingDiv = false
-                } else if (cube.dims.exists(_.name.equalsIgnoreCase(s)) &&
-                    !isMeasureName(s)) {
-                  // [dim](.[seg])*.udf — hierarchy / level / member
-                  // object of a property/method UDF, dispatched by the
-                  // UDF's declared first parameter type
-                  val d = cube.dims.find(_.name.equalsIgnoreCase(s)).get
-                  var segs = Seq.empty[String]
-                  while (atPunct(".") &&
-                      peekAt(1).exists(_.isInstanceOf[TBracket])) {
-                    eatPunct(".")
-                    next() match {
-                      case TBracket(x) => segs :+= x
-                      case _ => ()
-                    }
-                  }
-                  val udfName = if (atPunct(".")) peekAt(1).collect {
-                    case TIdent(f) if udfByName(f).exists(u =>
-                      u.syntax != UdfSyntax.Function) => f
-                  } else None
-                  udfName match {
-                    case Some(f) =>
-                      eatPunct("."); next()
-                      val u = udfByName(f).get
-                      val obj: UdfArg = u.parameters.headOption match {
-                        case Some(UdfType.Hierarchy) => HierarchyArg(d)
-                        case Some(UdfType.Level) if segs.length == 1 =>
-                          LevelArg(d, resolveLevel(d, segs.head))
-                        case Some(UdfType.MemberSet) =>
-                          SetArg(if (segs.isEmpty)
-                            LevelMembers(d.name, d.levels.head.name)
-                          else Members(d.name, Seq(segs.map(pathValue))))
-                        case _ =>
-                          if (segs.isEmpty) throw MdxException(
-                            s"Syntax error: '$f' needs a member, " +
-                              s"[${d.name}] is a dimension")
-                          MemberArg(d,
-                            UdfResult.lit(segs.last).sql,
-                            Some(segs.map(pathValue)))
-                      }
-                      sb.append(" " + udfSql(udfInvoke(u, Seq(obj), ws), f)
-                        + " ")
-                      lastTokRef = -1; pendingDiv = false
-                    case None => throw MdxException(
-                      s"Syntax error: dimension reference [${d.name}] " +
-                        "in scalar position")
-                  }
-                } else addRef(s)
-              case other =>
-                val wasDiv = other == TPunct("/")
+          case Some(_) =>
+            loweredTerm(ws, setAlias, tupleOk = !prevWasIdent) match {
+              case Some(Left(m)) =>
+                refs += ((m, pendingDiv))
+                sb.append(s"@REF{${refs.size - 1}}")
+                lastTokRef = refs.size - 1
+                pendingDiv = false
+                prevWasIdent = false
+              case Some(Right(sql)) =>
+                // a lowered construct is one operand
+                sb.append(sql)
+                lastTokRef = -1; pendingDiv = false; prevWasIdent = false
+              case None =>
+                val t = next()
+                val wasDiv = t == TPunct("/")
                 if (wasDiv && lastTokRef >= 0)
                   refs(lastTokRef) = (refs(lastTokRef)._1, true)
-                other match {
+                t match {
                   case TPunct("(") => depth += 1; sb.append("(")
                   case TPunct(")") => depth -= 1; sb.append(")")
                   case TIdent(s) =>
@@ -1998,10 +1710,11 @@ object Mdx {
                   case TNum(s) => sb.append(s)
                   case TStr(s) => sb.append(s"'$s'")
                   case TPunct(p) => sb.append(s" $p ")
-                  case TBracket(_) => () // unreachable: handled above
+                  case TBracket(_) => () // read by loweredTerm
                 }
                 pendingDiv = wasDiv
                 lastTokRef = -1
+                prevWasIdent = t.isInstanceOf[TIdent]
             }
         }
       }
@@ -2012,11 +1725,283 @@ object Mdx {
             s"MDX object '[Measures].[$m]' not found in cube " +
               s"'${cube.name}'")
         // decimal/decimal quotients get engine-specific scales; compute
-        // ratios in double (same policy as the builder's calc members)
-        val col = if (cast) s"CAST($m AS DOUBLE)" else m
-        out = out.replace(s"@REF{$i}", col)
+        // ratios in double (same policy as the builder's calc members).
+        // A name that is not a plain identifier is backquoted, as Spark
+        // SQL quotes it.
+        val name = Scalar.text(Scalar.Ref(m))
+        out = out.replace(s"@REF{$i}",
+          if (cast) s"CAST($name AS DOUBLE)" else name)
       }
       canonSpaces(out)
+    }
+
+    /** The scalar construct at the cursor: a measure reference to
+      * rewrite (Left), the SQL text it lowers to (Right), or None for a
+      * plain token [[scalarExpr]] copies through. `tupleOk`: a '(' here
+      * may open a tuple (it does not follow an identifier).
+      */
+    private def loweredTerm(ws: Map[String, SetExpr],
+        setAlias: Option[String],
+        tupleOk: Boolean): Option[Either[String, String]] = {
+      def fn(name: String): Boolean =
+        peek.exists(isKw(_, name)) && peekAt(1).contains(TPunct("("))
+      peek match {
+        case Some(TIdent(s)) if s.equalsIgnoreCase("Measures") &&
+            peekAt(1).contains(TPunct(".")) &&
+            peekAt(2).exists(_.isInstanceOf[TBracket]) =>
+          // unbracketed reference style: Measures.[x]
+          next(); eatPunct(".")
+          next() match {
+            case TBracket(m) => Some(Left(m))
+            case t2 => throw MdxException(s"Syntax error: bad measure ref $t2")
+          }
+        case Some(TBracket(s)) =>
+          next()
+          Some(bracketTerm(s, ws))
+        case Some(TPunct("(")) if tupleOk && atTupleStart =>
+          Some(Right(tupleRef()))
+        case Some(TIdent(s)) if SetAggFns(s.toUpperCase) &&
+            peekAt(1).contains(TPunct("(")) && setAggArgIsSet(ws) =>
+          next()
+          Some(Right(setAggRef(s.toUpperCase, ws)))
+        case Some(TIdent(s)) if LinRegFns(s.toUpperCase) &&
+            peekAt(1).contains(TPunct("(")) =>
+          next()
+          Some(Right(linRegRef(s.toUpperCase, ws)))
+        case Some(TIdent(_)) if fn("Rank") && lrRankSet.isDefined =>
+          // Rank([dim].CurrentMember, <series set>) inside a LinReg
+          // y/x argument — the member's 1-based series position
+          next(); eatPunct("(")
+          val d = next() match {
+            case TBracket(nm) => dimNamed(nm)
+            case t => throw MdxException(
+              s"Syntax error: Rank needs [dim].CurrentMember, got $t")
+          }
+          eatPunct(".")
+          next() match {
+            case TIdent(f) if f.equalsIgnoreCase("CurrentMember") => ()
+            case t => throw MdxException(
+              s"Syntax error: Rank in a LinReg series supports only " +
+                s"[${d.name}].CurrentMember, got $t")
+          }
+          eatPunct(",")
+          val rset = setExpr(ws)
+          eatPunct(")")
+          if (rset != lrRankSet.get) {
+            // ranking in a DIFFERENT set: member-identity semantics
+            // (position when present at the same level, 0 otherwise)
+            if (lrXRankSet.exists(_ != rset)) throw MdxException(
+              "Rank inside a LinReg call supports at most one set " +
+                "besides the series itself")
+            lrXRankSet = Some(rset)
+          }
+          Some(Right(" " + Scalar.text(if (rset == lrRankSet.get)
+            Scalar.SeriesRank else Scalar.OtherRank) + " "))
+        case Some(TIdent(s)) if udfByName(s).exists(u =>
+            u.syntax == UdfSyntax.Function &&
+              u.returns != UdfType.MemberSet) &&
+            peekAt(1).contains(TPunct("(")) =>
+          // function-syntax scalar UDF: expands to a SQL fragment in
+          // place (stays codegen'd with the surrounding expression)
+          next()
+          Some(Right(" " + udfSql(udfInvoke(udfByName(s).get, Nil, ws), s) +
+            " "))
+        case Some(TPunct("{")) =>
+          // a set literal in scalar position only makes sense as the
+          // object of a set-typed property/method UDF:
+          // {...}.firstUpperName (schema_definition_test.rb:1074-1090)
+          val set = setTermBase(ws)
+          udfPostfix(SetArg(set), ws) match {
+            case Some(sql) => Some(Right(" " + sql + " "))
+            case None => throw MdxException(
+              "Syntax error: set literal in scalar position requires " +
+                "a set-typed UDF property/method")
+          }
+        case Some(TIdent(_)) if fn("IsEmpty") =>
+          // IsEmpty(expr) → NULL test (IsEmptyFunDef);
+          // IsEmpty(S.Current) with the Filter set alias → "every
+          // measure of the current tuple is empty", which the planner
+          // binds over the cell frame's measure columns
+          next(); eatPunct("(")
+          val aliasCurrent = setAlias.isDefined && (peek match {
+            case Some(TIdent(s2)) =>
+              s2.equalsIgnoreCase(setAlias.get) &&
+                peekAt(1).contains(TPunct(".")) &&
+                peekAt(2).exists(isKw(_, "Current"))
+            case _ => false
+          })
+          val sql =
+            if (aliasCurrent) {
+              next(); eatPunct("."); next()
+              s" ${Scalar.text(Scalar.CurrentEmpty)} "
+            } else s" ((${scalarExpr(ws, setAlias = setAlias)}) IS NULL) "
+          eatPunct(")")
+          Some(Right(sql))
+        case Some(TIdent(s)) if setAlias.exists(_.equalsIgnoreCase(s)) &&
+            peekAt(1).contains(TPunct(".")) &&
+            peekAt(2).exists(isKw(_, "CurrentOrdinal")) =>
+          // S.CurrentOrdinal — 0-based position of the current tuple
+          // in the aliased set (NamedSetCurrentOrdinalFunDef)
+          next(); eatPunct("."); next()
+          Some(Right(s" ${Scalar.text(Scalar.CurrentOrdinal)} "))
+        case Some(TIdent(_)) if fn("IsDirty") =>
+          // IsDirty() — "may this cell be stale mid-cache-flush?"
+          // (jar IsDirtyFunDef; mondrian_test.rb:242-246 expects
+          // false). This engine evaluates every query against source
+          // data under Spark's immutable-plan execution — a cell is
+          // never served from a half-invalidated cache — so the
+          // truthful constant is false.
+          next(); eatPunct("("); eatPunct(")")
+          Some(Right(" false "))
+        case Some(TIdent(_)) if fn("Parameter") =>
+          next()
+          Some(Right(parameterValue() match {
+            case str: String => s"'${str.replace("'", "''")}'"
+            case other => other.toString
+          }))
+        case Some(TIdent(_)) if fn("CAST") =>
+          // MDX Cast(expr AS Type) (CastFunDef, mondrian_test.rb
+          // Cast tests): MDX type names → Spark SQL types
+          next(); eatPunct("(")
+          val inner = scalarExpr(ws, stopAtAs = true)
+          eatKw("AS")
+          val tname = next() match {
+            case TIdent(t) => t
+            case TBracket(t) => t
+            case t => throw MdxException(
+              s"Syntax error: bad Cast type $t")
+          }
+          val sparkType = tname.toUpperCase match {
+            case "BOOLEAN" => "BOOLEAN"
+            case "STRING" => "STRING"
+            case "INTEGER" | "INT" => "INT"
+            case "LONG" => "BIGINT"
+            // MDX NUMERIC is double-typed (CastFunDef)
+            case "NUMERIC" | "DOUBLE" | "SINGLE" => "DOUBLE"
+            case "DECIMAL" | "CURRENCY" => "DECIMAL(19,4)"
+            case "DATE" | "DATETIME" => "TIMESTAMP"
+            case o => throw MdxException(s"Cast: unknown type '$o'")
+          }
+          eatPunct(")")
+          Some(Right(s" CAST($inner AS $sparkType) "))
+        case Some(TIdent(_)) if fn("FORMAT") =>
+          // MDX Format(expr, 'vb-format') — lowered through the VB
+          // format engine's Column surface, spliced back as SQL so it
+          // stays inside the surrounding codegen'd expression
+          next(); eatPunct("(")
+          val inner = scalarExpr(ws)
+          eatPunct(",")
+          val fmt = next() match {
+            case TStr(f) => f
+            case t => throw MdxException(
+              s"Syntax error: Format needs a format string, got $t")
+          }
+          eatPunct(")")
+          Some(Right(" " + graft.functions.FormatString.sqlFor(inner, fmt) +
+            " "))
+        case Some(TIdent(_)) if fn("SETTOSTR") =>
+          // SetToStr(set) — constant-folded at parse time to the MDX
+          // rendering of the set (SetToStrFunDef)
+          next(); eatPunct("(")
+          val set = setExpr(ws)
+          eatPunct(")")
+          Some(Right(s" '${render(set).replace("'", "''")}' "))
+        case Some(TIdent(_)) if fn("TUPLETOSTR") =>
+          // TupleToStr((m1, m2, ...)) — "(member, member)" rendering
+          next(); eatPunct("(")
+          val wrapped = atPunct("(")
+          if (wrapped) eatPunct("(")
+          var parts = Vector.empty[String]
+          def onePath(): Unit = {
+            val p = memberPath()
+            parts :+= ("[" + p.mkString("].[") + "]")
+          }
+          onePath()
+          while (atPunct(",")) { eatPunct(","); onePath() }
+          if (wrapped) eatPunct(")")
+          eatPunct(")")
+          val rendered =
+            if (parts.length == 1) parts.head
+            else parts.mkString("(", ", ", ")")
+          Some(Right(s" '${rendered.replace("'", "''")}' "))
+        case _ => None
+      }
+    }
+
+    /** A bracketed name read in a scalar: `[Measures].[x]` or a bare
+      * `[x]` measure reference (Left); `[dim].CurrentMember` followed by
+      * `.Name`/`.Caption`, `.Properties('P')` (PropertiesFunDef;
+      * cube.rb:470-480: the planner joins the property column in), a
+      * property/method UDF or nothing, lowered to its [[Scalar.Name]]
+      * (reference query_test.rb:295-297); or `[dim](.[seg])*.udf`, a UDF
+      * on a hierarchy, level or member object dispatched by its first
+      * parameter type (Right).
+      */
+    private def bracketTerm(s: String,
+        ws: Map[String, SetExpr]): Either[String, String] = {
+      val dim = cube.dims.find(_.name.equalsIgnoreCase(s))
+      if (s.equalsIgnoreCase("Measures")) {
+        eatPunct(".")
+        next() match {
+          case TBracket(m) => Left(m)
+          case t2 => throw MdxException(s"Syntax error: bad measure ref $t2")
+        }
+      } else if (dim.isDefined && atPunct(".") &&
+          peekAt(1).exists(isKw(_, "CurrentMember"))) {
+        val d = dim.get
+        eatPunct("."); next() // CurrentMember
+        val name = Scalar.text(Scalar.CurrentName(d.name))
+        Right(if (atPunct(".") && peekAt(1).exists(t2 =>
+            isKw(t2, "Name") || isKw(t2, "Caption"))) {
+          eatPunct("."); next()
+          s" $name "
+        } else if (atPunct(".") && peekAt(1).exists(isKw(_, "Properties"))) {
+          eatPunct("."); next(); eatPunct("(")
+          val prop = next() match {
+            case TStr(p) => p
+            case t => throw MdxException(
+              s"Syntax error: Properties needs a name, got $t")
+          }
+          eatPunct(")")
+          s" ${Scalar.text(Scalar.CurrentProp(d.name, prop))} "
+        } else udfPostfix(MemberArg(d, name, None), ws)
+          .fold(s" $name ")(sql => s" $sql "))
+      } else if (dim.isDefined && !isMeasureName(s)) {
+        val d = dim.get
+        var segs = Seq.empty[String]
+        while (atPunct(".") && peekAt(1).exists(_.isInstanceOf[TBracket])) {
+          eatPunct(".")
+          next() match {
+            case TBracket(x) => segs :+= x
+            case _ => ()
+          }
+        }
+        val udfName = if (atPunct(".")) peekAt(1).collect {
+          case TIdent(f) if udfByName(f).exists(u =>
+            u.syntax != UdfSyntax.Function) => f
+        } else None
+        val f = udfName.getOrElse(throw MdxException(
+          s"Syntax error: dimension reference [${d.name}] " +
+            "in scalar position"))
+        eatPunct("."); next()
+        val u = udfByName(f).get
+        val obj: UdfArg = u.parameters.headOption match {
+          case Some(UdfType.Hierarchy) => HierarchyArg(d)
+          case Some(UdfType.Level) if segs.length == 1 =>
+            LevelArg(d, resolveLevel(d, segs.head))
+          case Some(UdfType.MemberSet) =>
+            SetArg(if (segs.isEmpty)
+              LevelMembers(d.name, d.levels.head.name)
+            else Members(d.name, Seq(segs.map(pathValue))))
+          case _ =>
+            if (segs.isEmpty) throw MdxException(
+              s"Syntax error: '$f' needs a member, " +
+                s"[${d.name}] is a dimension")
+            MemberArg(d, UdfResult.lit(segs.last).sql,
+              Some(segs.map(pathValue)))
+        }
+        Right(" " + udfSql(udfInvoke(u, Seq(obj), ws), f) + " ")
+      } else Left(s)
     }
 
     /** Collapse whitespace runs (outside string literals) to one

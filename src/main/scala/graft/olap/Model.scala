@@ -201,8 +201,12 @@ object WinKind {
   * reference earlier ones (reference SOLVE_ORDER emission query.rb:684-687).
   */
 sealed trait CalcDef
-/** Spark SQL expression over measure + level columns, e.g.
-  * "sum_sales - sum_cost".
+/** Spark SQL expression over measure, calc and level columns, e.g.
+  * "sum_sales - sum_cost"; a name that is not a plain identifier is
+  * backquoted, as Spark SQL quotes it. From MDX it may read the names of
+  * [[Scalar.Name]] (`[dim].CurrentMember.Name`, `.Properties('p')`),
+  * which the planner's statement scope binds where the formula is
+  * evaluated.
   */
 final case class ExprCalc(sql: String) extends CalcDef
 /** Window over the ordered members of `overDim`:
@@ -232,10 +236,10 @@ final case class SetAggCalc(
 /** Per-member-series linear regression over a set — MDX
   * LinRegSlope/LinRegIntercept/LinRegR2/LinRegVariance(set, y, x)
   * (Mondrian LinReg*FunDef; reference mondrian_test.rb:608-766).
-  * `yExpr`/`xExpr` are lowered Spark SQL scalar expressions evaluated
-  * once per set member: the `__LR_RANK__` macro resolves to the
-  * member's 1-based position in the set's order, measure references to
-  * the member's cell value. Points with a NULL x or y are skipped
+  * `yExpr`/`xExpr` are Spark SQL scalar expressions evaluated once per
+  * set member: the series-rank name ([[Scalar.SeriesRank]]) binds to
+  * the member's 1-based position in the set's order, measure references
+  * to the member's cell value. Points with a NULL x or y are skipped
   * (Mondrian's accuracy loop); an empty point set yields NaN (pinned
   * by the reference's NULL-series test). `fn` selects the statistic:
   * SLOPE / INTERCEPT of the OLS fit of y on x, R2 = corr², VARIANCE =
@@ -259,7 +263,7 @@ final case class LinRegCalc(
       * mondrian_test.rb:765-778): Mondrian member-identity semantics —
       * the position when the member IS in that set (same level, keyed
       * join), 0 when absent or when the sets enumerate different
-      * levels. Lowered to the `__LR_XRANK__` macro.
+      * levels. Read through [[Scalar.OtherRank]].
       */
     rankSet: Option[SetExpr] = None) extends CalcDef
 

@@ -29,85 +29,47 @@ import org.apache.spark.sql.expressions.Window
 final class Planner(val cube: BoundCube) {
   import Planner._
 
-  /** Measures actually aggregated — pruned per query in execute() (the
-    * analog of Catalyst column pruning at the measure level: a q1-style
-    * single-measure query must not pay for the cube's 12 aggregates).
-    * Defaults to all measures for direct evalSet/metadata use.
+  /** The scope of the statement being rendered ([[pruneFor]]): its
+    * measures (the analog of Catalyst column pruning at the measure
+    * level: a q1-style single-measure query must not pay for the cube's
+    * 12 aggregates), its calc members in solve order and their
+    * dependencies, and its WITH members. Outside a statement (direct
+    * evalSet/metadata use) every measure and calc member of the cube.
     */
-  private[olap] var neededMeasures: Seq[Measure] = cube.measures
-  private[olap] var neededCalcs: Seq[CalcMember] = cube.calcMembers
-  // the statement's WITH members, unfiltered: member-path LITERALS in
-  // sets don't register in pruneFor's text scan, so "is this path a
-  // calc member" checks must not rely on neededCalcs
-  private var withMembers: Seq[CalcMember] = Nil
+  private var current: Scope = Scope.schema(cube, defaultMemberName)
+  private[olap] def scope: Scope = current
+  private[olap] def neededMeasures: Seq[Measure] = current.measures
+  private[olap] def neededCalcs: Seq[CalcMember] = current.calcs
 
-  /** Expression strings referenced anywhere in a set tree (filter
-    * conditions, order keys, top-k measures).
+  /** `body` with `s` as the planner's scope, restored after (a nested
+    * statement — a computed slicer's sub-query — builds on the same
+    * planner).
     */
-  private def exprTexts(set: SetExpr): Seq[String] = set match {
-    case FilterSet(s, c)          => c +: exprTexts(s)
-    case OrderSet(s, e, _)        => e +: exprTexts(s)
-    case TopCount(s, _, e, _)     => e +: exprTexts(s)
-    case TopPercent(s, _, e, _)   => e +: exprTexts(s)
-    case TopSum(s, _, e, _)       => e +: exprTexts(s)
-    case HeadSet(s, _)            => exprTexts(s)
-    case TailSet(s, _)            => exprTexts(s)
-    case SubsetSet(s, _, _)       => exprTexts(s)
-    case Hierarchize(s, _)        => exprTexts(s)
-    case DistinctSet(s)           => exprTexts(s)
-    case CrossJoin(l, r)          => exprTexts(l) ++ exprTexts(r)
-    case NonEmptyCrossJoin(l, r)  => exprTexts(l) ++ exprTexts(r)
-    case UnionSet(l, r, _)        => exprTexts(l) ++ exprTexts(r)
-    case IntersectSet(l, r)       => exprTexts(l) ++ exprTexts(r)
-    case ExceptSet(l, r)          => exprTexts(l) ++ exprTexts(r)
-    case ExistsSet(l, r)          => exprTexts(l) ++ exprTexts(r)
-    case ExtractSet(s, _)         => exprTexts(s)
-    case DrilldownMember(a, b)    => exprTexts(a) ++ exprTexts(b)
-    case DrilldownLevelTop(s, _, e, _) => e +: exprTexts(s)
-    case ToggleDrillState(a, b)   => exprTexts(a) ++ exprTexts(b)
-    case UnorderSet(s)            => exprTexts(s)
-    case _                        => Nil
+  private def within[T](s: Scope)(body: => T): T = {
+    val saved = current
+    current = s
+    try body finally current = saved
   }
 
-  private def referencedIn(name: String, texts: Seq[String]): Boolean = {
-    val re = ("\\b" + java.util.regex.Pattern.quote(name) + "\\b").r
-    texts.exists(t => re.findFirstIn(t).isDefined)
-  }
-
-  /** Fixpoint over calc-member dependencies: a calc is needed if its name
-    * is referenced; its formula text then pulls in further measures/calcs.
+  /** The scope of statement `q`: the measures and calcs its COLUMNS,
+    * axes, WITH sets and computed slicers read, built before any of them
+    * is evaluated (so a computed slicer aggregates only what the
+    * statement reads), with every WITH member validated.
     */
-  private[olap] def pruneFor(q: QueryIR): Unit = {
-    val allCalcs = cube.calcMembers ++ q.withMembers
-    withMembers = q.withMembers
-    spacedMeasureRx = buildSpacedRx(
-      cube.measures.map(_.name) ++ allCalcs.map(_.name))
-    var texts: Seq[String] =
-      q.measures ++ q.rows.toSeq.flatMap(exprTexts) ++
-        q.withSets.values.flatMap(exprTexts)
-    var active = Set.empty[String]
-    var changed = true
-    while (changed) {
-      changed = false
-      allCalcs.foreach { c =>
-        if (!active(c.name) && referencedIn(c.name, texts)) {
-          active += c.name
-          texts = texts ++ (c.calc match {
-            case ExprCalc(sql)               => Seq(sql)
-            case WindowCalc(base, _, _, _)   => Seq(base)
-            case SetAggCalc(_, m, set, _)    => m +: exprTexts(set)
-            case LinRegCalc(_, set, y, x, px, rs) =>
-              Seq(y, x) ++ px.toSeq ++ exprTexts(set) ++
-                rs.toSeq.flatMap(exprTexts)
-            case DimAggCalc(_, set)          => exprTexts(set)
-          })
-          changed = true
-        }
-      }
-    }
-    neededCalcs = allCalcs.filter(c => active(c.name))
-    neededMeasures = cube.measures.filter(m => referencedIn(m.name, texts))
-    if (neededMeasures.isEmpty) neededMeasures = cube.measures
+  private[olap] def pruneFor(q: QueryIR): Scope =
+    Scope.statement(cube, q,
+      q.rows.toSeq ++ q.withSets.values ++
+        q.slicer.collect { case EvalSlice(s) => s },
+      defaultMemberName)
+
+  /** The name of `d`'s default member (`[d].DefaultMember`: its first
+    * root-level member visible to the role), null for an empty level.
+    */
+  private def defaultMemberName(d: BoundDim): Any = {
+    val root = d.levels.head
+    memberFrame(d, 0).orderBy(col(root.ordinal).asc, col(root.col).asc)
+      .select(col(root.col)).limit(1).collect().headOption.map(_.get(0))
+      .orNull
   }
 
   // ---------------------------------------------------------------- axes
@@ -422,31 +384,27 @@ final class Planner(val cube: BoundCube) {
       // renumber __ord when the child was explicitly ordered (ADVICE r1).
       val a0 = evalSet(s, slicer, withSets)
       // S.CurrentOrdinal needs an explicit position column
-      val a = if (cond.contains("__CURRENT_ORDINAL__")) realizeOrd(a0)
+      val a = if (current.formula(cond).names.contains(Scalar.CurrentOrdinal))
+                realizeOrd(a0)
               else a0
-      val cells = cellsFor(a, slicer, withSets)
-      var c = resolveCurrent(cond, a.dims)
-      if (c.contains("__CURRENT_EMPTY__")) {
-        // IsEmpty(S.Current): every measure cell of the tuple is empty
-        val memberCols = a.members.columns.toSet
-        val ms = cells.columns.filterNot(memberCols.contains)
-        val empty =
-          if (ms.isEmpty) "TRUE"
-          else ms.map(m => s"(`$m` IS NULL)").mkString("(", " AND ", ")")
-        c = c.replace("__CURRENT_EMPTY__", empty)
-      }
-      if (c.contains("__CURRENT_ORDINAL__"))
-        c = c.replace("__CURRENT_ORDINAL__", s"(`$OrdCol` - 1)")
-      renumbered(a, cells.filter(sexpr(c))
-        .select(a.members.columns.map(col): _*))
+      val cells = cellsFor(a, slicer, withSets, Seq(cond))
+      // IsEmpty(S.Current): every cell column of the tuple is empty
+      val memberCols = a.members.columns.toSet
+      val empty = cells.columns.filterNot(memberCols.contains)
+        .map(m => col(m).isNull).reduceOption(_ && _).getOrElse(lit(true))
+      val (on, p) = current.lowerOn(cells, cond, Scalar.Site(a.dims, slicer, {
+        case Scalar.CurrentOrdinal => col(OrdCol) - 1
+        case Scalar.CurrentEmpty   => empty
+      }))
+      renumbered(a, on.filter(p).select(a.members.columns.map(col): _*))
 
     case OrderSet(s, e, dir) =>
       val a = evalSet(s, slicer, withSets)
-      val cells = cellsFor(a, slicer, withSets)
+      val cells = cellsFor(a, slicer, withSets, Seq(e))
       dir match {
         case SortDir.BAsc | SortDir.BDesc =>
-          ordered(a, cells, Seq(cellSort(sexpr(resolveCurrent(e, a.dims)),
-            desc = dir == SortDir.BDesc)))
+          val (on, key) = current.lowerOn(cells, e, Scalar.Site(a.dims, slicer))
+          ordered(a, on, Seq(cellSort(key, desc = dir == SortDir.BDesc)))
         case _ =>
           tupleHierOrderSet(a, cells, e, dir == SortDir.Desc, slicer,
             withSets)
@@ -460,8 +418,9 @@ final class Planner(val cube: BoundCube) {
 
     case TopCount(s, n, e, bottom) =>
       val a = evalSet(s, slicer, withSets)
-      val o = ordered(a, cellsFor(a, slicer, withSets),
-        Seq(cellSort(sexpr(e), desc = !bottom)))
+      val (on, key) = current.lowerOn(cellsFor(a, slicer, withSets, Seq(e)),
+        e, Scalar.Site(a.dims, slicer))
+      val o = ordered(a, on, Seq(cellSort(key, desc = !bottom)))
       o.copy(members = o.members.filter(col(OrdCol) <= n))
 
     case TopPercent(s, pct, e, bottom) =>
@@ -620,9 +579,10 @@ final class Planner(val cube: BoundCube) {
         a.members.select(keys.map(col): _*).distinct())
       // rank children WITHIN each parent by the cell expression — the
       // window partitions on the parent keys, so no global sort
-      val cells = cellsFor(cf, slicer, withSets)
+      val (cells, key) = current.lowerOn(cellsFor(cf, slicer, withSets,
+        Seq(e)), e, Scalar.Site(cf.dims, slicer))
       val w = Window.partitionBy(keys.map(col): _*)
-        .orderBy(cellSort(sexpr(e), desc = !bottom) +: tieBreak(cf): _*)
+        .orderBy(cellSort(key, desc = !bottom) +: tieBreak(cf): _*)
       val top = cells.withColumn("__rk", row_number().over(w))
         .filter(col("__rk") <= n)
         .select(cf.members.columns.map(col): _*)
@@ -815,18 +775,18 @@ final class Planner(val cube: BoundCube) {
       slicer: Seq[SlicerItem], withSets: Map[String, SetExpr])(
       keep: (Column, Column, Column) => Column): AxisFrame = {
     val a = evalSet(s, slicer, withSets)
-    val cells = cellsFor(a, slicer, withSets)
-    val key = cellSort(sexpr(e), desc = !bottom)
+    val (cells, v) = current.lowerOn(cellsFor(a, slicer, withSets, Seq(e)),
+      e, Scalar.Site(a.dims, slicer))
+    val key = cellSort(v, desc = !bottom)
     // the cumulative prefix genuinely needs one ordered pass; cells are
     // at the set's post-aggregation grain (dimension-bounded), so the
     // single-partition window here is over axis-scale data, never fact
     // rows. The grand total joins in as a broadcast scalar instead of a
     // second global window.
     val wOrd = Window.orderBy(key +: tieBreak(a): _*)
-    val total = cells.agg(
-      sum(sexpr(e).cast("double")).as("__tot"))
+    val total = cells.agg(sum(v.cast("double")).as("__tot"))
     val annotated = cells.crossJoin(broadcast(total))
-      .withColumn("__v", sexpr(e).cast("double"))
+      .withColumn("__v", v.cast("double"))
       .withColumn("__cum",
         sum(col("__v")).over(wOrd.rowsBetween(Window.unboundedPreceding, 0)))
       .withColumn(OrdCol, row_number().over(wOrd))
@@ -850,12 +810,14 @@ final class Planner(val cube: BoundCube) {
     a.copy(members = Ords.rowNumber(members, sort, OrdCol, hintOf(a.dims)),
       hasOrd = true)
 
-  /** Cells at the grain of `a` with all base measures + expression calc
-    * members — the working set for cell-dependent set operators.
+  /** Cells at the grain of `a` with the statement's measures and the
+    * calc members the set operation's `keys` read — the working set for
+    * cell-dependent set operators.
     */
   private def cellsFor(a: AxisFrame, slicer: Seq[SlicerItem],
-      withSets: Map[String, SetExpr]): DataFrame =
-    applyCalcs(joinCells(a, slicer), a.dims, slicer, withSets, setOp = true)
+      withSets: Map[String, SetExpr], keys: Seq[String]): DataFrame =
+    applyCalcs(joinCells(a, slicer), a.dims, slicer, withSets,
+      current.calcsFor(keys), setOp = true)
 
   private def ordered(a: AxisFrame, cells: DataFrame,
       sortCols: Seq[Column]): AxisFrame =
@@ -912,10 +874,11 @@ final class Planner(val cube: BoundCube) {
     *
     * Three loud refusals: CurrentOrdinal (ancestors are evaluated
     * outside the live positional order), a sort key reading
-    * CurrentMember of a hierarchy off the axis or AFTER the position
-    * being compared (Mondrian evaluates it at the hierarchy default),
-    * and CurrentMember of a mixed-depth earlier position (the name
-    * column differs per member depth).
+    * CurrentMember of a tuple position AFTER the one being compared
+    * (Mondrian evaluates it at the hierarchy default), and CurrentMember
+    * of a mixed-depth earlier position (the name column differs per
+    * member depth). A hierarchy on no axis reads the slicer's member or
+    * its default member, as everywhere.
     *
     * Scale note: the deepest level's rank window partitions by the
     * parent prefix, so a high-cardinality LEAF degenerates to one
@@ -931,14 +894,29 @@ final class Planner(val cube: BoundCube) {
   private def tupleHierOrderSet(a: AxisFrame, cells: DataFrame, e: String,
       desc: Boolean, slicer: Seq[SlicerItem],
       withSets: Map[String, SetExpr]): AxisFrame = {
-    require(!e.contains("__CURRENT_ORDINAL__"),
+    val names = current.formula(e).names
+    require(!names.contains(Scalar.CurrentOrdinal),
       "CurrentOrdinal in a non-breaking Order key is not supported — " +
         "the hierarchical sort evaluates ancestors outside the live " +
         "positional order; use BASC/BDESC")
+    // the key reads a tuple position's current member only while that
+    // position is compared: the comparator sets just the equal earlier
+    // positions, so a later one sits at its hierarchy default
+    def reads(ad: AxisDim) = names.contains(Scalar.CurrentName(ad.d.name))
+    require(!a.dims.drop(1).exists(reads),
+      "non-breaking Order key reads CurrentMember of a hierarchy AFTER " +
+        "the tuple position being compared — Mondrian would evaluate it " +
+        "at the hierarchy default; use BASC/BDESC")
+    require(a.dims.length == 1 || !a.mixedDim.contains(a.dims.head.d.name) ||
+      !reads(a.dims.head),
+      s"non-breaking Order key reads [${a.dims.head.d.name}].CurrentMember " +
+        "while that tuple position mixes member depths — the name column " +
+        "differs per member depth; use BASC/BDESC")
     // a single-level set has no hierarchy to preserve: plain value sort
-    if (a.dims.length == 1 && a.dims.head.depth == 0)
-      return ordered(a, cells,
-        Seq(cellSort(sexpr(resolveCurrent(e, a.dims)), desc)))
+    if (a.dims.length == 1 && a.dims.head.depth == 0) {
+      val (on, key) = current.lowerOn(cells, e, Scalar.Site(a.dims, slicer))
+      return ordered(a, on, Seq(cellSort(key, desc)))
+    }
     var joined = a.members
     val sortCols = Seq.newBuilder[Column]
     for (i <- a.dims.indices) {
@@ -951,12 +929,6 @@ final class Planner(val cube: BoundCube) {
       val last = i == a.dims.length - 1
       val selfMixed = a.mixedDim.contains(d.name)
       val prevMixed = prevDims.find(pd => a.mixedDim.contains(pd.d.name))
-      prevMixed.foreach { pm =>
-        require(!e.contains(s"__CURRENT_NAME_${pm.d.name}__"),
-          s"non-breaking Order key reads [${pm.d.name}].CurrentMember " +
-            "while that tuple position mixes member depths — the name " +
-            "column differs per member depth; use BASC/BDESC")
-      }
       // depths needing a dedicated cell pass: every depth for a
       // non-last position (later dims must roll up, so the set's own
       // cells are the wrong grain even at dMax); strict prefixes for
@@ -984,7 +956,7 @@ final class Planner(val cube: BoundCube) {
                 .distinct()
               val frame = AxisFrame(members, prevDims :+ AxisDim(d, k),
                 mixedDepths = a.mixedDepths, mixedDim = a.mixedDim)
-              k -> cellsFor(frame, slicer, withSets)
+              k -> cellsFor(frame, slicer, withSets, Seq(e))
             }.toMap
           case None if passDepths.length == 1 =>
             val src = if (selfMixed) a.members.filter(col(DepthCol) >= 0)
@@ -992,7 +964,7 @@ final class Planner(val cube: BoundCube) {
             val frame = AxisFrame(
               src.select((prevCols :+ lvls.head).map(col): _*).distinct(),
               prevDims :+ AxisDim(d, 0))
-            Map(0 -> cellsFor(frame, slicer, withSets))
+            Map(0 -> cellsFor(frame, slicer, withSets, Seq(e)))
           case None =>
             val pfLvls = lvls.take(passDepths.max + 1)
             val union = passDepths.map { k =>
@@ -1006,24 +978,19 @@ final class Planner(val cube: BoundCube) {
             val pc = cellsFor(AxisFrame(union,
               prevDims :+ AxisDim(d, passDepths.max),
               mixedDepths = passDepths, mixedDim = Some(d.name)), slicer,
-              withSets)
+              withSets, Seq(e))
             passDepths.map(k => k -> pc.filter(col(DepthCol) === k)).toMap
         }
       for (k <- 0 to dMax) {
-        val src = passCellsByDepth.getOrElse(k,
-          if (selfMixed) cells.filter(col(DepthCol) === dMax) else cells)
-        val resolved = resolveCurrent(e, prevDims :+ AxisDim(d, k))
-        require(!resolved.contains("__CURRENT_NAME_"),
-          "non-breaking Order key reads CurrentMember of a hierarchy " +
-            "off the axis or AFTER the tuple position being compared — " +
-            "Mondrian would evaluate it at the hierarchy default; use " +
-            "BASC/BDESC")
+        val (src, key) = current.lowerOn(passCellsByDepth.getOrElse(k,
+            if (selfMixed) cells.filter(col(DepthCol) === dMax) else cells),
+          e, Scalar.Site(prevDims :+ AxisDim(d, k), slicer))
         // an earlier mixed dim keys rank partitions and joins by its
         // depth marker too (padded vs genuine nulls)
         val depthKey = if (prevMixed.isDefined) Seq(DepthCol) else Nil
         val w = Window
           .partitionBy((depthKey ++ prevCols ++ lvls.take(k)).map(col): _*)
-          .orderBy(cellSort(sexpr(resolved), desc), col(lvls(k)).asc)
+          .orderBy(cellSort(key, desc), col(lvls(k)).asc)
         val keyCols = depthKey ++ prevCols ++ lvls.take(k + 1)
         val rf0 = src.select(
           keyCols.map(c => col(c).as(s"__rk${i}_${k}_$c")) :+
@@ -1161,68 +1128,6 @@ final class Planner(val cube: BoundCube) {
     }
   }
 
-  /** One alternation over the measure AND calc-member names that are
-    * not plain SQL identifiers (FoodMart's `Unit Sales`), longest
-    * first: regex alternation is ordered, so at a shared start
-    * position the longer name wins and — because a match consumes its
-    * text — a name nested inside another (`Store Sales` in `Store
-    * Sales Net`) is never re-quoted by a later pass, which the old
-    * sequential replace got wrong. Optional surrounding backticks make
-    * re-quoting idempotent; the lookarounds stop a name matching
-    * mid-identifier. Rebuilt per query (pruneFor): WITH-declared calc
-    * members are referenceable by bare name in any lowered expression,
-    * exactly like stored measures.
-    */
-  private def buildSpacedRx(
-      names: Seq[String]): Option[scala.util.matching.Regex] = {
-    val spaced = names.distinct
-      .filterNot(_.matches("[A-Za-z_][A-Za-z0-9_]*"))
-      .sortBy(-_.length)
-    if (spaced.isEmpty) None
-    else Some(("(?<![A-Za-z0-9_`])`?(" +
-      spaced.map(java.util.regex.Pattern.quote).mkString("|") +
-      ")`?(?![A-Za-z0-9_`])").r)
-  }
-
-  private var spacedMeasureRx: Option[scala.util.matching.Regex] =
-    buildSpacedRx(
-      (cube.measures.map(_.name) ++ cube.calcMembers.map(_.name)))
-
-  // a single-quoted SQL string literal ('' = escaped quote) — spaced
-  // measure names inside one are DATA and must not gain backticks
-  private val sqlStringLit = "'(?:[^']|'')*'".r
-
-  /** Parse a LOWERED MDX scalar expression as a Spark SQL Column.
-    * The lowered text carries measure references as bare names (the
-    * canonical form the render → reparse fixpoint preserves); names
-    * with non-identifier characters are backtick-quoted HERE, at the
-    * SQL boundary only, so `Unit Sales > 1000` executes instead of
-    * failing to resolve column `Unit`.
-    */
-  private def sexpr(e: String): Column = expr(spacedMeasureRx match {
-    case None => e
-    case Some(rx) =>
-      def quote(seg: String): String = rx.replaceAllIn(seg, m =>
-        java.util.regex.Matcher.quoteReplacement("`" + m.group(1) + "`"))
-      val sb = new StringBuilder
-      var i = 0
-      for (lit <- sqlStringLit.findAllMatchIn(e)) {
-        sb.append(quote(e.substring(i, lit.start))).append(lit.matched)
-        i = lit.end
-      }
-      sb.append(quote(e.substring(i))).toString
-  })
-
-  /** Resolve `[dim].CurrentMember.Name` macros emitted by the MDX
-    * parser to the set's deepest level column for that dimension.
-    */
-  private def resolveCurrent(cond: String, dims: Seq[AxisDim]): String =
-    if (!cond.contains("__CURRENT_NAME_")) cond
-    else dims.foldLeft(cond) { (c, ad) =>
-      c.replace(s"__CURRENT_NAME_${ad.d.name}__",
-        s"cast(${levelCols(ad.d, ad.depth).last} as string)")
-    }
-
   /** Apply evaluate-then-prune [[EntryOp]]s to a calc-bearing axis
     * result keyed by a 1-based `__pos` position column: Filter prunes
     * rows by the cell predicate, Order(B) re-ranks by the computed key
@@ -1236,19 +1141,16 @@ final class Planner(val cube: BoundCube) {
     * scan.
     */
   private[olap] def applyEntryOps(df0: DataFrame, ops: Seq[EntryOp],
-      dim: String, label: String,
-      hier: Option[EntryHier]): DataFrame = {
-    def resolve(e: String): Column = {
-      var c = e.replace(s"__CURRENT_NAME_${dim}__",
-        s"cast(`$label` as string)")
-      if (c.contains("__CURRENT_ORDINAL__"))
-        c = c.replace("__CURRENT_ORDINAL__", "(`__pos` - 1)")
-      require(!c.contains("__CURRENT_"),
-        "CurrentMember macros over a calculated-member-bearing set " +
-          s"support only [$dim].CurrentMember.Name and CurrentOrdinal " +
-          s"(a calc member has no dimension row to read): $e")
-      sexpr(c)
-    }
+      dim: String, label: String, hier: Option[EntryHier],
+      slicer: Seq[SlicerItem]): DataFrame = {
+    // the entry hierarchy's current member is the entry's caption (a
+    // calc member has no dimension row, so no property to read)
+    val site = Scalar.Site(Nil, slicer, {
+      case Scalar.CurrentName(d) if d.equalsIgnoreCase(dim) =>
+        col(label).cast("string")
+      case Scalar.CurrentOrdinal => col("__pos") - 1
+    })
+    def resolve(e: String): Column = current.column(e, site)
     def renum(df: DataFrame): DataFrame =
       df.withColumn("__pos",
         row_number().over(Window.orderBy(col("__pos").asc)).cast("long"))
@@ -1289,7 +1191,7 @@ final class Planner(val cube: BoundCube) {
         // a position-relative key would silently read stale ordinals —
         // refuse rather than diverge from the breaking branch (ADVICE
         // r15)
-        require(!e.contains("__CURRENT_ORDINAL__"),
+        require(!current.formula(e).names.contains(Scalar.CurrentOrdinal),
           "CurrentOrdinal in a non-breaking Order key is not " +
             "supported — the hierarchical sort ranks entries outside " +
             "the live positional order; use BASC/BDESC")
@@ -1335,44 +1237,6 @@ final class Planner(val cube: BoundCube) {
     }}
   }
 
-  /** Resolve `[dim].CurrentMember.Properties('P')` macros: join the
-    * dimension's property column in by the deepest level key (one
-    * broadcast of a two-column dim projection), then substitute the
-    * property column name into the expression.
-    */
-  private def resolveProps(df0: DataFrame, sql0: String,
-      dims: Seq[AxisDim]): (DataFrame, String) = {
-    if (!sql0.contains("__CURRENT_PROP_")) return (df0, sql0)
-    var df = df0; var sql = sql0
-    dims.foreach { ad =>
-      val marker = s"__CURRENT_PROP_${ad.d.name}__"
-      var i = sql.indexOf(marker)
-      while (i >= 0) {
-        val rest = sql.substring(i + marker.length)
-        val end = rest.indexOf("__")
-        require(end > 0, s"malformed property macro in: $sql")
-        val prop = rest.substring(0, end)
-        require(ad.d.df.columns.contains(prop),
-          s"dimension '${ad.d.name}' has no property column '$prop'")
-        val key = levelCols(ad.d, ad.depth).last
-        if (!df.columns.contains(prop)) {
-          // depends_on_level_value (schema.rb:277-281): a dependent
-          // property needs no place in the grouping — aggregate by the
-          // level key alone (any value is THE value) instead of a
-          // two-column distinct
-          val propFrame =
-            if (ad.d.levels(ad.depth).dependentProps.contains(prop))
-              ad.d.df.groupBy(col(key)).agg(first(col(prop)).as(prop))
-            else ad.d.df.select(col(key), col(prop)).distinct()
-          df = df.join(broadcast(propFrame), Seq(key), "left")
-        }
-        sql = sql.replace(marker + prop + "__", prop)
-        i = sql.indexOf(marker)
-      }
-    }
-    (df, sql)
-  }
-
   def slicerPredicate(slicer: Seq[SlicerItem]): Column =
     if (slicer.isEmpty) lit(true)
     else slicer.map {
@@ -1382,7 +1246,7 @@ final class Planner(val cube: BoundCube) {
         // satisfies the slicer — empty result, not a crash
         if (paths.isEmpty) lit(false)
         else orAll(paths.map(p => ancestorPredicate(cube.dim(dim), p)))
-      case ExprSlice(sql, _) => sexpr(sql)
+      case ExprSlice(sql, _) => current.column(sql, Scalar.Site())
       case EvalSlice(_) => throw new IllegalStateException(
         "EvalSlice must be resolved at plan entry (resolveSlicer)")
     }.reduce(_ && _)
@@ -1464,8 +1328,8 @@ final class Planner(val cube: BoundCube) {
     */
   def rollupAggregate(dimLevels: Seq[(String, String)],
       slicer: Seq[SlicerItem], measureNames: Seq[String],
-      mode: String = "rollup"): DataFrame = {
-    neededMeasures = cube.measures.filter(m => measureNames.contains(m.name))
+      mode: String = "rollup"): DataFrame = within(Scope.statement(cube,
+      QueryIR(measureNames, None), Nil, defaultMemberName)) {
     val axisDims = dimLevels.map { case (dn, ln) =>
       AxisDim(cube.dim(dn), cube.dim(dn).levelIndex(ln))
     }
@@ -1888,40 +1752,40 @@ final class Planner(val cube: BoundCube) {
     if (!SegmentCache.enabled) render(q)
     else SegmentCache.global.cellSet(cube, q)(render(q))
 
-  private def render(q0pre: QueryIR): DataFrame = {
-    // dim-hosted Aggregate calc members in WHERE expand to their
-    // compound set slicers (and unsupported slicer shapes refuse)
-    // BEFORE resolution — a calc path reaching the ordinary set
-    // machinery would predicate-filter to nothing silently
-    val dcl = new DimCalcLowering(q0pre.withMembers, q0pre.withSets)
-    val q0 = q0pre.copy(
-      slicer = resolveSlicer(dcl.expandSlicer(q0pre.slicer),
-        q0pre.withSets))
+  private def render(stmt: QueryIR): DataFrame = {
     // PAGES/CHAPTERS/SECTIONS lower to outer products with ROWS:
     // CrossJoin order is left-major, which is exactly Mondrian's
     // axis-ordinal iteration (higher axes vary slowest, so SECTIONS is
     // outermost). A query naming no measures gets the cube's default
     // measure (reference: queries without a COLUMNS axis still
     // evaluate cells, query_test.rb:743-746).
-    val outerAxes = Seq(q0.sections, q0.chapters, q0.pages).flatten
-    val q1 =
-      if (outerAxes.isEmpty) q0
-      else q0.copy(
-        rows = Some((outerAxes ++ q0.rows.toSeq).reduceRight(CrossJoin(_, _))),
-        pages = None, chapters = None, sections = None)
-    val q = if (q1.measures.nonEmpty) q1
-            else q1.copy(measures = Seq(cube.defaultMeasureName))
-    // Detect dim-hosted calc members in ANY rows-axis shape — never
-    // just the bare literal Members arm. A calc path that reaches the
-    // ordinary Members lowering predicate-filters to nothing and the
-    // rows vanish SILENTLY (the one unacceptable failure mode), so:
-    // a calc-bearing literal set — alone or CrossJoined with calc-free
-    // factors (query_test.rb:157-174 pins crossjoin iteration over
-    // calc members) — lowers through the fused pass ([[FusedAxis]]);
-    // every other shape refuses loudly there.
-    FusedAxis.render(this, dcl, q).getOrElse {
-      pruneFor(q)
-      q.rows match {
+    val outerAxes = Seq(stmt.sections, stmt.chapters, stmt.pages).flatten
+    val q0 = stmt.copy(
+      measures =
+        if (stmt.measures.nonEmpty) stmt.measures
+        else Seq(cube.defaultMeasureName),
+      rows =
+        if (outerAxes.isEmpty) stmt.rows
+        else Some((outerAxes ++ stmt.rows.toSeq).reduceRight(CrossJoin(_, _))),
+      pages = None, chapters = None, sections = None)
+    // the statement's names resolve before anything is evaluated
+    within(pruneFor(q0)) {
+      // dim-hosted Aggregate calc members in WHERE expand to their
+      // compound set slicers (and unsupported slicer shapes refuse)
+      // BEFORE resolution — a calc path reaching the ordinary set
+      // machinery would predicate-filter to nothing silently
+      val dcl = new DimCalcLowering(q0.withMembers, q0.withSets)
+      val q = q0.copy(slicer =
+        resolveSlicer(dcl.expandSlicer(q0.slicer), q0.withSets))
+      // Detect dim-hosted calc members in ANY rows-axis shape — never
+      // just the bare literal Members arm. A calc path that reaches the
+      // ordinary Members lowering predicate-filters to nothing and the
+      // rows vanish SILENTLY (the one unacceptable failure mode), so:
+      // a calc-bearing literal set — alone or CrossJoined with calc-free
+      // factors (query_test.rb:157-174 pins crossjoin iteration over
+      // calc members) — lowers through the fused pass ([[FusedAxis]]);
+      // every other shape refuses loudly there.
+      FusedAxis.render(this, dcl, q).getOrElse(q.rows match {
         case None =>
           val cells = aggregate(Nil, q.slicer)
           val withCalcs = applyCalcs(cells, Nil, q.slicer, q.withSets)
@@ -1932,7 +1796,7 @@ final class Planner(val cube: BoundCube) {
           val withCalcs = applyCalcs(joined, axis.dims, q.slicer, q.withSets)
           nonEmptyRows(q, withCalcs).orderBy(axisSort(axis): _*)
             .select((groupCols(axis.dims) ++ q.measures).map(col): _*)
-      }
+      })
     }
   }
 
@@ -1941,68 +1805,58 @@ final class Planner(val cube: BoundCube) {
     */
   private[olap] def nonEmptyRows(q: QueryIR, df: DataFrame): DataFrame =
     if (!q.nonEmpty) df
-    else {
-      val shown = q.measures.filter(df.columns.contains)
-      val basis = if (shown.nonEmpty) shown else neededMeasures.map(_.name)
-      df.filter(basis.map(col(_).isNotNull).reduce(_ || _))
-    }
+    else df.filter(q.measures.map(col(_).isNotNull).reduce(_ || _))
 
   /** Calc-member layer in solve order: Expr calcs are plain column
     * expressions; Window calcs lower to Spark Window functions over the
     * member ordinals (SURVEY §2.5 — MDX relative navigation → Window).
-    * With `ctx`, `df` is a fused dim-calc frame and every calc is
-    * evaluated per axis entry. With `setOp`, `df` is a set's cells for a
-    * cell-dependent set op (Filter/Order/TopK), whose keys can reference
-    * calc members (ORDER(set, ([Measures].[m], [dim].[member]), ASC)
-    * lowers the tuple to a hidden SetAggCalc): Window calcs stay
-    * post-axis (they need the final member order), and a set-aggregate
-    * calc whose inputs do not resolve here is skipped, like an Expr calc
-    * (Mondrian's per-context member validity, ValidMeasureFunDef).
+    * `calcs` default to the statement's; every one is evaluated or
+    * refused by name, never dropped. With `ctx`, `df` is a fused
+    * dim-calc frame and every calc is evaluated per axis entry. With
+    * `setOp`, `df` is a set's cells for a cell-dependent set op
+    * (Filter/Order/TopK) and `calcs` are the ones its keys read
+    * (ORDER(set, ([Measures].[m], [dim].[member]), ASC) lowers the
+    * tuple to a hidden SetAggCalc); a Window calc there refuses, since
+    * it needs the final axis order.
     */
   private[olap] def applyCalcs(df: DataFrame,
       axisDims: Seq[AxisDim],
       slicer: Seq[SlicerItem],
       withSets: Map[String, SetExpr],
-      ctx: Option[EntryCtx] = None, setOp: Boolean = false): DataFrame =
-    neededCalcs.sortBy(_.solveOrder).foldLeft(df) {
-      (acc, cm) =>
-        def orSkip(f: => DataFrame): DataFrame =
-          if (!setOp) f
-          else try f catch {
-            case _: org.apache.spark.sql.AnalysisException => acc }
-        cm.calc match {
-          case ExprCalc(sql) =>
-            try {
-              val (d2, s2) =
-                resolveProps(acc, resolveCurrent(sql, axisDims), axisDims)
-              d2.withColumn(cm.name, sexpr(s2))
-            } catch {
-              // a calc the query SELECTS must not drop silently from a
-              // fused dim-calc frame: fail loudly with the calc's name
-              // instead of letting the final measure select die with an
-              // unrelated column-not-found (ADVICE r15)
-              case ex: org.apache.spark.sql.AnalysisException
-                  if ctx.exists(_.shown.exists(_.equalsIgnoreCase(cm.name))) =>
-                throw new IllegalArgumentException(
-                  s"calculated measure '${cm.name}' failed to resolve on " +
-                    "the fused dim-calc frame: " + ex.getMessage, ex)
-              case _: org.apache.spark.sql.AnalysisException => acc
-            }
-          case _: WindowCalc if setOp => acc
-          case WindowCalc(base, kind, overDim, resetLevel) =>
-            axisDims.find(_.d.name == overDim) match {
-              case None => acc // window dim not on axis → undefined, skip
-              case Some(ad) =>
-                acc.withColumn(cm.name, windowColumn(base, kind, ad,
-                  axisDims, resetLevel, ctx.fold(Seq.empty[String])(_.cols)))
-            }
-          case sac: SetAggCalc => orSkip(
-            setAggColumn(acc, cm.name, sac, axisDims, slicer, withSets, ctx))
-          case lrc: LinRegCalc => orSkip(
-            linRegColumn(acc, cm.name, lrc, axisDims, slicer, withSets, ctx))
-          case _: DimAggCalc => acc // axis member, not a cell column
-        }
+      calcs: Seq[CalcMember] = neededCalcs,
+      ctx: Option[EntryCtx] = None, setOp: Boolean = false): DataFrame = {
+    val site = siteOf(axisDims, slicer, ctx)
+    calcs.foldLeft(df) { (acc, cm) =>
+      cm.calc match {
+        case ExprCalc(sql) =>
+          val (on, c) = current.lowerOn(acc, sql, site)
+          on.withColumn(cm.name, c)
+        case WindowCalc(base, kind, overDim, resetLevel) =>
+          val ad = axisDims.find(_.d.name == overDim)
+          require(!setOp && ad.isDefined,
+            s"calculated member [${cm.name}] navigates [$overDim] " +
+              (if (setOp) "over the final axis order, which a Filter, " +
+                "Order or TopCount key cannot read"
+               else "while that hierarchy is on no axis of the statement"))
+          acc.withColumn(cm.name, windowColumn(current.column(base, site),
+            kind, ad.get, axisDims, resetLevel,
+            ctx.fold(Seq.empty[String])(_.cols)))
+        case sac: SetAggCalc =>
+          setAggColumn(acc, cm.name, sac, axisDims, slicer, withSets, ctx)
+        case lrc: LinRegCalc =>
+          linRegColumn(acc, cm.name, lrc, axisDims, slicer, withSets, ctx)
+        case _: DimAggCalc => acc // axis member, not a cell column
+      }
     }
+  }
+
+  /** The lowering site of a calc over `dims`: in a fused frame the
+    * entry hierarchy's current member is the entry caption.
+    */
+  private def siteOf(dims: Seq[AxisDim], slicer: Seq[SlicerItem],
+      ctx: Option[EntryCtx]): Scalar.Site =
+    Scalar.Site(dims, slicer,
+      ctx.fold(PartialFunction.empty[Scalar.Name, Column])(_.bound))
 
   /** Sum/Avg/Aggregate(set) and LinReg series sets iterate member
     * VALUES; a dim-hosted calc member inside one would need per-member
@@ -2010,13 +1864,14 @@ final class Planner(val cube: BoundCube) {
     * subcube-fold lowering cannot express — and the ordinary set
     * machinery would silently filter the synthetic name to nothing.
     * Refuse loudly instead (the engine-wide dim-calc principle:
-    * execute or refuse, never drop). Checked against ALL calc members
-    * in scope — a member-path literal never registers in pruneFor's
-    * text scan, so neededCalcs would miss it.
+    * execute or refuse, never drop). Checked against every calc member
+    * of the cube and the statement: a member path names a dim-hosted
+    * calc by position, not by a formula name the scope reads.
     */
   private def requireNoDimCalcMember(set: SetExpr,
       withSets: Map[String, SetExpr], ctx: String): Unit =
-    require(!new DimCalcLowering(withMembers, withSets).hasCalcPath(set),
+    require(!new DimCalcLowering(current.withMembers, withSets)
+        .hasCalcPath(set),
       s"calculated member inside $ctx is not supported — aggregate " +
         "the member's own set there instead")
 
@@ -2072,7 +1927,8 @@ final class Planner(val cube: BoundCube) {
     // (Aggregate(set, [Measures].[m] * 2), mondrian_test.rb:224-229):
     // evaluated per member over the restricted subcube's measure
     // columns; a plain name resolves to its column either way
-    val valueCol = sexpr(sac.measure)
+    lazy val valueCol = current.column(sac.measure,
+      siteOf(sc.keptAxis ++ sc.frame.dims, slicer, ctx))
     val aggCol = (sac.fn match {
       case "SUM" => sum(valueCol)
       case "AVG" => avg(valueCol)
@@ -2139,8 +1995,9 @@ final class Planner(val cube: BoundCube) {
   }
 
   /** MDX LinRegSlope/Intercept/R2/Variance(set, y, x) per axis cell:
-    * one (x, y) point per SET MEMBER — `__LR_RANK__` in the lowered
-    * expressions is the member's 1-based position in the set's order,
+    * one (x, y) point per SET MEMBER — the series rank
+    * ([[Scalar.SeriesRank]]) is the member's 1-based position in the
+    * set's order,
     * measure refs are the member's cell value — then a single-pass OLS
     * moment fold (n, Σx, Σy, Σxx, Σyy, Σxy) per axis cell. Like
     * [[setAggColumn]], the member frame stays dimension-side
@@ -2196,9 +2053,12 @@ final class Planner(val cube: BoundCube) {
               "left")
             .withColumn("__lr_xrank", coalesce(col("__lr_xrank"), lit(0)))
     }
+    val seriesSite = Scalar.Site(sc.keptAxis ++ sc.frame.dims, slicer, {
+      case Scalar.SeriesRank => col("__lr_rank")
+      case Scalar.OtherRank  => col("__lr_xrank")
+    })
     def lower(e: String): Column =
-      sexpr(e.replace("__LR_RANK__", "__lr_rank")
-        .replace("__LR_XRANK__", "__lr_xrank")).cast("double")
+      current.column(e, seriesSite).cast("double")
     val pts = series
       .withColumn("__lr_y", lower(lrc.yExpr))
       .withColumn("__lr_x", lower(lrc.xExpr))
@@ -2232,8 +2092,10 @@ final class Planner(val cube: BoundCube) {
         when(n === 0.0, lit(Double.NaN)).otherwise(slope).as(mC),
         when(n === 0.0, lit(Double.NaN)).otherwise(intercept).as(bC))): _*)
       val joined = sc.attach(acc, o)
-      val px = sexpr(lrc.pointX.getOrElse(throw new IllegalArgumentException(
-        "LinRegPoint requires the x-slice argument"))).cast("double")
+      val px = current.column(lrc.pointX.getOrElse(
+          throw new IllegalArgumentException(
+            "LinRegPoint requires the x-slice argument")),
+        siteOf(axisDims, slicer, ctx)).cast("double")
       return joined
         .withColumn(name,
           coalesce(col(mC) * px + col(bC), lit(Double.NaN)))
@@ -2256,7 +2118,7 @@ final class Planner(val cube: BoundCube) {
     else joined.withColumn(name, coalesce(col(name), lit(Double.NaN)))
   }
 
-  private def windowColumn(base: String, kind: WinKind, ad: AxisDim,
+  private def windowColumn(e: Column, kind: WinKind, ad: AxisDim,
       axisDims: Seq[AxisDim], resetLevel: Option[String],
       entryCols: Seq[String]): Column = {
     val others = entryCols ++ axisDims.filterNot(_.d.name == ad.d.name)
@@ -2269,7 +2131,6 @@ final class Planner(val cube: BoundCube) {
     val part =
       if (partCols.isEmpty) Window.partitionBy()
       else Window.partitionBy(partCols.map(col): _*)
-    val e = sexpr(base)
     kind match {
       case WinKind.LagK(k)  => lag(e, k).over(part.orderBy(ordCols: _*))
       case WinKind.LeadK(k) => lead(e, k).over(part.orderBy(ordCols: _*))
@@ -2469,12 +2330,13 @@ object Planner {
     * kept × set grain (a per-entry `aggregate`); `join(left, right,
     * keys, broadcast)` left-joins a per-entry frame back (null-safe
     * where a context override or mixed-depth padding leaves null keys);
-    * `shown` are the measures the query selects.
+    * `bound` binds the entry hierarchy's current member to the entry
+    * caption column.
     */
   private[olap] final case class EntryCtx(cols: Seq[String],
       cells: (Seq[AxisDim], Seq[AxisDim]) => DataFrame,
       join: (DataFrame, DataFrame, Seq[String], Boolean) => DataFrame,
-      shown: Seq[String])
+      bound: PartialFunction[Scalar.Name, Column])
 
   /** One fact row's partial of a decomposable measure, in the form its
     * merge fn folds: SumExact's DECIMAL(38,10) cast, Count's 0/1, and

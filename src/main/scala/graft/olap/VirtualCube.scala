@@ -34,10 +34,9 @@ final class VirtualCube(
     */
   // one planner per base, reused across slicer items and calls —
   // expandDimCalcSlicer/resolveSlicer leave no per-query residue: a
-  // cell-valued computed set runs a self-contained sub-query whose
-  // pruneFor resets the planner's mutable pruning state to the
-  // schema-level defaults a fresh planner would carry, and every
-  // execute() re-derives that state up front, so sharing stays safe
+  // cell-valued computed set runs a self-contained sub-query, and a
+  // planner holds a statement's scope only while it renders it, so
+  // sharing stays safe
   private lazy val basePlanners: Seq[(BoundCube, Planner)] =
     bases.map { case (bc, _) => bc -> new Planner(bc) }
 

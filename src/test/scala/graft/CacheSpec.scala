@@ -364,6 +364,23 @@ class CacheSpec extends SparkSpec {
     c.flushCube(fresh.cubeId)
   }
 
+  test("a computed slicer aggregates only the measures the statement " +
+      "reads") {
+    val c = SegmentCache.global
+    val fresh = cube.copy()
+    Mdx.execute(
+      """SELECT {[Measures].[revenue]} ON COLUMNS,
+        |  [returnflag].[returnflag].Members ON ROWS
+        |FROM [Sales]
+        |WHERE (TopCount([customer].[nation].Members, 1,
+        |  [Measures].[revenue]).Item(0))""".stripMargin, fresh).collect()
+    val slicerSegs = c.keysOf(fresh.cubeId)
+      .filter(_.grain == Seq("cr_region", "cr_nation"))
+    assert(slicerSegs.nonEmpty, "the TopCount must read its nations' cells")
+    assert(slicerSegs.map(_.measures).distinct === Seq(Seq("revenue")))
+    c.flushCube(fresh.cubeId)
+  }
+
   test("cell sets: a repeated builder statement is served from its " +
       "persisted render") {
     servedOnThirdRun { cb =>

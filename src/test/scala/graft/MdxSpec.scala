@@ -2878,4 +2878,66 @@ class MdxSpec extends SparkSpec {
     val n = df.count()
     assert(n > 0 && n <= 10)
   }
+
+  test("every calc resolves or fails by name: an unknown function in a " +
+      "WITH member raises wherever the member is read, and an off-axis " +
+      "CurrentMember binds to the slicer's member or the default member") {
+    val rows = "[returnflag].[returnflag].Members"
+    val x = "WITH MEMBER [Measures].[x] AS FooBar([Measures].[revenue])"
+    def stmt(withPart: String, measure: String, axis: String): String =
+      s"$withPart SELECT {[Measures].[$measure]} ON COLUMNS, $axis ON ROWS " +
+        "FROM [Sales]"
+    val unresolved = Seq(
+      "shown" -> stmt(x, "x", rows),
+      "a FILTER key" -> stmt(x, "revenue",
+        s"FILTER($rows, [Measures].[x] > 0)"),
+      "an ORDER key" -> stmt(x, "revenue",
+        s"ORDER($rows, [Measures].[x], BDESC)"),
+      "a TOPCOUNT key" -> stmt(x, "revenue",
+        s"TOPCOUNT($rows, 2, [Measures].[x])"),
+      "a dependent calc" -> stmt(
+        s"$x MEMBER [Measures].[y] AS [Measures].[x] + 1", "y", rows),
+      "declared, never used" -> stmt(x, "revenue", rows))
+    unresolved.foreach { case (how, mdx) =>
+      val e = intercept[Mdx.MdxException](Mdx.execute(mdx, cube).collect())
+      assert(e.getMessage.contains(
+        "No function matches signature 'FooBar(...)'") &&
+        e.getMessage.contains("[Measures].[x]"), s"$how: ${e.getMessage}")
+    }
+    // [part] is on no axis and not in the slicer: its current member is
+    // the default member, the first brand
+    val firstBrand = cube.dim("part").df.select("p_brand").distinct()
+      .orderBy("p_brand").head().getString(0)
+    val byDefault = Mdx.execute(
+      """WITH MEMBER [Measures].[x] AS
+        |  IIf([part].CurrentMember.Name = 'a', 1, 0)
+        |MEMBER [Measures].[n] AS [part].CurrentMember.Name
+        |SELECT {[Measures].[x], [Measures].[n]} ON COLUMNS,
+        |  [returnflag].[returnflag].Members ON ROWS
+        |FROM [Sales]""".stripMargin, cube).collect()
+      .map(r => (r.getString(0), r.get(1), r.getString(2)))
+    assert(byDefault.toSeq === Seq("A", "N", "R").map(f => (f, 0, firstBrand)))
+    // the slicer pins one member of [customer]: that member is current
+    val bySlicer = Mdx.execute(
+      """WITH MEMBER [Measures].[x] AS
+        |  IIf([customer].CurrentMember.Name = 'ASIA', 1, 0)
+        |SELECT {[Measures].[x]} ON COLUMNS,
+        |  [returnflag].[returnflag].Members ON ROWS
+        |FROM [Sales]
+        |WHERE ([customer].[ASIA])""".stripMargin, cube).collect()
+      .map(r => (r.getString(0), r.get(1)))
+    assert(bySlicer.toSeq === Seq("A", "N", "R").map(f => (f, 1)))
+    // a compound slicer on it has no single current member: refused,
+    // naming the calc
+    val compound = intercept[IllegalArgumentException](Mdx.execute(
+      """WITH MEMBER [Measures].[x] AS
+        |  IIf([customer].CurrentMember.Name = 'ASIA', 1, 0)
+        |SELECT {[Measures].[x]} ON COLUMNS,
+        |  [returnflag].[returnflag].Members ON ROWS
+        |FROM [Sales]
+        |WHERE {[customer].[ASIA], [customer].[EUROPE]}""".stripMargin,
+      cube).collect())
+    assert(compound.getMessage.contains("[Measures].[x]") &&
+      compound.getMessage.contains("compound"), compound.getMessage)
+  }
 }
