@@ -177,15 +177,17 @@ object Cubes {
     * of the plan (a full shuffle of both big tables unless bucketed) — so
     * the engine prunes it, the analog of Mondrian only joining the
     * dimension tables a query actually references (README.md:134-146).
+    * The lineitem frame `li` and its column set are bound once per cube.
     */
-  private def salesFactPruner(spark: SparkSession, sfDir: String)(
-      needed: Set[String]): DataFrame = {
-    val li = Tables.load(spark, sfDir, "lineitem")
+  private def salesFactPruner(spark: SparkSession, sfDir: String,
+      li: DataFrame): Set[String] => DataFrame = {
     val liCols = li.columns.toSet
-    val needsOrders =
-      needed.exists(c => (c.startsWith("o_") || c == "l_datekey")
-        && !liCols.contains(c))
-    if (needsOrders) salesFact(spark, sfDir) else li
+    needed => {
+      val needsOrders =
+        needed.exists(c => (c.startsWith("o_") || c == "l_datekey")
+          && !liCols.contains(c))
+      if (needsOrders) salesFact(spark, sfDir) else li
+    }
   }
 
   /** The Sales cube (FIXTURES.md §B cube mapping). */
@@ -307,7 +309,7 @@ object Cubes {
         p(partDim(spark, sfDir)), p(timeDim(spark, sfDir)),
         p(timeWeeklyDim(spark, sfDir)),
         priorityDim, returnflagDim, linestatusDim),
-      factPruner = Some(salesFactPruner(spark, sfDir) _),
+      factPruner = Some(salesFactPruner(spark, sfDir, li)),
       measures = Seq(
         Measure("sum_qty", Agg.Sum, "l_quantity"),
         // price sums are non-exact doubles → SumExact (order-independent
@@ -376,13 +378,18 @@ object Cubes {
   private def buildEvents(spark: SparkSession, sfDir: String): BoundCube = {
     val fact = Tables.load(spark, sfDir, "events")
       .withColumn("l_datekey", to_date(col("ts")))
+    // every level is a key expression over l_datekey, the same function
+    // the member frame below computes over d_date: the star frame
+    // derives the levels from the fact and joins no dimension
     val time = BoundDim("time", foreignKey = "l_datekey",
       primaryKey = "d_date",
       levels = Seq(
-        BoundLevel("year", "d_year"),
-        BoundLevel("quarter", "d_yq"),
-        BoundLevel("month", "d_ym"),
-        BoundLevel("day", "d_date")),
+        BoundLevel("year", "d_year", keyExpr = Some("year(l_datekey)")),
+        BoundLevel("quarter", "d_yq", keyExpr =
+          Some("concat(year(l_datekey), '-Q', quarter(l_datekey))")),
+        BoundLevel("month", "d_ym",
+          keyExpr = Some("date_format(l_datekey, 'yyyy-MM')")),
+        BoundLevel("day", "d_date", keyExpr = Some("l_datekey"))),
       df = fact.select(col("l_datekey").as("d_date")).distinct()
         .withColumn("d_year", year(col("d_date")))
         .withColumn("d_quarter", quarter(col("d_date")))

@@ -1,7 +1,9 @@
 package graft
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Loader for the driver-generated TPC-H-ish star (TESTDATA.md).
   *
@@ -24,8 +26,60 @@ object Tables {
       // NTZ, depending on the generator version. Read with nanosAsLong on —
       // a no-op for micros files — then normalize whatever arrived.
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      normalizeEventTs(spark.read.parquet(s"$sfDir/$name.parquet"))
-    } else spark.read.parquet(s"$sfDir/$name.parquet")
+      normalizeEventTs(parquet(spark, s"$sfDir/$name.parquet"))
+    } else parquet(spark, s"$sfDir/$name.parquet")
+
+  /** What a parquet schema was inferred under: each leaf file's
+    * (path, length, modification time), listed on the driver with no
+    * job, and the session's parquet settings.
+    */
+  private type Stamp = (Seq[(String, Long, Long)], Map[String, String])
+
+  /** Per path: the schema last inferred there and its stamp. */
+  private val schemas =
+    new java.util.concurrent.ConcurrentHashMap[String, (Stamp, StructType)]()
+
+  /** `path` read as parquet with its schema inferred once. Inference is
+    * a Spark job (a footer read over the files) that a fact read would
+    * otherwise start every time. A held schema is reused only under an
+    * equal [[Stamp]], so a rewritten file or a changed reader setting
+    * infers again.
+    */
+  private def parquet(spark: SparkSession, path: String): DataFrame = {
+    val stamp: Stamp = (leafFiles(spark, path), spark.conf.getAll.filter {
+      case (k, _) => k.startsWith("spark.sql.parquet.") ||
+        k.startsWith("spark.sql.legacy.parquet.")
+    })
+    val held = schemas.get(path)
+    val schema =
+      if (held != null && held._1 == stamp) held._2
+      else {
+        val inferred = spark.read.parquet(path).schema
+        schemas.put(path, (stamp, inferred))
+        inferred
+      }
+    spark.read.schema(schema).parquet(path)
+  }
+
+  /** (path, length, modification time) of every file under `path`, or
+    * of `path` itself when it is a file; empty when it does not exist
+    * (the read then fails with Spark's own error).
+    */
+  private def leafFiles(spark: SparkSession,
+      path: String): Seq[(String, Long, Long)] = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(p)) Nil
+    else {
+      val it = fs.listFiles(p, true)
+      val out = Seq.newBuilder[(String, Long, Long)]
+      while (it.hasNext) {
+        val f = it.next()
+        out += ((f.getPath.toString, f.getLen, f.getModificationTime))
+      }
+      out.result()
+    }
+  }
 
   /** Normalize an events frame's `ts` to a session-zone TimestampType at
     * microsecond precision, whichever parquet variant it was read from.

@@ -175,7 +175,7 @@ private[olap] object SchemaPool {
       app(d.name, d.foreignKey, d.primaryKey, d.degenerate, d.isTime,
         d.df.semanticHash())
       d.levels.foreach(l => app(l.name, l.col, l.ordCol, l.hideMemberIf,
-        l.memberFormatter, l.propertyFormatters.toSeq.sorted))
+        l.memberFormatter, l.propertyFormatters.toSeq.sorted, l.keyExpr))
     }
     c.measures.foreach(m =>
       app(m.name, m.agg, m.expr, m.formatString, m.cellFormatter))

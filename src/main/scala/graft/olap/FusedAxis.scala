@@ -612,14 +612,17 @@ private[olap] final class FusedAxis private (p: Planner,
     // sort keys and axis columns in factor-position order: a calc factor
     // sorts by its entry position (post-op __pos when ops ran
     // downstream — single-factor shape, nothing to interleave), a stored
-    // factor by its own __oord / level ordinals
+    // factor by its own __oord / level ordinals. The entry lists are
+    // already on the driver, so only an other factor's dims can make
+    // the result too large for one sorting partition
     val (sortCols, axisCols) = rowsFactors.indices.map { fi =>
       val k = calcIdxs.indexOf(fi)
       if (k < 0) others.find(_.idx == fi).map(o => (o.sort, o.keys)).get
       else (Seq(col(if (k == 0 && opsDownstream.nonEmpty) "__pos"
           else factors(k).entryCol).asc), Seq(factors(k).label))
     }.unzip
-    p.nonEmptyRows(qs, posed.orderBy(sortCols.flatten: _*)
+    p.nonEmptyRows(qs,
+      presented(posed, sortCols.flatten, others.flatMap(_.frame.dims))
       .select((axisCols.flatten ++ qs.measures).map(col): _*))
   }
 

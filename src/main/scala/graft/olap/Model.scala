@@ -339,7 +339,15 @@ final case class BoundLevel(
       * alone (first() of the dependent column) instead of a
       * two-column distinct.
       */
-    dependentProps: Set[String] = Set.empty) {
+    dependentProps: Set[String] = Set.empty,
+    /** The reference's `KeyExpression` (schema.rb:248-262): a SQL
+      * expression over the fact's foreign key that gives this level's
+      * value. When every level of a dimension has one, the star frame
+      * derives the level columns from the key instead of joining the
+      * dimension table ([[BoundDim.keyDerived]]); `col` still names the
+      * member frame's column, which serves enumeration.
+      */
+    keyExpr: Option[String] = None) {
   def ordinal: String = ordCol.getOrElse(col)
   def caption: String = meta.caption.getOrElse(name)
 }
@@ -432,6 +440,15 @@ final case class BoundDim(
   }
   def levelsTo(depth: Int): Seq[BoundLevel] = levels.take(depth + 1)
   def level(levelName: String): BoundLevel = levels(levelIndex(levelName))
+
+  /** Every level is a key expression: the star frame computes the level
+    * columns from the fact's foreign key and joins nothing. A fact row
+    * belongs to the members its key's expressions give, so a key the
+    * member frame does not list (a row inserted after the frame was
+    * read) still counts, under the members it derives.
+    */
+  def keyDerived: Boolean =
+    !degenerate && levels.forall(_.keyExpr.isDefined)
 }
 
 /** Role rollup policy (reference schema.rb:468-471): how totals treat
@@ -608,6 +625,9 @@ final case class BoundCube(
           if (!cols.contains(o))
             fail(s"level '${d.name}.${l.name}' ordinal column '$o' " +
               "not found in dimension table")
+          if (l.keyExpr.isDefined && o != l.col)
+            fail(s"level '${d.name}.${l.name}' has a key expression " +
+              "and a separate ordinal column")
         }
       }
       if (!d.degenerate) {

@@ -797,13 +797,6 @@ final class Planner(val cube: BoundCube) {
     a.copy(members = kept, hasOrd = true)
   }
 
-  /** Cardinality hint for an axis frame's ordering ops: a frame is
-    * dimension-bounded (single-window cheap path) unless one of its
-    * dims carries the reference's high_cardinality hint.
-    */
-  private def hintOf(dims: Seq[AxisDim]): Ords.SizeHint =
-    if (dims.exists(_.d.highCardinality)) Ords.Large else Ords.Small
-
   /** `a` with `members` numbered 1..n into [[OrdCol]] by `sort`. */
   private def numbered(a: AxisFrame, members: DataFrame,
       sort: Seq[Column]): AxisFrame =
@@ -1103,7 +1096,10 @@ final class Planner(val cube: BoundCube) {
   }
 
   /** Fact joined with the needed dimensions — dimension side broadcast so
-    * the fact never shuffles for the star join.
+    * the fact never shuffles for the star join. A key-derived dimension
+    * ([[BoundDim.keyDerived]]) joins nothing: its level columns are
+    * computed from the foreign key, and a null key drops its row as the
+    * inner join would.
     */
   private[olap] def joinStar(needed: Map[String, Int],
       slicer: Seq[SlicerItem],
@@ -1111,12 +1107,16 @@ final class Planner(val cube: BoundCube) {
     val base = cube.factFor(requiredFactCols(needed, slicer, extraCols))
     needed.toSeq.sortBy(_._1).foldLeft(base) { case (df, (name, depth)) =>
       val d = cube.dim(name)
+      // extraCols may name member-property columns that live on the
+      // dim table (drill-through RETURN Property(...) fields)
+      lazy val props = extraCols.filter(d.df.columns.contains)
+        .filterNot(memberCols(d, depth).contains)
       if (d.degenerate) df // level cols already on the fact
+      else if (d.keyDerived && props.isEmpty)
+        d.levelsTo(depth).foldLeft(df.filter(col(d.foreignKey).isNotNull))(
+          (acc, l) => acc.withColumn(l.col, expr(l.keyExpr.get)))
       else {
-        // extraCols may name member-property columns that live on the
-        // dim table (drill-through RETURN Property(...) fields)
-        val cols = (d.primaryKey +: (memberCols(d, depth) ++
-          extraCols.filter(d.df.columns.contains))).distinct
+        val cols = (d.primaryKey +: (memberCols(d, depth) ++ props)).distinct
         val dimSel = d.df.select(cols.map(col): _*)
         val joined =
           df.join(broadcast(dimSel), df(d.foreignKey) === dimSel(d.primaryKey))
@@ -1794,7 +1794,7 @@ final class Planner(val cube: BoundCube) {
           val axis = evalSet(set, q.slicer, q.withSets)
           val joined = joinCells(axis, q.slicer)
           val withCalcs = applyCalcs(joined, axis.dims, q.slicer, q.withSets)
-          nonEmptyRows(q, withCalcs).orderBy(axisSort(axis): _*)
+          presented(nonEmptyRows(q, withCalcs), axisSort(axis), axis.dims)
             .select((groupCols(axis.dims) ++ q.measures).map(col): _*)
       })
     }
@@ -2322,6 +2322,25 @@ object Planner {
     if (a.hasOrd) Seq(col(ordCol).asc)
     else a.dims.flatMap(ad =>
       ad.d.levelsTo(ad.depth).map(l => col(l.ordinal).asc))
+
+  /** Cardinality hint for an axis frame's ordering ops: a frame is
+    * dimension-bounded (single-window cheap path) unless one of its
+    * dims carries the reference's high_cardinality hint.
+    */
+  private[olap] def hintOf(dims: Seq[AxisDim]): Ords.SizeHint =
+    if (dims.exists(_.d.highCardinality)) Ords.Large else Ords.Small
+
+  /** A rendered axis result in its presentation order `sort`. Rows of a
+    * dimension-bounded axis (by [[hintOf]] over `dims`) gather into one
+    * partition and sort there: a global sort would spend a range-sampling
+    * job and a shuffle job ordering a member-count-sized frame. An axis
+    * over a high_cardinality dimension keeps the range-partitioned sort.
+    */
+  private[olap] def presented(df: DataFrame, sort: Seq[Column],
+      dims: Seq[AxisDim]): DataFrame =
+    if (hintOf(dims) == Ords.Small)
+      df.coalesce(1).sortWithinPartitions(sort: _*)
+    else df.orderBy(sort: _*)
 
   /** The per-entry cell context of a fused dim-calc frame (one row per
     * axis entry × other-factor tuple): `cols` are the entry key columns

@@ -15,6 +15,9 @@ class CacheSpec extends SparkSpec {
 
   test("repeated aggregates hit the segment cache") {
     val c = SegmentCache.global
+    // an earlier suite may have run this statement on the shared cube:
+    // start from no segment and no cell set, so run 1 misses and run 2 hits
+    c.flushCube(cube.cubeId)
     def run() = Query.from(cube).columns("revenue")
       .rows(LevelMembers("customer", "region")).execute().collect()
     val r1 = run()

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
 import graft.olap._
 
 /** Parse → render → reparse FIXPOINT over the reference's OWN MDX test

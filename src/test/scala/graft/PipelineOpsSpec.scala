@@ -1970,7 +1970,6 @@ class PipelineOpsSpec extends SparkSpec {
   }
 
   test("binaryFile media ingest: file round trip equals column path") {
-    import spark.implicits._
     val dir = "/tmp/graft_media_files_spec"
     PipelineOpsSpec.rmrf(dir)
     MultimodalOps.writeMediaFiles(docs, dir)

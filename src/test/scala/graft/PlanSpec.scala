@@ -503,6 +503,41 @@ class PlanSpec extends SparkSpec {
     assert(lr.collect().length === 1)
   }
 
+  test("a rendered dimension-bounded axis sorts in one partition with " +
+      "no range-partitioned sort and two jobs fewer; a high_cardinality " +
+      "axis keeps the range-partitioned sort") {
+    import org.apache.spark.sql.graft.JobCount
+    val ev = Cubes.events(spark, Sf).copy()
+    def byType(q: Query => Query) = q(Query.from(ev)
+      .columns("n_events", "sum_value")
+      .rows(LevelMembers("event_type", "event_type"))).execute()
+    // the NON EMPTY twin reads the same segment and member frame, so
+    // the plain statement's first run is a render over warm caches,
+    // not a cell-set hit
+    byType(_.nonempty()).collect()
+    val rendered = byType(identity)
+    val p = plan(rendered)
+    assert(!p.contains("rangepartitioning"),
+      s"a dimension-bounded axis must not range-partition its sort:\n$p")
+    assert(p.contains("Coalesce 1"), p)
+    val (rows, jobs) = JobCount(spark.sparkContext)(rendered.collect())
+    assert(jobs === 2, "the sort must start no sampling or shuffle job")
+    assert(rows.map(_.getAs[String]("event_type")).toSeq ===
+      rows.map(_.getAs[String]("event_type")).toSeq.sorted)
+    val li = Tables.load(spark, Sf, "lineitem")
+    val hc = BoundCube("HC", li, Seq(BoundDim("ok", foreignKey = "l_orderkey",
+        primaryKey = "l_orderkey",
+        levels = Seq(BoundLevel("orderkey", "l_orderkey")),
+        df = li.select("l_orderkey").distinct(), degenerate = true,
+        highCardinality = true)),
+      Seq(Measure("sum_qty", Agg.Sum, "l_quantity")))
+    val hp = plan(Query.from(hc).columns("sum_qty")
+      .rows(LevelMembers("ok", "orderkey")).execute())
+    assert(hp.contains("rangepartitioning") && !hp.contains("Coalesce 1"),
+      s"a high_cardinality axis must keep the distributed sort:\n$hp")
+    SegmentCache.global.flushCube(ev.cubeId)
+  }
+
   test("same-column percentile measures fuse into one aggregate") {
     val df = Query.from(Cubes.sales(spark, Sf))
       .columns("median_price", "p90_price", "q1_price", "q3_price")

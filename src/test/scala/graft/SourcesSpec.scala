@@ -139,4 +139,24 @@ class SourcesSpec extends SparkSpec {
     }
     assert(e.getMessage.contains("unsupported source format"))
   }
+
+  test("Tables.load infers each parquet schema once: a second load of a " +
+      "file starts no job, and a rewritten file shows its new column") {
+    import org.apache.spark.sql.graft.JobCount
+    Tables.load(spark, Sf, "nation")
+    val (again, jobs) =
+      JobCount(spark.sparkContext)(Tables.load(spark, Sf, "nation"))
+    assert(jobs === 0, "an unchanged file's schema must not be inferred again")
+    assert(again.columns.contains("n_name"))
+    val dir = java.nio.file.Files
+      .createTempDirectory("graft_tables").toString
+    val t = spark.range(3).toDF("a")
+    t.write.parquet(s"$dir/t.parquet")
+    assert(Tables.load(spark, dir, "t").columns.toSeq === Seq("a"))
+    t.withColumn("b", col("a") * 2)
+      .write.mode("overwrite").parquet(s"$dir/t.parquet")
+    val rewritten = Tables.load(spark, dir, "t")
+    assert(rewritten.columns.toSeq === Seq("a", "b"))
+    assert(rewritten.agg(sum("b")).head().getLong(0) === 6L)
+  }
 }

@@ -263,6 +263,49 @@ class StreamingSpec extends SparkSpec {
     cache.flushCube(cube.cubeId)
   }
 
+  test("an Events time-grain merge derives the time levels from the fact " +
+      "key: no broadcast join, and the merged cells equal a fresh cube " +
+      "over fact and delta, a delta row on a new date included") {
+    import graft.olap.{LevelMembers, Planner, Query, SegmentCache}
+    val cube = Cubes.events(spark, Sf).copy()
+    val cache = SegmentCache.global
+    val planner = new Planner(cube)
+    def answers(c: graft.olap.BoundCube) =
+      (Seq(Query.from(c).columns("n_events", "sum_value")) ++
+        Seq("year", "quarter", "month").map(l => Query.from(c)
+          .columns("n_events", "sum_value").rows(LevelMembers("time", l))))
+        .map(_.execute().collect().map(_.toString).toSet)
+    val before = answers(cube)
+    val events = Tables.load(spark, Sf, "events")
+    val last = events.select(max(to_date(col("ts")))).head().getDate(0)
+      .toLocalDate
+    // two click rows replayed, the later one moved to the day after the
+    // fact's last date (same month at every fixture scale)
+    val clicks = events.filter(col("event_type") === "click")
+      .orderBy(col("ts").desc).limit(2)
+    val moved = clicks.agg(max("event_id")).head().getLong(0)
+    val raw = clicks.withColumn("ts", when(col("event_id") === moved,
+        lit(java.sql.Timestamp.valueOf(last.plusDays(1).atTime(12, 0))))
+      .otherwise(col("ts")))
+    val delta = raw.withColumn("l_datekey", to_date(col("ts")))
+    val monthRows = planner.deltaSegment(Seq("d_year", "d_yq", "d_ym"), Nil,
+      Seq("n_events", "sum_value"), delta).get
+    val p = monthRows.queryExecution.executedPlan.toString
+    assert(!p.contains("BroadcastHashJoin"), s"the time levels must not join:\n$p")
+    val merges0 = cache.merges
+    StreamingCube.applyDeltaBatch(delta, cube, cache, planner)
+    assert(cache.merges - merges0 >= 4, "every segment merges")
+    val after = answers(cube)
+    val dir = java.nio.file.Files
+      .createTempDirectory("graft_events_delta").toString
+    events.union(raw).write.parquet(s"$dir/events.parquet")
+    val fresh = Cubes.events(spark, dir)
+    assert(after === answers(fresh))
+    assert(after.zip(before).forall { case (a, b) => a != b })
+    cache.flushCube(cube.cubeId)
+    cache.flushCube(fresh.cubeId)
+  }
+
   test("stateful sessionization carries state across micro-batches") {
     import spark.implicits._
     val events = Tables.load(spark, Sf, "events")
@@ -434,7 +477,6 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("streaming cluster-index ingest == batch CC across micro-batches") {
-    import org.apache.spark.sql.functions._
     val root = "/tmp/graft_cidx_stream_spec"
     def rm(f: java.io.File): Unit = {
       if (f.isDirectory) Option(f.listFiles).foreach(_.foreach(rm))
