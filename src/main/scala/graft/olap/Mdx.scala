@@ -12,7 +12,9 @@ package graft.olap
   *   FROM [Cube]
   *   [WHERE tuple]
   *
-  * Set functions map 1:1 onto the typed IR (Ir.scala); scalar
+  * Set and member functions resolve through one table each
+  * (`P.SetFunctions`, `P.MemberFunctions`) onto the typed IR (Ir.scala),
+  * as the reference's calls resolve through its FunDef table; scalar
   * expressions (Filter conditions, Order keys, calc-member formulas)
   * are rewritten from [Measures].[x] references into Spark SQL column
   * expressions. Names resolve case-insensitively against the bound
@@ -25,6 +27,10 @@ object Mdx {
       extends RuntimeException(msg)
 
   // --------------------------------------------------------- rendering
+
+  /** The ORDER directions by their MDX keyword (parsed and rendered). */
+  private val SortDirs: Map[String, SortDir] = Map("ASC" -> SortDir.Asc,
+    "DESC" -> SortDir.Desc, "BASC" -> SortDir.BAsc, "BDESC" -> SortDir.BDesc)
 
   /** Render a set expression back to MDX text (the builder's to_mdx
     * surface, reference query.rb:230-237; golden-tested and
@@ -56,11 +62,7 @@ object Mdx {
       s"EXTRACT(${render(s)}, ${dims.map(d => s"[$d]").mkString(", ")})"
     case FilterSet(s, cond) => s"FILTER(${render(s)}, $cond)"
     case OrderSet(s, e, dir) =>
-      val d = dir match {
-        case SortDir.Asc => "ASC"; case SortDir.Desc => "DESC"
-        case SortDir.BAsc => "BASC"; case SortDir.BDesc => "BDESC"
-      }
-      s"ORDER(${render(s)}, $e, $d)"
+      s"ORDER(${render(s)}, $e, ${SortDirs.find(_._2 == dir).get._1})"
     case TopCount(s, n, e, bottom) =>
       // empty sort expr = the natural-order head/tail form
       // (TOPCOUNT(set, n), reference query_test.rb:214-218)
@@ -207,6 +209,10 @@ object Mdx {
       s"$fnName($lead${render(set)}, ${back(y)}, ${back(x)})"
     case _ => cm.name
   }
+
+  /** A path segment: all digits reads as an Int key. */
+  private def pathValue(s: String): Any =
+    if (s.nonEmpty && s.forall(_.isDigit)) s.toInt else s
 
   // ------------------------------------------------------------ lexer
 
@@ -473,6 +479,11 @@ object Mdx {
       */
     private var auxCalcs = Vector.empty[CalcMember]
 
+    /** The WITH SET sets declared so far (a nested StrToSet parser
+      * sees its parent's).
+      */
+    private var withSets = Map.empty[String, SetExpr]
+
     private def peek: Option[Tok] =
       if (pos < toks.length) Some(toks(pos)) else None
     private def peekAt(k: Int): Option[Tok] =
@@ -520,27 +531,19 @@ object Mdx {
         cube.calcMembers.exists(_.name.equalsIgnoreCase(s)) ||
         declaredCalcs.exists(_.equalsIgnoreCase(s))
 
-    private def pathValue(s: String): Any =
-      if (s.nonEmpty && s.forall(_.isDigit)) s.toInt else s
-
     // -------- query
 
     def query(): QueryIR = {
-      var withSets = Map.empty[String, SetExpr]
       var withMembers = Seq.empty[CalcMember]
       if (atKw("WITH")) {
         eatKw("WITH")
         while (atKw("SET") || atKw("MEMBER")) {
           if (atKw("SET")) {
             eatKw("SET")
-            val name = next() match {
-              case TBracket(s) => s
-              case TIdent(s) => s
-              case t => throw MdxException(s"Syntax error: bad set name $t")
-            }
+            val setName = name("set name")
             eatKw("AS")
             inlineQuotedFormula()
-            withSets += name -> setExpr(withSets)
+            withSets += setName -> setExpr()
           } else {
             eatKw("MEMBER")
             val segs = memberPath()
@@ -564,13 +567,12 @@ object Mdx {
               val set = peek match {
                 case Some(TIdent(f)) if f.equalsIgnoreCase("Aggregate") =>
                   next(); eatPunct("(")
-                  val s = setExpr(withSets)
+                  val s = setExpr()
                   eatPunct(")")
                   s
                 case Some(TBracket(_)) =>
-                  val p = memberPath()
-                  val pd = dimNamed(p.head)
-                  Members(pd.name, Seq(p.tail.map(pathValue)))
+                  val (pd, m) = member()
+                  Members(pd.name, Seq(m))
                 case t => throw MdxException(
                   s"Syntax error: a calculated member on [${d.name}] " +
                     s"supports only Aggregate(set) or a member path, " +
@@ -582,7 +584,7 @@ object Mdx {
             } else {
             eatKw("AS")
             inlineQuotedFormula()
-            val formula = ExprCalc(scalarExpr(withSets))
+            val formula = ExprCalc(scalarExpr())
             // trailing options (reference query.rb:684-687 emission):
             // , SOLVE_ORDER = n | , FORMAT_STRING = 'f' | , CELL_FORMATTER = 'n'
             var solveOrder = 0
@@ -650,7 +652,7 @@ object Mdx {
         first = false
         var ne = false
         if (atKw("NON")) { eatKw("NON"); eatKw("EMPTY"); ne = true }
-        val set = setOrMeasures(withSets)
+        val set = setOrMeasures()
         eatKw("ON")
         val axis = next() match {
           case TIdent(s) => s.toUpperCase
@@ -689,17 +691,13 @@ object Mdx {
         }
       }
       eatKw("FROM")
-      val cubeName = next() match {
-        case TBracket(s) => s
-        case TIdent(s) => s
-        case t => throw MdxException(s"Syntax error: bad cube name $t")
-      }
+      val cubeName = name("cube name")
       if (!cubeName.equalsIgnoreCase(cube.name))
         throw MdxException(
           s"MDX cube '$cubeName' does not match connection cube " +
             s"'${cube.name}'")
       var slicer = Seq.empty[SlicerItem]
-      if (atKw("WHERE")) { eatKw("WHERE"); slicer = slicerItems(withSets) }
+      if (atKw("WHERE")) { eatKw("WHERE"); slicer = slicerItems() }
       QueryIR(measures, rows, slicer, nonEmpty, withSets,
         auxCalcs ++ withMembers, pages = pages, chapters = chapters,
         sections = sections)
@@ -710,30 +708,15 @@ object Mdx {
     /** Either a member set (Left) or a measure-name list (Right — the
       * COLUMNS axis shape).
       */
-    private def setOrMeasures(
-        withSets: Map[String, SetExpr]): Either[SetExpr, Seq[String]] = {
+    private def setOrMeasures(): Either[SetExpr, Seq[String]] = {
       if (atPunct("{")) {
         eatPunct("{")
-        // {set-fn(...), ...} — brace-wrapped set expressions (e.g.
-        // {Ancestor(m, lvl)}): parse items as general sets, union them
-        val fnItem = peek match {
-          case Some(TIdent(f)) =>
-            SetFns.contains(f.toUpperCase) ||
-              f.equalsIgnoreCase("STRTOSET") ||
-              f.equalsIgnoreCase("STRTOMEMBER") ||
-              withSets.contains(f)
-          // a nested braced set ({{a}, {b}} — set concatenation,
-          // duplicates kept, like Mondrian's SetListCalc over subsets)
-          case Some(TPunct("{")) => true
-          case _ => false
-        }
-        // `.Members`-style suffixes inside braces ({[d].[l].Members},
-        // {[d].[m].Children, ...}) need the general set parser, not the
-        // literal member-path branch: scan to the matching '}' for a
-        // `.Suffix` pattern
-        val braceSuffixes = Set("MEMBERS", "ALLMEMBERS", "CHILDREN",
-          "PARENT", "FIRSTCHILD", "LASTCHILD", "SIBLINGS",
-          "FIRSTSIBLING", "LASTSIBLING", "ITEM", "DEFAULTMEMBER")
+        // {set-fn(...), ...} and {{a}, {b}} (set concatenation,
+        // duplicates kept, like Mondrian's SetListCalc over subsets) are
+        // general sets, and so are member paths with a member-function
+        // or `.Item` suffix ({[d].[l].Members}, {[d].[m].Children, ...}):
+        // scan to the matching '}' for one. Parse the items as sets and
+        // union them.
         def braceHasSuffix: Boolean = {
           var k = 0; var depth = 0; var found = false
           while (!found && pos + k < toks.length && depth >= 0) {
@@ -741,20 +724,18 @@ object Mdx {
               case (TPunct("{"), _) => depth += 1
               case (TPunct("}"), _) => depth -= 1
               case (TPunct("."), Some(TIdent(f)))
-                  if braceSuffixes(f.toUpperCase) => found = true
+                  if P.MemberFunctions.contains(f.toUpperCase) ||
+                    f.equalsIgnoreCase("Item") => found = true
               case _ => ()
             }
             k += 1
           }
           found
         }
-        if (fnItem || braceHasSuffix) {
-          var acc = setExpr(withSets)
-          while (atPunct(",")) {
-            eatPunct(","); acc = UnionSet(acc, setExpr(withSets), all = true)
-          }
+        if (setStarts(0) || braceHasSuffix) {
+          val items = setExpr() :: rest(setExpr())
           eatPunct("}")
-          return Left(acc)
+          return Left(items.reduce(UnionSet(_, _, all = true)))
         }
         // measure set or literal member set
         val firstPath = memberPath()
@@ -764,16 +745,11 @@ object Mdx {
               "Syntax error: expected [Measures].[name], got [" +
                 p.mkString("].[") + "]")
             else p(1)
-          var names = Seq(measureSeg(firstPath))
-          while (atPunct(",")) {
-            eatPunct(",")
-            names :+= measureSeg(memberPath())
-          }
+          val names = measureSeg(firstPath) :: rest(measureSeg(memberPath()))
           eatPunct("}")
           Right(names)
         } else {
           val d = dimNamed(firstPath.head)
-          var rawPaths = Seq(firstPath.tail)
           var range: Option[SetExpr] = None
           if (atPunct(":")) {
             eatPunct(":")
@@ -788,10 +764,7 @@ object Mdx {
             range = Some(MemberRange(d.name, lvl,
               firstPath.tail.last, to.tail.last))
           }
-          while (atPunct(",")) {
-            eatPunct(",")
-            rawPaths :+= memberPath().tail
-          }
+          val rawPaths = firstPath.tail :: rest(memberPath().tail)
           eatPunct("}")
           Left(range.getOrElse {
             // level-qualified items ({[Dim].[Level].[M], ...}) lower to
@@ -821,34 +794,34 @@ object Mdx {
           if (p.length < 2) throw MdxException(
             "Syntax error: expected [Measures].[name]")
           Right(Seq(p(1)))
-        case _ => Left(setExpr(withSets))
+        case _ => Left(setExpr())
       }
     }
 
-    private def setExpr(withSets: Map[String, SetExpr]): SetExpr = {
-      val first = setTerm(withSets)
+    private def setExpr(): SetExpr = {
+      val first = setTerm()
       // infix '*' = CrossJoin (left-associative)
       var acc = first
-      while (atPunct("*")) { eatPunct("*"); acc = CrossJoin(acc, setTerm(withSets)) }
+      while (atPunct("*")) { eatPunct("*"); acc = CrossJoin(acc, setTerm()) }
       acc
     }
 
-    private def setTerm(withSets: Map[String, SetExpr]): SetExpr = {
-      var t = setTermBase(withSets)
+    private def setTerm(): SetExpr = {
+      var t = setTermBase()
       // postfix .Item(n): the n-th tuple of the set (ItemFunDef) — a
       // 1-tuple set in this uniform-grid model
       while (atPunct(".") && peekAt(1).exists(isKw(_, "Item"))) {
         eatPunct("."); next(); eatPunct("(")
-        val i = num().toInt
+        val i = int()
         eatPunct(")")
         t = SubsetSet(t, i, 1)
       }
       t
     }
 
-    private def setTermBase(withSets: Map[String, SetExpr]): SetExpr =
+    private def setTermBase(): SetExpr =
       peek match {
-        case Some(TPunct("{")) => setOrMeasures(withSets) match {
+        case Some(TPunct("{")) => setOrMeasures() match {
           case Left(s) => s
           // a braced measure set is only legal inside Aggregate(...),
           // where setAggRef unwraps it to the (set, measure) form
@@ -857,44 +830,9 @@ object Mdx {
             "Syntax error: measure set not allowed here")
         }
         case Some(TPunct("(")) =>
-          eatPunct("("); val s = setExpr(withSets); eatPunct(")"); s
-        case Some(TIdent(fn)) if fn.equalsIgnoreCase("STRTOSET") ||
-            fn.equalsIgnoreCase("STRTOMEMBER") ||
-            fn.equalsIgnoreCase("STRTOTUPLE") =>
-          // StrToSet('{...}') / StrToMember('[d].[m]') /
-          // StrToTuple('([d].[m], [e].[n])') — re-lex the string
-          // literal and parse it with a nested parser.
-          next(); eatPunct("(")
-          val body =
-            if (atParameter) { next(); String.valueOf(parameterValue()) }
-            else next() match {
-              case TStr(s) => s
-              case t => throw MdxException(
-                s"Syntax error: $fn requires a string literal, got $t")
-            }
-          eatPunct(")")
-          val sub = new P(lex(body), cube)
-          val r =
-            if (fn.equalsIgnoreCase("STRTOSET")) sub.setExpr(withSets)
-            else if (fn.equalsIgnoreCase("STRTOTUPLE")) sub.tupleSet()
-            else sub.memberSet()
-          if (!sub.atEnd)
-            throw MdxException(s"Syntax error: trailing tokens in $fn string")
-          r
-        case Some(TIdent(fn)) if udfByName(fn).exists(u =>
-            u.syntax == UdfSyntax.Function &&
-              u.returns == UdfType.MemberSet) =>
-          // set-returning UDF (ChildrenSet(...) shape,
-          // schema_definition_test.rb:1003-1014) — composes with every
-          // set operator
-          next()
-          udfInvoke(udfByName(fn).get, Nil, withSets) match {
-            case SetResult(s) => s
-            case SqlResult(_) => throw MdxException(
-              s"Syntax error: function '$fn' does not return a set")
-          }
-        case Some(TIdent(fn)) if SetFns.contains(fn.toUpperCase) =>
-          next(); setFunction(fn.toUpperCase, withSets)
+          eatPunct("("); val s = setExpr(); eatPunct(")"); s
+        case Some(TIdent(fn)) if peekAt(1).contains(TPunct("(")) =>
+          next(); setFunction(fn)
         case Some(TIdent(name)) if withSets.contains(name) =>
           next(); NamedSetRef(name)
         case Some(TBracket(_)) => memberSet()
@@ -903,381 +841,202 @@ object Mdx {
           throw MdxException("Syntax error: unexpected end of query")
       }
 
-    private val SetFns = Set("CROSSJOIN", "NONEMPTYCROSSJOIN", "UNION",
-      "INTERSECT", "EXCEPT", "DISTINCT", "FILTER", "ORDER", "TOPCOUNT",
-      "BOTTOMCOUNT", "TOPPERCENT", "BOTTOMPERCENT", "TOPSUM", "BOTTOMSUM",
-      "HEAD", "TAIL", "SUBSET", "HIERARCHIZE", "DESCENDANTS", "EXISTS",
-      "EXTRACT", "GENERATE", "ANCESTOR", "ANCESTORS", "ASCENDANTS",
-      "COUSIN",
-      "ADDCALCULATEDMEMBERS", "STRIPCALCULATEDMEMBERS",
-      "CURRENTDATEMEMBER", "DRILLDOWNMEMBER", "DRILLDOWNLEVEL",
-      "DRILLDOWNLEVELTOP", "DRILLDOWNLEVELBOTTOM", "TOGGLEDRILLSTATE",
-      "UNORDER")
-
-    private def setFunction(fn: String,
-        ws: Map[String, SetExpr]): SetExpr = {
-      eatPunct("(")
-      def arg(): SetExpr = setExpr(ws)
-      def comma(): Unit = eatPunct(",")
-      val r = fn match {
-        case "CROSSJOIN" =>
-          val a = arg(); comma(); val b = arg(); CrossJoin(a, b)
-        case "NONEMPTYCROSSJOIN" =>
-          val a = arg(); comma(); val b = arg(); NonEmptyCrossJoin(a, b)
-        case "UNION" =>
-          val a = arg(); comma(); val b = arg()
-          val all = if (atPunct(",")) { comma(); eatKw("ALL"); true }
-                    else false
-          UnionSet(a, b, all)
-        case "INTERSECT" =>
-          val a = arg(); comma(); val b = arg(); IntersectSet(a, b)
-        case "EXCEPT" =>
-          val a = arg(); comma(); val b = arg(); ExceptSet(a, b)
-        case "EXISTS" =>
-          val a = arg(); comma(); val b = arg(); ExistsSet(a, b)
-        case "DISTINCT" => DistinctSet(arg())
-        case "FILTER" =>
-          // optional `set AS S` alias names the set for S.Current /
-          // S.CurrentOrdinal in the condition (NamedSetCurrentFunDef,
-          // reference query_test.rb:635-655)
-          val a = arg()
-          val alias =
-            if (atKw("AS")) {
-              eatKw("AS")
-              Some(next() match {
-                case TIdent(s2) => s2
-                case TBracket(s2) => s2
-                case t => throw MdxException(
-                  s"Syntax error: bad set alias $t")
-              })
-            } else None
-          comma(); FilterSet(a, scalarExpr(ws, setAlias = alias))
-        case "ORDER" =>
-          val a = arg(); comma(); val e = scalarExpr(ws)
-          val dir = if (atPunct(",")) {
-            comma()
-            next() match {
-              case TIdent(d) => d.toUpperCase match {
-                case "ASC" => SortDir.Asc
-                case "DESC" => SortDir.Desc
-                case "BASC" => SortDir.BAsc
-                case "BDESC" => SortDir.BDesc
-                case o => throw MdxException(s"Syntax error: bad order $o")
-              }
-              case t => throw MdxException(s"Syntax error: bad order $t")
-            }
-          } else SortDir.Asc
-          OrderSet(a, e, dir)
-        case "TOPCOUNT" | "BOTTOMCOUNT" =>
-          // the sort expression is optional (reference
-          // query_test.rb:214-218): without it, MDX takes the set's
-          // natural order — head for TOP, tail for BOTTOM
-          val a = arg(); comma(); val n = num().toInt
-          val e = if (atPunct(",")) { comma(); scalarExpr(ws) } else ""
-          TopCount(a, n, e, bottom = fn == "BOTTOMCOUNT")
-        case "TOPPERCENT" | "BOTTOMPERCENT" =>
-          val a = arg(); comma(); val p = num(); comma()
-          TopPercent(a, p, scalarExpr(ws), bottom = fn == "BOTTOMPERCENT")
-        case "TOPSUM" | "BOTTOMSUM" =>
-          val a = arg(); comma(); val s = num(); comma()
-          TopSum(a, s, scalarExpr(ws), bottom = fn == "BOTTOMSUM")
-        case "HEAD" =>
-          // count defaults to 1 (HeadTailFunDef; reference
-          // query_test.rb:288-294 Head([Customers].Members))
-          val a = arg()
-          val n = if (atPunct(",")) { comma(); num().toInt } else 1
-          HeadSet(a, n)
-        case "TAIL" =>
-          val a = arg()
-          val n = if (atPunct(",")) { comma(); num().toInt } else 1
-          TailSet(a, n)
-        case "SUBSET" =>
-          val a = arg(); comma(); val s = num().toInt; comma()
-          SubsetSet(a, s, num().toInt)
-        case "HIERARCHIZE" =>
-          val a = arg()
-          val post = if (atPunct(",")) { comma(); eatKw("POST"); true }
-                     else false
-          Hierarchize(a, post)
-        case "DESCENDANTS" =>
-          val p = memberPath(); comma()
-          val d = dimNamed(p.head)
-          val lvl = next() match {
-            case TBracket(s) => s
-            case TIdent(s) => s
-            case t => throw MdxException(s"Syntax error: bad level $t")
-          }
-          Descendants(d.name, p.tail.map(pathValue), resolveLevel(d, lvl))
-        case "EXTRACT" =>
-          // Extract(set, [dim][, [dim]...]) — project onto dimensions
-          val a = arg()
-          var dims = Vector.empty[String]
-          while (atPunct(",")) {
-            comma()
-            dims :+= (next() match {
-              case TBracket(s) => dimNamed(s).name
-              case TIdent(s) => dimNamed(s).name
-              case t => throw MdxException(s"Syntax error: bad dimension $t")
-            })
-          }
-          if (dims.isEmpty)
-            throw MdxException("Syntax error: EXTRACT requires dimensions")
-          ExtractSet(a, dims)
-        case "GENERATE" =>
-          // Generate(set, [dim].CurrentMember[, ALL]) — the reference's
-          // usage (query_test.rb:660-675): identity scan over the set;
-          // ALL keeps duplicates, default dedups.
-          val a = arg(); comma()
-          val d = next() match {
-            case TBracket(s) => dimNamed(s)
-            case t => throw MdxException(
-              s"Syntax error: GENERATE pattern must be a member expr, got $t")
-          }
-          eatPunct(".")
-          next() match {
-            case TIdent(f) if f.equalsIgnoreCase("CurrentMember") => ()
-            case t => throw MdxException(
-              s"Syntax error: unsupported GENERATE pattern .$t " +
-                s"(only [${d.name}].CurrentMember)")
-          }
-          val all = if (atPunct(",")) { comma(); eatKw("ALL"); true }
-                    else false
-          if (all) a else DistinctSet(a)
-        case "ASCENDANTS" =>
-          // Ascendants(member): the member and ALL its ancestors up to
-          // the root (AscendantsFunDef) — a literal mixed-depth member
-          // set, expanded at parse time
-          val p = memberPath()
-          val d = dimNamed(p.head)
-          val path = p.tail.map(pathValue)
-          if (path.isEmpty) throw MdxException(
-            "Ascendants: expected a member, got a dimension")
-          Members(d.name,
-            (1 to path.length).reverse.map(n => path.take(n)))
-        case "COUSIN" =>
-          // Cousin(member, ancestor) — same-dimension positional
-          // navigation (CousinFunDef)
-          val p = memberPath(); comma()
-          val d = dimNamed(p.head)
-          val ap = memberPath()
-          val d2 = dimNamed(ap.head)
-          if (d2.name != d.name) throw MdxException(
-            s"Cousin: members of different hierarchies " +
-              s"([${d.name}], [${d2.name}])")
-          // depth relationships are SEMANTICS, not syntax (jar
-          // CousinFunDef: equal depth → second member, member above →
-          // null member) — the planner lowers them, the parser accepts
-          CousinSet(d.name, p.tail.map(pathValue), ap.tail.map(pathValue))
-        case "ANCESTOR" =>
-          // Ancestor(member, level) — the member's ancestor at the level
-          val p = memberPath(); comma()
-          val d = dimNamed(p.head)
-          val lp = memberPath()
-          val lvlName = resolveLevel(d,
-            if (lp.head.equalsIgnoreCase(d.name)) lp.last else lp.head)
-          val depth = d.levelIndex(lvlName)
-          val path = p.tail.map(pathValue)
-          if (path.length <= depth)
-            throw MdxException(
-              s"Ancestor level '$lvlName' is below member [${p.mkString("].[")}]")
-          Members(d.name, Seq(path.take(depth + 1)))
-        case "ANCESTORS" =>
-          // Ancestors(member, level) — the set form of Ancestor
-          // (AncestorsFunDef): at a single named level the set holds
-          // exactly the one ancestor
-          val p = memberPath(); comma()
-          val d = dimNamed(p.head)
-          val lp = memberPath()
-          val lvlName = resolveLevel(d,
-            if (lp.head.equalsIgnoreCase(d.name)) lp.last else lp.head)
-          val depth = d.levelIndex(lvlName)
-          val path = p.tail.map(pathValue)
-          if (path.length <= depth)
-            throw MdxException(
-              s"Ancestors level '$lvlName' is below member [${p.mkString("].[")}]")
-          Members(d.name, Seq(path.take(depth + 1)))
-        case "ADDCALCULATEDMEMBERS" =>
-          // calc members live on [Measures] in this engine, so a member
-          // set is unchanged (AddCalculatedMembersFunDef passthrough)
-          arg()
-        case "STRIPCALCULATEDMEMBERS" =>
-          // dual of AddCalculatedMembers: level member sets carry no
-          // calc members here, so the set passes through unchanged
-          arg()
-        case "UNORDER" => UnorderSet(arg())
-        case "DRILLDOWNLEVEL" =>
-          // DrilldownLevel(set): every member drills into its children —
-          // exactly DrilldownMember with the set as its own drill list
-          val a = arg(); DrilldownMember(a, a)
-        case "DRILLDOWNMEMBER" =>
-          val a = arg(); comma(); val b = arg(); DrilldownMember(a, b)
-        case "TOGGLEDRILLSTATE" =>
-          val a = arg(); comma(); val b = arg(); ToggleDrillState(a, b)
-        case "DRILLDOWNLEVELTOP" | "DRILLDOWNLEVELBOTTOM" =>
-          val a = arg(); comma(); val n = num().toInt
-          var e: String = cube.defaultMeasureName
-          if (atPunct(",")) {
-            comma()
-            // optional Level argument: a short bracket path naming a
-            // level; accepted-but-unused (the drill is always one level
-            // down). Anything else — including [Measures].[x] — is the
-            // ranking expression; backtrack and parse it as such.
-            val save = pos
-            val isLevel = peek match {
-              case Some(TBracket(_)) =>
-                try {
-                  val p = memberPath()
-                  val ok = p.length <= 2 && {
-                    val d = cube.dims.find(_.name.equalsIgnoreCase(p.head))
-                    d match {
-                      case Some(dd) => p.length == 1 ||
-                        dd.levels.exists(_.name.equalsIgnoreCase(p.last))
-                      case None => p.length == 1 && cube.dims.exists(
-                        _.levels.exists(_.name.equalsIgnoreCase(p.head)))
-                    }
-                  }
-                  if (!ok) pos = save
-                  ok
-                } catch { case _: MdxException => pos = save; false }
-              case _ => false
-            }
-            if (isLevel) {
-              if (atPunct(",")) { comma(); e = scalarExpr(ws) }
-            } else e = scalarExpr(ws)
-          }
-          DrilldownLevelTop(a, n, e,
-            bottom = fn == "DRILLDOWNLEVELBOTTOM")
-        case "CURRENTDATEMEMBER" =>
-          // CurrentDateMember([Time], '[Time].[yyyy].[Qq]'[, match]) or
-          // CurrentDateMember([time].[month][, match]); the format
-          // string's segment count under the hierarchy name selects the
-          // level (reference CurrentDateMemberFunDef,
-          // schema_definition_test.rb:577-597)
-          val p = memberPath()
-          val d = dimNamed(p.head)
-          var level: Option[String] =
-            if (p.tail.nonEmpty) Some(resolveLevel(d, p.tail.last)) else None
-          var mt = "EXACT"
-          while (atPunct(",")) {
-            comma()
-            next() match {
-              case TStr(fmt) =>
-                val segs = lex(fmt).collect { case TBracket(s) => s }
-                val depth = math.min(math.max(segs.length - 2, 0),
-                  d.levels.length - 1)
-                level = Some(d.levels(depth).name)
-              case TIdent(m)
-                  if Set("EXACT", "BEFORE", "AFTER")(m.toUpperCase) =>
-                mt = m.toUpperCase
-              case t => throw MdxException(
-                s"Syntax error: bad CurrentDateMember argument $t")
-            }
-          }
-          CurrentDateMember(d.name, level.getOrElse(d.levels.last.name), mt)
-        case _ =>
-          throw MdxException(s"No function matches signature '$fn(...)'")
+    /** `fn(args)`: a set function of [[P.SetFunctions]], or a
+      * set-returning UDF (the ChildrenSet(...) shape,
+      * schema_definition_test.rb:1003-1014), which composes with every
+      * set operator. Any other name matches no signature.
+      */
+    private def setFunction(fn: String): SetExpr =
+      P.SetFunctions.get(fn.toUpperCase) match {
+        case Some(read) =>
+          eatPunct("("); val s = read(this); eatPunct(")"); s
+        case None => setUdf(fn).map(udfInvoke(_, Nil)) match {
+          case Some(SetResult(s)) => s
+          case _ => throw MdxException(
+            s"No function matches signature '$fn(...)'")
+        }
       }
-      eatPunct(")")
-      r
+
+    private def setUdf(fn: String): Option[UdfDef] = udfByName(fn).filter(u =>
+      u.syntax == UdfSyntax.Function && u.returns == UdfType.MemberSet)
+
+    /** Does a set start `k` tokens ahead: a brace, a WITH SET name, or a
+      * call [[setFunction]] reads? Braced items, slicer items and a set
+      * aggregate's first argument all ask it.
+      */
+    private def setStarts(k: Int): Boolean = peekAt(k) match {
+      case Some(TPunct("{")) => true
+      case Some(TIdent(f)) => withSets.contains(f) ||
+        peekAt(k + 1).contains(TPunct("(")) &&
+          (P.SetFunctions.contains(f.toUpperCase) || setUdf(f).isDefined)
+      case _ => false
     }
+
+    // -------- argument readers of the function tables
 
     private def num(): Double = next() match {
       case TNum(s) => s.toDouble
       case t => throw MdxException(s"Syntax error: expected number, got $t")
     }
+    private def int(): Int = num().toInt
+    private def comma(): Unit = eatPunct(",")
+    /** A further argument: the comma, then `read`. */
+    private def more[A](read: => A): A = { comma(); read }
+    /** An optional further argument. */
+    private def opt[A](read: => A): Option[A] =
+      if (atPunct(",")) Some(more(read)) else None
+    /** Every further argument. */
+    private def rest[A](read: => A): List[A] =
+      if (!atPunct(",")) Nil
+      else { val a = more(read); a :: rest(read) }
+    /** An optional trailing keyword (UNION's ALL, HIERARCHIZE's POST). */
+    private def flag(kw: String): Boolean = opt(eatKw(kw)).isDefined
+    /** A name token, bracketed or plain: a level, a dimension, an alias. */
+    private def name(what: String): String = next() match {
+      case TBracket(s) => s
+      case TIdent(s) => s
+      case t => throw MdxException(s"Syntax error: bad $what $t")
+    }
+    private def dimension(): BoundDim = dimNamed(name("dimension"))
+    /** A member path: its dimension and the path under it. */
+    private def member(): (BoundDim, Seq[Any]) = {
+      val p = memberPath()
+      (dimNamed(p.head), p.tail.map(pathValue))
+    }
+    /** A level of `d`, written `[level]` or `[dim].[level]`. */
+    private def level(d: BoundDim): String = {
+      val p = memberPath()
+      resolveLevel(d, if (p.head.equalsIgnoreCase(d.name)) p.last else p.head)
+    }
+    private def sortDir(): SortDir = {
+      val o = name("order").toUpperCase
+      SortDirs.getOrElse(o, throw MdxException(s"Syntax error: bad order $o"))
+    }
+
+    /** FILTER(set [AS S], cond): the alias names the set for S.Current
+      * and S.CurrentOrdinal in the condition (NamedSetCurrentFunDef,
+      * reference query_test.rb:635-655).
+      */
+    private def filter(): SetExpr = {
+      val a = setExpr()
+      val alias =
+        if (atKw("AS")) { eatKw("AS"); Some(name("set alias")) } else None
+      FilterSet(a, more(scalarExpr(setAlias = alias)))
+    }
+
+    /** `[dim].CurrentMember`, the one pattern GENERATE and a LinReg
+      * series Rank accept.
+      */
+    private def currentMember(what: String): BoundDim = {
+      val d = dimension()
+      eatPunct(".")
+      next() match {
+        case TIdent(f) if f.equalsIgnoreCase("CurrentMember") => d
+        case t => throw MdxException(s"Syntax error: $what supports " +
+          s"only [${d.name}].CurrentMember, got .$t")
+      }
+    }
+
+    /** DrilldownLevelTop/Bottom's ranking expression after the count,
+      * the cube's default measure when absent. An optional Level
+      * argument may come first: a short bracket path naming a level,
+      * accepted but unused (the drill is always one level down).
+      * Anything else — including [Measures].[x] — is the expression;
+      * backtrack and parse it as such.
+      */
+    private def drillKey(): String = opt {
+      val save = pos
+      val isLevel = peek match {
+        case Some(TBracket(_)) =>
+          try {
+            val p = memberPath()
+            val ok = p.length <= 2 && {
+              val d = cube.dims.find(_.name.equalsIgnoreCase(p.head))
+              d match {
+                case Some(dd) => p.length == 1 ||
+                  dd.levels.exists(_.name.equalsIgnoreCase(p.last))
+                case None => p.length == 1 && cube.dims.exists(
+                  _.levels.exists(_.name.equalsIgnoreCase(p.head)))
+              }
+            }
+            if (!ok) pos = save
+            ok
+          } catch { case _: MdxException => pos = save; false }
+        case _ => false
+      }
+      if (isLevel) opt(scalarExpr()) else Some(scalarExpr())
+    }.flatten.getOrElse(cube.defaultMeasureName)
+
+    /** CurrentDateMember([Time], '[Time].[yyyy].[Qq]'[, match]) or
+      * CurrentDateMember([time].[month][, match]); the format string's
+      * segment count under the hierarchy name selects the level
+      * (reference CurrentDateMemberFunDef,
+      * schema_definition_test.rb:577-597).
+      */
+    private def currentDate(): SetExpr = {
+      val p = memberPath()
+      val d = dimNamed(p.head)
+      var level = p.tail.lastOption.map(resolveLevel(d, _))
+      var mt = "EXACT"
+      rest(next()).foreach {
+        case TStr(fmt) =>
+          val segs = lex(fmt).collect { case TBracket(s) => s }
+          level = Some(d.levels(math.min(math.max(segs.length - 2, 0),
+            d.levels.length - 1)).name)
+        case TIdent(m) if Seq("EXACT", "BEFORE", "AFTER")
+            .contains(m.toUpperCase) => mt = m.toUpperCase
+        case t => throw MdxException(
+          s"Syntax error: bad CurrentDateMember argument $t")
+      }
+      CurrentDateMember(d.name, level.getOrElse(d.levels.last.name), mt)
+    }
+
+    /** StrToSet('{...}') / StrToMember('[d].[m]') /
+      * StrToTuple('([d].[m], [e].[n])'): the string literal (or a
+      * Parameter's value) re-lexed and read whole by a nested parser.
+      */
+    private def strTo(fn: String, read: P => SetExpr): SetExpr = {
+      val body =
+        if (atParameter) { next(); String.valueOf(parameterValue()) }
+        else next() match {
+          case TStr(s) => s
+          case t => throw MdxException(
+            s"Syntax error: $fn requires a string literal, got $t")
+        }
+      val sub = new P(lex(body), cube)
+      sub.withSets = withSets
+      val r = read(sub)
+      if (!sub.atEnd)
+        throw MdxException(s"Syntax error: trailing tokens in $fn string")
+      r
+    }
 
     /** '([d].[m], [e].[n])' tuple body (StrToTuple): one member per
       * hierarchy, crossjoined; a bare member (no parens) is a 1-tuple.
       */
-    private def tupleSet(): SetExpr = {
-      if (!atPunct("(")) return memberSet()
-      eatPunct("(")
-      var sets = Vector.empty[SetExpr]
-      def one(): Unit = {
-        val p = memberPath()
-        val d = dimNamed(p.head)
-        sets :+= levelQualified(d, p.tail).getOrElse(
-          Members(d.name, Seq(p.tail.map(pathValue))))
+    private def tupleSet(): SetExpr =
+      if (!atPunct("(")) memberSet()
+      else {
+        eatPunct("(")
+        val s = (memberSet() :: rest(memberSet())).reduce(CrossJoin(_, _))
+        eatPunct(")")
+        s
       }
-      one()
-      while (atPunct(",")) { eatPunct(","); one() }
-      eatPunct(")")
-      sets.reduce(CrossJoin(_, _))
-    }
 
-    /** [Dim].[a].[b].Members / .Children / .AllMembers / plain member
-      * path set.
+    /** `[Dim](.[seg])*`: a member path, or with a `.Fn` suffix of
+      * [[P.MemberFunctions]] the set that function names.
       */
     private def memberSet(): SetExpr = {
       val segs = memberPath()
       val d = dimNamed(segs.head)
-      def path = segs.tail.map(pathValue)
-      def parentPath = {
-        if (path.isEmpty) throw MdxException(
-          s"Syntax error: [${d.name}] has no parent (dimension reference)")
-        if (path.length == 1) throw MdxException(
-          s"MDX object: root member [${d.name}].[${path.head}] has no parent")
-        path.dropRight(1)
+      val fn = peekAt(1).collect {
+        case TIdent(f) if atPunct(".") => f.toUpperCase
+      }.flatMap(P.MemberFunctions.get)
+      fn match {
+        case Some(apply) => eatPunct("."); next(); apply(this, d, segs.tail)
+        case None => levelQualified(d, segs.tail)
+          .getOrElse(Members(d.name, Seq(segs.tail.map(pathValue))))
       }
-      val knownSuffix = Set("MEMBERS", "ALLMEMBERS", "CHILDREN",
-        "PARENT", "FIRSTCHILD", "LASTCHILD", "SIBLINGS",
-        "FIRSTSIBLING", "LASTSIBLING", "DEFAULTMEMBER")
-      val hasSuffix = atPunct(".") && (peekAt(1) match {
-        case Some(TIdent(f)) => knownSuffix(f.toUpperCase)
-        case _ => false
-      })
-      if (hasSuffix) {
-        eatPunct(".")
-        next() match {
-          case TIdent(f) if f.equalsIgnoreCase("Members") ||
-              f.equalsIgnoreCase("AllMembers") =>
-            // [Dim].Members / [Dim].AllMembers — hierarchy-scope: every
-            // member of every level (reference query_test.rb:288-300,
-            // 712-723). Hierarchies here carry no All member (hasAll =
-            // false semantics), so the hierarchy member set is the
-            // union of the level member sets, root level first.
-            if (segs.length == 1)
-              d.levels.map(l => LevelMembers(d.name, l.name): SetExpr)
-                .reduce(UnionSet(_, _, all = true))
-            else if (segs.length == 2)
-              LevelMembers(d.name, resolveLevel(d, segs(1)))
-            else throw MdxException(
-              s"Syntax error: .$f applies to [Dim] or [Dim].[Level]")
-          case TIdent(f) if f.equalsIgnoreCase("DefaultMember") =>
-            // hasAll=false hierarchies: Mondrian's default member is
-            // the first root-level member (HierarchyDefaultMember;
-            // reference query_test.rb:718-723 — there the default is
-            // the All member, whose analog here is the grand-total
-            // row, not an axis member)
-            if (segs.length != 1) throw MdxException(
-              "Syntax error: .DefaultMember applies to [Dim]")
-            HeadSet(LevelMembers(d.name, d.levels.head.name), 1)
-          case TIdent(f) if f.equalsIgnoreCase("Children") =>
-            Children(d.name, path)
-          // member navigation (reference cube.rb member API / Mondrian
-          // FirstChild/LastChild/Siblings/Parent FunDefs). Children are
-          // in hierarchical (ordinal) order, so First/Last = Head/Tail.
-          case TIdent(f) if f.equalsIgnoreCase("Parent") =>
-            Members(d.name, Seq(parentPath))
-          case TIdent(f) if f.equalsIgnoreCase("FirstChild") =>
-            HeadSet(Children(d.name, path), 1)
-          case TIdent(f) if f.equalsIgnoreCase("LastChild") =>
-            TailSet(Children(d.name, path), 1)
-          case TIdent(f) if f.equalsIgnoreCase("Siblings") =>
-            if (path.length <= 1) LevelMembers(d.name, d.levels.head.name)
-            else Children(d.name, path.dropRight(1))
-          case TIdent(f) if f.equalsIgnoreCase("FirstSibling") =>
-            if (path.length <= 1)
-              HeadSet(LevelMembers(d.name, d.levels.head.name), 1)
-            else HeadSet(Children(d.name, path.dropRight(1)), 1)
-          case TIdent(f) if f.equalsIgnoreCase("LastSibling") =>
-            if (path.length <= 1)
-              TailSet(LevelMembers(d.name, d.levels.head.name), 1)
-            else TailSet(Children(d.name, path.dropRight(1)), 1)
-          case t => throw MdxException(s"Syntax error: unexpected .$t")
-        }
-      } else levelQualified(d, segs.tail)
-        .getOrElse(Members(d.name, Seq(path)))
     }
 
     private def resolveLevel(d: BoundDim, name: String): String =
@@ -1303,26 +1062,16 @@ object Mdx {
     /** [A].[B].[C] — bracket path segments joined by dots (plain idents
       * allowed too). Stops before a trailing .Function suffix.
       */
-    private def memberPath(): Seq[String] = {
-      val first = next() match {
-        case TBracket(s) => s
-        case TIdent(s) => s
-        case t => throw MdxException(s"Syntax error: expected member, got $t")
-      }
-      var segs = Seq(first)
-      while (atPunct(".") && (pos + 1 < toks.length) &&
-          (toks(pos + 1) match {
-            case TBracket(_) => true
-            case _ => false
-          })) {
+    private def memberPath(): Seq[String] = name("member") :: segments()
+
+    /** The `.[seg]` path segments at the cursor. */
+    private def segments(): List[String] =
+      if (!atPunct(".") || !peekAt(1).exists(_.isInstanceOf[TBracket])) Nil
+      else {
         eatPunct(".")
-        next() match {
-          case TBracket(s) => segs :+= s
-          case t => throw MdxException(s"Syntax error: bad segment $t")
-        }
+        val TBracket(s) = next(): @unchecked
+        s :: segments()
       }
-      segs
-    }
 
     // -------- typed user-defined functions (reference schema_udf.rb:
     // 64-213; 12 UDF shapes tested at schema_definition_test.rb:900-1139)
@@ -1332,14 +1081,10 @@ object Mdx {
     private def udfByName(s: String): Option[UdfDef] = cube.funcs.udf(s)
 
     /** Parse one UDF argument according to its declared type. */
-    private def udfArg(t: UdfType, ws: Map[String, SetExpr]): UdfArg =
+    private def udfArg(t: UdfType): UdfArg =
       t match {
-        case UdfType.MemberSet => SetArg(setExpr(ws))
-        case UdfType.Hierarchy => next() match {
-          case TBracket(s) => HierarchyArg(dimNamed(s))
-          case t2 => throw MdxException(
-            s"Syntax error: expected hierarchy, got $t2")
-        }
+        case UdfType.MemberSet => SetArg(setExpr())
+        case UdfType.Hierarchy => HierarchyArg(dimension())
         case UdfType.Level =>
           val p = memberPath()
           if (p.length != 2)
@@ -1347,31 +1092,22 @@ object Mdx {
           val d = dimNamed(p.head)
           LevelArg(d, resolveLevel(d, p(1)))
         case UdfType.Member => memberUdfArg()
-        case _ => ScalarArg(scalarExpr(ws))
+        case _ => ScalarArg(scalarExpr())
       }
 
     /** `[dim].CurrentMember` (lowered to the axis-column macro) or an
       * explicit `[dim].[a].[b]` path.
       */
     private def memberUdfArg(): MemberArg = {
-      val dn = next() match {
-        case TBracket(s) => s
-        case t2 => throw MdxException(s"Syntax error: expected member, got $t2")
-      }
-      val d = dimNamed(dn)
+      val d = dimension()
       if (atPunct(".") && peekAt(1).exists(isKw(_, "CurrentMember"))) {
         eatPunct("."); next()
         MemberArg(d, Scalar.text(Scalar.CurrentName(d.name)), None)
       } else {
-        var segs = Seq.empty[String]
-        while (atPunct(".") && peekAt(1).exists(_.isInstanceOf[TBracket])) {
-          eatPunct(".")
-          next() match { case TBracket(s) => segs :+= s; case _ => () }
-        }
-        if (segs.isEmpty)
+        val path = segments().map(pathValue)
+        if (path.isEmpty)
           throw MdxException(
             s"Syntax error: expected member path after [${d.name}]")
-        val path = segs.map(pathValue)
         MemberArg(d, UdfResult.lit(String.valueOf(path.last)).sql, Some(path))
       }
     }
@@ -1380,8 +1116,7 @@ object Mdx {
       * method syntax); the remaining declared parameters are read from a
       * parenthesized list.
       */
-    private def udfInvoke(u: UdfDef, pre: Seq[UdfArg],
-        ws: Map[String, SetExpr]): UdfResult = {
+    private def udfInvoke(u: UdfDef, pre: Seq[UdfArg]): UdfResult = {
       val rest = u.parameters.drop(pre.length)
       val args =
         if (rest.isEmpty) pre
@@ -1390,7 +1125,7 @@ object Mdx {
           val buf = scala.collection.mutable.ArrayBuffer(pre: _*)
           rest.zipWithIndex.foreach { case (t, i) =>
             if (i > 0) eatPunct(",")
-            buf += udfArg(t, ws)
+            buf += udfArg(t)
           }
           eatPunct(")")
           buf.toSeq
@@ -1409,15 +1144,14 @@ object Mdx {
       * consumed only when the identifier is a registered property/method
       * UDF.
       */
-    private def udfPostfix(obj: UdfArg,
-        ws: Map[String, SetExpr]): Option[String] =
+    private def udfPostfix(obj: UdfArg): Option[String] =
       if (!atPunct(".")) None
       else peekAt(1) match {
         case Some(TIdent(f)) => udfByName(f) match {
           case Some(u) if u.syntax == UdfSyntax.Property ||
               u.syntax == UdfSyntax.Method =>
             eatPunct("."); next()
-            Some(udfSql(udfInvoke(u, Seq(obj), ws), f))
+            Some(udfSql(udfInvoke(u, Seq(obj)), f))
           case _ => None
         }
         case _ => None
@@ -1430,21 +1164,6 @@ object Mdx {
       * references rewritten to their column names (cast to double when
       * arithmetic combines decimal measures, so ratios stay portable).
       */
-    /** MDX set-aggregates allowed inside scalar formulas:
-      * Sum/Avg/Min/Max/Count/Aggregate(set[, measure]) — lowered to a
-      * hidden SetAggCalc member (negative solveOrder) that the formula
-      * references as a plain column.
-      */
-    private val SetAggFns =
-      Set("SUM", "AVG", "MIN", "MAX", "COUNT", "AGGREGATE")
-
-    /** MDX per-member-series regressions: LinRegFn(set, y, x) — lowered
-      * to a hidden [[LinRegCalc]] member (mondrian_test.rb:608-766).
-      */
-    private val LinRegFns = Set(
-      "LINREGSLOPE", "LINREGINTERCEPT", "LINREGR2", "LINREGVARIANCE",
-      "LINREGPOINT")
-
     /** While parsing a LinReg y/x argument, the series set —
       * `Rank([dim].CurrentMember, <this set>)` lowers to the series
       * rank name ([[Scalar.SeriesRank]], the member's position in the
@@ -1463,14 +1182,6 @@ object Mdx {
       * factor — [[setAggRef]] unwraps it before the IR is stored.
       */
     private var allowMeasuresSet = false
-
-    /** MDX scalar-function names → Spark SQL function names. */
-    private val MdxToSparkFn = Map(
-      "IIF" -> "if",
-      "COALESCEEMPTY" -> "coalesce",
-      "ISEMPTY" -> "isnull",
-      // VBA Val over numeric expressions is a double conversion
-      "VAL" -> "double")
 
     /** Lookahead: `([Measures].[m], [dim].[v]...)` — a tuple-valued
       * cell reference (the measure evaluated at pinned coordinates).
@@ -1503,12 +1214,9 @@ object Mdx {
       if (!isMeasureName(measure)) throw MdxException(
         s"MDX object '[Measures].[$measure]' not found in cube " +
           s"'${cube.name}'")
-      var sets = Vector.empty[SetExpr]
-      while (atPunct(",")) {
-        eatPunct(",")
-        val p = memberPath()
-        val d = dimNamed(p.head)
-        sets :+= Members(d.name, Seq(p.tail.map(pathValue)))
+      val sets = rest[SetExpr] {
+        val (d, m) = member()
+        Members(d.name, Seq(m))
       }
       eatPunct(")")
       if (sets.isEmpty) throw MdxException(
@@ -1520,23 +1228,6 @@ object Mdx {
       name
     }
 
-    /** Lookahead: is the first argument of Fn( ... a SET (vs a plain SQL
-      * scalar like MIN(col1, col2))? A set starts with '{', a set
-      * function name, a WITH SET name, a StrToSet, or a bracketed
-      * DIMENSION name.
-      */
-    private def setAggArgIsSet(ws: Map[String, SetExpr]): Boolean =
-      peekAt(2) match {
-        case Some(TPunct("{")) => true
-        case Some(TIdent(f)) =>
-          SetFns.contains(f.toUpperCase) || ws.contains(f) ||
-            f.equalsIgnoreCase("STRTOSET") ||
-            f.equalsIgnoreCase("STRTOMEMBER")
-        case Some(TBracket(nm)) =>
-          cube.dims.exists(_.name.equalsIgnoreCase(nm))
-        case _ => false
-      }
-
     /** Parse `Fn(set[, measureOrExpr | EXCLUDEEMPTY|INCLUDEEMPTY])`,
       * register the hidden calc, return its column name. Two sugar
       * forms beyond the plain measure (mondrian_test.rb:215-229):
@@ -1545,11 +1236,11 @@ object Mdx {
       * argument (`Aggregate(set, [Measures].[m] * 2)`), stored lowered
       * and evaluated over the restricted subcube.
       */
-    private def setAggRef(fnU: String, ws: Map[String, SetExpr]): String = {
+    private def setAggRef(fnU: String): String = {
       eatPunct("(")
       val saved = allowMeasuresSet
       allowMeasuresSet = true
-      val set0 = try setExpr(ws) finally allowMeasuresSet = saved
+      val set0 = try setExpr() finally allowMeasuresSet = saved
       // unwrap {set} * {[Measures].[m]}: flatten the crossjoin factors
       // and pull the (single) measure out
       def factors(s: SetExpr): Seq[SetExpr] = s match {
@@ -1594,7 +1285,7 @@ object Mdx {
             // the restricted subcube (validation of measure refs
             // happens inside the scalar lowering)
             // a bare reference stores the plain name, however quoted
-            measure = scalarExpr(ws) match {
+            measure = scalarExpr() match {
               case q if q.matches("`[^`]+`") => q.substring(1, q.length - 1)
               case e => e
             }
@@ -1616,17 +1307,17 @@ object Mdx {
       * set active, so Rank(CurrentMember, series) lowers to the
       * position macro.
       */
-    private def linRegRef(fnU: String, ws: Map[String, SetExpr]): String = {
+    private def linRegRef(fnU: String): String = {
       eatPunct("(")
       // LinRegPoint(xSlice, set, y, x): the leading x-slice lowers in
       // the OUTER context (no series rank macro)
       val pointX =
         if (fnU == "LINREGPOINT") {
-          val px = scalarExpr(ws)
+          val px = scalarExpr()
           eatPunct(",")
           Some(px)
         } else None
-      val set = setExpr(ws)
+      val set = setExpr()
       eatPunct(",")
       val saved = lrRankSet
       val savedX = lrXRankSet
@@ -1634,9 +1325,9 @@ object Mdx {
       lrXRankSet = None
       val (y, x, xset) =
         try {
-          val y0 = scalarExpr(ws)
+          val y0 = scalarExpr()
           eatPunct(",")
-          (y0, scalarExpr(ws), lrXRankSet)
+          (y0, scalarExpr(), lrXRankSet)
         } finally { lrRankSet = saved; lrXRankSet = savedX }
       eatPunct(")")
       val name = s"__setagg${auxCalcs.size}"
@@ -1646,8 +1337,7 @@ object Mdx {
       name
     }
 
-    private def scalarExpr(ws: Map[String, SetExpr],
-        stopAtAs: Boolean = false,
+    private def scalarExpr(stopAtAs: Boolean = false,
         setAlias: Option[String] = None): String = {
       val sb = new StringBuilder
       var depth = 0
@@ -1662,18 +1352,17 @@ object Mdx {
       val refs = scala.collection.mutable.ArrayBuffer.empty[(String, Boolean)]
       var lastTokRef = -1     // refs index, when the previous token was a ref
       var pendingDiv = false  // previous token was '/'
-      val stopKw = Set("SELECT", "MEMBER", "SET", "FROM", "ON")
       while (!done) {
         peek match {
           case None => done = true
           case Some(TPunct(")")) if depth == 0 => done = true
           case Some(TPunct(",")) if depth == 0 => done = true
           case Some(TIdent(s)) if depth == 0 &&
-              stopKw(s.toUpperCase) => done = true
+              P.ScalarStops(s.toUpperCase) => done = true
           case Some(TIdent(s)) if depth == 0 && stopAtAs &&
               s.equalsIgnoreCase("AS") => done = true
           case Some(_) =>
-            loweredTerm(ws, setAlias, tupleOk = !prevWasIdent) match {
+            loweredTerm(setAlias, tupleOk = !prevWasIdent) match {
               case Some(Left(m)) =>
                 refs += ((m, pendingDiv))
                 sb.append(s"@REF{${refs.size - 1}}")
@@ -1704,7 +1393,7 @@ object Mdx {
                         // so the wrapper is identity — the following
                         // parens keep the grouping
                         if (s.equalsIgnoreCase("CACHE")) ""
-                        else MdxToSparkFn.getOrElse(s.toUpperCase, s)
+                        else P.MdxToSparkFn.getOrElse(s.toUpperCase, s)
                       } else s
                     sb.append(s" $mapped ")
                   case TNum(s) => sb.append(s)
@@ -1740,8 +1429,7 @@ object Mdx {
       * plain token [[scalarExpr]] copies through. `tupleOk`: a '(' here
       * may open a tuple (it does not follow an identifier).
       */
-    private def loweredTerm(ws: Map[String, SetExpr],
-        setAlias: Option[String],
+    private def loweredTerm(setAlias: Option[String],
         tupleOk: Boolean): Option[Either[String, String]] = {
       def fn(name: String): Boolean =
         peek.exists(isKw(_, name)) && peekAt(1).contains(TPunct("("))
@@ -1757,35 +1445,30 @@ object Mdx {
           }
         case Some(TBracket(s)) =>
           next()
-          Some(bracketTerm(s, ws))
+          Some(bracketTerm(s))
         case Some(TPunct("(")) if tupleOk && atTupleStart =>
           Some(Right(tupleRef()))
-        case Some(TIdent(s)) if SetAggFns(s.toUpperCase) &&
-            peekAt(1).contains(TPunct("(")) && setAggArgIsSet(ws) =>
+        // a set aggregate's first argument is a set or a member path;
+        // otherwise this is a SQL call like MIN(col1, col2)
+        case Some(TIdent(s)) if P.SetAggFns(s.toUpperCase) &&
+            peekAt(1).contains(TPunct("(")) && (setStarts(2) ||
+              peekAt(2).exists {
+                case TBracket(nm) =>
+                  cube.dims.exists(_.name.equalsIgnoreCase(nm))
+                case _ => false
+              }) =>
           next()
-          Some(Right(setAggRef(s.toUpperCase, ws)))
-        case Some(TIdent(s)) if LinRegFns(s.toUpperCase) &&
+          Some(Right(setAggRef(s.toUpperCase)))
+        case Some(TIdent(s)) if P.LinRegFns(s.toUpperCase) &&
             peekAt(1).contains(TPunct("(")) =>
           next()
-          Some(Right(linRegRef(s.toUpperCase, ws)))
+          Some(Right(linRegRef(s.toUpperCase)))
         case Some(TIdent(_)) if fn("Rank") && lrRankSet.isDefined =>
           // Rank([dim].CurrentMember, <series set>) inside a LinReg
           // y/x argument — the member's 1-based series position
           next(); eatPunct("(")
-          val d = next() match {
-            case TBracket(nm) => dimNamed(nm)
-            case t => throw MdxException(
-              s"Syntax error: Rank needs [dim].CurrentMember, got $t")
-          }
-          eatPunct(".")
-          next() match {
-            case TIdent(f) if f.equalsIgnoreCase("CurrentMember") => ()
-            case t => throw MdxException(
-              s"Syntax error: Rank in a LinReg series supports only " +
-                s"[${d.name}].CurrentMember, got $t")
-          }
-          eatPunct(",")
-          val rset = setExpr(ws)
+          currentMember("Rank in a LinReg series")
+          val rset = more(setExpr())
           eatPunct(")")
           if (rset != lrRankSet.get) {
             // ranking in a DIFFERENT set: member-identity semantics
@@ -1804,14 +1487,14 @@ object Mdx {
           // function-syntax scalar UDF: expands to a SQL fragment in
           // place (stays codegen'd with the surrounding expression)
           next()
-          Some(Right(" " + udfSql(udfInvoke(udfByName(s).get, Nil, ws), s) +
+          Some(Right(" " + udfSql(udfInvoke(udfByName(s).get, Nil), s) +
             " "))
         case Some(TPunct("{")) =>
           // a set literal in scalar position only makes sense as the
           // object of a set-typed property/method UDF:
           // {...}.firstUpperName (schema_definition_test.rb:1074-1090)
-          val set = setTermBase(ws)
-          udfPostfix(SetArg(set), ws) match {
+          val set = setTermBase()
+          udfPostfix(SetArg(set)) match {
             case Some(sql) => Some(Right(" " + sql + " "))
             case None => throw MdxException(
               "Syntax error: set literal in scalar position requires " +
@@ -1834,7 +1517,7 @@ object Mdx {
             if (aliasCurrent) {
               next(); eatPunct("."); next()
               s" ${Scalar.text(Scalar.CurrentEmpty)} "
-            } else s" ((${scalarExpr(ws, setAlias = setAlias)}) IS NULL) "
+            } else s" ((${scalarExpr(setAlias = setAlias)}) IS NULL) "
           eatPunct(")")
           Some(Right(sql))
         case Some(TIdent(s)) if setAlias.exists(_.equalsIgnoreCase(s)) &&
@@ -1863,15 +1546,9 @@ object Mdx {
           // MDX Cast(expr AS Type) (CastFunDef, mondrian_test.rb
           // Cast tests): MDX type names → Spark SQL types
           next(); eatPunct("(")
-          val inner = scalarExpr(ws, stopAtAs = true)
+          val inner = scalarExpr(stopAtAs = true)
           eatKw("AS")
-          val tname = next() match {
-            case TIdent(t) => t
-            case TBracket(t) => t
-            case t => throw MdxException(
-              s"Syntax error: bad Cast type $t")
-          }
-          val sparkType = tname.toUpperCase match {
+          val sparkType = name("Cast type").toUpperCase match {
             case "BOOLEAN" => "BOOLEAN"
             case "STRING" => "STRING"
             case "INTEGER" | "INT" => "INT"
@@ -1889,7 +1566,7 @@ object Mdx {
           // format engine's Column surface, spliced back as SQL so it
           // stays inside the surrounding codegen'd expression
           next(); eatPunct("(")
-          val inner = scalarExpr(ws)
+          val inner = scalarExpr()
           eatPunct(",")
           val fmt = next() match {
             case TStr(f) => f
@@ -1903,7 +1580,7 @@ object Mdx {
           // SetToStr(set) — constant-folded at parse time to the MDX
           // rendering of the set (SetToStrFunDef)
           next(); eatPunct("(")
-          val set = setExpr(ws)
+          val set = setExpr()
           eatPunct(")")
           Some(Right(s" '${render(set).replace("'", "''")}' "))
         case Some(TIdent(_)) if fn("TUPLETOSTR") =>
@@ -1937,8 +1614,7 @@ object Mdx {
       * on a hierarchy, level or member object dispatched by its first
       * parameter type (Right).
       */
-    private def bracketTerm(s: String,
-        ws: Map[String, SetExpr]): Either[String, String] = {
+    private def bracketTerm(s: String): Either[String, String] = {
       val dim = cube.dims.find(_.name.equalsIgnoreCase(s))
       if (s.equalsIgnoreCase("Measures")) {
         eatPunct(".")
@@ -1964,18 +1640,11 @@ object Mdx {
           }
           eatPunct(")")
           s" ${Scalar.text(Scalar.CurrentProp(d.name, prop))} "
-        } else udfPostfix(MemberArg(d, name, None), ws)
+        } else udfPostfix(MemberArg(d, name, None))
           .fold(s" $name ")(sql => s" $sql "))
       } else if (dim.isDefined && !isMeasureName(s)) {
         val d = dim.get
-        var segs = Seq.empty[String]
-        while (atPunct(".") && peekAt(1).exists(_.isInstanceOf[TBracket])) {
-          eatPunct(".")
-          next() match {
-            case TBracket(x) => segs :+= x
-            case _ => ()
-          }
-        }
+        val segs = segments()
         val udfName = if (atPunct(".")) peekAt(1).collect {
           case TIdent(f) if udfByName(f).exists(u =>
             u.syntax != UdfSyntax.Function) => f
@@ -2000,7 +1669,7 @@ object Mdx {
             MemberArg(d, UdfResult.lit(segs.last).sql,
               Some(segs.map(pathValue)))
         }
-        Right(" " + udfSql(udfInvoke(u, Seq(obj), ws), f) + " ")
+        Right(" " + udfSql(udfInvoke(u, Seq(obj)), f) + " ")
       } else Left(s)
     }
 
@@ -2036,7 +1705,7 @@ object Mdx {
 
     // -------- slicer
 
-    private def slicerItems(ws: Map[String, SetExpr]): Seq[SlicerItem] = {
+    private def slicerItems(): Seq[SlicerItem] = {
       // a slicer entry is either a literal member path, or a SET
       // EXPRESSION (WHERE CROSSJOIN(...), WHERE (Head(...).Item(0),
       // ...) — reference query_test.rb:288-320). Set expressions that
@@ -2053,18 +1722,11 @@ object Mdx {
           for (fa <- flatten(a); fb <- flatten(b)) yield fa ++ fb
         case _ => None
       }
-      def startsSetFn: Boolean = peek match {
-        case Some(TIdent(f)) =>
-          SetFns.contains(f.toUpperCase) || ws.contains(f) ||
-            f.equalsIgnoreCase("STRTOSET") ||
-            f.equalsIgnoreCase("STRTOMEMBER")
-        case _ => false
-      }
       def one(): Seq[Either[(String, Seq[Any]), SlicerItem]] =
-        if (startsSetFn || atPunct("{")) {
+        if (setStarts(0)) {
           // braced set in slicer position (e.g. a rendered member
           // range inside a WHERE tuple) takes the general set parser
-          val s = setExpr(ws)
+          val s = setExpr()
           flatten(s) match {
             case Some(pairs) => pairs.map(Left(_))
             case None => Seq(Right(EvalSlice(s)))
@@ -2080,20 +1742,14 @@ object Mdx {
             case None => Seq(Left(d.name -> p.tail.map(pathValue)))
           }
         }
-      val items: Seq[Either[(String, Seq[Any]), SlicerItem]] =
-        if (atPunct("(")) {
-          eatPunct("(")
-          var acc = one()
-          while (atPunct(",")) { eatPunct(","); acc ++= one() }
-          eatPunct(")")
-          acc
-        } else if (atPunct("{")) {
-          eatPunct("{")
-          var acc = one()
-          while (atPunct(",")) { eatPunct(","); acc ++= one() }
-          eatPunct("}")
-          acc
-        } else one()
+      val items = peek match {
+        case Some(TPunct(open @ ("(" | "{"))) =>
+          eatPunct(open)
+          val all = one() ++ rest(one()).flatten
+          eatPunct(if (open == "(") ")" else "}")
+          all
+        case _ => one()
+      }
       // same-dim members form a compound (set) slicer; distinct dims a
       // tuple (query.rb:379-386)
       items.collect { case Left(p) => p }.groupBy(_._1).toSeq.map {
@@ -2101,5 +1757,199 @@ object Mdx {
         case (dim, many) => SetSlice(dim, many.map(_._2))
       } ++ items.collect { case Right(s) => s }
     }
+  }
+
+  private object P {
+
+    /** Every set function of the MDX surface, by upper-case name: the
+      * reader of its arguments (the cursor is past the '(') and the IR
+      * node it builds. The reference resolves each call through its
+      * FunDef table (mondrian/olap/fun); readers are shared, and a TOP/
+      * BOTTOM pair is one reader told which end it keeps.
+      */
+    val SetFunctions: Map[String, P => SetExpr] = {
+      def ends(top: String, bottom: String)(read: (P, Boolean) => SetExpr) =
+        Seq(top -> ((p: P) => read(p, false)),
+          bottom -> ((p: P) => read(p, true)))
+      def strTo(fn: String)(read: P => SetExpr) =
+        fn.toUpperCase -> ((p: P) => p.strTo(fn, read))
+      // Ancestor(member, level): the member's ancestor at the level;
+      // Ancestors is its set form (AncestorsFunDef), which at one named
+      // level holds exactly that ancestor
+      def ancestor(fn: String) = fn.toUpperCase -> { (p: P) =>
+        val (d, m) = p.member()
+        val lvl = p.more(p.level(d))
+        val depth = d.levelIndex(lvl)
+        if (m.length <= depth) throw MdxException(
+          s"$fn level '$lvl' is below member " +
+            (d.name +: m).mkString("[", "].[", "]"))
+        Members(d.name, Seq(m.take(depth + 1)))
+      }
+      Map[String, P => SetExpr](
+        "CROSSJOIN" -> (p => CrossJoin(p.setExpr(), p.more(p.setExpr()))),
+        "NONEMPTYCROSSJOIN" ->
+          (p => NonEmptyCrossJoin(p.setExpr(), p.more(p.setExpr()))),
+        "UNION" -> (p =>
+          UnionSet(p.setExpr(), p.more(p.setExpr()), p.flag("ALL"))),
+        "INTERSECT" -> (p => IntersectSet(p.setExpr(), p.more(p.setExpr()))),
+        "EXCEPT" -> (p => ExceptSet(p.setExpr(), p.more(p.setExpr()))),
+        "EXISTS" -> (p => ExistsSet(p.setExpr(), p.more(p.setExpr()))),
+        "DISTINCT" -> (p => DistinctSet(p.setExpr())),
+        "UNORDER" -> (p => UnorderSet(p.setExpr())),
+        // calc members live on [Measures] in this engine, so a member set
+        // passes through unchanged (Add/StripCalculatedMembersFunDef)
+        "ADDCALCULATEDMEMBERS" -> (p => p.setExpr()),
+        "STRIPCALCULATEDMEMBERS" -> (p => p.setExpr()),
+        "FILTER" -> (_.filter()),
+        "GENERATE" -> { p =>
+          // Generate(set, [dim].CurrentMember[, ALL]), the reference's
+          // usage (query_test.rb:660-675): an identity scan over the
+          // set; ALL keeps duplicates, the default dedups
+          val a = p.setExpr()
+          p.more(p.currentMember("GENERATE"))
+          if (p.flag("ALL")) a else DistinctSet(a)
+        },
+        "ORDER" -> (p => OrderSet(p.setExpr(), p.more(p.scalarExpr()),
+          p.opt(p.sortDir()).getOrElse(SortDir.Asc))),
+        // HEAD/TAIL count defaults to 1 (HeadTailFunDef; reference
+        // query_test.rb:288-294 Head([Customers].Members))
+        "HEAD" -> (p => HeadSet(p.setExpr(), p.opt(p.int()).getOrElse(1))),
+        "TAIL" -> (p => TailSet(p.setExpr(), p.opt(p.int()).getOrElse(1))),
+        "SUBSET" -> (p =>
+          SubsetSet(p.setExpr(), p.more(p.int()), p.more(p.int()))),
+        "HIERARCHIZE" -> (p => Hierarchize(p.setExpr(), p.flag("POST"))),
+        "EXTRACT" -> { p =>
+          // Extract(set, [dim][, [dim]...]): project onto dimensions
+          val a = p.setExpr()
+          val dims = p.rest(p.dimension().name)
+          if (dims.isEmpty)
+            throw MdxException("Syntax error: EXTRACT requires dimensions")
+          ExtractSet(a, dims)
+        },
+        "DESCENDANTS" -> { p =>
+          val (d, m) = p.member()
+          Descendants(d.name, m, p.more(p.level(d)))
+        },
+        "ASCENDANTS" -> { p =>
+          // Ascendants(member): the member and ALL its ancestors up to
+          // the root (AscendantsFunDef), a literal mixed-depth member set
+          val (d, m) = p.member()
+          if (m.isEmpty) throw MdxException(
+            "Ascendants: expected a member, got a dimension")
+          Members(d.name, (1 to m.length).reverse.map(m.take))
+        },
+        "COUSIN" -> { p =>
+          // Cousin(member, ancestor), same-dimension positional
+          // navigation (CousinFunDef). Depth relationships are
+          // semantics, not syntax (equal depth → the second member,
+          // member above → null): the planner lowers them
+          val (d, m) = p.member()
+          val (d2, a) = p.more(p.member())
+          if (d2.name != d.name) throw MdxException(
+            s"Cousin: members of different hierarchies " +
+              s"([${d.name}], [${d2.name}])")
+          CousinSet(d.name, m, a)
+        },
+        "DRILLDOWNMEMBER" ->
+          (p => DrilldownMember(p.setExpr(), p.more(p.setExpr()))),
+        // DrilldownLevel(set): every member drills into its children —
+        // DrilldownMember with the set as its own drill list
+        "DRILLDOWNLEVEL" -> { p => val a = p.setExpr(); DrilldownMember(a, a) },
+        "TOGGLEDRILLSTATE" ->
+          (p => ToggleDrillState(p.setExpr(), p.more(p.setExpr()))),
+        "CURRENTDATEMEMBER" -> (_.currentDate()),
+        ancestor("Ancestor"), ancestor("Ancestors"),
+        strTo("StrToSet")(_.setExpr()),
+        strTo("StrToMember")(_.memberSet()),
+        strTo("StrToTuple")(_.tupleSet())) ++
+      // the sort expression of TOP/BOTTOMCOUNT is optional (reference
+      // query_test.rb:214-218): without it MDX takes the set's natural
+      // order, the head for TOP and the tail for BOTTOM
+      ends("TOPCOUNT", "BOTTOMCOUNT")((p, bottom) => TopCount(p.setExpr(),
+        p.more(p.int()), p.opt(p.scalarExpr()).getOrElse(""), bottom)) ++
+      ends("TOPPERCENT", "BOTTOMPERCENT")((p, bottom) => TopPercent(
+        p.setExpr(), p.more(p.num()), p.more(p.scalarExpr()), bottom)) ++
+      ends("TOPSUM", "BOTTOMSUM")((p, bottom) => TopSum(p.setExpr(),
+        p.more(p.num()), p.more(p.scalarExpr()), bottom)) ++
+      ends("DRILLDOWNLEVELTOP", "DRILLDOWNLEVELBOTTOM")((p, bottom) =>
+        DrilldownLevelTop(p.setExpr(), p.more(p.int()), p.drillKey(), bottom))
+    }
+
+    /** Member functions, the `.Fn` suffixes of a `[Dim](.[seg])*` path,
+      * by upper-case name: the set each names, given the dimension and
+      * the segments after it (the reference's member API and Mondrian's
+      * navigation FunDefs). Children are in hierarchical (ordinal)
+      * order, so First/Last are Head/Tail of them.
+      */
+    val MemberFunctions: Map[String, (P, BoundDim, Seq[String]) => SetExpr] = {
+      // [Dim].Members / [Dim].AllMembers — hierarchy scope: every member
+      // of every level (reference query_test.rb:288-300, 712-723).
+      // Hierarchies here carry no All member (hasAll = false), so the
+      // hierarchy member set is the union of the level member sets,
+      // root level first.
+      def members(fn: String)(p: P, d: BoundDim, segs: Seq[String]) =
+        segs match {
+          case Seq() => d.levels.map(l => LevelMembers(d.name, l.name): SetExpr)
+            .reduce(UnionSet(_, _, all = true))
+          case Seq(l) => LevelMembers(d.name, p.resolveLevel(d, l))
+          case _ => throw MdxException(
+            s"Syntax error: .$fn applies to [Dim] or [Dim].[Level]")
+        }
+      def path(segs: Seq[String]): Seq[Any] = segs.map(pathValue)
+      def siblings(d: BoundDim, segs: Seq[String]): SetExpr =
+        if (segs.length <= 1) LevelMembers(d.name, d.levels.head.name)
+        else Children(d.name, path(segs.dropRight(1)))
+      Map(
+        "MEMBERS" -> members("Members"),
+        "ALLMEMBERS" -> members("AllMembers"),
+        // hasAll=false hierarchies: Mondrian's default member is the
+        // first root-level member (HierarchyDefaultMember; in reference
+        // query_test.rb:718-723 it is the All member, whose analog here
+        // is the grand-total row, not an axis member)
+        "DEFAULTMEMBER" -> { (_, d, segs) =>
+          if (segs.nonEmpty) throw MdxException(
+            "Syntax error: .DefaultMember applies to [Dim]")
+          HeadSet(LevelMembers(d.name, d.levels.head.name), 1)
+        },
+        "CHILDREN" -> ((_, d, segs) => Children(d.name, path(segs))),
+        "FIRSTCHILD" ->
+          ((_, d, segs) => HeadSet(Children(d.name, path(segs)), 1)),
+        "LASTCHILD" ->
+          ((_, d, segs) => TailSet(Children(d.name, path(segs)), 1)),
+        "PARENT" -> { (_, d, segs) =>
+          if (segs.isEmpty) throw MdxException(
+            s"Syntax error: [${d.name}] has no parent (dimension reference)")
+          if (segs.length == 1) throw MdxException(
+            s"MDX object: root member [${d.name}].[${segs.head}] has no parent")
+          Members(d.name, Seq(path(segs.dropRight(1))))
+        },
+        "SIBLINGS" -> ((_, d, segs) => siblings(d, segs)),
+        "FIRSTSIBLING" -> ((_, d, segs) => HeadSet(siblings(d, segs), 1)),
+        "LASTSIBLING" -> ((_, d, segs) => TailSet(siblings(d, segs), 1)))
+    }
+
+    /** MDX set-aggregates allowed inside scalar formulas:
+      * Sum/Avg/Min/Max/Count/Aggregate(set[, measure]) — lowered to a
+      * hidden SetAggCalc member (negative solveOrder) that the formula
+      * references as a plain column.
+      */
+    val SetAggFns = Set("SUM", "AVG", "MIN", "MAX", "COUNT", "AGGREGATE")
+
+    /** MDX per-member-series regressions: LinRegFn(set, y, x) — lowered
+      * to a hidden [[LinRegCalc]] member (mondrian_test.rb:608-766).
+      */
+    val LinRegFns = Set("LINREGSLOPE", "LINREGINTERCEPT", "LINREGR2",
+      "LINREGVARIANCE", "LINREGPOINT")
+
+    /** MDX scalar-function names → Spark SQL function names. */
+    val MdxToSparkFn = Map(
+      "IIF" -> "if",
+      "COALESCEEMPTY" -> "coalesce",
+      "ISEMPTY" -> "isnull",
+      // VBA Val over numeric expressions is a double conversion
+      "VAL" -> "double")
+
+    /** Keywords that end a scalar expression at depth 0. */
+    val ScalarStops = Set("SELECT", "MEMBER", "SET", "FROM", "ON")
   }
 }

@@ -70,4 +70,33 @@ class MdxRoundtripSpec extends SparkSpec {
       }
     }
   }
+
+  test("render → parse roundtrips each set function the generator omits") {
+    val region = LevelMembers("customer", "region")
+    val brand = LevelMembers("part", "brand")
+    val europe = Members("customer", Seq(Seq("EUROPE")))
+    Seq(
+      CrossJoin(region, brand),
+      NonEmptyCrossJoin(region, brand),
+      ExistsSet(LevelMembers("customer", "nation"), europe),
+      ExtractSet(CrossJoin(region, brand), Seq("customer")),
+      FilterSet(brand, "revenue > 1000"),
+      TopCount(brand, 3, "revenue", bottom = true),
+      TopCount(brand, 3, ""),
+      TopPercent(brand, 50.0, "revenue"),
+      TopSum(brand, 1000.0, "revenue"),
+      TopSum(brand, 1000.0, "revenue", bottom = true),
+      Hierarchize(LevelMembers("customer", "nation"), post = true),
+      UnionSet(region, europe, all = true),
+      MemberRange("customer", "region", "AMERICA", "EUROPE"),
+      CousinSet("customer", Seq("EUROPE", "FRANCE"), Seq("ASIA")),
+      DrilldownLevelTop(region, 2, "revenue", bottom = true),
+      Descendants("customer", Seq("ASIA"), "nation"),
+      Children("customer", Nil),
+      CurrentDateMember("time", "month", "EXACT")).foreach { set =>
+      val ir = QueryIR(Seq("revenue"), Some(set))
+      val mdx = Mdx.renderQuery(ir, cube.name)
+      assert(Mdx.parse(mdx, cube).rows === ir.rows, s"\nMDX was:\n$mdx")
+    }
+  }
 }

@@ -2940,4 +2940,43 @@ class MdxSpec extends SparkSpec {
     assert(compound.getMessage.contains("[Measures].[x]") &&
       compound.getMessage.contains("compound"), compound.getMessage)
   }
+
+  test("a set starter parses in braces, in the slicer and as a set " +
+      "aggregate's set to the same IR and rows as its bare or StrToSet twin") {
+    val cols = "SELECT {[Measures].[revenue]} ON COLUMNS"
+    val tuple = "STRTOTUPLE('([customer].[EUROPE], [returnflag].[R])')"
+    val children = "ChildrenSet([customer].[EUROPE])"
+    val childrenText = "STRTOSET('[customer].[EUROPE].Children')"
+    def onRows(set: String): String = s"$cols, $set ON ROWS FROM [Sales]"
+    def sliced(slicer: String): String =
+      s"${onRows("[part].[brand].Members")} WHERE $slicer"
+    def summed(set: String): String =
+      s"WITH MEMBER [Measures].[x] AS Sum($set, [Measures].[revenue]) " +
+        "SELECT {[Measures].[x]} ON COLUMNS, " +
+        "[returnflag].[returnflag].Members ON ROWS FROM [Sales]"
+    val tupleSum = summed("STRTOTUPLE('([customer].[EUROPE])')")
+    Seq(
+      onRows(s"{$tuple}") -> onRows(tuple),
+      sliced("STRTOTUPLE('([returnflag].[R])')") -> sliced("([returnflag].[R])"),
+      onRows(s"{$children}") -> onRows(children),
+      sliced(children) -> sliced(childrenText),
+      summed(children) -> summed(childrenText),
+      tupleSum -> summed("STRTOSET('([customer].[EUROPE])')")
+    ).foreach { case (mdx, twin) =>
+      assert(Mdx.parse(mdx, cube) === Mdx.parse(twin, cube), mdx)
+      val rows = Mdx.execute(mdx, cube).collect().toSeq
+      assert(rows.nonEmpty &&
+        rows === Mdx.execute(twin, cube).collect().toSeq, mdx)
+    }
+    assert(Mdx.parse(tupleSum, cube).withMembers.exists(_.calc ==
+      SetAggCalc("SUM", "revenue", Members("customer", Seq(Seq("EUROPE"))))))
+  }
+
+  test("an unknown function in set position matches no signature") {
+    val e = intercept[Mdx.MdxException](Mdx.parse(
+      """SELECT {[Measures].[revenue]} ON COLUMNS,
+        |  FooSet([customer].[region].Members) ON ROWS
+        |FROM [Sales]""".stripMargin, cube))
+    assert(e.getMessage === "No function matches signature 'FooSet(...)'")
+  }
 }
