@@ -14,65 +14,42 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.util.SizeEstimator
 
 /** Aggregate-table routing + segment cache — the two genuinely custom
-  * optimizer mechanisms of the reference engine (SURVEY §4 #5/#6):
-  * everything else the reference does (pushdown, pruning, batching,
-  * native set SQL) falls out of the DataFrame formulation or is a
-  * Catalyst built-in.
+  * optimizer mechanisms of the reference engine (SURVEY §4 #5/#6), here
+  * one cuboid lookup ([[SegmentCache.aggregate]]): everything else the
+  * reference does (pushdown, pruning, batching, native set SQL) falls
+  * out of the DataFrame formulation or is a Catalyst built-in.
   */
 
 /** A pre-aggregated table (materialized rollup) at a declared grain —
   * the analog of the reference's AggName/AggPattern declarations
-  * (schema.rb:374-414, jar rolap/aggmatcher/AggStar).
-  *
-  * `df` holds one row per grain tuple with the level key columns of
-  * every (dim, depth) in `grain` plus one column per measure carrying
-  * the PARTIAL aggregate at this grain. Only decomposable aggregators
-  * are re-aggregable from partials (sum-of-sums, sum-of-counts,
-  * min-of-mins, max-of-maxes); avg and distinct-count queries always
-  * fall through to the fact (distinct-count is non-additive — SURVEY
-  * §7.4 #3).
-  *
-  * At 100 TB this is the difference between scanning the fact and
-  * scanning a table ~1e4× smaller: the router answers any query whose
-  * grain is a coarsening of the agg grain without touching the fact.
+  * (schema.rb:374-414, jar rolap/aggmatcher/AggStar). `df` holds one row
+  * per grain tuple: the level key columns of every (dim, depth) in
+  * `grain` plus each measure's PARTIAL aggregate. Only decomposable
+  * aggregators re-aggregate from partials ([[Agg.partialMerge]]); avg
+  * and distinct-count fall through to the fact (distinct-count is
+  * non-additive — SURVEY §7.4 #3). At 100 TB a covered query scans a
+  * table ~1e4× smaller than the fact.
   */
 final case class AggTable(
     name: String,
     df: DataFrame,
     grain: Seq[(String, Int)],
     measures: Map[String, Agg]) {
-  def depthOf(dim: String): Option[Int] =
-    grain.collectFirst { case (d, depth) if d == dim => depth }
-  /** Total level count — the router's "smallest table" ranking. */
+  /** Total level count — the cuboid lookup's narrowest-first ranking. */
   def width: Int = grain.map(_._2 + 1).sum
 }
 
 object AggRouter {
 
-  /** Routing trace for tests/profiling: name of the agg table that
-    * served the last routed aggregate, if any.
+  /** Routing trace for tests and profiling, per thread: the rollup that
+    * answered this thread's last routed aggregate, or [[SegmentSource]].
     */
-  @volatile var lastHit: Option[String] = None
+  private val trace = ThreadLocal.withInitial[Option[String]](() => None)
+  def lastHit: Option[String] = trace.get
+  def lastHit_=(hit: Option[String]): Unit = trace.set(hit)
 
-  /** An agg table answers the query iff every needed dim is present at
-    * >= the needed depth (so all level columns root..depth exist),
-    * every needed measure is stored with a decomposable aggregator, and
-    * the slicer contains no raw-SQL predicate over fact columns.
-    */
-  def route(cube: BoundCube, needed: Map[String, Int],
-      slicer: Seq[SlicerItem],
-      measures: Seq[Measure]): Option[AggTable] = {
-    if (slicer.exists(_.isInstanceOf[ExprSlice])) return None
-    val candidates = cube.aggTables.filter { at =>
-      needed.forall { case (d, depth) =>
-        at.depthOf(d).exists(_ >= depth)
-      } &&
-      measures.forall(m =>
-        at.measures.get(m.name).contains(m.agg) &&
-          Agg.partialMerge(m.agg).isDefined)
-    }
-    candidates.sortBy(_.width).headOption
-  }
+  /** [[lastHit]] of an aggregate re-aggregated from a resident segment. */
+  val SegmentSource = "<segment>"
 
   /** Workload-driven rollup recommendation — the analog of the
     * reference's AggGen aggregate-table generator: given the grains a
@@ -139,23 +116,9 @@ object AggRouter {
     cube.withAggTables(ats: _*)
   }
 
-  /** Re-aggregate the routed table to the requested grain: the same
-    * groupBy shape as the fact path, but over the (much smaller)
-    * pre-aggregate, with each measure folded from its partials.
-    */
-  def reAggregate(at: AggTable,
-      axisDims: Seq[Planner.AxisDim], slicerPred: org.apache.spark.sql.Column,
-      measures: Seq[Measure]): DataFrame = {
-    lastHit = Some(at.name)
-    val sliced = at.df.filter(slicerPred)
-    val aggCols = mergeColumns(measures)
-    sliced.groupBy(Planner.groupCols(axisDims).map(col): _*)
-      .agg(aggCols.head, aggCols.tail: _*)
-  }
-
   /** Each routed measure's partial column folded by its merge rule
-    * ([[Agg.partialMerge]]); [[route]] admits only measures that have
-    * one.
+    * ([[Agg.partialMerge]]); the cuboid lookup
+    * ([[SegmentCache.aggregate]]) admits only measures that have one.
     */
   def mergeColumns(measures: Seq[Measure]): Seq[Column] =
     measures.map(m => Agg.partialMerge(m.agg).get(col(m.name)).as(m.name))
@@ -291,18 +254,15 @@ object AggMatcher {
     // AggForeignKey: the rollup kept a dimension's FK instead of its
     // collapsed levels — broadcast-join the dimension in (lazy, planned
     // into the routed scan), exposing EVERY level of that dimension
-    decl.foreignKeys.foreach { fk =>
-      val d = cube.dims.find(_.foreignKey == fk.factColumn)
-      require(!d.exists(dd => lvlMaps.exists(_.dim == dd.name)),
-        s"agg table '$tname': dimension '${d.map(_.name).getOrElse("")}' " +
-          "declared both as AggLevel columns and as an AggForeignKey")
-    }
     val (bound, fkGrain) = decl.foreignKeys
       .foldLeft((selected, Seq.empty[(String, Int)])) {
         case ((acc, grains), fk) =>
           val d = cube.dims.find(_.foreignKey == fk.factColumn).getOrElse(
             throw new IllegalArgumentException(s"agg table '$tname': no " +
               s"dimension joins the fact on '${fk.factColumn}'"))
+          require(!lvlMaps.exists(_.dim == d.name), s"agg table '$tname': " +
+            s"dimension '${d.name}' declared both as AggLevel columns and " +
+            "as an AggForeignKey")
           val depth = d.levels.length - 1
           val cols = (d.primaryKey +: Planner.memberCols(d, depth)).distinct
           val dimSel = d.df.select(cols.map(col): _*)
@@ -324,7 +284,8 @@ object AggMatcher {
   * 116-218). A segment is one aggregate DataFrame keyed by
   * (cube identity, grain, slicer, measure set); `persist()` is the
   * storage primitive, so repeated queries at the same grain reuse the
-  * in-memory columnar segment instead of re-scanning the fact.
+  * in-memory columnar segment, and coarser ones re-aggregate it
+  * ([[aggregate]]), instead of re-scanning the fact.
   */
 final class SegmentCache {
 
@@ -341,88 +302,143 @@ final class SegmentCache {
   def misses: Long = missCount.sum
   def size: Int = segments.size
 
-  def getOrCompute(key: SegKey)(compute: => DataFrame): DataFrame = {
-    leasePin(key)
-    segments.get(key) match {
-      case Some(df) => hit(key, df)
-      case None =>
-        missCount.increment()
-        val df = compute.persist()
-        val out = segments.putIfAbsent(key, df) match {
-          case Some(winner) =>
-            // lost a first-touch race: release the loser's persist
-            // mark (unmaterialized, so this frees no blocks — but it
-            // must not stay registered with the cache manager forever)
-            df.unpersist(blocking = false); winner
-          case None => df
-        }
-        touch(key)
-        refreshBudget(out); enforceBudget()
-        out
-    }
-  }
+  def getOrCompute(key: SegKey)(compute: => DataFrame): DataFrame =
+    lookup(key)((compute, false))
 
-  /** [[getOrCompute]] variant that stores an EAGER checkpoint
-    * ([[Pins.rawCut]]) instead of a lazy persist. Use for segments
-    * whose compute plan contains grouping sets: Spark's cached-plan
-    * substitution fails to match an `Expand` subtree once a self-join
-    * dedup re-aliases its second occurrence in one query (the
-    * Filter/Order-over-a-mixed-set shape joins the SAME segment on
-    * both sides), so a persisted gs segment silently recomputed the
-    * whole fact pass per consumer (r16 finding: ~9 s per mixed-set
-    * cell operator at sf1 with a WARM cache). A checkpoint frame is a
-    * LogicalRDD leaf — re-aliasing keeps the materialized RDD, every
-    * occurrence reads the blocks. evictFrame already releases both
-    * storage kinds.
+  /** [[getOrCompute]] storing an EAGER checkpoint ([[Pins.rawCut]]),
+    * for grouping-sets plans: Spark's cached-plan substitution cannot
+    * re-match an `Expand` once a self-join re-aliases it, so a persisted
+    * one recomputed its fact pass per consumer (r16: ~9 s per mixed-set
+    * cell operator at sf1, warm); a LogicalRDD leaf survives re-aliasing.
     */
-  def getOrComputeCut(key: SegKey)(compute: => DataFrame): DataFrame = {
+  def getOrComputeCut(key: SegKey)(compute: => DataFrame): DataFrame =
+    lookup(key)((compute, true))
+
+  /** The one segment-lookup body: pin `key` before the map read; on a
+    * miss store what `compute` returns, as an eager checkpoint when its
+    * flag is set, else a lazy persist. A first-touch race loser frees
+    * its storage (evictFrame releases either kind).
+    */
+  private def lookup(key: SegKey)(compute: => (DataFrame, Boolean))
+      : DataFrame = {
     leasePin(key)
     segments.get(key) match {
-      case Some(df) => hit(key, df)
+      case Some(df) => hitCount.increment(); touch(key); df
       case None =>
         missCount.increment()
-        val df = Pins.rawCut(compute)
+        val (plan, cut) = compute
+        val df = if (cut) Pins.rawCut(plan) else plan.persist()
         val out = segments.putIfAbsent(key, df) match {
-          case Some(winner) =>
-            // lost a first-touch race: the loser is an EAGER
-            // checkpoint — its blocks are already materialized, so
-            // free them (evictFrame handles the LogicalRDD kind) or
-            // they leak for the session's lifetime
-            evictFrame(df); winner
-          case None => df
+          case Some(winner) => evictFrame(df); winner
+          case None => if (cut) ckptKeys.add(key); df
         }
-        ckptKeys.add(key)
         touch(key)
         refreshBudget(out); enforceBudget()
         out
     }
   }
 
-  private def hit(key: SegKey, df: DataFrame): DataFrame = {
-    hitCount.increment(); touch(key)
-    df
+  // ---- cuboids ---------------------------------------------------
+  // A cuboid is a registered rollup ([[AggTable]]) or a resident segment
+  // of the cube. The narrowest one covering a request answers it by
+  // re-aggregating its decomposable partials: aggregate-table routing
+  // and the in-memory rollup of cached segments to coarser grains
+  // (SURVEY §4 #5/#6) as one rule, as in Sudokube (PAPERS.md).
+
+  /** The cells of `p`'s needed measures at the grain of `dims` under
+    * `slicer` (resolved, role items included): the segment under the
+    * exact key; else the narrowest covering cuboid, re-aggregated by
+    * [[Agg.partialMerge]] under the slicer items it lacks (a double Sum
+    * re-associates its additions); else `compute`, the fact pass. Stored
+    * under the exact key — eagerly cut when its source is a checkpoint,
+    * which a lazy persist would not outlive. Uncached: rollups only.
+    */
+  def aggregate(p: Planner, dims: Seq[Planner.AxisDim],
+      slicer: Seq[SlicerItem])(compute: => DataFrame): DataFrame = {
+    def answer: (DataFrame, Boolean) = cover(p, dims, slicer) match {
+      case Some((src, own)) =>
+        val aggCols = AggRouter.mergeColumns(p.neededMeasures)
+        (src.filter(p.slicerPredicate(slicer.filterNot(own.contains)))
+          .groupBy(Planner.groupCols(dims).map(col): _*)
+          .agg(aggCols.head, aggCols.tail: _*),
+          src.queryExecution.analyzed.isInstanceOf[LogicalRDD])
+      case None => (compute, false)
+    }
+    if (!SegmentCache.enabled) answer._1
+    else lookup(SegKey(p.cube.cubeId, Planner.groupCols(dims), slicer,
+      p.neededMeasures.map(_.name)))(answer)
   }
+
+  /** Would [[aggregate]] re-aggregate a cuboid, for a caller storing its
+    * own kind of segment under `key` (not stored yet)?
+    */
+  def routes(p: Planner, dims: Seq[Planner.AxisDim],
+      slicer: Seq[SlicerItem], key: SegKey): Boolean =
+    !segments.contains(key) && covering(p, dims, slicer).nonEmpty
+
+  /** The cuboids covering a request, narrowest (fewest level columns)
+    * first, rollups first at equal width. One covers when its slicer
+    * items are among the request's, the others are member predicates on
+    * columns it carries besides the grain's, and it stores each needed
+    * measure, all with a partial merge. A segment groups only by levels
+    * of dimensions the request joins (a star join keeps the fact rows
+    * whose keys hit its dimensions); a mixed-depth marker is no level.
+    */
+  private def covering(p: Planner, dims: Seq[Planner.AxisDim],
+      slicer: Seq[SlicerItem]): Seq[Either[AggTable, SegKey]] = {
+    val joined = p.neededJoins(dims, slicer).keySet
+      .flatMap(d => p.cube.dim(d).levels.map(_.col))
+    def covers(cols: Set[String], own: Seq[SlicerItem],
+        stores: Measure => Boolean): Boolean = {
+      val rest = slicer.filterNot(own.contains)
+      p.neededMeasures.forall(m =>
+        stores(m) && Agg.partialMerge(m.agg).isDefined) &&
+        own.forall(slicer.contains) &&
+        !rest.exists(_.isInstanceOf[ExprSlice]) &&
+        p.neededJoins(dims, rest).forall { case (d, depth) =>
+          Planner.levelCols(p.cube.dim(d), depth).forall(cols) }
+    }
+    val rollups = p.cube.aggTables.filter(at => covers(at.grain.flatMap {
+      case (d, depth) => Planner.levelCols(p.cube.dim(d), depth) }.toSet, Nil,
+      m => at.measures.get(m.name).contains(m.agg)))
+    val segs = keysOf(p.cube.cubeId).filter(k => SegmentCache.enabled &&
+      k.grain.forall(joined) &&
+      covers(k.grain.toSet, k.slicer, m => k.measures.contains(m.name)))
+    (rollups.map(at => at.width -> Left(at)) ++
+      segs.map(k => k.grain.length -> Right(k))).sortBy(_._1).map(_._2)
+  }
+
+  /** The first covering cuboid still resident and the slicer items it
+    * applied, traced in [[AggRouter.lastHit]]. A segment is lease-pinned
+    * before its map read, like a hit: a concurrent budget pass cannot
+    * free it while the derived frame is planned.
+    */
+  private def cover(p: Planner, dims: Seq[Planner.AxisDim],
+      slicer: Seq[SlicerItem]): Option[(DataFrame, Seq[SlicerItem])] =
+    covering(p, dims, slicer).iterator.flatMap {
+      case Left(at) => Some((at.name, at.df, Nil))
+      case Right(k) =>
+        leasePin(k)
+        segments.get(k).map { df =>
+          touch(k); (AggRouter.SegmentSource, df, k.slicer) }
+    }.nextOption().map { case (name, df, own) =>
+      AggRouter.lastHit = Some(name); (df, own)
+    }
 
   // ---- read leases (r19) -----------------------------------------
-  // Budget eviction (r18) made releasing a segment ROUTINE where it
-  // used to be flush-rare, and a checkpointed segment is lineage-free:
-  // freeing its blocks while a concurrent query's job is still
-  // reading them fails that job's stage (SCALING.md hazard row). A
-  // lease pins every segment a query touches (hit or miss) from plan
-  // time until the query's actions have run; enforceBudget skips
-  // pinned segments and moves to the next LRU candidate. Explicit
-  // invalidation (flushCube/flushRegion/clear/mergeOrEvict) still
-  // evicts regardless of pins — those are correctness flushes, and
-  // deferring them would serve stale cells. Same thread-scoped
-  // contract and placement as [[Pins.scoped]]: wrap query build AND
-  // collect in [[withLease]] ([[Query.scoped]] opens both; Bench,
-  // Verify and `Query.executeResult` use it). Reference analog: the jar's SegmentCacheManager actor
-  // serializes eviction against in-flight readers
-  // (mondrian/rolap/agg/SegmentCacheManager, SURVEY §4#5). A lookup
-  // pins its key BEFORE it reads the map: pin and enforceBudget share
-  // one lock, so a budget pass either sees the pin or has already
-  // removed the segment (the lookup then recomputes) — pinning after
-  // the read let a concurrent pass free the frame in between.
+  // Freeing a checkpointed (lineage-free) segment's blocks while a
+  // concurrent query's job reads them fails that job's stage (SCALING.md
+  // hazard row), and budget eviction makes that routine. A lease pins
+  // every segment a query touches (hit, miss or cuboid source) from plan
+  // time until its actions have run; enforceBudget skips pinned
+  // segments. Explicit invalidation (flushCube/flushRegion/clear/
+  // mergeOrEvict) evicts regardless: deferring it would serve stale
+  // cells. Wrap query build AND collect in [[withLease]] ([[Query.scoped]]
+  // opens it; Bench, Verify and `Query.executeResult` use it), as the
+  // jar's SegmentCacheManager actor serializes eviction against readers
+  // (SURVEY §4#5). A lookup pins its key BEFORE it reads the map: pin and
+  // enforceBudget share one lock, so a budget pass either sees the pin
+  // or has already removed the segment (the lookup then recomputes).
 
   private val pinCounts = TrieMap.empty[SegKey, Int]
   private val pinnedSkipCount = new LongAdder
@@ -465,12 +481,11 @@ final class SegmentCache {
     else leases.remove()
   }
 
-  /** Run `body` with a read-lease scope on this thread: every segment
-    * [[getOrCompute]]/[[getOrComputeCut]] returns inside the block
-    * (hit or miss) is pinned against budget eviction until the block
-    * exits — normally or exceptionally. Collect the query's results
-    * INSIDE the block; that is what makes a concurrent enforceBudget
-    * safe for this query's in-flight jobs.
+  /** Run `body` with a read-lease scope on this thread: every segment a
+    * lookup returns or reads as a cuboid source inside the block is
+    * pinned against budget eviction until the block exits — normally or
+    * exceptionally. Collect the query's results INSIDE the block; that
+    * makes a concurrent enforceBudget safe for its in-flight jobs.
     */
   def withLease[T](body: => T): T = {
     val stack = leases.get()
@@ -973,9 +988,9 @@ final class SegmentCache {
     segments.remove(k).foreach(evictFrame)
   }
 
-  /** A segment is either `.persist()`ed (getOrCompute) or a merged
-    * checkpoint (mergeOrEvict) — release both storage paths; each is
-    * a no-op on the other kind.
+  /** A segment is `.persist()`ed or an eager checkpoint (a cut, a merge,
+    * or derived from a checkpoint): release both; each is a no-op on the
+    * other kind.
     */
   private def evictFrame(df: DataFrame): Unit = {
     df.unpersist(blocking = false)

@@ -19,9 +19,11 @@ import Planner._
   * entry key as an extra grouping column (an [[EntryCtx]]). Roles ride
   * the pass too: stored entries are visibility-filtered against the
   * role-restricted member frame and the grant slicer ANDs into the
-  * scan. The pass reads the fact, or a routed rollup when every needed
-  * measure is decomposable, never a segment: the explode key is not a
-  * grain the SegmentCache speaks.
+  * scan. When every needed measure is decomposable the pass reads the
+  * statement's cells at its scan grain through the one cuboid lookup
+  * ([[Planner.aggregate]]) — a segment, or one derived from a rollup or
+  * a resident segment — and explodes those rows; otherwise it reads the
+  * fact.
   *
   * Stages, in order: factor split ([[FusedAxis.render]]) → entry lists
   * → scan → entry explode → aggregate → frame join and calcs → NECJ
@@ -237,24 +239,26 @@ private[olap] final class FusedAxis private (p: Planner,
 
   // -------------------------------------------------------------- scan
 
-  // AggRouter (SURVEY §4 #6) serves the fused axis too: when a declared
-  // rollup covers every dimension the entries, the slicer, and the other
-  // factors touch — at the depths they touch — and every needed measure
-  // is a decomposable partial, the single pass reads the ROLLUP rows
-  // instead of the fact (the entry predicates explode level columns the
-  // rollup carries; the group then MERGES partials by
-  // [[Agg.partialMerge]]). avg/distinct keep the raw-fact scan.
+  // When every needed measure merges from partials (Agg.partialMerge),
+  // the pass reads the statement's cells at the SCAN grain — each level
+  // the entries, their folded WHERE items and the other factors touch —
+  // through the cuboid lookup (Planner.aggregate under the shared WHERE
+  // items): an ordinary segment, reused by later statements and merged
+  // by an insert-delta. The entry predicates explode its level columns
+  // and the group MERGES the partials. avg/distinct/stats, and an entry
+  // predicate over fact columns (ExprSlice), read the fact.
   private def factScan(dims: Seq[AxisDim]): DataFrame =
     p.joinStar(p.neededJoins(dims, joinItems), joinItems)
       .filter(p.slicerPredicate(sharedRest ++ p.roleSlicer))
-  private val routedAt = AggRouter.route(p.cube,
-    p.neededJoins(otherDims, joinItems), joinItems, p.neededMeasures)
-  private val sliced0 = routedAt match {
-    case Some(at) =>
-      AggRouter.lastHit = Some(at.name)
-      at.df.filter(p.slicerPredicate(sharedRest ++ p.roleSlicer))
-    case None => factScan(otherDims)
-  }
+  private val rowItems = sharedOv ++ overlap ++
+    factorEntries.flatMap(_._2.flatMap(_.items))
+  private val merges =
+    p.neededMeasures.forall(m => Agg.partialMerge(m.agg).isDefined) &&
+      !rowItems.exists(_.isInstanceOf[ExprSlice])
+  private val sliced0 =
+    if (!merges) factScan(otherDims)
+    else p.aggregate(p.neededJoins(otherDims, rowItems).toSeq.sortBy(_._1)
+      .map { case (d, depth) => AxisDim(p.cube.dim(d), depth) }, sharedRest)
   private val spark = sliced0.sparkSession
   // left-major axis rendering: the final sort and the axis columns
   // interleave by each factor's ORIGINAL crossjoin position — Mondrian
@@ -306,7 +310,7 @@ private[olap] final class FusedAxis private (p: Planner,
     }
   }
   private val (aggCols0, post0) =
-    if (routedAt.isEmpty) Agg.toColumnsFused(p.neededMeasures)
+    if (!merges) Agg.toColumnsFused(p.neededMeasures)
     else (AggRouter.mergeColumns(p.neededMeasures),
       p.neededMeasures.map(m => col(m.name)))
 
@@ -550,9 +554,9 @@ private[olap] final class FusedAxis private (p: Planner,
     * context carries no other factor's coordinate): a first fused pass
     * at ENTRY grain over the un-semi-joined scan computes each entry's
     * context cells, the ops prune and reorder the N-row result, and the
-    * surviving ordered entries drive the main pass. Two scans, both
-    * rollup-servable; the collect is N rows — plan-sized, same
-    * convention as the computed-slicer and role-visibility probes.
+    * surviving ordered entries drive the main pass. Two scans of the
+    * same cells; the collect is N rows — plan-sized, same convention as
+    * the computed-slicer and role-visibility probes.
     */
   private def preCrossOps(): Seq[(CalcFactor, Seq[AxisEntry])] =
     factorEntries.zipWithIndex.map { case ((f0, es0), k) =>
@@ -591,9 +595,9 @@ private[olap] final class FusedAxis private (p: Planner,
     // NECJ tuple existence = at least one fact row in the group — a
     // count over the SAME single scan, no second pass, WHEN the NECJ
     // spans the whole axis (one group, all factors in it — support
-    // grain == group grain). Over a routed rollup the count is of
-    // ROLLUP rows — existence-equivalent (a rollup row exists iff fact
-    // rows did).
+    // grain == group grain). Over a segment the count is of SEGMENT
+    // rows — existence-equivalent (a segment row exists iff fact rows
+    // did).
     val necjFullGrain = necjGroups == 1 && factorGroup.forall(_ == 0)
     val (aggCols, post) =
       if (!necjFullGrain) (aggCols0, post0)

@@ -1,5 +1,7 @@
 package graft.olap
 
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+
 /** MDX parser — entry point A of the reference (raw MDX text →
   * executable query; reference lib/mondrian/olap/connection.rb:75-86 and
   * the jar's mondrian/parser/MdxParserImpl). Hand-rolled recursive
@@ -861,14 +863,21 @@ object Mdx {
       u.syntax == UdfSyntax.Function && u.returns == UdfType.MemberSet)
 
     /** Does a set start `k` tokens ahead: a brace, a WITH SET name, or a
-      * call [[setFunction]] reads? Braced items, slicer items and a set
-      * aggregate's first argument all ask it.
+      * call [[setFunction]] reads — a set function, or a call no scalar
+      * formula makes (none of the session's SQL functions, an MDX name
+      * lowered to one, `Cache` or a UDF), which then matches no
+      * signature? Braced items, slicer items and a set aggregate's first
+      * argument all ask it.
       */
     private def setStarts(k: Int): Boolean = peekAt(k) match {
       case Some(TPunct("{")) => true
       case Some(TIdent(f)) => withSets.contains(f) ||
         peekAt(k + 1).contains(TPunct("(")) &&
-          (P.SetFunctions.contains(f.toUpperCase) || setUdf(f).isDefined)
+          (P.SetFunctions.contains(f.toUpperCase) || setUdf(f).isDefined ||
+            !(P.MdxToSparkFn.contains(f.toUpperCase) ||
+              f.equalsIgnoreCase("CACHE") || udfByName(f).isDefined ||
+              cube.fact.sparkSession.sessionState.functionRegistry
+                .functionExists(FunctionIdentifier(f))))
       case _ => false
     }
 

@@ -176,25 +176,27 @@ final class Planner(val cube: BoundCube) {
     * which grain a row belongs to (the trailing un-grouped level
     * columns are its low bits), which becomes the [[DepthCol]] marker —
     * so a genuine NULL level value is never confused with a rolled-up
-    * one. Falls back to one [[aggregate]] per depth only when an agg
-    * table routes (each depth is then a cheap re-aggregation of the
-    * registered rollup, no fact scan at all). The result is cached as
-    * one segment keyed by the full key list + depth set.
+    * one. The result is cached as one segment keyed by the full key
+    * list + depth set. Falls back to one [[aggregate]] per depth when
+    * that segment is not resident and a rollup or resident segment
+    * covers the deepest grain ([[SegmentCache.routes]]): each depth is
+    * then a cheap re-aggregation of that cuboid, no fact scan at all.
     */
   private def mixedCells(others: Seq[AxisDim], md: AxisDim,
       depths: Seq[Int], slicer: Seq[SlicerItem]): DataFrame = {
     val levels = levelCols(md.d, md.depth)
     val allSlicer = slicer ++ roleSlicer
-    val deepDims = others :+ md
+    val sortedDepths = depths.sorted
+    val cache = SegmentCache.global
+    val key = cache.SegKey(cube.cubeId, (groupCols(others) ++ levels) :+
+      s"__depths=${sortedDepths.mkString(",")}",
+      allSlicer, neededMeasures.map(_.name))
     def perDepth: DataFrame = depths.map { dep =>
       padded(aggregate(others :+ AxisDim(md.d, dep), slicer), md.d,
         levels.drop(dep + 1), dep)
     }.reduce(_ unionByName _)
-    if (AggRouter.route(cube, neededJoins(deepDims, allSlicer), allSlicer,
-        neededMeasures).isDefined) return perDepth
-    val sortedDepths = depths.sorted
     def compute: DataFrame = {
-      val star = joinStar(neededJoins(deepDims, allSlicer), allSlicer)
+      val star = joinStar(neededJoins(others :+ md, allSlicer), allSlicer)
       val sliced = star.filter(slicerPredicate(allSlicer))
       val (aggCols, post) = Agg.toColumnsFused(neededMeasures)
       val oKeys = groupCols(others)
@@ -216,19 +218,11 @@ final class Planner(val cube: BoundCube) {
         .withColumn(DepthCol, depthCol)
         .drop("__gid")
     }
-    if (!SegmentCache.enabled) compute
-    else {
-      val cache = SegmentCache.global
-      // rawCut storage (not persist): the gs plan's Expand subtree
-      // defeats Spark's cached-plan matching under self-join re-alias
-      // (see getOrComputeCut) — mixed segments are the one segment
-      // kind a single query joins against itself (members derived
-      // from the cells side)
-      cache.getOrComputeCut(cache.SegKey(cube.cubeId,
-        (groupCols(others) ++ levels) :+
-          s"__depths=${sortedDepths.mkString(",")}",
-        allSlicer, neededMeasures.map(_.name)))(compute)
-    }
+    if (cache.routes(this, others :+ md, allSlicer, key)) perDepth
+    else if (!SegmentCache.enabled) compute
+    // an eager cut: one query joins a mixed segment against itself
+    // (members derived from the cells side; see getOrComputeCut)
+    else cache.getOrComputeCut(key)(compute)
   }
 
   def evalSet(set: SetExpr, slicer: Seq[SlicerItem],
@@ -1251,15 +1245,10 @@ final class Planner(val cube: BoundCube) {
         "EvalSlice must be resolved at plan entry (resolveSlicer)")
     }.reduce(_ && _)
 
-  /** The one fact pass per grain: star join (broadcast dims) → slicer
-    * filter (pushed to scan) → groupBy(grain).agg(all measures).
-    *
-    * Two engine-level optimizations sit in front of the fact scan
-    * (SURVEY §4 #5/#6):
-    *  1. aggregate-table routing — a registered rollup whose grain
-    *     covers the query answers it without touching the fact;
-    *  2. segment cache — the computed aggregate is persisted keyed by
-    *     (cube, grain, slicer, measures) and reused until flushed.
+  /** The one fact pass per grain — star join (broadcast dims) → slicer
+    * filter (pushed to scan) → groupBy(grain).agg(all measures) — behind
+    * the cuboid lookup ([[SegmentCache.aggregate]]): the exact segment,
+    * or a re-aggregated covering rollup or segment, answers first.
     */
   def aggregate(axisDims: Seq[AxisDim],
       slicer: Seq[SlicerItem]): DataFrame = {
@@ -1267,23 +1256,11 @@ final class Planner(val cube: BoundCube) {
     // computed slicers; execute() resolves before reaching here, so
     // this is a no-op on the MDX path
     val allSlicer = resolveSlicer(slicer) ++ roleSlicer
-    def compute: DataFrame =
-      AggRouter.route(cube, neededJoins(axisDims, allSlicer), allSlicer,
-          neededMeasures) match {
-        case Some(at) =>
-          AggRouter.reAggregate(at, axisDims,
-            slicerPredicate(allSlicer), neededMeasures)
-        case None =>
-          val star = joinStar(neededJoins(axisDims, allSlicer), allSlicer)
-          val sliced = star.filter(slicerPredicate(allSlicer))
-          val (aggCols, post) = Agg.toColumnsFused(neededMeasures)
-          aggregateAt(sliced, groupCols(axisDims), aggCols, post)
-      }
-    if (!SegmentCache.enabled) compute
-    else {
-      val cache = SegmentCache.global
-      cache.getOrCompute(cache.SegKey(cube.cubeId,
-        groupCols(axisDims), allSlicer, neededMeasures.map(_.name)))(compute)
+    SegmentCache.global.aggregate(this, axisDims, allSlicer) {
+      val star = joinStar(neededJoins(axisDims, allSlicer), allSlicer)
+      val sliced = star.filter(slicerPredicate(allSlicer))
+      val (aggCols, post) = Agg.toColumnsFused(neededMeasures)
+      aggregateAt(sliced, groupCols(axisDims), aggCols, post)
     }
   }
 
@@ -1371,9 +1348,7 @@ final class Planner(val cube: BoundCube) {
           // row, so the sum is never null)
           case Agg.Count =>
             coalesce(sum(col(s"__pa_$i")), lit(0L)).as(m.name)
-          case Agg.SumExact => sum(col(s"__pa_$i")).as(m.name)
-          case Agg.Min      => min(col(s"__pa_$i")).as(m.name)
-          case _            => max(col(s"__pa_$i")).as(m.name)
+          case a => Agg.partialMerge(a).get(col(s"__pa_$i")).as(m.name)
         }
       }
       val grouped =
@@ -2390,9 +2365,6 @@ object Planner {
       if (mixedDepths.nonEmpty) mixedDepths else Seq(dims.head.depth)
   }
 
-  /** All level key columns (root..depth) of the dims — the aggregation
-    * grain and the axis→cells join key.
-    */
   /** Balanced OR over a plan-sized predicate list. A linear
     * `reduce(_ || _)` builds a list-deep Column tree, which overflows
     * the analyzer's recursive converter around ~1k terms — well under

@@ -2,6 +2,9 @@ package graft
 // (AggGen-style recommendation specs live at the bottom of this file)
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.JobCount
 import org.apache.spark.storage.StorageLevel
@@ -604,6 +607,122 @@ class CacheSpec extends SparkSpec {
     assert(c.cellSetHits === 0, "nothing may be served")
     assert(call(bumps = false).collect().length === 7)
     assert(c.cellSetRecords === 1, "a render at a steady epoch records")
+  }
+
+  /** Reads of the fact rows that running `df` executes: lineitem file
+    * scans and scans of a cached frame carrying raw fact columns, in its
+    * plan and in the build plan of each cached frame it reads whose
+    * buffers are not built yet (a built one reads its own blocks).
+    */
+  private def factLeaves(df: DataFrame): Int = {
+    def leaves(p: SparkPlan): Int = p.collect {
+      case a: AdaptiveSparkPlanExec => leaves(a.inputPlan)
+      case s: FileSourceScanExec
+          if s.relation.location.rootPaths.exists(
+            _.toString.contains("lineitem")) => 1
+      case m: InMemoryTableScanExec =>
+        if (m.relation.output.exists(_.name == "l_quantity")) 1
+        else if (m.relation.cacheBuilder.isCachedColumnBuffersLoaded) 0
+        else leaves(m.relation.cachedPlan)
+    }.sum
+    leaves(df.queryExecution.executedPlan)
+  }
+
+  test("cuboids: a fused dim-calc statement re-aggregates a plain " +
+      "statement's segment with no fact leaf, and a delta merges it") {
+    val c = SegmentCache.global
+    val fresh = cube.copy()
+    Query.from(fresh).columns("revenue", "sum_qty")
+      .rows(CrossJoin(LevelMembers("time", "year"),
+        LevelMembers("customer", "region")))
+      .execute().collect()
+    val source = c.keysOf(fresh.cubeId)
+    assert(source.length === 1)
+    // q_mdx_dimcalc_override
+    val mdx =
+      """WITH MEMBER [time].[EU all] AS
+        |  'Aggregate({[customer].[EUROPE]})'
+        |SELECT {[Measures].[revenue], [Measures].[sum_qty]} ON COLUMNS,
+        |  CROSSJOIN({[time].[1995], [time].[EU all]},
+        |            {[customer].[AMERICA], [customer].[ASIA]}) ON ROWS
+        |FROM [Sales]""".stripMargin
+    AggRouter.lastHit = None
+    val df = Mdx.execute(mdx, fresh)
+    assert(factLeaves(df) === 0,
+      s"the fused pass must read the segment:\n${df.queryExecution.executedPlan}")
+    assert(AggRouter.lastHit === Some(AggRouter.SegmentSource))
+    val rows = df.collect().toSeq
+    SegmentCache.enabled = false
+    val direct = try Mdx.execute(mdx, fresh).collect().toSeq
+    finally SegmentCache.enabled = true
+    assert(rows.nonEmpty && rows === direct)
+    val keys = c.keysOf(fresh.cubeId)
+    val merges0 = c.merges
+    StreamingCube.applyDeltaBatch(fresh.fact.limit(0), fresh, c,
+      new Planner(fresh))
+    assert(c.merges === merges0 + keys.length,
+      "every segment of the cube merges the delta")
+    assert(source.forall(c.keysOf(fresh.cubeId).contains),
+      "the segment the fused pass read is merged, not evicted")
+    c.flushCube(fresh.cubeId)
+  }
+
+  test("cuboids: a nation-grain segment answers a region-grain " +
+      "statement over a subset of its measures with no fact leaf") {
+    val fresh = cube.copy()
+    Query.from(fresh).columns("revenue", "sum_qty", "count_order")
+      .rows(LevelMembers("customer", "nation"))
+      .where(MemberSlice("time", Seq(1995))).execute().collect()
+    def region(cb: BoundCube): DataFrame = Query.from(cb).columns("revenue")
+      .rows(LevelMembers("customer", "region"))
+      .where(MemberSlice("time", Seq(1995))).execute()
+    AggRouter.lastHit = None
+    val df = region(fresh)
+    assert(factLeaves(df) === 0,
+      s"the nation segment must answer:\n${df.queryExecution.executedPlan}")
+    assert(AggRouter.lastHit === Some(AggRouter.SegmentSource))
+    val rows = df.collect().toSeq
+    assert(rows.nonEmpty && rows === region(cube.copy()).collect().toSeq)
+    // a statement that joins no customer level reads the fact: the
+    // segment's star join dropped the rows no customer matches
+    AggRouter.lastHit = None
+    Query.from(fresh).columns("revenue")
+      .where(MemberSlice("time", Seq(1995))).execute().collect()
+    assert(AggRouter.lastHit === None)
+    SegmentCache.global.flushCube(fresh.cubeId)
+  }
+
+  test("cuboids: a segment derived from a checkpointed segment outlives " +
+      "its source") {
+    val c = SegmentCache.global
+    val fresh = cube.copy()
+    Query.from(fresh).columns("revenue", "sum_qty")
+      .rows(CrossJoin(LevelMembers("customer", "nation"),
+        LevelMembers("time", "year")))
+      .execute().collect()
+    // an empty insert-delta turns the cube's segments into checkpoints
+    StreamingCube.applyDeltaBatch(fresh.fact.limit(0), fresh, c,
+      new Planner(fresh))
+    val source = c.keysOf(fresh.cubeId)
+    assert(source.length === 1)
+    def derived(): Seq[org.apache.spark.sql.Row] = Query.from(fresh)
+      .columns("revenue").rows(LevelMembers("customer", "region"))
+      .where(MemberSlice("time", Seq(1995))).execute().collect().toSeq
+    AggRouter.lastHit = None
+    val rows = derived()
+    assert(AggRouter.lastHit === Some(AggRouter.SegmentSource))
+    val key = c.keysOf(fresh.cubeId).filterNot(source.contains)
+    assert(key.length === 1)
+    // the source has no time slicer and the derived segment slices
+    // 1995: a 1996 region flush evicts the source alone
+    c.flushRegion(fresh.cubeId, "time", Seq(1996))
+    assert(c.keysOf(fresh.cubeId) === key)
+    // whatever Spark caches for the derived frame may go too: it must
+    // not need the freed checkpoint
+    c.getOrCompute(key.head)(fail("the derived segment must stay"))
+      .unpersist(blocking = true)
+    assert(derived() === rows)
+    c.flushCube(fresh.cubeId)
   }
 
   test("agg router answers a coarser query from a registered rollup") {

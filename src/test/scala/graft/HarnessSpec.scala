@@ -24,7 +24,7 @@ class HarnessSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   }
 
   test("Harness.force executes a fused dim-calc axis's own plan, not a count plan") {
-    // a statement no other spec runs, so no segment or cell set serves it
+    // a statement no other spec runs, so no cell set serves it
     val df = Mdx.execute(
       """WITH MEMBER [customer].[HarnessSpec EU13 and AM] AS
         |  'Aggregate({[customer].[EUROPE].[NATION_13], [customer].[AMERICA]})'
@@ -33,15 +33,19 @@ class HarnessSpec extends SparkSpec with AdaptiveSparkPlanHelper {
         |            [time].[year].Members) ON ROWS
         |FROM [Sales]""".stripMargin, Cubes.sales(spark, Sf))
     val n = Harness.force(df)
-    // df's own fact scan and measure aggregate produced rows: their
-    // metrics stay 0 unless force executed this very plan
+    // df's own scan of the measure rows and its measure aggregate
+    // produced rows: their metrics stay 0 unless force executed this
+    // very plan. The fused pass reads the statement's cells at its scan
+    // grain (a segment whose build reads the fact) when every measure
+    // merges from partials, so the rows are the fact's or the segment's
+    val measureCols = Set("l_quantity", "sum_qty")
     val ran = collect(df.queryExecution.executedPlan) { case p => p }
     def rowsOut(nodes: Seq[SparkPlan]): Long =
       nodes.flatMap(_.metrics.get("numOutputRows")).map(_.value).sum
-    val factScans = ran.filter(p =>
-      p.isInstanceOf[LeafExecNode] && p.output.exists(_.name == "l_quantity"))
+    val factScans = ran.filter(p => p.isInstanceOf[LeafExecNode] &&
+      p.output.exists(a => measureCols(a.name)))
     val measureAggs = ran.filter(p => p.isInstanceOf[BaseAggregateExec] &&
-      p.expressions.exists(_.references.exists(_.name == "l_quantity")))
+      p.expressions.exists(_.references.exists(a => measureCols(a.name))))
     assert(factScans.nonEmpty && rowsOut(factScans) > 0, ran.head)
     assert(measureAggs.nonEmpty && rowsOut(measureAggs) > 0, ran.head)
     assert(n == df.collect().length)

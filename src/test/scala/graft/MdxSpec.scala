@@ -2973,10 +2973,24 @@ class MdxSpec extends SparkSpec {
   }
 
   test("an unknown function in set position matches no signature") {
-    val e = intercept[Mdx.MdxException](Mdx.parse(
+    // an axis, a braced item, a WHERE and a set aggregate's first
+    // argument: each reads the call as a set
+    Seq(
       """SELECT {[Measures].[revenue]} ON COLUMNS,
         |  FooSet([customer].[region].Members) ON ROWS
-        |FROM [Sales]""".stripMargin, cube))
-    assert(e.getMessage === "No function matches signature 'FooSet(...)'")
+        |FROM [Sales]""",
+      """SELECT {[Measures].[revenue]} ON COLUMNS,
+        |  {FooSet([customer].[EUROPE])} ON ROWS
+        |FROM [Sales]""",
+      """SELECT {[Measures].[revenue]} ON COLUMNS
+        |FROM [Sales] WHERE FooSet([customer].[EUROPE])""",
+      """WITH MEMBER [Measures].[s] AS
+        |  'Sum(FooSet([customer].[EUROPE]), [Measures].[revenue])'
+        |SELECT {[Measures].[s]} ON COLUMNS
+        |FROM [Sales]""").foreach { q =>
+      val e = intercept[Mdx.MdxException](Mdx.parse(q.stripMargin, cube))
+      assert(e.getMessage === "No function matches signature 'FooSet(...)'",
+        q.stripMargin)
+    }
   }
 }

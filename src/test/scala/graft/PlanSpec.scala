@@ -1,6 +1,11 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
 import graft.olap._
 
@@ -16,6 +21,36 @@ class PlanSpec extends SparkSpec {
 
   private def plan(df: DataFrame): String =
     df.queryExecution.executedPlan.toString
+
+  /** Hash exchanges in the physical plan `df` itself runs, without the
+    * build plans of the cached frames it reads.
+    */
+  private def hashExchanges(df: DataFrame): Int =
+    (df.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+      case p => p
+    }).collect {
+      case e: ShuffleExchangeExec
+          if e.outputPartitioning.isInstanceOf[HashPartitioning] => e
+    }.length
+
+  /** Reads of the fact rows: lineitem file scans, or scans of a cached
+    * frame that still carries raw fact columns, in `df`'s plan and in
+    * the build plans of the cached frames it reads (a fused dim-calc
+    * pass reads the segment its one fact aggregate builds).
+    */
+  private def factReads(df: DataFrame): Int = {
+    def reads(p: SparkPlan): Int = p.collect {
+      case a: AdaptiveSparkPlanExec => reads(a.inputPlan)
+      case s: FileSourceScanExec
+          if s.relation.location.rootPaths.exists(
+            _.toString.contains("lineitem")) => 1
+      case m: InMemoryTableScanExec =>
+        if (m.relation.output.exists(_.name == "l_quantity")) 1
+        else reads(m.relation.cachedPlan)
+    }.sum
+    reads(df.queryExecution.executedPlan)
+  }
 
   test("star joins broadcast every dimension side") {
     val df = Query.from(cube)
@@ -197,11 +232,13 @@ class PlanSpec extends SparkSpec {
         |FROM [Sales]""".stripMargin, cube)
     val p = plan(df)
     // the explode-label rewrite touches the fact once and groups on
-    // the member label — N members must not mean N fact aggregations
-    val hashEx = "Exchange hashpartitioning".r.findAllIn(p).length
-    assert(hashEx == 1,
-      s"expected exactly one hash exchange for the fused axis, got " +
-        s"$hashEx:\n$p")
+    // the member label — N members must not mean N fact aggregations:
+    // one fact read (in the build of the segment the pass reads) and
+    // one hash exchange in the fused pass itself
+    val hashEx = hashExchanges(df)
+    assert(hashEx == 1 && factReads(df) == 1,
+      s"expected exactly one fact read and one hash exchange for the " +
+        s"fused axis, got ${factReads(df)} and $hashEx:\n$p")
     assert(p.contains("BroadcastHashJoin"),
       s"dimension joins must stay broadcast in the fused pass:\n$p")
     // and the cells match the per-member sub-query semantics
@@ -258,17 +295,17 @@ class PlanSpec extends SparkSpec {
         |FROM [Sales]""".stripMargin
     val df = Mdx.execute(mdx, roled)
     val p = plan(df)
-    def hashEx(s: String): Int =
-      "Exchange hashpartitioning".r.findAllIn(s).length
-    // compare against the UNROLED twin of the same query, not an
-    // absolute count: cached InMemoryRelation printouts inflate
-    // regex counts over plan strings — what must not happen is the
-    // role forking the axis to per-entry sub-queries (extra
-    // exchanges relative to the open-cube plan)
-    val openPlan = plan(Mdx.execute(mdx, cube))
-    assert(hashEx(p) === hashEx(openPlan),
+    // compare against the UNROLED twin of the same query — what must
+    // not happen is the role forking the axis to per-entry sub-queries
+    // (extra fact reads or exchanges relative to the open-cube plan).
+    // Exchanges count in the pass itself: the build plans of the
+    // segments it reads depend on what the cache held before
+    val unroled = Mdx.execute(mdx, cube)
+    assert(hashExchanges(df) === hashExchanges(unroled) &&
+      factReads(df) === factReads(unroled),
       s"the role changed the fused plan's exchange count " +
-        s"(${hashEx(p)} vs unroled ${hashEx(openPlan)}):\n$p")
+        s"(${hashExchanges(df)} vs unroled ${hashExchanges(unroled)}) or " +
+        s"fact reads (${factReads(df)} vs ${factReads(unroled)}):\n$p")
     // and the granted cells equal the open-cube cells (the grant only
     // restricts, and every set here is inside it)
     val rows = df.collect().map(r => r.getString(0) ->
@@ -738,29 +775,12 @@ class PlanSpec extends SparkSpec {
   test("a context override and a mixed-depth factor plan ONE fused fact " +
       "aggregate: one fact read and one entry-keyed hash exchange, like " +
       "a non-overriding, uniform-depth twin") {
-    import org.apache.spark.sql.execution.FileSourceScanExec
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
     SegmentCache.global.clear()
     def planFor(member: String, axis: String): DataFrame = Mdx.execute(
       s"""WITH MEMBER $member
         |SELECT {[Measures].[revenue], [Measures].[sum_qty]} ON COLUMNS,
         |  $axis ON ROWS
         |FROM [Sales]""".stripMargin, cube)
-    // reads of the fact rows in the plan tree itself: lineitem file
-    // scans, or scans of a cached frame that still carries raw fact
-    // columns (a cached frame's own build plan is not walked)
-    def factReads(df: DataFrame): Int =
-      (df.queryExecution.executedPlan match {
-        case a: AdaptiveSparkPlanExec => a.inputPlan
-        case p => p
-      }).collect {
-        case s: FileSourceScanExec
-            if s.relation.location.rootPaths.exists(
-              _.toString.contains("lineitem")) => s
-        case m: InMemoryTableScanExec
-            if m.relation.output.exists(_.name == "l_quantity") => m
-      }.length
     // the fused aggregate's shuffle is the one hash exchange keyed by
     // the entry column (the member frames' own exchanges differ with
     // the set shape, so whole-plan counts are not comparable)
